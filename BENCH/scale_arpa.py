@@ -1,8 +1,8 @@
 """Large-artifact bench: scoring throughput with production-sized models
-flowing through the broadcast seams.
+passed to stage.score as one udfs.Models value (broadcast once per call).
 
-r3 built the mechanisms (load_arpa_char_bigram + broadcast_arpa_lm,
-broadcast_gazetteer); this leg proves throughput HOLDS when
+r3 built the mechanisms (load_arpa_char_bigram, a large gazetteer); this
+leg proves throughput HOLDS when
 realistically-sized artifacts (≥10⁴ ARPA bigram entries vs the builtin's
 ~1k; a 2×10⁴-name gazetteer vs the builtin ~50) are what executors
 actually score against. The kernels are a table gather / a set lookup
@@ -49,7 +49,7 @@ def main():
 
     from pii_detection_service_spark.functions import quality
     from pii_detection_service_spark.plans import stage
-    from pii_detection_service_spark.sources import artifacts
+    from pii_detection_service_spark.udfs import Models
 
     if not os.path.isdir(img_cache):
         # same builder + cache key scale_run.py uses
@@ -62,21 +62,24 @@ def main():
     n_bigrams = quality.export_synth_arpa(arpa_path)
     export_sec = round(time.monotonic() - t0, 2)
     t0 = time.monotonic()
-    bc = artifacts.broadcast_arpa_lm(spark, arpa_path)
+    lm = quality.load_arpa_char_bigram(arpa_path)
     load_sec = round(time.monotonic() - t0, 2)
 
     from pii_detection_service_spark.sources.synth import synth_gazetteer
 
     gaz = synth_gazetteer()
-    gaz_bc = spark.sparkContext.broadcast(gaz)
 
     src = spark.read.parquet(img_cache)
-    legs = {"builtin": (None, None), "arpa": (bc, None), "arpa_gaz": (bc, gaz_bc)}
+    legs = {
+        "builtin": None,
+        "arpa": Models(lm=lm),
+        "arpa_gaz": Models(lm=lm, gazetteer=gaz),
+    }
 
-    def run(lm_bc, g_bc) -> float:
+    def run(models) -> float:
         t0 = time.monotonic()
         row = (
-            stage.score(stage.with_bucket(src, 64), lm_bc=lm_bc, gaz_bc=g_bc)
+            stage.score(stage.with_bucket(src, 64), models)
             .agg(
                 F.count(F.lit(1)).alias("n"),
                 F.sum(F.col("keep").cast("long")).alias("kept"),
@@ -89,8 +92,8 @@ def main():
 
     times: dict[str, list[float]] = {k: [] for k in legs}
     for t in range(trials):  # alternate so box drift lands symmetrically
-        for name, (lm_bc, g_bc) in legs.items():
-            dt = run(lm_bc, g_bc)
+        for name, models in legs.items():
+            dt = run(models)
             times[name].append(round(dt, 2))
             print(f"  trial {t} {name}: {dt:.1f}s", file=sys.stderr)
 
@@ -104,7 +107,7 @@ def main():
         "arpa_bigrams": n_bigrams,
         "gazetteer_names": len(gaz),
         "arpa_export_sec": export_sec,
-        "arpa_load_broadcast_sec": load_sec,
+        "arpa_load_sec": load_sec,
         "trials_sec": times,
         "best_sec": best,
         "images_per_sec": ips,

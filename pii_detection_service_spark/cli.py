@@ -39,8 +39,10 @@ def main(argv: list[str] | None = None) -> None:
                    "extend the PII gazetteer")
     p.add_argument("--langid-train-source",
                    help="labeled documents parquet (lang, text) to train the "
-                   "langid profiles on (the langid_bc seam)")
+                   "langid profiles on")
     args = p.parse_args(argv)
+    if args.arpa_lm and args.train_lm:
+        p.error("--arpa-lm and --train-lm are mutually exclusive")
 
     from pyspark.sql import SparkSession
 
@@ -65,28 +67,22 @@ def main(argv: list[str] | None = None) -> None:
     else:
         p.error("one of --source / --synthetic is required")
 
-    lm_bc = gaz_bc = langid_bc = None
-    if args.arpa_lm and args.train_lm:
-        p.error("--arpa-lm and --train-lm are mutually exclusive")
+    from .functions.quality import load_arpa_char_bigram
+    from .functions.tagger import extend_gazetteer
+    from .operators import lmtrain
+    from .udfs import Models
+
+    models = {}  # the fields of the one Models value the stage scores with
     if args.arpa_lm:
-        from .sources import artifacts
-
-        lm_bc = artifacts.broadcast_arpa_lm(spark, args.arpa_lm)
+        models["lm"] = load_arpa_char_bigram(args.arpa_lm)
     elif args.train_lm:
-        from .operators import lmtrain
-
-        lm_bc = lmtrain.broadcast_trained_lm(spark, src, text_col="caption")
+        models["lm"] = lmtrain.train_char_bigram_lm(src, text_col="caption")
     if args.gazetteer:
-        from .sources import artifacts
-
         with open(args.gazetteer, encoding="utf-8") as f:
-            extra = {ln.strip() for ln in f if ln.strip()}
-        gaz_bc = artifacts.broadcast_gazetteer(spark, extra)
+            models["gazetteer"] = extend_gazetteer(ln.strip() for ln in f if ln.strip())
     if args.langid_train_source:
-        from .operators import lmtrain
-
-        langid_bc = lmtrain.broadcast_trained_langid(
-            spark, spark.read.parquet(args.langid_train_source)
+        models["langid"] = lmtrain.train_langid_tables(
+            spark.read.parquet(args.langid_train_source)
         )
 
     metrics = stage.run_stage(
@@ -96,9 +92,7 @@ def main(argv: list[str] | None = None) -> None:
         n_buckets=args.buckets,
         salt_factor=args.salt,
         resume=not args.no_resume,
-        lm_bc=lm_bc,
-        gaz_bc=gaz_bc,
-        langid_bc=langid_bc,
+        models=Models(**models) if models else None,
     )
     print(json.dumps(metrics))
     spark.stop()

@@ -142,11 +142,11 @@ def lang_and_ppl(
     in tests/test_properties.py.
 
     ``lm_tbl`` swaps the perplexity model for a loaded ARPA table
-    (load_arpa_char_bigram → broadcast seam) without touching the langid
+    (load_arpa_char_bigram → udfs.Models.lm) without touching the langid
     profiles — the production path where the LM is a real KenLM artifact
     while langid stays the built-in profile set. ``langid_model`` is the
     symmetric seam for langid: a (langs, (_NC², n_langs) table) pair from
-    lmtrain.train_langid_tables / broadcast_trained_langid swaps the
+    lmtrain.train_langid_tables (udfs.Models.langid) swaps the
     per-language profile tables; the 'und' rules (empty / <2 chars /
     no-alpha) and the argmax tie-break (first max → lexicographically
     smallest code, langs being sorted) are model-independent and stay

@@ -51,24 +51,14 @@ FIRST_NAMES = frozenset(
 )
 HONORIFICS = frozenset({"dr.", "mr.", "mrs.", "ms.", "prof.", "dr", "mr", "mrs", "ms", "prof"})
 
-# The gazetteer binding the span finder actually reads. A production
-# pipeline swaps in a large broadcast artifact (artifacts.broadcast_gazetteer
-# → udfs.score_batch(gazetteer=...)); the builtin set is the default and
-# the golden-test contract.
-_GAZETTEER: frozenset = FIRST_NAMES
 
+def extend_gazetteer(extra_names) -> frozenset:
+    """The builtin given names plus ``extra_names``, lowercased: the span
+    finder folds candidate words, not the set, so entries must be
+    lowercase. Pass the result as the ``gazetteer`` argument of the
+    tagger functions (or ``udfs.Models(gazetteer=...)``)."""
+    return FIRST_NAMES | {n.lower() for n in extra_names}
 
-def set_gazetteer(names) -> frozenset:
-    """Rebind the given-name gazetteer (module-level, once per executor
-    process — the same state model as the regexes and LM tables). Entries
-    must be LOWERCASE (the span finder folds candidate words, not the
-    set — artifacts.broadcast_gazetteer lowercases on construction).
-    Returns the previous binding so callers can restore it (tests; batch
-    scoping in udfs.score_batch)."""
-    global _GAZETTEER
-    prev = _GAZETTEER
-    _GAZETTEER = names if isinstance(names, frozenset) else frozenset(names)
-    return prev
 
 # Toxicity gazetteer (north rule: "regex + gazetteer PII/toxicity
 # scrubbing"). Deliberately mild, fixed, versioned stand-ins — a production
@@ -131,11 +121,14 @@ def word_tokenize(text: str) -> list[tuple[str, int, int]]:
 
 
 def find_pii_spans(
-    text: str, toks: list[tuple[str, int, int]] | None = None
+    text: str,
+    toks: list[tuple[str, int, int]] | None = None,
+    gazetteer: frozenset = FIRST_NAMES,
 ) -> list[tuple[int, int, str]]:
     """All PII character spans as (start, end, class), non-overlapping,
     precedence EMAIL > URL > ID > PHONE > ADDRESS > USERNAME > NAME.
-    ``toks`` may be passed to reuse an existing word_tokenize result."""
+    ``toks`` may be passed to reuse an existing word_tokenize result;
+    ``gazetteer`` is the lowercase given-name set."""
     spans: list[tuple[int, int, str]] = []
 
     def free(s: int, e: int) -> bool:
@@ -174,7 +167,7 @@ def find_pii_spans(
     i = 0
     while i < len(toks):
         w, ts, te = toks[i]
-        if w[:1].isupper() and w.lower() in _GAZETTEER and free(ts, te):
+        if w[:1].isupper() and w.lower() in gazetteer and free(ts, te):
             j = i + 1
             end = te
             while j < len(toks):
@@ -229,7 +222,9 @@ def _splice(text: str, spans) -> str:
     return "".join(parts)
 
 
-def tag(text: str) -> tuple[list[str], list[str]]:
+def tag(
+    text: str, gazetteer: frozenset = FIRST_NAMES
+) -> tuple[list[str], list[str]]:
     """Word tokens + aligned BIO labels for ``text``.
 
     First token overlapping a span gets ``B-<class>``, subsequent ones
@@ -238,7 +233,7 @@ def tag(text: str) -> tuple[list[str], list[str]]:
     by construction).
     """
     toks = word_tokenize(text)
-    spans = find_pii_spans(text, toks)
+    spans = find_pii_spans(text, toks, gazetteer)
     return [t[0] for t in toks], _label_tokens(toks, spans)
 
 
@@ -286,7 +281,9 @@ def _is_plain(text: str) -> bool:
     return not any(w in lower for w in TOXIC_WORDS)
 
 
-def tag_and_scrub(text: str) -> tuple[list[str], list[str], str, int, int]:
+def tag_and_scrub(
+    text: str, gazetteer: frozenset = FIRST_NAMES
+) -> tuple[list[str], list[str], str, int, int]:
     """Fused tag + scrub: tokenization and span search run ONCE (the Arrow
     UDF hot path). Returns (tokens, labels, scrubbed, n_pii, n_toxic);
     tokens/labels/PII-scrub identical to calling tag() and scrub(), with
@@ -297,7 +294,7 @@ def tag_and_scrub(text: str) -> tuple[list[str], list[str], str, int, int]:
         toks_fast = text.split()
         return toks_fast, ["O"] * len(toks_fast), text, 0, 0
     toks = word_tokenize(text)
-    spans = find_pii_spans(text, toks)
+    spans = find_pii_spans(text, toks, gazetteer)
     toxic = find_toxic_spans(text, spans)
     all_spans = sorted(spans + toxic)
     return (
@@ -309,11 +306,11 @@ def tag_and_scrub(text: str) -> tuple[list[str], list[str], str, int, int]:
     )
 
 
-def scrub(text: str) -> tuple[str, int]:
+def scrub(text: str, gazetteer: frozenset = FIRST_NAMES) -> tuple[str, int]:
     """Replace every PII span with ``[<CLASS>]``; returns (scrubbed, n_spans).
 
     Splices on the original string, so PII-free text is returned
     byte-identical (caption-preservation invariant for kept rows).
     """
-    spans = find_pii_spans(text)
+    spans = find_pii_spans(text, gazetteer=gazetteer)
     return _splice(text, spans), len(spans)

@@ -82,7 +82,7 @@ def lm_train_bigram_counts(spark, sf_dir) -> DataFrame:
 
 def train_char_bigram_lm(d: DataFrame, text_col: str = "text") -> np.ndarray:
     """Corpus → (_NC²,) natural-log scoring table, directly consumable by
-    quality.perplexity_table and every lm_bc seam (stage.score,
+    quality.perplexity_table and as ``udfs.Models(lm=...)`` (stage.score,
     pipeline.score_documents, udfs.score_batch). The collect is bounded by
     the 66,049-id vocabulary, not the corpus."""
     rows = (
@@ -117,20 +117,13 @@ def train_char_bigram_lm_ref(texts) -> np.ndarray:
     return tbl
 
 
-def broadcast_trained_lm(spark, d: DataFrame, text_col: str = "text"):
-    """Train on a corpus and broadcast the table — the trained twin of
-    artifacts.broadcast_arpa_lm, pluggable into every lm_bc seam
-    (stage.score, pipeline.score_documents, udfs.score_batch)."""
-    return spark.sparkContext.broadcast(train_char_bigram_lm(d, text_col))
-
-
 # --- trained langid ----------------------------------------------------------
 # The perplexity model has had a full production-swap story since r4 (ARPA
-# artifact / corpus-trained table → lm_bc); the langid char-bigram profiles
+# artifact / corpus-trained table → Models.lm); the langid char-bigram profiles
 # stayed builtin constants. This closes the asymmetry with the SAME recipe:
 # estimate per-language bigram tables from a LABELED slice with one
-# vocabulary-bounded aggregation, broadcast via langid_bc through every
-# scoring seam. The key space is n_langs × 66,049 ids — still a model
+# vocabulary-bounded aggregation, passed as Models.langid through every
+# scoring path. The key space is n_langs × 66,049 ids — still a model
 # constant, never corpus-sized, so the plan is unchanged at 100 TB.
 
 # Languages the trainer learns from (the keep/drop gate's allowed set —
@@ -185,8 +178,9 @@ def train_langid_tables(
     d: DataFrame, text_col: str = "text", lang_col: str = "lang"
 ) -> tuple[list[str], np.ndarray]:
     """Labeled corpus → (langs, (_NC², n_langs) natural-log table), directly
-    consumable by quality.lang_and_ppl's langid_model parameter and every
-    langid_bc seam. The collect is bounded by n_langs × 66,049 ids."""
+    consumable by quality.lang_and_ppl's langid_model parameter and as
+    ``udfs.Models(langid=...)``. The collect is bounded by n_langs × 66,049
+    ids."""
     rows = (
         langid_bigram_count_table(d, text_col, lang_col)
         .select("lang", "bigram_id", "cnt")
@@ -230,15 +224,3 @@ def train_langid_tables_ref(pairs) -> tuple[list[str], np.ndarray]:
         for bid, c in counts.items():
             tbl[bid, li] = math.log((c + 1) / (total + v))
     return langs, tbl
-
-
-def broadcast_trained_langid(
-    spark, d: DataFrame, text_col: str = "text", lang_col: str = "lang"
-):
-    """Train per-language profiles on a labeled corpus and broadcast
-    (langs, table) — pluggable into every langid_bc seam (stage.score,
-    pipeline.score_documents, udfs.score_batch), the langid twin of
-    broadcast_trained_lm."""
-    return spark.sparkContext.broadcast(
-        train_langid_tables(d, text_col, lang_col)
-    )

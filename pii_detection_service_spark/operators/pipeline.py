@@ -13,6 +13,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from .. import udfs
+from ..plans import stage
 from .relational import table
 
 _BYTE_UNITS = {
@@ -34,12 +35,10 @@ def _parse_byte_string(raw: str, default: int = 134217728) -> int:
     return int(m.group(1)) * _BYTE_UNITS[m.group(2)] if m else default
 
 
-def score_documents(spark, sf_dir, lm_bc=None, langid_bc=None) -> DataFrame:
-    """The flagship stage's scoring pass with documents.text as captions.
-    ``lm_bc`` optionally swaps the perplexity model for a broadcast ARPA
-    table (the production-artifact seam); ``langid_bc`` swaps the langid
-    profiles for corpus-trained per-language tables
-    (lmtrain.broadcast_trained_langid)."""
+def score_documents(spark, sf_dir, models: udfs.Models | None = None) -> DataFrame:
+    """The flagship stage's scoring pass (stage.score) with documents.text
+    as captions. ``models`` optionally swaps in production models (ARPA or
+    trained LM, trained langid profiles, a large gazetteer)."""
     d = table(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").alias("caption")
     )
@@ -58,11 +57,7 @@ def score_documents(spark, sf_dir, lm_bc=None, langid_bc=None) -> DataFrame:
     max_split = _parse_byte_string(raw)
     if scan_bytes < par * max_split:
         d = d.repartition(par)
-    scored = d.mapInPandas(
-        udfs.make_score_iter(["doc_id", "caption"], lm_bc=lm_bc, langid_bc=langid_bc),
-        schema=f"doc_id long, caption string, {udfs.SCORE_DDL}",
-    )
-    return scored.select(
+    return stage.score(d, models).select(
         "doc_id",
         "lang",
         F.round("ppl", 4).alias("ppl"),
@@ -111,13 +106,12 @@ def scores_oracle_arpa(spark, sf_dir) -> DataFrame:
     import tempfile
 
     from ..functions import quality
-    from ..sources import artifacts
 
     path = os.path.join(tempfile.gettempdir(), "pii_spark_builtin_lm.arpa")
     if not os.path.exists(path):
         quality.export_builtin_lm_arpa(path)
-    bc = artifacts.broadcast_arpa_lm(spark, path)
-    return score_documents(spark, sf_dir, lm_bc=bc).select(
+    models = udfs.Models(lm=quality.load_arpa_char_bigram(path))
+    return score_documents(spark, sf_dir, models).select(
         "doc_id",
         "lang",
         F.col("ppl").alias("ppl_q"),
@@ -131,7 +125,7 @@ def scores_oracle_trained_langid(spark, sf_dir) -> DataFrame:
     the full trained seam: per-language bigram tables estimated from the
     corpus's labeled slice (lmtrain.train_langid_tables), quantized to 6
     decimals (so the DuckDB twin — which re-trains the same tables IN SQL —
-    sums identical IEEE doubles), broadcast via langid_bc, and scored
+    sums identical IEEE doubles), passed as Models.langid, and scored
     through the production Arrow kernel. Beyond langid_train_bigram_counts
     (which pins the trained TABLE), this pins the argmax/`und`-rule/keep-
     chain behavior of the trained model end to end under the driver's hash
@@ -144,8 +138,8 @@ def scores_oracle_trained_langid(spark, sf_dir) -> DataFrame:
 
     d = table(spark, sf_dir, "documents")
     langs, tbl = lmtrain.train_langid_tables(d)
-    bc = spark.sparkContext.broadcast((langs, np.round(tbl, 6)))
-    return score_documents(spark, sf_dir, langid_bc=bc).select(
+    models = udfs.Models(langid=(langs, np.round(tbl, 6)))
+    return score_documents(spark, sf_dir, models).select(
         "doc_id",
         "lang",
         F.col("ppl").alias("ppl_q"),

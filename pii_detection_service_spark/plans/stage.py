@@ -45,7 +45,7 @@ DEFAULT_BUCKETS = 64
 SALT_FACTOR = 8
 
 
-def score(df: DataFrame, lm_bc=None, gaz_bc=None, langid_bc=None) -> DataFrame:
+def score(df: DataFrame, models: udfs.Models | None = None) -> DataFrame:
     """Map-only fused scoring pass (langid/ppl/keep/tag/scrub).
 
     Scalar pandas_udf, NOT mapInPandas: only the caption column is
@@ -53,14 +53,15 @@ def score(df: DataFrame, lm_bc=None, gaz_bc=None, langid_bc=None) -> DataFrame:
     passthrough columns never leave the JVM. At 10^12 rows the bytes
     column is ~10-20x the caption volume, so this is the difference
     between shipping captions and shipping the whole table through
-    Python. ``lm_bc`` (artifacts.broadcast_arpa_lm) swaps the perplexity
-    model for a production ARPA artifact; ``gaz_bc``
-    (artifacts.broadcast_gazetteer) swaps the given-name gazetteer;
-    ``langid_bc`` (lmtrain.broadcast_trained_langid) swaps the langid
-    profiles for corpus-trained per-language tables."""
+    Python. ``models`` (udfs.Models) swaps in production models (ARPA or
+    corpus-trained LM, trained langid profiles, a large gazetteer) and is
+    broadcast once here; None scores with the builtins and broadcasts
+    nothing."""
+    models_bc = (
+        None if models is None else df.sparkSession.sparkContext.broadcast(models)
+    )
     scored = df.withColumn(
-        "_scored",
-        udfs.make_score_struct_udf(lm_bc, gaz_bc, langid_bc)(F.col("caption")),
+        "_scored", udfs.make_score_struct_udf(models_bc)(F.col("caption"))
     )
     return scored.select(*df.columns, "_scored.*")
 
@@ -77,9 +78,14 @@ def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
 
 
 def completed_buckets(spark: SparkSession, lineage_dir: str) -> DataFrame:
-    if os.path.isdir(lineage_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(lineage_dir)
-    ):
+    """Buckets with a ``done`` lineage row under ``lineage_dir``. The probe
+    for lineage files goes through the Hadoop FileSystem, so any URI Spark
+    writes to (plain path, ``file://``, ``hdfs://``, ``s3a://``) is seen;
+    it costs milliseconds on a fresh run, where ``spark.read.parquet`` of
+    the missing directory would take ~70 ms to raise."""
+    pattern = spark._jvm.org.apache.hadoop.fs.Path(lineage_dir + "/*.parquet")
+    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.globStatus(pattern):
         return (
             spark.read.parquet(lineage_dir)
             .where(F.col("status") == "done")
@@ -96,15 +102,12 @@ def run_stage(
     n_buckets: int = DEFAULT_BUCKETS,
     salt_factor: int = SALT_FACTOR,
     resume: bool = True,
-    lm_bc=None,
-    gaz_bc=None,
-    langid_bc=None,
+    models: udfs.Models | None = None,
 ) -> dict:
-    """Run (or resume) the full stage. Returns run metrics. The three
-    optional Broadcasts swap the scoring models for production artifacts
-    (ARPA LM / large gazetteer / corpus-trained langid profiles) — the
-    same seams pipeline.score_documents exposes, reachable from the CLI
-    (--arpa-lm / --gazetteer / --train-lm / --langid-train-source)."""
+    """Run (or resume) the full stage. Returns run metrics. ``models``
+    swaps the scoring models for production artifacts, as in
+    pipeline.score_documents; the CLI builds it from --arpa-lm /
+    --train-lm / --gazetteer / --langid-train-source."""
     data_dir = os.path.join(out_dir, "data")
     lineage_dir = os.path.join(out_dir, "lineage")
     metrics_dir = os.path.join(out_dir, "metrics")
@@ -125,7 +128,7 @@ def run_stage(
     if done_ids:
         df = df.where(~F.col("bucket").isin(done_ids))
 
-    scored = score(df, lm_bc=lm_bc, gaz_bc=gaz_bc, langid_bc=langid_bc)
+    scored = score(df, models)
 
     # THE one shuffle: explicit (bucket, salt) layout. Salt spreads hot
     # buckets (duplicate phash clusters / dominant language) over

@@ -6,32 +6,18 @@ with checkpoint-resume (per-partition lineage + idempotent writes —
 plans/stage.py). So there is deliberately no Structured Streaming pipeline
 here.
 
-What this module does provide is the thin adapter proving the scoring pass
-is streaming-compatible: `score_stream` applies the same fused Arrow
-scoring (udfs.make_score_iter) to a streaming DataFrame — mapInPandas is
-supported on streams, so a `readStream` source (e.g. files arriving in an
-input_hint-shaped directory) can reuse the identical stage logic with
+The scoring pass needs no adapter here: `plans.stage.score` is a scalar
+Arrow UDF, which Spark runs on streaming DataFrames exactly as in batch, so
+a `readStream` source (e.g. files arriving in an input_hint-shaped
+directory) reuses the identical stage logic with
 `writeStream.trigger(availableNow=True)` for incremental catch-up batches.
+This module holds the stream-only operators around it.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-
-from .. import udfs
-
-
-def score_stream(stream_df: DataFrame) -> DataFrame:
-    """Apply the flagship scoring pass to a streaming DataFrame. The caller
-    owns source/sink/checkpoint wiring; semantics are identical to the
-    batch stage's `score` (same scalar pandas_udf — only the caption column
-    crosses the Arrow boundary, on streams exactly as in batch)."""
-    scored = stream_df.withColumn(
-        "_scored", udfs.make_score_struct_udf()(F.col("caption"))
-    )
-    return scored.select(*stream_df.columns, "_scored.*")
-
 
 SESSION_OUT_SCHEMA = "user_id long, n_sessions long, n_events long"
 SESSION_STATE_SCHEMA = "last_ts_us long, n_sessions long, n_events long"

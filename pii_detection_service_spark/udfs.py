@@ -2,11 +2,12 @@
 
 The reference processes one document per HTTP request and reloads its model
 per request (ml_service_app.py:59-60, predictor.py:70). Here everything is
-batch-vectorized: Spark hands us Arrow record batches as pandas DataFrames
-(`mapInPandas`), the kernels in ``functions/`` run per batch, and all state
-(regexes, gazetteer, LM tables) is module-level — loaded once per executor
-process at import, the Spark-idiomatic replacement for the reference's
-model-cache-on-disk (predictor.py:30-35).
+batch-vectorized: Spark hands us Arrow record batches as pandas Series, the
+kernels in ``functions/`` run per batch, and the scoring models travel as
+one ``Models`` value: the builtins by default, or a production set that
+``plans.stage.score`` broadcasts once per job — the Spark-idiomatic
+replacement for the reference's model-cache-on-disk (predictor.py:30-35).
+No module state is swapped per batch.
 
 Zero per-row Python at the Spark level; per-element work inside a batch is
 intrinsic to regex tagging (as it would be for fastText/KenLM C calls).
@@ -14,17 +15,13 @@ intrinsic to regex tagging (as it would be for fastText/KenLM C calls).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from typing import NamedTuple
 
+import numpy as np
 import pandas as pd
 
 from .functions import quality, tagger, textref
 
-# Scored columns appended by score_batch, in output order.
-SCORE_COLUMNS = [
-    "lang", "ppl", "keep", "drop_reason",
-    "tokens", "labels", "n_pii", "n_toxic", "scrubbed_caption",
-]
 SCORE_DDL = (
     "lang string, ppl double, keep boolean, drop_reason string, "
     "tokens array<string>, labels array<string>, n_pii int, n_toxic int, "
@@ -32,29 +29,31 @@ SCORE_DDL = (
 )
 
 
-def score_batch(
-    captions: pd.Series, lm_tbl=None, gazetteer=None, langid_model=None
-) -> pd.DataFrame:
+class Models(NamedTuple):
+    """The scoring models as one value; each field defaults to the builtin.
+
+    - ``lm``: (_NC²,) natural-log char-bigram perplexity table
+      (quality.load_arpa_char_bigram, lmtrain.train_char_bigram_lm);
+    - ``langid``: (langs, (_NC², n_langs) table) profiles
+      (lmtrain.train_langid_tables);
+    - ``gazetteer``: lowercase given names (tagger.extend_gazetteer)."""
+
+    lm: np.ndarray = quality._LM_TBL
+    langid: tuple[list[str], np.ndarray] = (quality._LANGS, quality._LANG_TBL)
+    gazetteer: frozenset = tagger.FIRST_NAMES
+
+
+BUILTIN = Models()
+
+
+def score_batch(captions: pd.Series, models: Models = BUILTIN) -> pd.DataFrame:
     """One fused scoring pass over a caption batch: langid + perplexity +
     keep/drop heuristics + BIO PII tagging + scrub (SURVEY.md §2.9 UDF
-    batch 1+2 fused — one Arrow hop instead of two). ``lm_tbl`` swaps the
-    perplexity model for a loaded ARPA table (artifacts.broadcast_arpa_lm
-    seam); ``gazetteer`` swaps the given-name set for a large broadcast
-    artifact (artifacts.broadcast_gazetteer); ``langid_model`` swaps the
-    langid profiles for corpus-trained per-language tables
-    (lmtrain.broadcast_trained_langid seam); None keeps the builtins."""
-    prev_gaz = tagger.set_gazetteer(gazetteer) if gazetteer is not None else None
-    try:
-        return _score_batch_inner(captions, lm_tbl, langid_model)
-    finally:
-        if prev_gaz is not None:
-            tagger.set_gazetteer(prev_gaz)
-
-
-def _score_batch_inner(captions: pd.Series, lm_tbl, langid_model=None) -> pd.DataFrame:
+    batch 1+2 fused — one Arrow hop instead of two), under ``models``."""
+    lm, langid, gaz = models
     caps = captions.fillna("")
     lp = caps.map(  # fused: one lower + one bigram encode
-        lambda t: quality.lang_and_ppl(t, lm_tbl, langid_model)
+        lambda t: quality.lang_and_ppl(t, lm, langid)
     )
     langs = pd.Series([x[0] for x in lp], index=caps.index)
     ppls = pd.Series([x[1] for x in lp], index=caps.index)
@@ -62,7 +61,8 @@ def _score_batch_inner(captions: pd.Series, lm_tbl, langid_model=None) -> pd.Dat
         quality.keep_decision(c, l, p)
         for c, l, p in zip(caps, langs, ppls)
     ]
-    tagged = caps.map(tagger.tag_and_scrub)  # one tokenize+span pass per row
+    # one tokenize+span pass per row
+    tagged = caps.map(lambda t: tagger.tag_and_scrub(t, gaz))
     return pd.DataFrame(
         {
             "lang": langs,
@@ -79,52 +79,18 @@ def _score_batch_inner(captions: pd.Series, lm_tbl, langid_model=None) -> pd.Dat
     )
 
 
-def make_score_iter(
-    passthrough_cols: list[str],
-    caption_col: str = "caption",
-    lm_bc=None,
-    gaz_bc=None,
-    langid_bc=None,
-):
-    """mapInPandas function: passthrough + scored columns. ``lm_bc`` /
-    ``gaz_bc`` / ``langid_bc`` are optional Broadcasts of a loaded ARPA LM
-    table, a large gazetteer, and a trained (langs, table) langid model
-    (resolved to their values once per batch iterator,
-    i.e. once per task, not per row).
-
-    NOTE: this ships EVERY column (including image bytes) through Arrow to
-    Python. Prefer ``score_struct_udf`` (plans/stage.py uses it): a scalar
-    pandas_udf serializes only the caption column and Spark zips the struct
-    result back positionally — at 100 TB that is ~10-20x less Arrow traffic.
-    Kept for surfaces where the full batch genuinely must reach Python
-    (e.g. fused image+caption kernels).
-    """
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tbl = lm_bc.value if lm_bc is not None else None
-        gaz = gaz_bc.value if gaz_bc is not None else None
-        lid = langid_bc.value if langid_bc is not None else None
-        for pdf in batches:
-            scored = score_batch(pdf[caption_col], tbl, gaz, lid)
-            yield pd.concat([pdf[passthrough_cols], scored], axis=1)
-
-    return fn
-
-
-def make_score_struct_udf(lm_bc=None, gaz_bc=None, langid_bc=None):
+def make_score_struct_udf(models_bc=None):
     """Scalar pandas_udf: caption in → struct of scored columns out. Only
     the caption column crosses the Arrow boundary; bytes/phash/etc. stay
-    JVM-side. Same kernel (score_batch), bit-identical outputs; ``lm_bc``
-    / ``gaz_bc`` / ``langid_bc`` optionally swap the perplexity model /
-    gazetteer / langid profiles for broadcast artifacts."""
+    JVM-side. ``models_bc`` is an optional Broadcast of a ``Models``
+    value; None scores with the builtins."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf(f"struct<{SCORE_DDL}>")
     def score_struct(captions: pd.Series) -> pd.DataFrame:
-        tbl = lm_bc.value if lm_bc is not None else None
-        gaz = gaz_bc.value if gaz_bc is not None else None
-        lid = langid_bc.value if langid_bc is not None else None
-        return score_batch(captions, tbl, gaz, lid)
+        return score_batch(
+            captions, BUILTIN if models_bc is None else models_bc.value
+        )
 
     return score_struct
 
@@ -146,25 +112,3 @@ def predict_pipeline_batch(texts: pd.Series) -> pd.DataFrame:
         },
         index=texts.index,
     )
-
-
-def decode_image_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Image decode + PSNR-vs-reencode invariant columns (test/verification
-    path; the decode itself is the pluggable-codec seam — imagecodec.py)."""
-    import numpy as np
-
-    from .sources import imagecodec
-
-    rows = []
-    for data, fmt in zip(pdf["bytes"], pdf["fmt"]):
-        try:
-            px = imagecodec.decode(bytes(data), fmt)
-            rows.append(
-                (int(px.shape[1]), int(px.shape[0]), float(np.mean(px)), True)
-            )
-        except Exception:
-            rows.append((0, 0, 0.0, False))
-    out = pd.DataFrame(
-        rows, columns=["dec_w", "dec_h", "mean_px", "decode_ok"], index=pdf.index
-    )
-    return out

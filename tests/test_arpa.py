@@ -1,5 +1,6 @@
 """ARPA model loading (KenLM interchange format): backoff semantics,
-round-trip against the built-in LM, and the broadcast scoring seam."""
+round-trip against the built-in LM, and scoring with a loaded model as
+Models.lm."""
 
 import math
 
@@ -59,37 +60,23 @@ def test_malformed_arpa_raises(tmp_path):
 
 
 def test_broadcast_scoring_matches_driver(spark, tmp_path):
-    """The production wiring: broadcast the loaded table, score captions in
-    an Arrow batch against bc.value — distributed results must equal the
-    driver-side kernel row-for-row."""
-    import pandas as pd
-
-    from pii_detection_service_spark.sources import artifacts
+    """The production wiring: the loaded table travels as Models.lm, which
+    stage.score broadcasts and scores captions in Arrow batches against —
+    distributed results must equal the driver-side kernel row-for-row."""
+    from pii_detection_service_spark import udfs
+    from pii_detection_service_spark.plans import stage
 
     p = str(tmp_path / "m.arpa")
     quality.export_builtin_lm_arpa(p)
-    bc = artifacts.broadcast_arpa_lm(spark, p)
+    models = udfs.Models(lm=quality.load_arpa_char_bigram(p))
 
     texts = [f"caption number {i} with the thing" for i in range(50)] + ["", "zz"]
     df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, caption string"
     )
-
-    def fn(batches):
-        tbl = bc.value
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "ppl": [
-                        quality.perplexity_table(t, tbl) for t in pdf["text"]
-                    ],
-                }
-            )
-
     got = {
         r["doc_id"]: r["ppl"]
-        for r in df.mapInPandas(fn, "doc_id long, ppl double").collect()
+        for r in stage.score(df, models).select("doc_id", "ppl").collect()
     }
     tbl = quality.load_arpa_char_bigram(p)
     for i, t in enumerate(texts):
@@ -132,23 +119,19 @@ def test_large_arpa_distributed_scoring_matches_driver(spark, tmp_path):
     score_batch), and the distributed ppl equals the driver-side
     perplexity_table row-for-row; langid and keep/drop still run the
     builtin profiles."""
-    import pyspark.sql.functions as F
-
     from pii_detection_service_spark import udfs
-    from pii_detection_service_spark.sources import artifacts
+    from pii_detection_service_spark.plans import stage
 
     p = str(tmp_path / "big.arpa")
     quality.export_synth_arpa(p)
-    bc = artifacts.broadcast_arpa_lm(spark, p)
+    models = udfs.Models(lm=quality.load_arpa_char_bigram(p))
 
     texts = [f"caption number {i} with the thing on the table" for i in range(40)]
     texts += ["", "zz", "the the the", "él ñandú 〠 non-latin ⽕"]
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, caption string"
     )
-    scored = df.withColumn(
-        "_s", udfs.make_score_struct_udf(bc)(F.col("caption"))
-    ).select("doc_id", "_s.lang", "_s.ppl", "_s.keep")
+    scored = stage.score(df, models).select("doc_id", "lang", "ppl", "keep")
     got = {r["doc_id"]: r for r in scored.collect()}
 
     tbl = quality.load_arpa_char_bigram(p)
@@ -177,7 +160,7 @@ def test_score_batch_arpa_roundtrip_matches_builtin():
         ["the quick brown fox", "el zorro marron", "", "a", "zzzz ~~~ !!!"]
     )
     a = udfs.score_batch(caps)
-    b = udfs.score_batch(caps, tbl)
+    b = udfs.score_batch(caps, udfs.Models(lm=tbl))
     for col in a.columns:
         if col == "ppl":
             assert np.allclose(a[col], b[col], rtol=1e-9, atol=0)

@@ -1,12 +1,13 @@
 """Distributed char-bigram LM training: the Spark aggregation must be
 bit-identical to a pure-Python trainer, the trained table must flow
-through the production lm_bc seam, and training must actually help (the
-point of domain fitting: in-domain text scores lower perplexity than
-under the out-of-domain builtin)."""
+through the production scoring path as Models.lm, and training must
+actually help (the point of domain fitting: in-domain text scores lower
+perplexity than under the out-of-domain builtin)."""
 
 import numpy as np
 import pyspark.sql.functions as F
 
+from pii_detection_service_spark import udfs
 from pii_detection_service_spark.functions import quality
 from pii_detection_service_spark.operators import lmtrain, pipeline, relational
 
@@ -38,15 +39,15 @@ def test_trained_table_nonlatin_clips_to_shared_bucket(spark):
 
 
 def test_trained_lm_scores_through_pipeline_seam(spark):
-    """broadcast_trained_lm plugs into pipeline.score_documents: the ppl
-    column equals a driver-side perplexity_table recompute under the
-    trained table, and differs from the builtin run (the swap engaged)."""
+    """A trained table plugs into pipeline.score_documents as Models.lm:
+    the ppl column equals a driver-side perplexity_table recompute under
+    the trained table, and differs from the builtin run (the swap
+    engaged)."""
     d = relational.table(spark, SF, "documents")
     tbl = lmtrain.train_char_bigram_lm(d)
-    bc = spark.sparkContext.broadcast(tbl)
     trained = {
         r["doc_id"]: r["ppl"]
-        for r in pipeline.score_documents(spark, SF, lm_bc=bc).collect()
+        for r in pipeline.score_documents(spark, SF, udfs.Models(lm=tbl)).collect()
     }
     builtin = {
         r["doc_id"]: r["ppl"]
@@ -87,7 +88,7 @@ def test_count_table_totals_are_corpus_bigram_count(spark):
     assert total == want
 
 
-# --- trained langid (the langid_bc seam, mirroring lm_bc) --------------------
+# --- trained langid (Models.langid, mirroring Models.lm) ---------------------
 
 
 def test_trained_langid_tables_match_pure_python(spark):
@@ -114,16 +115,17 @@ def test_trained_langid_excludes_unlabeled_rows(spark):
 
 
 def test_trained_langid_scores_through_pipeline_seam(spark):
-    """broadcast_trained_langid plugs into pipeline.score_documents: the
-    lang column equals a driver-side argmax recompute under the trained
-    tables (ties → first max → smallest code, langs sorted), the 'und'
-    rules stay model-independent, and ppl is untouched by the swap."""
+    """Trained langid tables plug into pipeline.score_documents as
+    Models.langid: the lang column equals a driver-side argmax recompute
+    under the trained tables (ties → first max → smallest code, langs
+    sorted), the 'und' rules stay model-independent, and ppl is untouched
+    by the swap."""
     d = relational.table(spark, SF, "documents")
     langs, tbl = lmtrain.train_langid_tables(d)
-    bc = lmtrain.broadcast_trained_langid(spark, d)
+    models = udfs.Models(langid=(langs, tbl))
     trained = {
         r["doc_id"]: (r["lang"], r["ppl"])
-        for r in pipeline.score_documents(spark, SF, langid_bc=bc).collect()
+        for r in pipeline.score_documents(spark, SF, models).collect()
     }
     builtin = {
         r["doc_id"]: (r["lang"], r["ppl"])

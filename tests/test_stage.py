@@ -187,6 +187,36 @@ def test_stage_plan_is_map_only_plus_one_shuffle(spark, src):
     assert plan.count("Exchange") == 1
 
 
+def test_run_stage_resumes_through_file_uri(spark, src, tmp_path):
+    """Resume sees lineage behind a storage URI, not only a plain local
+    path: a rerun into the same ``file://`` out_dir is a no-op, and lineage
+    keeps one row per bucket (no full rescore, no duplicate lineage)."""
+    out = "file://" + str(tmp_path / "uri_out")
+    assert stage.run_stage(spark, src, out, n_buckets=8, salt_factor=2)["rows"] == N
+    m2 = stage.run_stage(spark, src, out, n_buckets=8, salt_factor=2)
+    assert m2["resumed_noop"]
+    lineage = spark.read.parquet(out + "/lineage")
+    assert lineage.count() == 8
+    assert lineage.select("bucket").distinct().count() == 8
+    assert spark.read.parquet(out + "/data").count() == N
+
+
+def test_one_scoring_path(spark, tmp_path):
+    """stage.score and pipeline.score_documents run the same scalar Arrow
+    UDF: exactly one ArrowEvalPython node each, and no MapInPandas (which
+    would ship every column through Python)."""
+    from pii_detection_service_spark.operators import pipeline
+
+    sf = str(tmp_path / "sf")
+    docs = spark.createDataFrame([(1, "a photo of Alice")], "doc_id long, text string")
+    docs.write.parquet(f"{sf}/documents.parquet")
+    images = spark.read.parquet(f"{sf}/documents.parquet").withColumnRenamed("text", "caption")
+    for df in (stage.score(images), pipeline.score_documents(spark, sf)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ArrowEvalPython") == 1, plan
+        assert "MapInPandas" not in plan, plan
+
+
 def test_resume_after_torn_file_rewrites_bucket_idempotently(spark, src, tmp_path):
     """Crash DURING a bucket's data write: the bucket dir holds a torn
     (half-written, unreadable) parquet part and lineage never recorded the

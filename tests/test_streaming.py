@@ -1,12 +1,14 @@
-"""Streaming adapter: the same fused scoring pass runs on a file stream
-(readStream → mapInPandas → writeStream availableNow) with identical
-results to the batch stage."""
+"""Streaming: the batch stage's scoring pass (stage.score, a scalar Arrow
+UDF) runs unchanged on a file stream (readStream → stage.score →
+writeStream availableNow) with identical results to the batch stage; plus
+the stream-only operators."""
 
 import os
 
 import pyspark.sql.functions as F
 
 from pii_detection_service_spark import streaming
+from pii_detection_service_spark.plans import stage
 from pii_detection_service_spark.schema import INPUT_SCHEMA
 from pii_detection_service_spark.sources import synth
 
@@ -20,7 +22,7 @@ def test_score_stream_matches_batch(spark, tmp_path):
     batch_src.write.mode("overwrite").parquet(src_dir)
 
     stream = spark.readStream.schema(INPUT_SCHEMA).parquet(src_dir)
-    scored = streaming.score_stream(stream)
+    scored = stage.score(stream)
     q = (
         scored.writeStream.format("parquet")
         .option("path", out_dir)
@@ -33,8 +35,6 @@ def test_score_stream_matches_batch(spark, tmp_path):
     got = spark.read.parquet(out_dir)
     assert got.count() == 60
     # identical keep/scrub results to the batch path
-    from pii_detection_service_spark.plans import stage
-
     batch = stage.score(spark.read.parquet(src_dir)).select(
         "image_id", "keep", "scrubbed_caption", "n_pii", "n_toxic"
     )
@@ -51,7 +51,7 @@ def test_score_stream_matches_batch(spark, tmp_path):
         "caption", "phash",
     ).coalesce(1).write.mode("append").parquet(src_dir)
     q2 = (
-        streaming.score_stream(spark.readStream.schema(INPUT_SCHEMA).parquet(src_dir))
+        stage.score(spark.readStream.schema(INPUT_SCHEMA).parquet(src_dir))
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", ckpt)
@@ -130,7 +130,7 @@ def test_windowed_quality_metrics_matches_batch(spark, tmp_path):
 
     schema = INPUT_SCHEMA.add(StructField("ingest_ts", TimestampType()))
     stream = spark.readStream.schema(schema).parquet(src_dir)
-    scored = streaming.score_stream(stream)
+    scored = stage.score(stream)
     agg = streaming.windowed_quality_metrics(scored)
     q = (
         agg.writeStream.format("memory")
@@ -148,8 +148,6 @@ def test_windowed_quality_metrics_matches_batch(spark, tmp_path):
         )
         for r in spark.sql("select * from win_metrics").collect()
     }
-    from pii_detection_service_spark.plans import stage
-
     batch = (
         stage.score(spark.read.parquet(src_dir))
         .groupBy(F.window("ingest_ts", "1 minute").alias("win"), "lang", "keep")
