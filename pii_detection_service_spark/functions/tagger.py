@@ -17,6 +17,8 @@ strings in, lists out) and directly from golden tests.
 from __future__ import annotations
 
 import re
+import string
+
 WORD_RE = re.compile(r"\S+")
 TRAILING_PUNCT = ".,!?;:"
 ABBREVIATIONS = frozenset(
@@ -24,7 +26,12 @@ ABBREVIATIONS = frozenset(
 )
 
 # --- span regexes (applied to raw text; longest-class-first precedence) ----
+# EMAIL_RE is the spec; find_pii_spans runs the equivalent linear-time
+# _email_spans instead (finditer retries the local part from every start,
+# quadratic on runs like "a.a.a...@").
 EMAIL_RE = re.compile(r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}")
+_EMAIL_LOCAL = frozenset(string.ascii_letters + string.digits + "._%+-")
+_EMAIL_DOMAIN_RE = re.compile(r"[A-Za-z0-9.-]+\.[A-Za-z]{2,}")
 URL_RE = re.compile(r"(?:https?://|www\.)[^\s]+?(?=[.,;:!?]?(?:\s|$))")
 # US-style phone: 415-555-9876 / (555) 123-4567 / +1 212 555 1234
 PHONE_RE = re.compile(
@@ -93,6 +100,31 @@ _UPPER_RE = re.compile(r"[A-Z]")
 Token = tuple
 
 
+def _email_spans(text: str) -> list[tuple[int, int]]:
+    """The (start, end) spans of ``EMAIL_RE.finditer(text)`` in time linear
+    in ``len(text)``. '@' is in neither the local-part nor the domain class,
+    so a match is: the maximal local-part run ending at some '@' (cut at
+    the previous match's end), then the regex's domain part after it. The
+    '@'s are visited in order; each local run is walked once and each
+    domain run (which stops at the next '@') is matched once, so every
+    character is read a bounded number of times."""
+    out: list[tuple[int, int]] = []
+    pos = 0
+    at = text.find("@")
+    while at != -1:
+        start = at
+        while start > pos and text[start - 1] in _EMAIL_LOCAL:
+            start -= 1
+        m = _EMAIL_DOMAIN_RE.match(text, at + 1) if start < at else None
+        if m is None:
+            at = text.find("@", at + 1)
+            continue
+        pos = m.end()
+        out.append((start, pos))
+        at = text.find("@", pos)
+    return out
+
+
 def word_tokenize(text: str) -> list[tuple[str, int, int]]:
     """Whitespace (text, start, end) tokens; trailing sentence punctuation is
     peeled into its own token unless the word is a known abbreviation.
@@ -151,9 +183,14 @@ def find_pii_spans(
     for cls, pat in _SPAN_RES:
         if not gates[cls]:
             continue
-        for m in pat.finditer(text):
-            if free(m.start(), m.end()):
-                spans.append((m.start(), m.end(), cls))
+        found = (
+            _email_spans(text)
+            if pat is EMAIL_RE
+            else [m.span() for m in pat.finditer(text)]
+        )
+        for s, e in found:
+            if free(s, e):
+                spans.append((s, e, cls))
 
     if _UPPER_RE.search(text) is None:
         spans.sort()

@@ -21,9 +21,11 @@ Scale design notes (the part that must survive 1000 executors / 100 TB):
 - Sink is partitioned Parquet here; on a real cluster the same plan targets
   an Iceberg table (writeTo(...).overwritePartitions()) — semantics match
   (idempotent per-partition replace), this sandbox has no Iceberg runtime.
-- Run metrics derive from the per-bucket lineage aggregate, a column-pruned
-  scan (bucket/keep/n_pii only) of the just-written output — the scoring UDF
-  never runs twice.
+- Lineage and run metrics come from ONE cached aggregate over a
+  column-pruned scan (bucket/lang/keep/drop_reason/n_pii) of the
+  just-written output: per-bucket lineage and per-(lang, keep, drop_reason)
+  metrics both roll up from it, so the output is scanned once and the
+  scoring UDF never runs twice.
 
 The reference analog: its whole /save-essay HTTP pipeline
 (backend_service_app.py:139-196 → ml_service_app.py:40-104) is this one lazy
@@ -82,7 +84,10 @@ def completed_buckets(spark: SparkSession, lineage_dir: str) -> DataFrame:
     for lineage files goes through the Hadoop FileSystem, so any URI Spark
     writes to (plain path, ``file://``, ``hdfs://``, ``s3a://``) is seen;
     it costs milliseconds on a fresh run, where ``spark.read.parquet`` of
-    the missing directory would take ~70 ms to raise."""
+    the missing directory would take ~70 ms to raise. With no lineage the
+    result is an empty ``LocalTableScan``: collecting it launches no Spark
+    job and no Python worker (``createDataFrame([])`` would go through the
+    Python-parallelize path)."""
     pattern = spark._jvm.org.apache.hadoop.fs.Path(lineage_dir + "/*.parquet")
     fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
     if fs.globStatus(pattern):
@@ -92,7 +97,7 @@ def completed_buckets(spark: SparkSession, lineage_dir: str) -> DataFrame:
             .select("bucket")
             .distinct()
         )
-    return spark.createDataFrame([], "bucket int")
+    return spark.sql("SELECT CAST(NULL AS INT) AS bucket WHERE false")
 
 
 def run_stage(
@@ -158,40 +163,60 @@ def run_stage(
         "bucket"
     ).parquet(data_dir)
 
-    # Per-bucket lineage from the written output (cheap: column-pruned scan
-    # of keep/n_pii only, partition column comes from directory layout —
-    # here the bucket filter DOES prune at file level). Scope to buckets
-    # processed THIS run so resumed runs never duplicate lineage.
-    written = spark.read.parquet(data_dir)
+    # Lineage and metrics from ONE aggregate over the written output: a
+    # column-pruned scan (partition column from the directory layout, so
+    # the bucket filter prunes at file level), scoped to buckets processed
+    # THIS run so resumed runs never duplicate lineage. The read schema is
+    # the written one, so no footer-reading job infers it. The aggregate is
+    # tiny (buckets x langs x drop reasons), cached in ONE partition, so
+    # the lineage collect, the lineage write and the metrics write each
+    # roll it up without rescanning the output or shuffling. Both are
+    # written from JVM-side plans: createDataFrame(collected_rows) would
+    # re-enter the Python-parallelize path, which costs seconds per action.
+    keys = ["bucket", "lang", "keep", "drop_reason"]
+    written = spark.read.schema(out.schema).parquet(data_dir)
     if done_ids:
         written = written.where(~F.col("bucket").isin(done_ids))
     runtime = time.monotonic() - t0
-    lineage_df = (
-        written.groupBy("bucket")
+    groups = (
+        written.groupBy(*keys)
         .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.col("keep").cast("long")).alias("n_kept"),
+            F.count(F.lit(1)).alias("count"),
             F.sum((F.col("n_pii") > 0).cast("long")).alias("n_pii_rows"),
         )
-        .withColumn("runtime_sec", F.lit(float(runtime)))
-        .withColumn("status", F.lit("done"))
+        .coalesce(1)
+        .cache()
     )
-    # collect for the return metrics, but WRITE the aggregate DataFrame
-    # itself: a createDataFrame(collected_rows) round-trip re-enters the
-    # Python-parallelize path, which costs ~5s per action even for 32 rows
-    # (measured); the JVM-side plan re-runs a column-pruned agg in <1s.
-    lineage_rows = lineage_df.collect()  # ≤ n_buckets rows
-    if not lineage_rows:
-        return {"rows": 0, "kept": 0, "pii_rows": 0, "resumed_noop": True}
+    # A sum is nullable where count() is not; coalescing it with 0 (a no-op,
+    # every group counts ≥ 1 row) keeps the written parquet schema the one
+    # count() gives, so files appended by earlier runs share it.
+    row_total = F.coalesce(F.sum("count"), F.lit(0))
+    try:
+        lineage_df = (
+            groups.groupBy("bucket")
+            .agg(
+                row_total.alias("n_rows"),
+                F.sum(F.col("keep").cast("long") * F.col("count")).alias("n_kept"),
+                F.sum("n_pii_rows").alias("n_pii_rows"),
+            )
+            .withColumns(
+                {"runtime_sec": F.lit(float(runtime)), "status": F.lit("done")}
+            )
+        )
+        lineage_rows = lineage_df.collect()  # ≤ n_buckets rows
+        if not lineage_rows:
+            return {"rows": 0, "kept": 0, "pii_rows": 0, "resumed_noop": True}
 
-    lineage_df.coalesce(1).write.mode("append").parquet(lineage_dir)
+        lineage_df.coalesce(1).write.mode("append").parquet(lineage_dir)
 
-    metrics = (
-        written.groupBy("lang", "keep", "drop_reason")
-        .count()
-        .withColumn("run_ts", F.current_timestamp())
-    )
-    metrics.coalesce(1).write.mode("append").parquet(metrics_dir)
+        metrics = (
+            groups.groupBy("lang", "keep", "drop_reason")
+            .agg(row_total.alias("count"))
+            .withColumn("run_ts", F.current_timestamp())
+        )
+        metrics.coalesce(1).write.mode("append").parquet(metrics_dir)
+    finally:
+        groups.unpersist()
 
     return {
         "rows": sum(r["n_rows"] for r in lineage_rows),

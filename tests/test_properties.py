@@ -222,3 +222,27 @@ def test_grayscale_jpeg_roundtrip_any_shape(h, w, seed):
     mse = float(np.mean((px.astype(np.float64) - out) ** 2))
     psnr = 10.0 * np.log10(255.0**2 / mse) if mse else float("inf")
     assert psnr >= 38.0, psnr
+
+
+# Runs of the adversarial alphabets (a., x@, %+-_, .-), plus the pieces a
+# real match needs (letters for the TLD, a space, a non-ASCII letter).
+email_runs = st.lists(
+    st.tuples(
+        st.sampled_from(["a.", "x@", "%+-_", ".-", "co", " ", "é"]),
+        st.integers(1, 12),
+    ),
+    max_size=12,
+).map(lambda runs: "".join(piece * n for piece, n in runs))
+
+
+@given(email_runs)
+@settings(max_examples=500, deadline=None)
+@example("a.a.x@co.co%+-_x@a.co")
+@example("x@x@co.co")
+def test_email_scan_equals_email_re(text):
+    """The linear EMAIL scan finds exactly EMAIL_RE.finditer's spans, and
+    find_pii_spans reports them (EMAIL has the highest precedence)."""
+    want = [m.span() for m in tagger.EMAIL_RE.finditer(text)]
+    assert tagger._email_spans(text) == want
+    got = [(s, e) for s, e, cls in tagger.find_pii_spans(text) if cls == "EMAIL"]
+    assert got == want

@@ -258,3 +258,95 @@ def test_resume_after_torn_file_rewrites_bucket_idempotently(spark, src, tmp_pat
     assert data.count() == src.count()
     assert data.select("image_id").distinct().count() == src.count()
     assert spark.read.parquet(ldir).where("status = 'done'").count() == 8
+
+
+def test_fresh_resume_probe_launches_no_job(spark, tmp_path):
+    """With no lineage yet, the resume probe's empty result is collected on
+    the driver without a Spark job (an empty createDataFrame would launch
+    one through the Python-parallelize path)."""
+    sc = spark.sparkContext
+    group = "fresh-resume-probe"
+    sc.setJobGroup(group, "resume probe over a missing lineage dir")
+    try:
+        done = stage.completed_buckets(spark, str(tmp_path / "missing" / "lineage"))
+        assert done.collect() == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert done.schema.simpleString() == "struct<bucket:int>"
+
+
+def _commit_matches_written(spark, out, run_buckets, m):
+    """This run's lineage rows and metrics equal direct aggregates over the
+    buckets it wrote; every lineage file has LINEAGE_SCHEMA's names and
+    types; the returned counts are the lineage sums."""
+    from pii_detection_service_spark.schema import LINEAGE_SCHEMA
+
+    data = spark.read.parquet(os.path.join(out, "data")).where(
+        F.col("bucket").isin(run_buckets)
+    )
+    want = {
+        r["bucket"]: (r["n_rows"], r["n_kept"], r["n_pii_rows"])
+        for r in data.groupBy("bucket").agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.col("keep").cast("long")).alias("n_kept"),
+            F.sum((F.col("n_pii") > 0).cast("long")).alias("n_pii_rows"),
+        ).collect()
+    }
+    ldir = os.path.join(out, "lineage")
+    lineage = spark.read.parquet(ldir).where(F.col("bucket").isin(run_buckets))
+    got = {
+        r["bucket"]: (r["n_rows"], r["n_kept"], r["n_pii_rows"])
+        for r in lineage.collect()
+    }
+    assert got == want
+    assert lineage.count() == len(run_buckets)
+    assert (m["rows"], m["kept"], m["pii_rows"]) == tuple(
+        sum(v[i] for v in want.values()) for i in range(3)
+    )
+
+    metrics = spark.read.parquet(os.path.join(out, "metrics"))
+    key = ("lang", "keep", "drop_reason", "count")
+    direct = data.groupBy("lang", "keep", "drop_reason").count()
+    assert sorted(map(tuple, metrics.select(*key).collect())) == sorted(
+        map(tuple, direct.select(*key).collect())
+    )
+
+    spec = [(f.name, f.dataType) for f in LINEAGE_SCHEMA.fields]
+    files = [f for f in os.listdir(ldir) if f.endswith(".parquet")]
+    assert files
+    for f in files:
+        schema = spark.read.parquet(os.path.join(ldir, f)).schema
+        assert [(g.name, g.dataType) for g in schema.fields] == spec, f
+
+
+def test_commit_parity_fresh_and_resumed(spark, src, tmp_path):
+    """The lineage/metrics commit equals direct aggregates over the written
+    output, on a fresh run and on a resume over partial lineage, and leaves
+    no cached or persisted RDD behind."""
+    sc = spark.sparkContext
+    src.count()  # materialize the fixture's own cache before the snapshot
+    persisted = set(sc._jsc.getPersistentRDDs().keys())
+
+    fresh = str(tmp_path / "fresh_out")
+    m = stage.run_stage(spark, src, fresh, n_buckets=8, salt_factor=2)
+    assert set(sc._jsc.getPersistentRDDs().keys()) == persisted
+    _commit_matches_written(spark, fresh, list(range(8)), m)
+
+    resumed = str(tmp_path / "resumed_out")
+    os.makedirs(resumed)
+    spark.createDataFrame(
+        [(b, 0, 0, 0, 0.0, "done") for b in range(4, 8)],
+        "bucket int, n_rows long, n_kept long, n_pii_rows long, "
+        "runtime_sec double, status string",
+    ).coalesce(1).write.parquet(os.path.join(resumed, "lineage"))
+    m = stage.run_stage(spark, src, resumed, n_buckets=8, salt_factor=2)
+    assert set(sc._jsc.getPersistentRDDs().keys()) == persisted
+    _commit_matches_written(spark, resumed, list(range(4)), m)
+
+    # a resume with nothing pending returns early, still unpersisted
+    assert stage.run_stage(spark, src, resumed, n_buckets=8, salt_factor=2)[
+        "resumed_noop"
+    ]
+    assert set(sc._jsc.getPersistentRDDs().keys()) == persisted

@@ -146,3 +146,21 @@ def test_casefold_homoglyph_toxic_still_scrubbed():
     assert scrubbed == "[TOXIC] thing here"
     # the fast-path predicate itself must classify it as not-plain
     assert not tagger._is_plain(text)
+
+
+def test_email_scan_time_grows_linearly():
+    """A hostile email-like run must not stall a task: tagging 10x the
+    input costs ~10x the time (EMAIL_RE.finditer costs ~100x, since it
+    retries the local part from every start position)."""
+    import time
+
+    def best(text):
+        times = []
+        for _ in range(3):
+            t0 = time.perf_counter()
+            tagger.find_pii_spans(text)
+            times.append(time.perf_counter() - t0)
+        return min(times)
+
+    small, large = best("a." * 5_000 + "@"), best("a." * 50_000 + "@")
+    assert large / small < 30, (small, large)
