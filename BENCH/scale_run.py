@@ -128,6 +128,7 @@ def main():
     ).count()
 
     from pii_detection_service_spark.operators import dedup
+    from pii_detection_service_spark.operators.relational import table
 
     times: dict[str, float] = {}
     rows: dict[str, int] = {}
@@ -171,7 +172,7 @@ def main():
     timed(
         "dedup_simhash",
         lambda: len(
-            dedup.simhash(spark, docs_dir)
+            dedup.simhash64_sketch(table(spark, docs_dir, "documents"))
             .agg(*[F.sum(f"sh{i}") for i in range(4)])
             .collect()
         ),

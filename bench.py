@@ -42,7 +42,6 @@ def main():
         "pipeline_score_documents",   # flagship: langid+ppl+keep/drop+tag+scrub
         "dedup_exact",
         "dedup_minhash_signatures",
-        "dedup_simhash",
         "sim_topk_cosine",
         "ann_lsh_buckets",
         "lineitem_pricing",
@@ -50,7 +49,6 @@ def main():
         "quality_score",
         "langid_stopword",
         "fingerprint",
-        "g1_fbeta_drift",
         "join_shipping_priority",
         "events_sessionize",
         "tfidf_top_terms",

@@ -376,16 +376,6 @@ def symbol_ratio(text: str) -> float:
     return len(_NON_WORD_RE.findall(text)) / len(text)
 
 
-def top_word_ratio(text: str) -> float:
-    words = [w for w in text.split() if w]
-    if not words:
-        return 1.0
-    counts: dict[str, int] = {}
-    for w in words:
-        counts[w] = counts.get(w, 0) + 1
-    return max(counts.values()) / len(words)
-
-
 def keep_decision(text: str, lang: str, ppl: float) -> tuple[bool, str]:
     """(keep, drop_reason) — first failing rule wins; '' when kept.
 

@@ -13,9 +13,7 @@ Scale notes (timings: 5M-doc corpus, local[32] — BENCH/scale5m.json):
             AND collision-useless at 10^12 rows); candidates = shared band
             word + Hamming ≤ 3 verify on star edges (46 s incl. sketch).
 - jaccard:  exact verify on LSH star-edge candidates (jaccard_candidates,
-            56 s for 16.4M verified pairs — linear in corpus);
-            jaccard_pairs keeps the blocked all-pairs baseline for recall
-            studies only.
+            56 s for 16.4M verified pairs — linear in corpus).
 - embedding near-dup: sign-LSH bucket blocking shared with similarity.py's
             ANN index; exact cosine only on same-bucket pairs.
 - group-min everywhere via groupBy+join (AQE-splittable), never a Window
@@ -648,12 +646,6 @@ def simhash64_sketch(d: DataFrame) -> DataFrame:
     )
 
 
-def simhash(spark, sf_dir) -> DataFrame:
-    """64-bit SimHash sketch query (driver-oracled: the DuckDB twin refolds
-    the integer hashes in SQL — exact, no quantization)."""
-    return simhash64_sketch(table(spark, sf_dir, "documents"))
-
-
 def simhash64_candidates(
     d: DataFrame, max_hamming: int = SIMHASH_MAX_HAMMING
 ) -> DataFrame:
@@ -729,8 +721,9 @@ def jaccard_candidates(spark, sf_dir) -> DataFrame:
     sf0.001, 63% of ALL pairs); star edges are ≤ bands·n rows no matter how
     skewed the buckets get. The shingle sets are attached afterwards by two
     doc_id-keyed joins — no shuffle ever carries a shingle array for a
-    non-candidate doc, and the O(block²) shape of jaccard_pairs never
-    appears. Verified-pair count == candidate-edge count, pinned by test."""
+    non-candidate doc, and no blocked all-pairs self-join (O(block²) in
+    the largest block) ever appears. Verified-pair count == candidate-edge
+    count, pinned by test."""
     sig = minhash_signatures(spark, sf_dir)
     bands = _band_assignments(sig)
     star = _with_grp_min(bands)
@@ -754,48 +747,6 @@ def jaccard_candidates(spark, sf_dir) -> DataFrame:
     )
     return pairs.select("doc_a", "doc_b", jac.alias("jac")).orderBy(
         F.col("jac").desc(), "doc_a", "doc_b"
-    )
-
-
-def jaccard_pairs(spark, sf_dir) -> DataFrame:
-    """Exact n-gram Jaccard verification over blocked candidate pairs.
-    Blocking on (lang, source) bounds the self-join; top pairs returned
-    deterministically (score, then ids; the rational score is unrounded —
-    identical doubles in every engine).
-
-    This is the exhaustive-within-block shape (useful as a recall baseline);
-    the scale path is jaccard_candidates, which verifies ONLY pairs the LSH
-    bands propose — at 100× corpus size a single dominant (lang, source)
-    block here self-joins O(block²) pairs, while the candidate set stays
-    linear in the number of true near-dups."""
-    d = table(spark, sf_dir, "documents").where(F.length("text") >= 3)
-    # int shingle ids (base-0x110000 positional code, injective before the
-    # mod-1e9+7 reduction) make set intersection/union sizes — and thus jac
-    # — match string shingles except under a mod collision (~1e-9 per
-    # distinct-shingle pair, and identical across engines either way), at a
-    # fraction of the compare cost
-    sh = _with_shingles(d).select(
-        "doc_id", "lang", "source", F.col("hs").alias("shingles")
-    )
-    a = sh.alias("a")
-    b = sh.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.lang") == F.col("b.lang"))
-        & (F.col("a.source") == F.col("b.source"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    )
-    jac = F.size(F.array_intersect("a.shingles", "b.shingles")) / F.size(
-        F.array_union("a.shingles", "b.shingles")
-    )
-    return (
-        pairs.select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            jac.alias("jac"),
-        )
-        .orderBy(F.col("jac").desc(), "doc_a", "doc_b")
-        .limit(200)
     )
 
 

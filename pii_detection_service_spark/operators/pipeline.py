@@ -16,25 +16,6 @@ from .. import udfs
 from ..plans import stage
 from .relational import table
 
-_BYTE_UNITS = {
-    "": 1, "b": 1,
-    "k": 1 << 10, "kb": 1 << 10,
-    "m": 1 << 20, "mb": 1 << 20,
-    "g": 1 << 30, "gb": 1 << 30,
-    "t": 1 << 40, "tb": 1 << 40,
-}
-
-
-def _parse_byte_string(raw: str, default: int = 134217728) -> int:
-    """Spark size-conf parser accepting the full two-letter suffixes the JVM
-    does ('128mb', '1g', '134217728b', bare digits). A malformed value falls
-    back to the Spark default rather than raising mid-query."""
-    import re
-
-    m = re.fullmatch(r"(\d+)\s*([kmgt]?b?)", raw.strip().lower())
-    return int(m.group(1)) * _BYTE_UNITS[m.group(2)] if m else default
-
-
 def score_documents(spark, sf_dir, models: udfs.Models | None = None) -> DataFrame:
     """The flagship stage's scoring pass (stage.score) with documents.text
     as captions. ``models`` optionally swaps in production models (ARPA or
@@ -50,11 +31,11 @@ def score_documents(spark, sf_dir, models: udfs.Models | None = None) -> DataFra
     # maxPartitionBytes from Catalyst's analysis-time statistics (no RDD
     # conversion, and unlike a raw file COUNT it is right in both
     # directions: many tiny files still coalesce below `par` splits, and
-    # few huge files still produce plenty).
+    # few huge files still produce plenty). maxPartitionBytes is read as the
+    # JVM parsed it, so every size suffix Spark accepts means the same here.
     par = spark.sparkContext.defaultParallelism
     scan_bytes = int(d._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-    max_split = _parse_byte_string(raw)
+    max_split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     if scan_bytes < par * max_split:
         d = d.repartition(par)
     return stage.score(d, models).select(

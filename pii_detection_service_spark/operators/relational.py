@@ -1,4 +1,4 @@
-"""Relational operators from SURVEY.md §2.2/§2.4 (F1-F7, G1-G3, S8) plus
+"""Relational operators from SURVEY.md §2.2/§2.4 (F1-F7, G3, S8) plus
 engine-health aggregates, expressed Catalyst-native so filters/limits push
 into the parquet scan and aggregates stay in whole-stage codegen.
 
@@ -107,30 +107,6 @@ def group_metrics(spark, sf_dir) -> DataFrame:
     )
 
 
-def fbeta_drift(spark, sf_dir) -> DataFrame:
-    """G1+G2 — micro-F5 as exact conditional-count aggregation + drift
-    predicate (evaluator.py:9-17; threshold constants.py:19). Pseudo truth/
-    pred labels derive deterministically from columns; β=5 ⇒ (1+β²)=26."""
-    t = F.col("doc_id") % 13
-    p = F.col("n_chars") % 13
-    tp = F.sum(F.when(t == p, 1).otherwise(0))
-    mism = F.sum(F.when(t != p, 1).otherwise(0))
-    # unrounded: purely rational — bit-identical across engines, and SQL
-    # round() itself diverges on exact decimal halves (Spark HALF_UP on the
-    # shortest repr vs DuckDB scaled nearbyint)
-    f5 = (26.0 * tp) / (26.0 * tp + 25.0 * mism + mism)
-    return (
-        table(spark, sf_dir, "documents")
-        .groupBy("lang")
-        .agg(
-            tp.alias("tp"),
-            mism.alias("mism"),
-            f5.alias("f5"),
-            (f5 < 0.8).alias("drifting"),
-        )
-    )
-
-
 def lineitem_pricing(spark, sf_dir) -> DataFrame:
     """TPC-H Q1-shaped engine-health aggregate. Decimal sums keep the
     oracle comparison exact (double sums are shuffle-order-dependent)."""
@@ -165,38 +141,6 @@ def events_hourly(spark, sf_dir) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n"),
             (F.sum(val).cast("double") / F.count(F.lit(1))).alias("avg_value"),
-        )
-    )
-
-
-def documents_render(spark, sf_dir) -> DataFrame:
-    """§3.2 GET /documents composed end-to-end (minus the A4 merge UDF):
-    top-10 recency (F1/F3) → pseudo-BIO labels → prefix strip (A8) →
-    sentinel slice (F7) → display truncation (F6) — one Catalyst plan, all
-    native."""
-    words = F.split(F.col("text"), " ")
-    labels = F.expr(
-        "transform(split(text, ' '), w -> "
-        "case when w like '%@%' then 'B-EMAIL' "
-        "when w rlike '^[0-9]+$' then 'B-ID_NUM' "
-        "when w rlike '^[A-Z]' then 'B-NAME_STUDENT' "
-        "else 'O' end)"
-    )
-    stripped = F.transform(labels, lambda l: F.regexp_replace(l, "^[BI]-", ""))
-    t = F.col("text")
-    return (
-        table(spark, sf_dir, "documents")
-        .where(F.size(words) >= 3)
-        .orderBy(F.col("n_chars").desc(), F.col("doc_id"))
-        .limit(10)
-        .select(
-            "doc_id",
-            F.when(F.length(t) > 50, F.concat(F.substring(t, 1, 50), F.lit("...")))
-            .otherwise(t)
-            .alias("preview"),
-            F.concat_ws(
-                " ", F.slice(stripped, 2, F.size(stripped) - 2)
-            ).alias("inner_labels"),
         )
     )
 

@@ -4,7 +4,6 @@ semantics allow. Each has an exact DuckDB oracle in queries.py.
 
 - stopword langid (SQL-portable twin of quality.langid_stopword)
 - quality scoring (length / symbol ratio / repetition / word entropy)
-- token counting (whitespace + BPE-ish regex)
 - document fingerprinting (polynomial rolling hash)
 - BIO label derivation + prefix strip (A8 — fully native higher-order fns)
 """
@@ -14,7 +13,14 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from ..functions.quality import LANG_MARKERS
+from ..functions.quality import (
+    LANG_MARKERS,
+    MAX_CHARS,
+    MAX_SYMBOL_RATIO,
+    MAX_TOP_WORD_RATIO,
+    MIN_CHARS,
+    MIN_WORDS,
+)
 from .relational import table
 
 
@@ -79,18 +85,18 @@ def quality_score(spark, sf_dir) -> DataFrame:
     top_ratio = F.col("rl_.maxc") / n_words
     entropy = F.round(-F.col("rl_.ent"), 6)
     keep = (
-        (n_chars >= 10)
-        & (n_chars <= 2048)
-        & (n_words >= 3)
-        & (sym_ratio <= 0.3)
-        & (top_ratio <= 0.5)
+        (n_chars >= MIN_CHARS)
+        & (n_chars <= MAX_CHARS)
+        & (n_words >= MIN_WORDS)
+        & (sym_ratio <= MAX_SYMBOL_RATIO)
+        & (top_ratio <= MAX_TOP_WORD_RATIO)
     )
     reason = (
-        F.when(n_chars < 10, "too_short")
-        .when(n_chars > 2048, "too_long")
-        .when(n_words < 3, "too_few_words")
-        .when(sym_ratio > 0.3, "symbol_heavy")
-        .when(top_ratio > 0.5, "repetitive")
+        F.when(n_chars < MIN_CHARS, "too_short")
+        .when(n_chars > MAX_CHARS, "too_long")
+        .when(n_words < MIN_WORDS, "too_few_words")
+        .when(sym_ratio > MAX_SYMBOL_RATIO, "symbol_heavy")
+        .when(top_ratio > MAX_TOP_WORD_RATIO, "repetitive")
         .otherwise("")
     )
     return d.select(
@@ -102,22 +108,6 @@ def quality_score(spark, sf_dir) -> DataFrame:
         entropy.alias("word_entropy"),
         keep.alias("keep"),
         reason.alias("drop_reason"),
-    )
-
-
-def token_count(spark, sf_dir) -> DataFrame:
-    """Token counting: whitespace words + BPE-ish regex token count
-    (letter runs / digit runs / single symbols)."""
-    d = table(spark, sf_dir, "documents")
-    bpe = F.size(
-        F.regexp_extract_all(
-            F.col("text"), F.lit(r"[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]"), F.lit(0)
-        )
-    )
-    return d.select(
-        "doc_id",
-        F.size(F.split("text", " ")).alias("n_ws_tokens"),
-        bpe.alias("n_bpe_tokens"),
     )
 
 

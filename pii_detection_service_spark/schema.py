@@ -18,35 +18,6 @@ INPUT_SCHEMA = T.StructType(
     ]
 )
 
-# Columns added by the scoring pass (SCORED = INPUT + these).
-SCORE_FIELDS = [
-    T.StructField("lang", T.StringType(), True),
-    T.StructField("ppl", T.DoubleType(), True),
-    T.StructField("keep", T.BooleanType(), True),
-    T.StructField("drop_reason", T.StringType(), True),
-    T.StructField("tokens", T.ArrayType(T.StringType()), True),
-    T.StructField("labels", T.ArrayType(T.StringType()), True),
-    T.StructField("n_pii", T.IntegerType(), True),
-    T.StructField("n_toxic", T.IntegerType(), True),
-    T.StructField("scrubbed_caption", T.StringType(), True),
-]
-
-SCORED_SCHEMA = T.StructType(list(INPUT_SCHEMA.fields) + SCORE_FIELDS)
-
-# Reference document_table shape (database_manager.py:11-20).
-DOCUMENT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("full_text", T.StringType(), True),
-        T.StructField("tokens", T.ArrayType(T.StringType()), True),
-        T.StructField("labels", T.ArrayType(T.StringType()), True),
-        T.StructField("validated_labels", T.ArrayType(T.StringType()), True),
-        T.StructField("for_retrain", T.BooleanType(), True),
-        T.StructField("created_at", T.TimestampType(), True),
-        T.StructField("updated_at", T.TimestampType(), True),
-    ]
-)
-
 # Per-partition lineage rows (north rule: resumable with lineage + metrics;
 # plays the role the reference's `model` table plays — database_manager.py:22-29).
 LINEAGE_SCHEMA = T.StructType(

@@ -14,7 +14,8 @@ SF = "/root/testdata/sf0.001"
 def test_jaccard_candidates_count_is_star_edges_not_block_pairs(spark):
     """Verified-pair count == distinct star-edge count (doc ↔ band-group
     min), and orders of magnitude below both the all-pairs-within-band-group
-    count and the (lang, source) block-pair count jaccard_pairs would join."""
+    count and the (lang, source) block-pair count a blocked all-pairs
+    self-join would produce."""
     verified = dedup.jaccard_candidates(spark, SF).count()
 
     # star edges straight from the band assignments (independent recompute)

@@ -33,6 +33,16 @@ def test_queries_and_oracles_consistent():
     }
 
 
+def test_driver_window_is_all_exact_oracled():
+    """The driver checks the first 50 registered queries; every one of
+    those slots must carry an exact DuckDB oracle, so rows-only entries
+    stay after slot 50."""
+    oracles = entry_mod.oracle_sql()
+    window = list(entry_mod.queries())[:50]
+    assert len(window) == 50
+    assert [n for n in window if oracles.get(n) is None] == []
+
+
 def test_entry_returns_rows(spark):
     df = entry_mod.entry(spark)
     rows = df.limit(5).collect()

@@ -159,3 +159,25 @@ def test_audio_keep_is_pure_column_ops_over_stats(spark):
     )
     plan = _plan(df)
     assert "Exchange" not in plan  # map-only end to end
+
+
+def test_score_documents_repartition_guard_reads_spark_size_parse(spark):
+    """The small-input repartition guard sizes splits with the JVM's own
+    parse of spark.sql.files.maxPartitionBytes: '1p' is a petabyte (far
+    above the scan, so the scoring input is round-robined over every core),
+    and a split size far below the sf0.001 scan leaves the source splits
+    alone."""
+    from pii_detection_service_spark.operators import pipeline
+
+    key = "spark.sql.files.maxPartitionBytes"
+    par = spark.sparkContext.defaultParallelism
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "1p")
+        plan = _plan(pipeline.score_documents(spark, SF))
+        assert f"RoundRobinPartitioning({par})" in plan
+        spark.conf.set(key, "1b")
+        plan = _plan(pipeline.score_documents(spark, SF))
+        assert "RoundRobinPartitioning" not in plan
+    finally:
+        spark.conf.set(key, old)
