@@ -49,11 +49,12 @@ def main():
 
     from pii_detection_service_spark.functions import quality
     from pii_detection_service_spark.plans import stage
+    from pii_detection_service_spark.sources.synth import synth_spark
     from pii_detection_service_spark.udfs import Models
 
     if not os.path.isdir(img_cache):
         # same builder + cache key scale_run.py uses
-        stage.read_synth_or_generate(spark, n).repartition(256).write.mode(
+        synth_spark(spark, n).repartition(256).write.mode(
             "overwrite"
         ).parquet(img_cache)
 

@@ -49,6 +49,7 @@ def main():
     import pyspark.sql.functions as F
 
     from pii_detection_service_spark.plans import stage
+    from pii_detection_service_spark.sources.synth import synth_spark
 
     # image table: ~1.9 KB/row on disk (measured: 9.1 GB at 5M). Building
     # it at the largest notches can exceed the sandbox's free disk together
@@ -62,7 +63,7 @@ def main():
         free = shutil.disk_usage("/tmp").free
         need = int(2.5 * n * 1900)  # cache + stage-write output + slack
         if free > need:
-            stage.read_synth_or_generate(spark, n).repartition(256).write.mode(
+            synth_spark(spark, n).repartition(256).write.mode(
                 "overwrite"
             ).parquet(img_cache)
             have_images = True

@@ -88,11 +88,11 @@ def main():
     n_images = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
     cache = f"/tmp/spark_graft_bench_images_v4_{n_images}.parquet"
     if not os.path.isdir(cache):
-        from pii_detection_service_spark.plans import stage
+        from pii_detection_service_spark.sources.synth import synth_spark
 
         spark = make_spark(8)
         spark.sparkContext.setLogLevel("ERROR")
-        stage.read_synth_or_generate(spark, n_images).repartition(64).write.mode(
+        synth_spark(spark, n_images).repartition(64).write.mode(
             "overwrite"
         ).parquet(cache)
         spark.stop()

@@ -107,11 +107,12 @@ def main():
     # Generation is cached to parquet OUTSIDE the timed region so runs at
     # different parallelism levels read the identical input files.
     from pii_detection_service_spark.plans import stage
+    from pii_detection_service_spark.sources.synth import synth_spark
 
     n_images = int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "200000"))
     cache = f"/tmp/spark_graft_bench_images_v4_{n_images}.parquet"
     if not os.path.isdir(cache):
-        stage.read_synth_or_generate(spark, n_images).repartition(64).write.mode(
+        synth_spark(spark, n_images).repartition(64).write.mode(
             "overwrite"
         ).parquet(cache)
     import pyspark.sql.functions as F
@@ -144,7 +145,7 @@ def main():
     # the python-worker warmup above).
     warm_dir = tempfile.mkdtemp(prefix="bench_stage_warm_")
     stage.run_stage(
-        spark, stage.read_synth_or_generate(spark, 1000), warm_dir,
+        spark, synth_spark(spark, 1000), warm_dir,
         n_buckets=4, salt_factor=2,
     )
     shutil.rmtree(warm_dir, ignore_errors=True)

@@ -118,14 +118,16 @@ def langid_char_ngram(text: str) -> str:
     return _LANGS[int(np.argmax(sums))]  # argmax → first max → smallest code
 
 
-def perplexity(text: str) -> float:
-    """exp(-mean log p) under the built-in char-bigram LM; empty text → inf
-    stand-in 1e9. Deterministic, monotone in 'unusualness' of the text."""
+def perplexity(text: str, tbl: np.ndarray = _LM_TBL) -> float:
+    """exp(-mean log p) under a char-bigram table — the built-in LM by
+    default, or a loaded one (load_arpa_char_bigram, lmtrain); empty text
+    → inf stand-in 1e9. Deterministic, monotone in 'unusualness' of the
+    text."""
     t = "^" + text.lower() + "$"
     if len(t) < 3:
         return 1e9
     ids = _bigram_ids(t)
-    return float(math.exp(-_LM_TBL[ids].sum() / len(ids)))
+    return float(math.exp(-tbl[ids].sum() / len(ids)))
 
 
 def lang_and_ppl(
@@ -171,7 +173,7 @@ def lang_and_ppl(
 # kernel scores against, with real backoff semantics:
 #     p(b|a) = bigram(a,b)            if the bigram is listed
 #            = backoff(a) + uni(b)    otherwise
-# so a loaded model drops into perplexity_table()/broadcast without
+# so a loaded model drops into perplexity(text, tbl)/broadcast without
 # touching the pinned built-in kernel. ARPA stores log10; the kernel
 # scores natural logs — converted on load.
 
@@ -328,17 +330,6 @@ def export_synth_arpa(path: str, n_extra_symbols: int = 160) -> int:
             f.write(f"{bi_lp(a, b)!r}\t{tok(a)} {tok(b)}\n")
         f.write("\n\\end\\\n")
     return len(pairs)
-
-
-def perplexity_table(text: str, tbl: np.ndarray) -> float:
-    """Perplexity under an arbitrary loaded table — same kernel shape
-    (sentinel wrap, one bigram-id encode, one gather-sum) as the built-in
-    scorer; empty text → the 1e9 sentinel."""
-    t = "^" + text.lower() + "$"
-    if len(t) < 3:
-        return 1e9
-    ids = _bigram_ids(t)
-    return float(math.exp(-tbl[ids].sum() / len(ids)))
 
 
 # --- word-entropy (SQL-portable repetition metric) --------------------------

@@ -2,18 +2,23 @@
 100 TB caption corpus actually needs, each Spark-native (higher-order
 functions, no Python UDFs) so the hot path stays in the JVM.
 
+Every near-dup path is the same banded-candidate algorithm: band words
+→ star edges against the band-group minimum (_star_edges, which states
+the recall contract once) → an exact verify on the candidate edges only.
+_jaccard_edges verifies MinHash bands by shingle Jaccard (text);
+_hamming_edges verifies 4×16-bit words by Σ bit_count(xor) (simhash
+text, phash images). The clusterings feed verified edges to one
+epilogue, _clusters (undirected closure → connected_components_auto),
+and _image_clusters relabels numeric cluster ids to image ids.
+
 Scale notes (timings: 5M-doc corpus, local[32] — BENCH/scale5m.json):
 - exact:    one hash-groupBy shuffle on md5(text) — map-side partial agg (3 s).
 - minhash:  signatures are per-row map-only over a shingle-id array computed
             once per row (51 s; the original inline per-shingle fold was
-            599 s); candidate pairing happens on banded signature groupBy
-            (shuffle keyed on small band strings).
-- simhash:  64-bit sketch as 4×16-bit band words via a vectorized Arrow
-            kernel (42-53 s; the r2 16-bit interpreted-HOF sketch was 84 s
-            AND collision-useless at 10^12 rows); candidates = shared band
-            word + Hamming ≤ 3 verify on star edges (46 s incl. sketch).
-- jaccard:  exact verify on LSH star-edge candidates (jaccard_candidates,
-            56 s for 16.4M verified pairs — linear in corpus).
+            599 s); banding is a groupBy keyed on small band strings.
+- simhash:  64-bit sketch via a vectorized Arrow kernel (42-53 s); banding
+            + Hamming ≤ 3 verify 46 s incl. sketch.
+- jaccard:  56 s for 16.4M verified pairs — linear in corpus.
 - embedding near-dup: sign-LSH bucket blocking shared with similarity.py's
             ANN index; exact cosine only on same-bucket pairs.
 - group-min everywhere via groupBy+join (AQE-splittable), never a Window
@@ -477,6 +482,44 @@ def connected_components_star(
     return labels
 
 
+def _star_edges(bands: DataFrame) -> DataFrame:
+    """Distinct (lo, hi) LSH candidate edges from (doc_id, band, band_key)
+    rows: each doc paired with its band-group minimum (``hi`` the doc,
+    ``lo`` the minimum; ``hi != lo``), an edge sharing several bands once.
+
+    Recall contract of every banded dedup path (minhash Jaccard, simhash
+    and phash Hamming, the clusterings over them): any pair that shares a
+    band key lands in a shared band GROUP, but the emitted edges are each
+    doc ↔ its group minimum — ≤ bands·n rows however skewed the groups
+    get, the linear star set connected components consume. A pair (B, C)
+    whose shared group's minimum A fails the verify against both is NOT
+    emitted directly: all-pairs within a group would be, at O(group²) cost
+    (measured: 79k pairs from 500 docs at sf0.001, 63% of ALL pairs —
+    quadratic under template skew). For min-id survivor dedup and
+    clustering this is the standard formulation; exhaustive pair-level
+    mining would verify all pairs within each band group instead."""
+    return (
+        _with_grp_min(bands)
+        .where(F.col("doc_id") != F.col("grp_min"))
+        .select(F.col("grp_min").alias("lo"), F.col("doc_id").alias("hi"))
+        .distinct()
+    )
+
+
+def _clusters(nodes, edges, telemetry, checkpoint_dir=None) -> DataFrame:
+    """(doc_id, cluster) connected components over the undirected closure
+    of a two-column edge frame; the closure is cached for the CC rounds
+    and released when they finish."""
+    e = edges.toDF("a", "b")
+    und = e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).cache()
+    try:
+        return connected_components_auto(
+            nodes, und, telemetry=telemetry, checkpoint_dir=checkpoint_dir
+        )
+    finally:
+        und.unpersist()
+
+
 def dedup_clusters(
     spark,
     sf_dir,
@@ -486,22 +529,12 @@ def dedup_clusters(
     """Transitive near-dup clustering — the endgame of MinHash dedup: a doc
     sharing a band with B, where B shares a *different* band with C, must
     land in ONE cluster (single-round survivor rules miss the A~C link).
-    Star edges (doc ↔ band-group min) keep the edge count linear in corpus
-    size — never the quadratic clique — then connected components collapse
-    chains to their global min id. ``checkpoint_dir`` (one directory per
-    job) makes the CC rounds durably resumable — the hours-long path at
-    100 TB restarts from the last committed round, not round 0."""
-    sig = minhash_signatures(spark, sf_dir)
-    bands = _band_assignments(sig)
-    star = _with_grp_min(bands)
-    edges = (
-        star.where(F.col("doc_id") != F.col("grp_min"))
-        .select(F.col("doc_id").alias("a"), F.col("grp_min").alias("b"))
-        .distinct()
-    )
-    und = edges.unionAll(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).cache()
+    Star edges (see _star_edges) keep the edge count linear in corpus
+    size, then connected components collapse chains to their global min
+    id. ``checkpoint_dir`` (one directory per job) makes the CC rounds
+    durably resumable — the hours-long path at 100 TB restarts from the
+    last committed round, not round 0."""
+    edges = _star_edges(_band_assignments(minhash_signatures(spark, sf_dir)))
     # node set = same filter as the signatures, WITHOUT recomputing the
     # minhash expressions (a full signature pass just to list ids)
     nodes = (
@@ -509,10 +542,7 @@ def dedup_clusters(
         .where(F.length("text") >= 3)
         .select("doc_id")
     )
-    labels = connected_components_auto(
-        nodes, und, telemetry=telemetry, checkpoint_dir=checkpoint_dir
-    )
-    und.unpersist()
+    labels = _clusters(nodes, edges, telemetry, checkpoint_dir)
     return labels.select(
         "doc_id",
         F.col("cluster").alias("cluster_id"),
@@ -537,11 +567,8 @@ def dedup_clusters(
 #   16i+j; band 3 packs g-bits 48..59 + the 4 t-bits). Keeping the bands as
 #   separate non-negative 16-bit columns sidesteps cross-engine sign
 #   semantics of a packed signed int64 while carrying the same 64 bits.
-# - candidates = docs sharing ANY band word (classic 4×16 simhash banding —
-#   guaranteed to catch every pair with Hamming distance ≤ 3), generated as
-#   STAR edges against the band-group minimum (linear in corpus size, the
-#   same skew-proof machinery as the minhash path), then verified with
-#   hamming = Σ bit_count(sh_i ^ sh_i') ≤ 3.
+# - candidates = docs sharing ANY band word (classic 4×16 simhash banding),
+#   verified at Hamming ≤ 3 by _hamming_edges.
 #
 # The sketch runs as a VECTORIZED Arrow kernel (mapInPandas): the per-word
 # rolling hash folds column-at-a-time over a padded codepoint matrix, votes
@@ -646,60 +673,46 @@ def simhash64_sketch(d: DataFrame) -> DataFrame:
     )
 
 
+def _hamming_edges(sk: DataFrame, words: list, max_hamming: int) -> DataFrame:
+    """(lo, hi, hamming) verified Hamming edges from a sketch table ``sk``
+    (doc_id + whatever ``words`` reads): ONE posexplode of the band words
+    into (band, band_key) rows, star edges (_star_edges), the words
+    re-attached to both ends of the candidate edges only, then
+    hamming = Σ bit_count(word xor word') ≤ max_hamming. With 4 words
+    covering disjoint bit ranges, pigeonhole puts every pair within
+    Hamming 3 in a shared band group."""
+    n = len(words)
+    w = sk.select("doc_id", *[c.alias(f"w{i}") for i, c in enumerate(words)])
+    bands = w.select(
+        "doc_id", F.posexplode(F.array(*w.columns[1:])).alias("band", "band_key")
+    )
+    hamming = sum(
+        F.bit_count(F.col(f"lo{i}").bitwiseXOR(F.col(f"hi{i}"))) for i in range(n)
+    )
+    return (
+        _star_edges(bands)
+        .join(w.toDF("lo", *[f"lo{i}" for i in range(n)]), "lo")
+        .join(w.toDF("hi", *[f"hi{i}" for i in range(n)]), "hi")
+        .select("lo", "hi", hamming.cast("int").alias("hamming"))
+        .where(F.col("hamming") <= max_hamming)
+    )
+
+
 def simhash64_candidates(
     d: DataFrame, max_hamming: int = SIMHASH_MAX_HAMMING
 ) -> DataFrame:
-    """Near-dup candidate pairs by 4×16 simhash banding + Hamming verify.
-
-    Shape mirrors jaccard_candidates: ONE posexplode into (band, band_key)
-    rows, star edges against the skew-proof band-group minimum (groupBy +
-    join, never a Window over a hot band), sketches re-attached to the
-    candidate edges only, hamming ≤ max_hamming filter.
-
-    Recall contract (same tradeoff as jaccard_candidates, stated
-    precisely): pigeonhole guarantees any pair within Hamming distance 3
-    lands in a shared band GROUP, and the emitted edges are each doc ↔ its
-    group minimum — the linear star set that feeds connected-components
-    dedup. A pair (B, C) whose shared group's minimum A is Hamming-far
-    from both is NOT emitted directly (all-pairs within groups would be,
-    at O(group²) cost — quadratic under template skew). For min-id
-    survivor dedup this is the standard formulation; for exhaustive
-    pair-level mining, verify all pairs within each band group instead and
-    accept the quadratic group cost."""
-    # The sketch plan is consumed 4× below (band explode, group-min
-    # join-back, both sides of the pair join) — materialize the Arrow
-    # kernel's output ONCE (5 longs/doc ≈ 40 B/row) instead of re-running
-    # it per consumer. At 100 TB this is the sketch table a real pipeline
-    # persists anyway; localCheckpoint is the single-job equivalent.
+    """Near-dup candidate pairs (doc_a, doc_b, hamming) by 4×16 simhash
+    banding + Hamming verify (_hamming_edges; recall contract at
+    _star_edges): doc_a is the band-group minimum, doc_b the doc."""
+    # The sketch plan is consumed 4× (band explode, group-min join-back,
+    # both ends of the verify join) — materialize the Arrow kernel's output
+    # ONCE (5 longs/doc ≈ 40 B/row) instead of re-running it per consumer.
+    # At 100 TB this is the sketch table a real pipeline persists anyway;
+    # localCheckpoint is the single-job equivalent.
     sk = simhash64_sketch(d).localCheckpoint(eager=False)
-    bands = sk.select(
-        "doc_id",
-        F.posexplode(F.array("sh0", "sh1", "sh2", "sh3")).alias(
-            "band", "band_key"
-        ),
-    )
-    star = _with_grp_min(bands)
-    cand = (
-        star.where(F.col("doc_id") != F.col("grp_min"))
-        .select(F.col("grp_min").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-        .distinct()
-    )
-    a = sk.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"sh{i}").alias(f"a{i}") for i in range(4)],
-    )
-    b = sk.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"sh{i}").alias(f"b{i}") for i in range(4)],
-    )
-    hamming = sum(
-        F.bit_count(F.col(f"a{i}").bitwiseXOR(F.col(f"b{i}"))) for i in range(4)
-    )
     return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select("doc_a", "doc_b", hamming.cast("int").alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
+        _hamming_edges(sk, [F.col(f"sh{i}") for i in range(4)], max_hamming)
+        .toDF("doc_a", "doc_b", "hamming")
         .orderBy("hamming", "doc_a", "doc_b")
     )
 
@@ -708,45 +721,41 @@ def simhash_candidates(spark, sf_dir) -> DataFrame:
     return simhash64_candidates(table(spark, sf_dir, "documents"))
 
 
+def _jaccard_edges(sh: DataFrame) -> DataFrame:
+    """(lo, hi, jac) from a (doc_id, hs) shingle table: MinHash → 4×2
+    bands → star edges (_star_edges) → exact n-gram Jaccard on the
+    candidate edges only. The shingle arrays are attached afterwards by
+    two doc_id-keyed joins — no shuffle ever carries a shingle array for a
+    non-candidate doc, and no blocked all-pairs self-join appears."""
+    cand = _star_edges(_band_assignments(_minhash_sig(sh)))
+
+    def end(k):
+        return sh.select(F.col("doc_id").alias(k), F.col("hs").alias(f"sh_{k}"))
+
+    jac = F.size(F.array_intersect("sh_lo", "sh_hi")) / F.size(
+        F.array_union("sh_lo", "sh_hi")
+    )
+    return (
+        cand.join(end("lo"), "lo")
+        .join(end("hi"), "hi")
+        .select("lo", "hi", jac.alias("jac"))
+    )
+
+
 def jaccard_candidates(spark, sf_dir) -> DataFrame:
     """Exact n-gram Jaccard verification restricted to LSH band candidates —
-    the verify-after-candidates wiring a 100 TB dedup actually runs.
-
-    Candidate pairs are the STAR edges of the banded-signature groups that
-    minhash_band_candidates reports: every doc is verified against its
-    band-group minimum (the same doc ↔ grp_min edges dedup_clusters feeds to
-    connected components), NOT against every co-bucketed doc. All-pairs
-    within a band group is quadratic in group size and template-heavy
-    corpora produce mega-groups (measured: 79k pairs from 500 docs at
-    sf0.001, 63% of ALL pairs); star edges are ≤ bands·n rows no matter how
-    skewed the buckets get. The shingle sets are attached afterwards by two
-    doc_id-keyed joins — no shuffle ever carries a shingle array for a
-    non-candidate doc, and no blocked all-pairs self-join (O(block²) in
-    the largest block) ever appears. Verified-pair count == candidate-edge
-    count, pinned by test."""
-    sig = minhash_signatures(spark, sf_dir)
-    bands = _band_assignments(sig)
-    star = _with_grp_min(bands)
-    cand = (
-        star.where(F.col("doc_id") != F.col("grp_min"))
-        .select(F.col("grp_min").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-        .distinct()  # an edge sharing several bands is verified once
-    )
+    the verify-after-candidates wiring a 100 TB dedup actually runs: every
+    doc is verified against its band-group minimum (the same star edges
+    dedup_clusters feeds to connected components), NOT against every
+    co-bucketed doc. Verified-pair count == candidate-edge count, pinned
+    by test."""
     sh = _with_shingles(
         table(spark, sf_dir, "documents").where(F.length("text") >= 3)
-    ).select("doc_id", F.col("hs").alias("shingles"))
-    pairs = cand.join(
-        sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")),
-        "doc_a",
-    ).join(
-        sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")),
-        "doc_b",
-    )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    return pairs.select("doc_a", "doc_b", jac.alias("jac")).orderBy(
-        F.col("jac").desc(), "doc_a", "doc_b"
+    ).select("doc_id", "hs")
+    return (
+        _jaccard_edges(sh)
+        .toDF("doc_a", "doc_b", "jac")
+        .orderBy(F.col("jac").desc(), "doc_a", "doc_b")
     )
 
 
@@ -810,7 +819,7 @@ def embedding_near_dup(spark, sf_dir, n_anchors: int = 8) -> DataFrame:
 # image pillar of the dedup family: near-duplicate IMAGES (re-encodes,
 # small crops/noise) differ in a few phash bits, exactly like near-dup
 # texts differ in a few simhash bits — so the machinery is the same
-# 4x16-bit banding + bit_count(xor) verify as simhash64_candidates, and
+# 4x16-bit banding + bit_count(xor) verify (_hamming_edges) as simhash, and
 # the oracle is pure int64 bit arithmetic (DuckDB-portable, exact).
 # ---------------------------------------------------------------------------
 
@@ -820,21 +829,17 @@ PHASH_MAX_HAMMING = 3
 def phash_near_dup_candidates(
     d: DataFrame, max_hamming: int = PHASH_MAX_HAMMING, ordered: bool = True
 ) -> DataFrame:
-    """Near-duplicate image candidate pairs from (image_id, phash) rows.
+    """Near-duplicate image candidate pairs (id_a, id_b, hamming) from
+    (image_id, phash) rows, id_a the band-group minimum.
 
     4 bands x 16 bits: ``(phash >> 16b) & 0xFFFF`` — after the mask,
     arithmetic vs logical shift semantics are indistinguishable, so the
-    expression is engine-portable even for negative hashes. Pigeonhole:
-    any pair within Hamming distance 3 shares at least one band word →
-    lands in a shared band group. Star edges against the band-group
-    minimum image_id (groupBy+join — skew-proof for template/logo
-    clusters that concentrate one phash), then exact
-    ``bit_count(xor)`` verify on the candidate edges only. Same recall
-    contract as simhash64_candidates: each doc pairs with its group min,
-    the linear edge set connected-components dedup consumes — not
-    all-pairs within a group (quadratic under skew).
+    expression is engine-portable even for negative hashes. The four
+    words cover all 64 bits, so their summed popcount in _hamming_edges
+    equals ``bit_count(ph_a ^ ph_b)``. Star edges are skew-proof for
+    template/logo clusters that concentrate one phash (see _star_edges).
 
-    The input plan is consumed 3x (band explode + both sides of the
+    The input plan is consumed 3x (band explode + both ends of the
     verify join); callers passing an EXPENSIVE plan (e.g. a decode
     pipeline) get it materialized once via localCheckpoint — phash rows
     are 8 B + id, the sketch table a real pipeline persists anyway.
@@ -846,37 +851,8 @@ def phash_near_dup_candidates(
     ph = d.select(
         F.col("image_id").alias("doc_id"), "phash"
     ).localCheckpoint(eager=False)
-    bands = ph.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.expr(f"shiftright(phash, {16 * b}) & 65535")
-                    for b in range(4)
-                ]
-            )
-        ).alias("band", "band_key"),
-    )
-    star = _with_grp_min(bands)
-    cand = (
-        star.where(F.col("doc_id") != F.col("grp_min"))
-        .select(F.col("grp_min").alias("id_a"), F.col("doc_id").alias("id_b"))
-        .distinct()
-    )
-    a = ph.select(F.col("doc_id").alias("id_a"), F.col("phash").alias("ph_a"))
-    b = ph.select(F.col("doc_id").alias("id_b"), F.col("phash").alias("ph_b"))
-    out = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b")))
-            .cast("int")
-            .alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-    )
+    words = [F.expr(f"shiftright(phash, {16 * b}) & 65535") for b in range(4)]
+    out = _hamming_edges(ph, words, max_hamming).toDF("id_a", "id_b", "hamming")
     return out.orderBy("hamming", "id_a", "id_b") if ordered else out
 
 
@@ -889,23 +865,32 @@ def phash_variant_bits(i: int) -> int:
     return (1 << (i % 62)) ^ (1 << ((i * 31) % 62))
 
 
-def phash_corpus(spark, n: int = 300) -> DataFrame:
-    """(image_id, phash) over n synth rows PLUS planted near-dup twins:
-    every 7th row (i % 7 == 3) contributes an ``<id>_v`` variant whose
-    phash differs by phash_variant_bits(i). The synth table itself plants
-    exact-dup clusters (pixels_for: i % 11 == 0 share pixels → identical
-    phash); the twins add genuine 1-2-bit neighbors so the Hamming verify
-    is exercised at every distance it accepts."""
+def planted_corpus(spark, n: int = 300) -> DataFrame:
+    """(image_id, caption, phash, nid) over n synth rows PLUS planted
+    near-dup twins: every 7th row (i % 7 == 3) contributes an ``<id>_v``
+    variant whose phash differs by phash_variant_bits(i). The synth table
+    itself plants exact-dup clusters (pixels_for: i % 11 == 0 share pixels
+    → identical phash) and exact text dups (the degenerate captions
+    "tiny", "spam …"), so rows that sit in both bridge the two modalities
+    transitively; the twins add genuine 1-2-bit neighbors so the Hamming
+    verify is exercised at every distance it accepts. Variants carry an
+    EMPTY caption (the realistic shape: a re-encode arrives uncaptioned),
+    so they can only cluster through the image side. nid = 2i, variants
+    2i+1 — the numeric id connected components run on. All mirrored
+    literally in the SQL twins."""
     from ..sources.synth import synth_spark
 
-    base = synth_spark(spark, n).select("image_id", "phash")
+    base = synth_spark(spark, n).select("image_id", "caption", "phash")
     i = "cast(substring(image_id, 5) as bigint)"
-    pert = base.where(F.expr(f"{i} % 7 = 3")).select(
+    base = base.withColumn("nid", F.expr(f"{i} * 2"))
+    pert = base.where(F.expr(f"({i}) % 7 = 3")).select(
         F.concat("image_id", F.lit("_v")).alias("image_id"),
+        F.lit("").alias("caption"),
         F.expr(
             f"phash ^ shiftleft(cast(1 as bigint), cast({i} % 62 as int)) "
             f"^ shiftleft(cast(1 as bigint), cast(({i} * 31) % 62 as int))"
         ).alias("phash"),
+        F.expr(f"{i} * 2 + 1").alias("nid"),
     )
     return base.unionByName(pert)
 
@@ -918,7 +903,27 @@ def phash_candidates(spark, sf_dir) -> DataFrame:
     Hamming verify relationally. What it pins: the distributed synth →
     phash pipeline is bit-identical to the reference, AND the banding
     logic matches an independent SQL implementation."""
-    return phash_near_dup_candidates(phash_corpus(spark, 300))
+    return phash_near_dup_candidates(planted_corpus(spark, 300))
+
+
+def _image_clusters(rows, edges, telemetry) -> DataFrame:
+    """(image_id, cluster_id, survivor) from (nid, image_id) rows and
+    numeric edges: connected components run on the NUMERIC id — its
+    convergence checksum is a provably-monotone integer sum, and at 10¹²
+    rows numeric shuffle keys beat string keys anyway — then the cluster
+    id is relabelled to the minimum member's image_id."""
+    ids = rows.select(F.col("nid").alias("doc_id"), "image_id")
+    labels = _clusters(ids.select("doc_id"), edges, telemetry)
+    cl = ids.toDF("cluster", "cluster_id")
+    return (
+        labels.join(ids, "doc_id")
+        .join(cl, "cluster")
+        .select(
+            "image_id",
+            "cluster_id",
+            (F.col("cluster") == F.col("doc_id")).alias("survivor"),
+        )
+    )
 
 
 def phash_cluster_labels(
@@ -935,44 +940,18 @@ def phash_cluster_labels(
     through a shared 16-bit word), then connected components collapse
     chains to their minimum member.
 
-    Input needs (nid:long, image_id, phash): CC runs on the NUMERIC id —
-    its convergence checksum is a provably-monotone integer sum, and at
-    10¹² rows numeric shuffle keys beat string keys anyway. Callers
-    derive nid from their id scheme (the registered query parses the
-    synth id; a production pipeline ships a surrogate key).
-    Returns (image_id, cluster_id, survivor) with cluster_id the minimum
-    member's image_id string."""
-    ph = d.select(
-        F.col("nid").alias("doc_id"), F.col("image_id"), "phash"
-    ).localCheckpoint(eager=False)
-    cand = phash_near_dup_candidates(
-        ph.select(F.col("doc_id").alias("image_id"), "phash"),
+    Input needs (nid:long, image_id, phash); callers derive nid from
+    their id scheme (the registered query uses planted_corpus's; a
+    production pipeline ships a surrogate key). Returns (image_id,
+    cluster_id, survivor) with cluster_id the minimum member's image_id
+    string."""
+    rows = d.select("nid", "image_id", "phash").localCheckpoint(eager=False)
+    edges = phash_near_dup_candidates(
+        rows.select(F.col("nid").alias("image_id"), "phash"),
         max_hamming,
         ordered=False,
-    )
-    # candidate ids are the numeric ids here (passed through the image_id
-    # column of the candidate contract)
-    edges = cand.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-    und = edges.unionAll(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).cache()
-    labels = connected_components_auto(
-        ph.select("doc_id"), und, telemetry=telemetry
-    )
-    und.unpersist()
-    ids = ph.select("doc_id", "image_id")
-    cl_ids = ph.select(
-        F.col("doc_id").alias("cluster"), F.col("image_id").alias("cluster_id")
-    )
-    return (
-        labels.join(ids, "doc_id")
-        .join(cl_ids, "cluster")
-        .select(
-            "image_id",
-            "cluster_id",
-            (F.col("cluster") == F.col("doc_id")).alias("survivor"),
-        )
-    )
+    ).select("id_a", "id_b")
+    return _image_clusters(rows, edges, telemetry)
 
 
 def phash_clusters(spark, sf_dir) -> DataFrame:
@@ -980,14 +959,8 @@ def phash_clusters(spark, sf_dir) -> DataFrame:
     (exact-dup pixel clusters + 0-2-bit variants). The DuckDB twin
     re-derives banding, star edges, the Hamming verify, AND the
     transitive closure (recursive CTE) over driver-side reference
-    phashes. nid doubles the base index and marks variants odd — the
-    same expression inlined in the SQL twin."""
-    d = phash_corpus(spark, 300).withColumn(
-        "nid",
-        F.expr("cast(substring(image_id, 5, 8) as bigint)") * 2
-        + F.when(F.col("image_id").endswith("_v"), F.lit(1)).otherwise(F.lit(0)),
-    )
-    return phash_cluster_labels(d)
+    phashes."""
+    return phash_cluster_labels(planted_corpus(spark, 300))
 
 
 # ---------------------------------------------------------------------------
@@ -1006,16 +979,12 @@ CROSSMODAL_JACCARD_TAU = 0.8
 def caption_lsh_edges(
     rows: DataFrame, tau: float = CROSSMODAL_JACCARD_TAU
 ) -> DataFrame:
-    """Verified caption near-dup edges (a, b) from (nid, caption) rows.
-
-    The text half of the cross-modal graph, every stage the scale path:
-    3-gram shingle ids (map-only arithmetic) → MinHash k=8 → 4×2 band star
-    edges against the band-group min nid (groupBy+join, skew-proof for
-    template captions) → exact Jaccard ≥ tau computed ONLY on candidate
-    edges. Captions shorter than one shingle (< 3 chars, incl. empty) take
-    no part — a bare re-encode with no caption can still cluster through
-    the image side. The shingle table is localCheckpointed once for its
-    three plan consumers (signature + both verify joins)."""
+    """Verified caption near-dup edges (a, b) from (nid, caption) rows:
+    the Jaccard star edges (_jaccard_edges) over caption shingles, kept
+    at Jaccard ≥ tau. Captions shorter than one shingle (< 3 chars, incl.
+    empty) take no part — a bare re-encode with no caption can still
+    cluster through the image side. The shingle table is localCheckpointed
+    once for its three plan consumers (signature + both verify joins)."""
     sh = (
         _with_shingles(
             rows.where(F.length("caption") >= 3).select(
@@ -1025,24 +994,8 @@ def caption_lsh_edges(
         .select("doc_id", "hs")
         .localCheckpoint(eager=False)
     )
-    star = _with_grp_min(_band_assignments(_minhash_sig(sh)))
-    cand = (
-        star.where(F.col("doc_id") != F.col("grp_min"))
-        .select(F.col("grp_min").alias("a"), F.col("doc_id").alias("b"))
-        .distinct()
-    )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    return (
-        cand.join(
-            sh.select(F.col("doc_id").alias("a"), F.col("hs").alias("sh_a")), "a"
-        )
-        .join(
-            sh.select(F.col("doc_id").alias("b"), F.col("hs").alias("sh_b")), "b"
-        )
-        .where(jac >= tau)
-        .select("a", "b")
+    return _jaccard_edges(sh).where(F.col("jac") >= tau).select(
+        F.col("lo").alias("a"), F.col("hi").alias("b")
     )
 
 
@@ -1057,10 +1010,8 @@ def crossmodal_cluster_labels(
     Input: (nid:long, image_id, caption, phash). Image edges are the
     banded-phash star edges verified at Hamming ≤ max_hamming
     (phash_near_dup_candidates); caption edges are LSH star edges verified
-    at Jaccard ≥ tau (caption_lsh_edges). Both edge families are linear in
-    corpus size under skew (star edges vs the band-group min, never
-    within-group all-pairs), and both verify BEFORE the union — an
-    unverified band collision in either modality would fuse unrelated
+    at Jaccard ≥ tau (caption_lsh_edges). Both verify BEFORE the union —
+    an unverified band collision in either modality would fuse unrelated
     clusters through one bad edge, which transitivity then amplifies.
     Connected components run once on the merged graph over numeric nids.
     Returns (image_id, cluster_id, survivor), cluster_id = the minimum
@@ -1068,61 +1019,13 @@ def crossmodal_cluster_labels(
     rows = d.select("nid", "image_id", "caption", "phash").localCheckpoint(
         eager=False
     )
-    icand = phash_near_dup_candidates(
+    ie = phash_near_dup_candidates(
         rows.select(F.col("nid").alias("image_id"), "phash"),
         max_hamming,
         ordered=False,
-    )
-    ie = icand.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
+    ).toDF("a", "b", "hamming").select("a", "b")
     te = caption_lsh_edges(rows.select("nid", "caption"), tau)
-    edges = ie.unionByName(te).distinct()
-    und = edges.unionAll(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).cache()
-    labels = connected_components_auto(
-        rows.select(F.col("nid").alias("doc_id")), und, telemetry=telemetry
-    )
-    und.unpersist()
-    ids = rows.select(F.col("nid").alias("doc_id"), "image_id")
-    cl = rows.select(
-        F.col("nid").alias("cluster"), F.col("image_id").alias("cluster_id")
-    )
-    return (
-        labels.join(ids, "doc_id")
-        .join(cl, "cluster")
-        .select(
-            "image_id",
-            "cluster_id",
-            (F.col("cluster") == F.col("doc_id")).alias("survivor"),
-        )
-    )
-
-
-def crossmodal_corpus(spark, n: int = 300) -> DataFrame:
-    """(image_id, nid, caption, phash) over n synth rows PLUS the planted
-    phash variants of phash_corpus. Base rows keep their synth captions —
-    the degenerate fraction plants exact text dups ("tiny", "spam …"), and
-    the i %% 11 pixel cluster plants exact image dups, so rows that sit in
-    both (e.g. a pixel-cluster member with a degenerate caption) bridge the
-    two modalities transitively. Variants carry an EMPTY caption (the
-    realistic shape: a re-encode arrives uncaptioned) so they can only
-    cluster through the image side. nid = 2i, variants 2i+1 — mirrored
-    literally in the SQL twin."""
-    from ..sources.synth import synth_spark
-
-    base = synth_spark(spark, n).select("image_id", "caption", "phash")
-    i = "cast(substring(image_id, 5) as bigint)"
-    base = base.withColumn("nid", F.expr(f"{i} * 2"))
-    pert = base.where(F.expr(f"({i}) % 7 = 3")).select(
-        F.concat("image_id", F.lit("_v")).alias("image_id"),
-        F.lit("").alias("caption"),
-        F.expr(
-            f"phash ^ shiftleft(cast(1 as bigint), cast({i} % 62 as int)) "
-            f"^ shiftleft(cast(1 as bigint), cast(({i} * 31) % 62 as int))"
-        ).alias("phash"),
-        F.expr(f"{i} * 2 + 1").alias("nid"),
-    )
-    return base.unionByName(pert)
+    return _image_clusters(rows, ie.unionByName(te).distinct(), telemetry)
 
 
 def crossmodal_clusters(spark, sf_dir) -> DataFrame:
@@ -1132,4 +1035,4 @@ def crossmodal_clusters(spark, sf_dir) -> DataFrame:
     re-derives BOTH edge families (phash banding + Hamming verify; caption
     shingles + minhash + banding + Jaccard verify) and the transitive
     closure as a recursive CTE."""
-    return crossmodal_cluster_labels(crossmodal_corpus(spark, 300))
+    return crossmodal_cluster_labels(planted_corpus(spark, 300))

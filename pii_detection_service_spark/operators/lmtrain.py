@@ -82,7 +82,7 @@ def lm_train_bigram_counts(spark, sf_dir) -> DataFrame:
 
 def train_char_bigram_lm(d: DataFrame, text_col: str = "text") -> np.ndarray:
     """Corpus → (_NC²,) natural-log scoring table, directly consumable by
-    quality.perplexity_table and as ``udfs.Models(lm=...)`` (stage.score,
+    quality.perplexity(text, tbl) and as ``udfs.Models(lm=...)`` (stage.score,
     pipeline.score_documents, udfs.score_batch). The collect is bounded by
     the 66,049-id vocabulary, not the corpus."""
     rows = (

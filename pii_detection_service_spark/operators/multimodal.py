@@ -244,19 +244,7 @@ def synth_audio_table(spark, n: int) -> DataFrame:
     return spark.range(n).mapInPandas(gen, "audio_id string, bytes binary, sr int")
 
 
-# --- video-style container: length-prefixed concatenated frames -------------
-
-def pack_frames(frames: list[bytes]) -> bytes:
-    """Build a deterministic multi-frame container (stand-in for a video
-    file; a real pipeline would carry mp4 bytes here)."""
-    import struct
-
-    out = [b"FVID", struct.pack(">I", len(frames))]
-    for f in frames:
-        out.append(struct.pack(">I", len(f)))
-        out.append(f)
-    return b"".join(out)
-
+# --- video-style containers: frame sampling ---------------------------------
 
 def sample_frames(df: DataFrame, every: int = 2) -> DataFrame:
     """Frame-sample: explode every ``every``-th frame from the container
@@ -266,9 +254,8 @@ def sample_frames(df: DataFrame, every: int = 2) -> DataFrame:
     pixel-decoding anything (sampling is a container walk, not a decode);
     animated GIFs (sources/gifcodec.py) MUST decode+composite — a GIF
     frame is a delta over the prior canvas (disposal/transparency), so
-    sampled frames are emitted as standalone PNG bytes; the legacy FVID
-    stand-in still parses; anything else raises."""
-    import struct
+    sampled frames are emitted as standalone PNG bytes; anything else
+    raises."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -306,19 +293,10 @@ def sample_frames(df: DataFrame, every: int = 2) -> DataFrame:
                                 (iid, idx, imagecodec.encode_png(frame[..., :3]))
                             )
                     continue
-                if data[:4] != b"FVID":
-                    raise NotImplementedError(
-                        "unknown video container (not AVI/MJPEG or FVID) — "
-                        "other formats need a real decoder (ffmpeg)"
-                    )
-                (n,) = struct.unpack(">I", data[4:8])
-                pos = 8
-                for idx in range(n):
-                    (ln,) = struct.unpack(">I", data[pos : pos + 4])
-                    frame = data[pos + 4 : pos + 4 + ln]
-                    pos += 4 + ln
-                    if idx % every == 0:
-                        rows.append((iid, idx, frame))
+                raise NotImplementedError(
+                    "unknown video container (not AVI/MJPEG, GIF or WebP) — "
+                    "other formats need a real decoder (ffmpeg)"
+                )
             yield pd.DataFrame(
                 rows, columns=["image_id", "frame_idx", "frame_bytes"]
             )

@@ -106,11 +106,10 @@ def _bucket_sql(anchors: dict[int, list[float]]) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def ann_search(spark, sf_dir, query_vec_id: int = 0, n_anchors: int = 8) -> DataFrame:
-    """Bucket-pruned ANN: assign every vector (and the query) a sign-LSH
-    bucket from data-derived anchors, then brute-force ONLY the query's
-    bucket — at scale the bucket is the partition key, so the scan prunes
-    to ~1/2^b of the corpus instead of shuffling all of it. Bucket
+def _bucket_probe(spark, sf_dir, query_vec_id, n_anchors, probe) -> DataFrame:
+    """Top-10 cosine neighbours of the query among the vectors whose
+    sign-LSH bucket passes ``probe`` — a join condition over the vector's
+    ``bucket`` and the broadcast query row's ``qbucket``. Bucket
     assignment is a map-only projection (anchors inlined as literals)."""
     anchors = _anchor_literals(spark, sf_dir, n_anchors)
     e = table(spark, sf_dir, "embeddings").select(
@@ -120,7 +119,7 @@ def ann_search(spark, sf_dir, query_vec_id: int = 0, n_anchors: int = 8) -> Data
     qb = bucketed.where(F.col("vec_id") == query_vec_id).select(
         F.col("bucket").alias("qbucket"), F.col("v").alias("qv")
     )
-    cand = bucketed.join(F.broadcast(qb), F.col("bucket") == F.col("qbucket"))
+    cand = bucketed.join(F.broadcast(qb), probe)
     cos = F.round(
         F.expr(_DOT.format(u="v", v="qv"))
         / (F.expr(_NORM.format(u="v")) * F.expr(_NORM.format(u="qv"))),
@@ -131,6 +130,16 @@ def ann_search(spark, sf_dir, query_vec_id: int = 0, n_anchors: int = 8) -> Data
         .select("vec_id", "bucket", cos.alias("cos"))
         .orderBy(F.col("cos").desc(), "vec_id")
         .limit(10)
+    )
+
+
+def ann_search(spark, sf_dir, query_vec_id: int = 0, n_anchors: int = 8) -> DataFrame:
+    """Bucket-pruned ANN: assign every vector (and the query) a sign-LSH
+    bucket from data-derived anchors, then brute-force ONLY the query's
+    bucket — at scale the bucket is the partition key, so the scan prunes
+    to ~1/2^b of the corpus instead of shuffling all of it."""
+    return _bucket_probe(
+        spark, sf_dir, query_vec_id, n_anchors, F.col("bucket") == F.col("qbucket")
     )
 
 
@@ -151,27 +160,12 @@ def ann_search_multiprobe(
     instead of 1/256 (at scale: 9 partitions of a bucket-partitioned table —
     still pruned, still no shuffle; the probe predicate is evaluated
     map-side under a broadcast of the single query row)."""
-    anchors = _anchor_literals(spark, sf_dir, n_anchors)
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    bucketed = e.withColumn("bucket", F.expr(_bucket_sql(anchors)))
-    qb = bucketed.where(F.col("vec_id") == query_vec_id).select(
-        F.col("bucket").alias("qbucket"), F.col("v").alias("qv")
-    )
-    cand = bucketed.join(
-        F.broadcast(qb), F.expr(f"bit_count(bucket ^ qbucket) <= {radius}")
-    )
-    cos = F.round(
-        F.expr(_DOT.format(u="v", v="qv"))
-        / (F.expr(_NORM.format(u="v")) * F.expr(_NORM.format(u="qv"))),
-        4,
-    )
-    return (
-        cand.where(F.col("vec_id") != query_vec_id)
-        .select("vec_id", "bucket", cos.alias("cos"))
-        .orderBy(F.col("cos").desc(), "vec_id")
-        .limit(10)
+    return _bucket_probe(
+        spark,
+        sf_dir,
+        query_vec_id,
+        n_anchors,
+        F.expr(f"bit_count(bucket ^ qbucket) <= {radius}"),
     )
 
 

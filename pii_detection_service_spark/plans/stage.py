@@ -226,9 +226,3 @@ def run_stage(
         "resumed_noop": False,
     }
 
-
-def read_synth_or_generate(spark: SparkSession, n: int) -> DataFrame:
-    """Convenience source for bench/tests: distributed synthetic generation."""
-    from ..sources.synth import synth_spark
-
-    return synth_spark(spark, n)

@@ -14,9 +14,6 @@
   baseline 4:4:4 at quality 98 so the noise-heavy synth images hold the
   40 dB PSNR invariant from BASELINE.json input_hint (worst measured
   43.4 dB; natural images clear 40 dB at far lower quality).
-- FJPG: the legacy deterministic lossy stand-in (step-2 quantization +
-  zlib) kept for decode back-compat with data written by earlier rounds;
-  ``decode`` dispatches jpeg-format bytes by magic (0xFFD8 vs b"FJPG").
 
 All functions take/return ``numpy uint8 arrays of shape (h, w, 3)``.
 """
@@ -29,7 +26,6 @@ import zlib
 import numpy as np
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
-_FJPG_MAGIC = b"FJPG"
 
 
 def _chunk(tag: bytes, payload: bytes) -> bytes:
@@ -67,25 +63,6 @@ def decode_png(data: bytes) -> np.ndarray:
     return pngcodec.decode_png(data)
 
 
-def encode_jpeg_like(pixels: np.ndarray) -> bytes:
-    """Deterministic lossy stand-in (see module docstring). NOT real JPEG."""
-    h, w, c = pixels.shape
-    assert c == 3 and pixels.dtype == np.uint8
-    q = (pixels >> 1).astype(np.uint8)  # step-2 quantization
-    return (
-        _FJPG_MAGIC
-        + struct.pack(">II", w, h)
-        + zlib.compress(q.tobytes(), 6)
-    )
-
-
-def decode_jpeg_like(data: bytes) -> np.ndarray:
-    assert data[:4] == _FJPG_MAGIC, "not an FJPG payload"
-    w, h = struct.unpack(">II", data[4:12])
-    q = np.frombuffer(zlib.decompress(data[12:]), np.uint8).reshape(h, w, 3)
-    return (q.astype(np.uint16) * 2 + 1).clip(0, 255).astype(np.uint8)
-
-
 def encode_jpeg(
     pixels: np.ndarray, quality: int = 98, subsampling: tuple[int, int] = (1, 1)
 ) -> bytes:
@@ -108,9 +85,7 @@ def decode(data: bytes, fmt: str) -> np.ndarray:
             from . import jpegcodec
 
             return jpegcodec.decode_baseline_jpeg(data)
-        if data[:4] == _FJPG_MAGIC:  # legacy stand-in payloads
-            return decode_jpeg_like(data)
-        raise ValueError("jpeg-format bytes with neither SOI nor FJPG magic")
+        raise ValueError("jpeg-format bytes without an SOI marker")
     if fmt == "gif":
         from . import gifcodec
 

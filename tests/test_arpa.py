@@ -19,7 +19,7 @@ def test_builtin_lm_roundtrips_through_arpa(tmp_path):
     assert tbl.shape == quality._LM_TBL.shape
     assert np.allclose(tbl, quality._LM_TBL, rtol=0, atol=1e-12)
     for text in ["the quick brown fox", "el zorro", "", "a", "zzzz qqqq"]:
-        assert quality.perplexity_table(text, tbl) == pytest.approx(
+        assert quality.perplexity(text, tbl) == pytest.approx(
             quality.perplexity(text), rel=1e-9
         )
 
@@ -80,7 +80,7 @@ def test_broadcast_scoring_matches_driver(spark, tmp_path):
     }
     tbl = quality.load_arpa_char_bigram(p)
     for i, t in enumerate(texts):
-        assert got[i] == pytest.approx(quality.perplexity_table(t, tbl), rel=0)
+        assert got[i] == pytest.approx(quality.perplexity(t, tbl), rel=0)
         assert got[i] == pytest.approx(quality.perplexity(t), rel=1e-9)
 
 
@@ -117,7 +117,7 @@ def test_large_arpa_distributed_scoring_matches_driver(spark, tmp_path):
     """End-to-end seam at artifact scale: the ≥10⁴-entry synth ARPA flows
     through load → broadcast → the PRODUCTION score path (stage.score /
     score_batch), and the distributed ppl equals the driver-side
-    perplexity_table row-for-row; langid and keep/drop still run the
+    perplexity(text, tbl) row-for-row; langid and keep/drop still run the
     builtin profiles."""
     from pii_detection_service_spark import udfs
     from pii_detection_service_spark.plans import stage
@@ -136,7 +136,7 @@ def test_large_arpa_distributed_scoring_matches_driver(spark, tmp_path):
 
     tbl = quality.load_arpa_char_bigram(p)
     for i, t in enumerate(texts):
-        assert got[i]["ppl"] == quality.perplexity_table(t, tbl)
+        assert got[i]["ppl"] == quality.perplexity(t, tbl)
         lang, _ = quality.lang_and_ppl(t)  # langid unchanged by the LM swap
         assert got[i]["lang"] == lang
 

@@ -40,7 +40,7 @@ def test_trained_table_nonlatin_clips_to_shared_bucket(spark):
 
 def test_trained_lm_scores_through_pipeline_seam(spark):
     """A trained table plugs into pipeline.score_documents as Models.lm:
-    the ppl column equals a driver-side perplexity_table recompute under
+    the ppl column equals a driver-side perplexity(text, tbl) recompute under
     the trained table, and differs from the builtin run (the swap
     engaged)."""
     d = relational.table(spark, SF, "documents")
@@ -55,7 +55,7 @@ def test_trained_lm_scores_through_pipeline_seam(spark):
     }
     texts = {r["doc_id"]: r["text"] for r in d.collect()}
     for doc_id, text in list(texts.items())[:50]:
-        want = round(quality.perplexity_table(text, tbl), 4)
+        want = round(quality.perplexity(text, tbl), 4)
         assert trained[doc_id] == want, doc_id
     assert any(trained[k] != builtin[k] for k in trained)
 
@@ -67,7 +67,7 @@ def test_trained_lm_fits_corpus_better_than_builtin(spark):
     d = relational.table(spark, SF, "documents")
     tbl = lmtrain.train_char_bigram_lm(d)
     texts = [r["text"] for r in d.select("text").collect() if r["text"]]
-    ppl_trained = np.mean([quality.perplexity_table(t, tbl) for t in texts])
+    ppl_trained = np.mean([quality.perplexity(t, tbl) for t in texts])
     ppl_builtin = np.mean([quality.perplexity(t) for t in texts])
     assert ppl_trained < ppl_builtin
 

@@ -89,17 +89,6 @@ def test_resize_roundtrip(spark, img_df):
         assert px.shape == (8, 8, 3)
 
 
-def test_frame_sampling(spark):
-    frames = [imagecodec.encode_png(synth.pixels_for(i, 8)) for i in range(5)]
-    container = multimodal.pack_frames(frames)
-    df = spark.createDataFrame([("vid_0", container)], "image_id string, bytes binary")
-    out = multimodal.sample_frames(df, every=2).collect()
-    assert [r["frame_idx"] for r in out] == [0, 2, 4]
-    assert np.array_equal(
-        imagecodec.decode_png(bytes(out[1]["frame_bytes"])), synth.pixels_for(2, 8)
-    )
-
-
 def _base_updates(spark, n=40):
     base = spark.createDataFrame(
         [(i, f"text {i}", "en") for i in range(n)],

@@ -109,11 +109,16 @@ def test_dedup_group_min_has_no_window(spark):
     """The band-group min must be groupBy+join (AQE-splittable), never a
     Window over (band, band_key) — a hot band group under a Window sorts
     in ONE task, the skew shape template-heavy corpora trigger. Guards
-    minhash_survivors, dedup_clusters and jaccard_candidates at once
-    (they share _with_grp_min)."""
+    minhash_survivors and every _star_edges consumer (dedup_clusters,
+    jaccard_candidates, phash_candidates) at once (they share
+    _with_grp_min)."""
     from pii_detection_service_spark.operators import dedup
 
-    for builder in (dedup.minhash_survivors, dedup.jaccard_candidates):
+    for builder in (
+        dedup.minhash_survivors,
+        dedup.jaccard_candidates,
+        dedup.phash_candidates,
+    ):
         plan = (
             builder(spark, SF)._jdf.queryExecution().executedPlan().toString()
         )

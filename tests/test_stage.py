@@ -17,7 +17,7 @@ N = 300
 
 @pytest.fixture(scope="module")
 def src(spark):
-    return stage.read_synth_or_generate(spark, N).cache()
+    return synth.synth_spark(spark, N).cache()
 
 
 def test_scored_matches_pure_python_golden(spark, src):

@@ -63,3 +63,9 @@ def test_spark_sample_frames_over_real_avi(spark):
     px = jpegcodec.decode_baseline_jpeg(bytes(r0["frame_bytes"]))
     truth = avicodec.synth_video(1, n_frames=6)[2]
     assert imagecodec.psnr(truth, px) >= 40.0
+    # any other container (e.g. a bare length-prefixed frame pack) is refused
+    bad = spark.createDataFrame(
+        [("vid_x", b"FVID\x00\x00\x00\x00")], "image_id string, bytes binary"
+    )
+    with pytest.raises(Exception, match="unknown video container"):
+        multimodal.sample_frames(bad).collect()

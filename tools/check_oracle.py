@@ -3,6 +3,7 @@ entry on Spark and its oracle_sql() twin on DuckDB over the same parquet,
 then compare row count, column names, and order-insensitive values.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
+A query name that is not registered exits 2 before any query runs.
 """
 
 from __future__ import annotations
@@ -44,6 +45,13 @@ def main():
     import __spark_entry__ as entry
     from pyspark.sql import SparkSession
 
+    qs = entry.queries()
+    oracles = entry.oracle_sql()
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        print(f"unknown query name(s): {', '.join(unknown)}")
+        sys.exit(2)
+
     spark = (
         SparkSession.builder.master("local[4]")
         .config("spark.sql.shuffle.partitions", "8")
@@ -58,8 +66,6 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
-    qs = entry.queries()
-    oracles = entry.oracle_sql()
     failures = []
     for name, builder in qs.items():
         if only and name not in only:

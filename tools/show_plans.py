@@ -24,6 +24,7 @@ def main():
 
     from pii_detection_service_spark import queries as q
     from pii_detection_service_spark.plans import stage
+    from pii_detection_service_spark.sources.synth import synth_spark
 
     spark = (
         SparkSession.builder.master("local[4]")
@@ -79,7 +80,7 @@ def main():
         out += [f"## {name}", "", "```", buf.getvalue().strip(), "```", ""]
 
     # flagship stage: score + salted bucket repartition (the ONE shuffle)
-    src = stage.read_synth_or_generate(spark, 1000)
+    src = synth_spark(spark, 1000)
     df = stage.score(stage.with_bucket(src, 8))
     salted = df.withColumn(
         "salt", F.pmod(F.xxhash64("image_id"), F.lit(2)).cast("int")
