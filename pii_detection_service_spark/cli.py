@@ -11,8 +11,8 @@ Usage (sandbox / synthetic):
     python -m pii_detection_service_spark.cli --synthetic 100000 \
         --out /tmp/stage_out --cores 32
 
-The same job runs at N and 4N parallelism for the scaling evidence
-(BENCH/run_scaling.sh drives bench.py; this CLI is the operational entry).
+Throughput and N→4N scaling are measured by perfbench/run.py (the
+benchmark in BENCHMARK.json); this CLI is the operational entry.
 """
 
 from __future__ import annotations
@@ -43,6 +43,8 @@ def main(argv: list[str] | None = None) -> None:
     args = p.parse_args(argv)
     if args.arpa_lm and args.train_lm:
         p.error("--arpa-lm and --train-lm are mutually exclusive")
+    if args.buckets < 1 or args.salt < 1:
+        p.error("--buckets and --salt must be at least 1")
 
     from pyspark.sql import SparkSession
 

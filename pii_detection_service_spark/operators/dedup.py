@@ -11,7 +11,7 @@ text, phash images). The clusterings feed verified edges to one
 epilogue, _clusters (undirected closure → connected_components_auto),
 and _image_clusters relabels numeric cluster ids to image ids.
 
-Scale notes (timings: 5M-doc corpus, local[32] — BENCH/scale5m.json):
+Scale notes (one-off 5M-doc runs at local[32]; records in history to 32712c5):
 - exact:    one hash-groupBy shuffle on md5(text) — map-side partial agg (3 s).
 - minhash:  signatures are per-row map-only over a shingle-id array computed
             once per row (51 s; the original inline per-shingle fold was
@@ -773,9 +773,9 @@ def embedding_near_dup(spark, sf_dir, n_anchors: int = 8) -> DataFrame:
 
     ``n_anchors`` sets the bucket width (2^n buckets) — the knob that must
     GROW with corpus size: expected candidate pairs ≈ n²/2^(b+1), so 8
-    bits is right for ~10^4 vectors and ~16 bits for 10^6 (the 1M scale
-    leg in BENCH/ann_scale.py runs 16). The driver-oracled query keeps the
-    default 8 to match the DuckDB twin."""
+    bits is right for ~10^4 vectors and ~16 bits for 10^6 (a one-off 1M
+    run, recorded in commit 32712c5, used 16). The driver-oracled query
+    keeps the default 8 to match the DuckDB twin."""
     from .similarity import _anchor_literals, _bucket_sql
 
     anchors = _anchor_literals(spark, sf_dir, n_anchors)

@@ -204,17 +204,15 @@ def run_stage(
             )
         )
         lineage_rows = lineage_df.collect()  # ≤ n_buckets rows
-        if not lineage_rows:
-            return {"rows": 0, "kept": 0, "pii_rows": 0, "resumed_noop": True}
-
-        lineage_df.coalesce(1).write.mode("append").parquet(lineage_dir)
-
-        metrics = (
-            groups.groupBy("lang", "keep", "drop_reason")
-            .agg(row_total.alias("count"))
-            .withColumn("run_ts", F.current_timestamp())
-        )
-        metrics.coalesce(1).write.mode("append").parquet(metrics_dir)
+        # no pending bucket (a no-op resume) → nothing to commit
+        if lineage_rows:
+            lineage_df.coalesce(1).write.mode("append").parquet(lineage_dir)
+            metrics = (
+                groups.groupBy("lang", "keep", "drop_reason")
+                .agg(row_total.alias("count"))
+                .withColumn("run_ts", F.current_timestamp())
+            )
+            metrics.coalesce(1).write.mode("append").parquet(metrics_dir)
     finally:
         groups.unpersist()
 
@@ -223,6 +221,6 @@ def run_stage(
         "kept": sum(r["n_kept"] for r in lineage_rows),
         "pii_rows": sum(r["n_pii_rows"] for r in lineage_rows),
         "runtime_sec": runtime,
-        "resumed_noop": False,
+        "resumed_noop": not lineage_rows,
     }
 

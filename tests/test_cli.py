@@ -9,6 +9,7 @@ import sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from pii_detection_service_spark.functions import tagger
 
@@ -24,6 +25,24 @@ def _cli(*args: str) -> subprocess.CompletedProcess:
     return subprocess.run(
         [sys.executable, "-m", "pii_detection_service_spark.cli", *args],
         cwd=REPO, capture_output=True, text=True, timeout=600,
+    )
+
+
+def _submit(cwd, *args: str) -> subprocess.CompletedProcess:
+    """The cluster launcher: spark-submit over two executor JVMs, with the
+    package importable only from the --py-files zip (PYTHONPATH unset,
+    cwd outside the repo)."""
+    zip_path = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "package_pyfiles.py")],
+        capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYSPARK_PYTHON"] = env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+    return subprocess.run(
+        ["spark-submit", "--master", "local-cluster[2,1,1024]",
+         "--conf", "spark.executor.memory=700m", "--py-files", zip_path,
+         os.path.join(REPO, "tools", "submit_stage.py"), *args],
+        cwd=cwd, env=env, capture_output=True, text=True, timeout=600,
     )
 
 
@@ -43,15 +62,23 @@ def _write_source(path: str) -> None:
     )
 
 
-def test_cli_gazetteer_file_tags_named_row(tmp_path):
+@pytest.mark.parametrize("launcher", ["module", "spark_submit"])
+def test_cli_gazetteer_file_tags_named_row(tmp_path, launcher):
+    """The --gazetteer file reaches the tagger through the broadcast
+    ``Models`` value, run in-process (``python -m``) and across executor
+    JVMs (``spark-submit`` on ``local-cluster``)."""
     src, out = str(tmp_path / "src.parquet"), str(tmp_path / "out")
     _write_source(src)
     names = tmp_path / "names.txt"
     names.write_text("Zarathustra\n")
     assert tagger.tag_and_scrub(CAPTIONS[0])[3] == 0  # builtin set misses it
 
-    r = _cli("--source", src, "--out", out, "--buckets", "2", "--salt", "1",
-             "--cores", "2", "--gazetteer", str(names))
+    args = ("--source", src, "--out", out, "--buckets", "2", "--salt", "1",
+            "--gazetteer", str(names))
+    if launcher == "module":
+        r = _cli(*args, "--cores", "2")
+    else:
+        r = _submit(str(tmp_path), *args)
     assert r.returncode == 0, r.stderr[-3000:]
     metrics = json.loads(r.stdout.strip().splitlines()[-1])
     assert metrics["rows"] == 3 and metrics["pii_rows"] == 1
@@ -66,8 +93,15 @@ def test_cli_gazetteer_file_tags_named_row(tmp_path):
     assert by_id["img1"]["n_pii"] == 0 and by_id["img2"]["n_pii"] == 0
 
 
-def test_cli_arpa_lm_and_train_lm_are_exclusive(tmp_path):
-    r = _cli("--synthetic", "10", "--out", str(tmp_path / "out"),
-             "--arpa-lm", str(tmp_path / "m.arpa"), "--train-lm")
+@pytest.mark.parametrize("argv, message", [
+    (["--arpa-lm", "m.arpa", "--train-lm"], "mutually exclusive"),
+    (["--buckets", "0"], "at least 1"),
+    (["--salt", "0"], "at least 1"),
+    (["--buckets", "-2", "--salt", "-4"], "at least 1"),
+], ids=["arpa_and_train", "buckets_0", "salt_0", "buckets_and_salt_negative"])
+def test_cli_arpa_lm_and_train_lm_are_exclusive(tmp_path, argv, message):
+    """Rejected argv exits 2 before Spark starts: no output is written."""
+    r = _cli("--synthetic", "10", "--out", str(tmp_path / "out"), *argv)
     assert r.returncode == 2
-    assert "mutually exclusive" in r.stderr
+    assert message in r.stderr
+    assert not (tmp_path / "out").exists()

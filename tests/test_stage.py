@@ -103,6 +103,7 @@ def test_run_stage_and_resume(spark, src, tmp_path):
     # resume: everything complete → no recompute, no duplicate rows/lineage
     m2 = stage.run_stage(spark, src, out, n_buckets=8, salt_factor=2)
     assert m2["resumed_noop"]
+    assert set(m2) == set(m1)  # one result shape, no-op resume included
     data = spark.read.parquet(os.path.join(out, "data"))
     assert data.count() == N
     assert spark.read.parquet(os.path.join(out, "lineage")).count() == 8

@@ -3,7 +3,7 @@
 Usage:
     python tools/package_pyfiles.py
     spark-submit --py-files dist/pii_detection_service_spark.zip \
-        -m pii_detection_service_spark.cli --source ... --out ...
+        tools/submit_stage.py --source ... --out ...
 """
 
 from __future__ import annotations
