@@ -12,10 +12,10 @@ service) as a distributed Spark pipeline over image+caption tables:
 - ``operators``          — Spark DataFrame operators (native-first): filters,
   label ops, F-beta drift aggregate, dedup family, similarity search.
 - ``sources``            — synthetic image+caption table (input_hint schema),
-  testdata loaders, minimal PNG codec.
+  testdata loaders, codecs (PNG, JPEG, GIF, BMP, WebP/VP8, WAV, AVI).
 - ``plans.stage``        — the flagship distributed stage: score → scrub →
   keep/drop → phash-bucket repartition (salted) → write + lineage + metrics,
-  resumable via anti-join.
+  resumable by a ``NOT IN`` filter on the buckets lineage marks done.
 
 Design: DataFrame/Catalyst first; Python only inside Arrow-batched
 ``mapInPandas``/``pandas_udf`` (zero per-row Python at the Spark level).

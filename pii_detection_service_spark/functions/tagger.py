@@ -161,10 +161,20 @@ def find_pii_spans(
     precedence EMAIL > URL > ID > PHONE > ADDRESS > USERNAME > NAME.
     ``toks`` may be passed to reuse an existing word_tokenize result;
     ``gazetteer`` is the lowercase given-name set."""
-    spans: list[tuple[int, int, str]] = []
+    return _pii_spans(text, toks, gazetteer)[0]
 
-    def free(s: int, e: int) -> bool:
-        return all(e <= s2 or s2e <= s for s2, s2e, _ in spans)
+
+def _pii_spans(
+    text: str, toks, gazetteer: frozenset
+) -> tuple[list[tuple[int, int, str]], bytearray]:
+    """find_pii_spans plus its claim map: byte i of ``taken`` is 1 iff
+    character i lies in a claimed span. A candidate (s, e) is free iff
+    ``taken.find(1, s, e) == -1`` — a scan of its own range only, so the
+    claims cost time linear in the caption however many spans it holds
+    (testing each candidate against every claimed span is quadratic in
+    span count)."""
+    spans: list[tuple[int, int, str]] = []
+    taken = bytearray(len(text))
 
     # Cheap necessary-condition gates: most captions are clean, so skip
     # whole pattern classes when their trigger characters are absent.
@@ -189,12 +199,13 @@ def find_pii_spans(
             else [m.span() for m in pat.finditer(text)]
         )
         for s, e in found:
-            if free(s, e):
+            if taken.find(1, s, e) == -1:
                 spans.append((s, e, cls))
+                taken[s:e] = b"\x01" * (e - s)
 
     if _UPPER_RE.search(text) is None:
         spans.sort()
-        return spans  # gazetteer names require a capitalized word
+        return spans, taken  # gazetteer names require a capitalized word
 
     # Gazetteer names: a known given name (capitalized) optionally followed
     # by further capitalized words (surnames) extends the span. An honorific
@@ -204,7 +215,11 @@ def find_pii_spans(
     i = 0
     while i < len(toks):
         w, ts, te = toks[i]
-        if w[:1].isupper() and w.lower() in gazetteer and free(ts, te):
+        if (
+            w[:1].isupper()
+            and w.lower() in gazetteer
+            and taken.find(1, ts, te) == -1
+        ):
             j = i + 1
             end = te
             while j < len(toks):
@@ -213,19 +228,20 @@ def find_pii_spans(
                     wj[:1].isupper()
                     and wj.replace("-", "").isalpha()
                     and wj.lower() not in HONORIFICS
-                    and free(sj, ej)
+                    and taken.find(1, sj, ej) == -1
                     and sj == toks[j - 1][2] + 1  # contiguous words
                 ):
                     break
                 end = ej
                 j += 1
             spans.append((ts, end, "NAME_STUDENT"))
+            taken[ts:end] = b"\x01" * (end - ts)
             i = j
         else:
             i += 1
 
     spans.sort()
-    return spans
+    return spans, taken
 
 
 def _label_tokens(toks: list[tuple[str, int, int]], spans) -> list[str]:
@@ -274,15 +290,16 @@ def tag(
     return [t[0] for t in toks], _label_tokens(toks, spans)
 
 
-def find_toxic_spans(text: str, pii_spans) -> list[tuple[int, int, str]]:
+def find_toxic_spans(text: str, taken: bytearray) -> list[tuple[int, int, str]]:
     """Toxicity gazetteer spans (class TOXIC), skipping anything already
-    claimed by a PII span. Not part of the 13-label BIO vocabulary — toxic
-    words stay labeled O; scrubbing masks them with [TOXIC]."""
-    out = []
-    for m in TOXIC_RE.finditer(text):
-        if all(m.end() <= s or e <= m.start() for s, e, _ in pii_spans):
-            out.append((m.start(), m.end(), "TOXIC"))
-    return out
+    claimed by a PII span (``taken``: the claim map of _pii_spans). Not
+    part of the 13-label BIO vocabulary — toxic words stay labeled O;
+    scrubbing masks them with [TOXIC]."""
+    return [
+        (m.start(), m.end(), "TOXIC")
+        for m in TOXIC_RE.finditer(text)
+        if taken.find(1, m.start(), m.end()) == -1
+    ]
 
 
 # any char that lets a rule fire: trailing punct to peel, digits/@ for the
@@ -331,8 +348,8 @@ def tag_and_scrub(
         toks_fast = text.split()
         return toks_fast, ["O"] * len(toks_fast), text, 0, 0
     toks = word_tokenize(text)
-    spans = find_pii_spans(text, toks, gazetteer)
-    toxic = find_toxic_spans(text, spans)
+    spans, taken = _pii_spans(text, toks, gazetteer)
+    toxic = find_toxic_spans(text, taken)
     all_spans = sorted(spans + toxic)
     return (
         [t[0] for t in toks],

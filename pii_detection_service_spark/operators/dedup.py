@@ -8,8 +8,9 @@ the recall contract once) → an exact verify on the candidate edges only.
 _jaccard_edges verifies MinHash bands by shingle Jaccard (text);
 _hamming_edges verifies 4×16-bit words by Σ bit_count(xor) (simhash
 text, phash images). The clusterings feed verified edges to one
-epilogue, _clusters (undirected closure → connected_components_auto),
-and _image_clusters relabels numeric cluster ids to image ids.
+connected_components (large-star/small-star contraction, durable rounds
+under a checkpoint_dir), and _image_clusters relabels numeric cluster
+ids to image ids.
 
 Scale notes (one-off 5M-doc runs at local[32]; records in history to 32712c5):
 - exact:    one hash-groupBy shuffle on md5(text) — map-side partial agg (3 s).
@@ -26,6 +27,8 @@ Scale notes (one-off 5M-doc runs at local[32]; records in history to 32712c5):
 """
 
 from __future__ import annotations
+
+from decimal import Decimal
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -158,46 +161,46 @@ def minhash_survivors(spark, sf_dir) -> DataFrame:
     )
 
 
-# --- durable CC checkpoint state ---------------------------------------------
+# --- connected components ----------------------------------------------------
 # CC is the most expensive query family at every scale notch (minutes at
-# 5-20M rows, hours at 100 TB) and was the only multi-minute path with no
-# resume story: localCheckpoint truncates lineage but dies with the driver.
-# These helpers persist per-round state (labels for propagation, the edge
-# set for star contraction) as parquet "rounds" plus a tiny Spark-written
-# state table carrying (round, checksum). Ordering invariant: the state
-# table for round k commits strictly AFTER round k's data parquet, so the
-# existence of a state row implies its data committed — a crash anywhere
-# leaves the newest VALID state pointing at a fully-written round, and the
-# torn round directory is simply overwritten on re-run. Everything goes
-# through Spark writes/reads (Hadoop FS), so the same paths work on HDFS /
-# object stores, not just the local FS.
+# 5-20M rows, hours at 100 TB), and localCheckpoint truncates lineage but
+# dies with the driver. With a checkpoint_dir, each round's edge set
+# persists as parquet plus a tiny Spark-written state table carrying
+# (round, checksum). Ordering invariant: the state table for round k
+# commits strictly AFTER round k's data parquet, so the existence of a
+# state row implies its data committed — a crash anywhere leaves the
+# newest VALID state pointing at a fully-written round, and the torn round
+# directory is simply overwritten on re-run. Everything goes through Spark
+# writes/reads (Hadoop FS), so the same paths work on HDFS / object
+# stores, not just the local FS.
 
 
-def _cc_load_latest(spark, checkpoint_dir: str, tag: str):
-    """Newest committed round for ``tag``: (round, [checksum strings],
-    data DataFrame) or None. Discovery reads the state tables by glob (no
-    directory-listing API — works on any Hadoop FS)."""
+def _cc_load_latest(spark, checkpoint_dir: str):
+    """Newest committed round: (round, checksum, edge DataFrame) or None.
+    Discovery reads the state tables by glob (no directory-listing API —
+    works on any Hadoop FS)."""
     try:
-        states = spark.read.parquet(f"{checkpoint_dir}/{tag}_state_*")
-        rows = states.collect()
+        rows = spark.read.parquet(f"{checkpoint_dir}/star_state_*").collect()
     except Exception:
         return None
     if not rows:
         return None
     best = max(rows, key=lambda r: r["round"])
-    df = spark.read.parquet(f"{checkpoint_dir}/{tag}_round_{best['round']}")
-    return int(best["round"]), list(best["checksum"]), df
+    n, s = best["checksum"]
+    checksum = (int(n), None if s == "None" else Decimal(s))
+    edges = spark.read.parquet(f"{checkpoint_dir}/star_round_{best['round']}")
+    return int(best["round"]), checksum, edges
 
 
-def _cc_save_state(spark, checkpoint_dir: str, tag: str, rnd: int, checksum):
+def _cc_save_state(spark, checkpoint_dir: str, rnd: int, checksum):
     """Commit the state row for round ``rnd`` (call only after the round's
-    data parquet has committed). Checksums are stringified: the star
-    variant's edge-hash sum is a decimal(38,0) that would overflow int64."""
+    data parquet has committed). Checksums are stringified: the edge-hash
+    sum is a decimal(38,0) that would overflow int64."""
     spark.createDataFrame(
         [(rnd, [str(x) for x in checksum])],
         "round int, checksum array<string>",
     ).coalesce(1).write.mode("overwrite").parquet(
-        f"{checkpoint_dir}/{tag}_state_{rnd}"
+        f"{checkpoint_dir}/star_state_{rnd}"
     )
 
 
@@ -205,216 +208,78 @@ def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     max_iters: int = 50,
-    checkpoint_every: int = 5,
-    telemetry: dict | None = None,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Connected components by iterative min-label propagation: every node
-    starts labeled with its own id; each round, labels flow across edges and
-    each node keeps the minimum seen; stop at fixpoint. Convergence needs
-    O(diameter) rounds — on LSH star-edges (doc ↔ band-group min) the
-    diameter is tiny, so 2-4 rounds close even chained clusters; for
-    high-diameter graphs use :func:`connected_components_star` (O(log n)
-    rounds, equality pinned by test). The per-round plan here is the right
-    one: one shuffle join + one min-aggregate, labels cached between
-    rounds.
-
-    Two guards for deep graphs:
-    - every ``checkpoint_every`` rounds the label table is
-      ``localCheckpoint``-ed (eager), truncating the logical plan — without
-      this the plan tree chains one join+agg per round and Catalyst analysis
-      time grows superlinearly on long chains (tested on a 12-round chain).
-    - if ``max_iters`` is exhausted before the checksum fixpoint the result
-      would silently contain SPLIT clusters, so this raises RuntimeError
-      instead of returning non-converged labels. ``max_iters`` is a safety
-      cap against pathological graphs, not a tuning knob — the default (50)
-      is far above any diameter LSH star-edges produce.
-
-    nodes: one column `doc_id`. edges: columns (a, b), directed — pass both
-    directions for undirected graphs. Returns (doc_id, cluster_id).
-
-    ``checkpoint_dir`` makes the per-round state DURABLE: every
-    ``checkpoint_every`` rounds the label table is written to parquet
-    (replacing that round's localCheckpoint — both truncate lineage, the
-    parquet additionally survives the driver), and a re-run with the same
-    directory resumes from the newest committed round instead of round 0
-    (telemetry records ``resumed_from_round``). Crash anywhere: the newest
-    committed state always points at a fully-written round (see
-    _cc_save_state ordering).
-    """
-    spark = nodes.sparkSession
-    start_round = 0
-    labels = None
-    if checkpoint_dir is not None:
-        st = _cc_load_latest(spark, checkpoint_dir, "prop")
-        if st is not None:
-            start_round, cks, saved = st
-            checksum = int(cks[0])
-            labels = saved.cache()
-            if telemetry is not None:
-                telemetry["resumed_from_round"] = start_round
-    if labels is None:
-        labels = nodes.select("doc_id", F.col("doc_id").alias("cluster")).cache()
-        # Convergence via checksum: every propagation step can only LOWER a
-        # node's label (min of self and neighbors), so sum(cluster) strictly
-        # decreases until the fixpoint. Comparing consecutive sums replaces a
-        # per-round comparison join+count with one scalar aggregate that also
-        # materializes the round's cache — one job per round total.
-        checksum = labels.agg(F.sum("cluster")).collect()[0][0]
-    converged = False
-    executed = 0  # rounds actually run THIS invocation (telemetry: a
-    # durable resume must execute only the remaining rounds)
-    for i in range(start_round, max_iters):
-        executed += 1
-        msgs = edges.join(
-            labels, edges["b"] == labels["doc_id"]
-        ).select(F.col("a").alias("doc_id"), "cluster")
-        new_labels = labels.unionAll(msgs).groupBy("doc_id").agg(
-            F.min("cluster").alias("cluster")
-        )
-        durable_round = checkpoint_dir is not None and (i + 1) % checkpoint_every == 0
-        if durable_round:
-            # durable twin of localCheckpoint: parquet write + re-read both
-            # materializes and truncates lineage, and survives the driver
-            path = f"{checkpoint_dir}/prop_round_{i + 1}"
-            new_labels.write.mode("overwrite").parquet(path)
-            new_labels = spark.read.parquet(path)
-        elif (i + 1) % checkpoint_every == 0:
-            # materialize AND truncate lineage (replaces the cache for this
-            # round): the next round's plan starts from the checkpointed
-            # scan, not the i-round join chain.
-            new_labels = new_labels.localCheckpoint(eager=True)
-        else:
-            new_labels = new_labels.cache()
-        new_checksum = new_labels.agg(F.sum("cluster")).collect()[0][0]
-        if durable_round:
-            # data committed above, checksum known → commit the state row
-            _cc_save_state(spark, checkpoint_dir, "prop", i + 1, [new_checksum])
-        labels.unpersist()
-        labels = new_labels
-        if new_checksum == checksum:
-            converged = True
-            if telemetry is not None:
-                telemetry.update(variant="label_propagation", rounds=i + 1)
-            break
-        checksum = new_checksum
-    if telemetry is not None:
-        telemetry["rounds_executed"] = executed
-    if not converged:
-        # release the last round's cached label table before raising —
-        # connected_components_auto treats this raise as a ROUTINE fallback
-        # trigger, and a leaked |nodes|-row cache would stay pinned in
-        # executor storage for the rest of the application
-        labels.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} rounds; "
-            "returning labels here would silently split clusters — raise "
-            "max_iters (diameter of the dup graph exceeds the cap)"
-        )
-    return labels
-
-
-def connected_components_auto(
-    nodes: DataFrame,
-    edges: DataFrame,
-    switch_after: int = 10,
-    max_iters: int = 50,
-    telemetry: dict | None = None,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Connected components with an automatic O(log n) fallback: min-label
-    propagation (cheapest per round, O(diameter) rounds — converges in 2-4
-    rounds on LSH star edges) up to ``switch_after`` rounds; if the graph's
-    diameter exceeds that, rerun with the large-star/small-star contraction
-    (O(log n) rounds on ANY graph) instead of grinding out hundreds of
-    propagation rounds. Output equality of the two variants is pinned by
-    tests on chains/random graphs/forests; ``telemetry`` (optional dict)
-    records which variant finished and its round count. ``checkpoint_dir``
-    enables durable per-round resume in both variants (distinct state tags,
-    so a fallback never reads propagation state as star state)."""
-    try:
-        return connected_components(
-            nodes,
-            edges,
-            max_iters=switch_after,
-            telemetry=telemetry,
-            checkpoint_dir=checkpoint_dir,
-        )
-    except RuntimeError:
-        if telemetry is not None:
-            telemetry["fallback_after"] = switch_after
-        return connected_components_star(
-            nodes,
-            edges,
-            max_iters=max_iters,
-            telemetry=telemetry,
-            checkpoint_dir=checkpoint_dir,
-        )
-
-
-def connected_components_star(
-    nodes: DataFrame,
-    edges: DataFrame,
-    max_iters: int = 50,
     telemetry: dict | None = None,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components via alternating large-star/small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") — the
-    100 TB swap-in for :func:`connected_components`: min-label propagation
-    needs O(diameter) rounds, star contraction O(log n) on ANY graph, so
-    high-diameter dup graphs (long similarity chains) converge in a handful
-    of rounds instead of hundreds.
+    (Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC
+    2014): O(log n) rounds on ANY graph, so high-diameter dup graphs (long
+    similarity chains) converge in a handful of rounds, where min-label
+    propagation would need O(diameter).
 
     large-star: every node's neighbors LARGER than it re-attach to the
     minimum of its neighborhood (incl. itself); small-star: the ≤ neighbors
     do. Both keep components intact and monotonically pull edges toward the
     component minimum; the fixpoint is a star forest centered on component
-    minima. Same per-round plan shape as the label version: one
-    groupBy-min + one join, both AQE-splittable, lineage truncated every
-    sub-round by localCheckpoint. Returns (doc_id, cluster) like connected_components;
-    equality on arbitrary graphs is pinned by test.
+    minima. Each sub-round is one groupBy-min + one join, both
+    AQE-splittable, with lineage truncated by a checkpoint.
+
+    nodes: one column ``doc_id``. edges: columns (a, b) in either direction
+    (the undirected closure is taken here). Returns (doc_id, cluster), the
+    cluster being the minimum doc_id of the node's component.
+
+    If ``max_iters`` runs out before the fixpoint, the result would contain
+    SPLIT clusters, so this raises RuntimeError instead. ``max_iters`` is a
+    safety cap against pathological graphs, not a tuning knob.
+
+    ``checkpoint_dir`` makes the rounds DURABLE: each round's small-star
+    edge set is written to parquet (in place of that sub-round's
+    localCheckpoint — both truncate lineage, the parquet also survives the
+    driver), and a re-run with the same directory resumes from the newest
+    committed round instead of round 0. ``telemetry`` (optional dict)
+    records ``rounds`` (the round the fixpoint was reached in),
+    ``rounds_executed`` (the rounds this call ran) and, on a resume,
+    ``resumed_from_round``.
     """
-    # undirected closure, no self-loops
-    und = (
-        edges.select("a", "b")
-        .unionAll(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .cache()
-    )
+    spark = nodes.sparkSession
     # Fixpoint test: edge sets are DISTINCT (a, b) sets, so equal
     # (count, sum of a 64-bit per-edge hash) across consecutive rounds is a
     # sound set-equality check up to a 2^-64-scale hash-sum collision —
     # unlike (count, sum(a+b)), where different edge sets collide easily
     # (edges are not 1:1 across star rounds). One scalar aggregate per
-    # sub-round, same cost shape as before.
+    # round, after its small-star sub-round.
     # decimal(38,0) sum: int64 hash values would overflow a long sum under
     # ANSI mode; the decimal accumulator is exact and order-independent
-    _edge_sum = F.sum(F.xxhash64("a", "b").cast("decimal(38,0)"))
-    spark = nodes.sparkSession
-    start_round = 0
-    if checkpoint_dir is not None:
-        st = _cc_load_latest(spark, checkpoint_dir, "star")
-        if st is not None:
-            from decimal import Decimal
-
-            start_round, cks, saved = st
-            checksum = (int(cks[0]), Decimal(cks[1]) if cks[1] != "None" else None)
-            cur = saved
-            und.unpersist()
-            und = cur
-            if telemetry is not None:
-                telemetry["resumed_from_round"] = start_round
-    if start_round == 0:
-        checksum = und.agg(F.count(F.lit(1)), _edge_sum).collect()[0]
-        cur = und
-    converged = cur.isEmpty()
-    if converged and telemetry is not None:
-        telemetry.update(variant="star", rounds=start_round)
-    for i in range(start_round, max_iters):
-        if converged:
-            break
+    checksum_cols = (
+        F.count(F.lit(1)),
+        F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")),
+    )
+    st = None if checkpoint_dir is None else _cc_load_latest(spark, checkpoint_dir)
+    if st is not None:
+        start_round, checksum, cur = st
+        if telemetry is not None:
+            telemetry["resumed_from_round"] = start_round
+    else:
+        start_round = 0
+        # undirected closure, no self-loops
+        cur = (
+            edges.select("a", "b")
+            .unionAll(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
+            .where(F.col("a") != F.col("b"))
+            .distinct()
+            .cache()
+        )
+        checksum = tuple(cur.agg(*checksum_cols).collect()[0])
+    rnd = start_round
+    converged = checksum[0] == 0  # no edges: every node is its own cluster
+    while not converged:
+        if rnd >= max_iters:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iters} "
+                "rounds; returning labels here would silently split "
+                "clusters — raise max_iters"
+            )
+        rnd += 1
         for large in (True, False):
             nbrs = cur.unionAll(
                 cur.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -441,44 +306,32 @@ def connected_components_star(
             # driver on plan tree strings by round ~12). With a
             # checkpoint_dir, the small-star sub-round's edge set goes to
             # parquet instead (durable twin; one write per full round).
-            durable_round = checkpoint_dir is not None and not large
-            if durable_round:
-                path = f"{checkpoint_dir}/star_round_{i + 1}"
+            if large or checkpoint_dir is None:
+                nxt = nxt.localCheckpoint(eager=True)
+            else:
+                path = f"{checkpoint_dir}/star_round_{rnd}"
                 nxt.write.mode("overwrite").parquet(path)
                 nxt = spark.read.parquet(path)
-            else:
-                nxt = nxt.localCheckpoint(eager=True)
-            new_checksum = nxt.agg(F.count(F.lit(1)), _edge_sum).collect()[0]
-            if durable_round:
-                _cc_save_state(
-                    spark, checkpoint_dir, "star", i + 1, list(new_checksum)
-                )
             cur.unpersist()
             cur = nxt
-            if not large:
-                if tuple(new_checksum) == tuple(checksum):
-                    converged = True
-                    if telemetry is not None:
-                        telemetry.update(variant="star", rounds=i + 1)
-                checksum = new_checksum
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iters} "
-            "rounds — raise max_iters"
-        )
+        new_checksum = tuple(cur.agg(*checksum_cols).collect()[0])
+        if checkpoint_dir is not None:
+            _cc_save_state(spark, checkpoint_dir, rnd, new_checksum)
+        converged = new_checksum == checksum
+        checksum = new_checksum
+    if telemetry is not None:
+        telemetry.update(rounds=rnd, rounds_executed=rnd - start_round)
     # fixpoint is a star forest: every non-root points at its component
     # minimum; roots/singletons label themselves
     attach = cur.groupBy("a").agg(F.min("b").alias("cluster"))
-    labels = (
-        nodes.join(attach, nodes["doc_id"] == attach["a"], "left")
-        .select(
-            "doc_id",
-            F.least(F.coalesce("cluster", F.col("doc_id")), F.col("doc_id")).alias(
-                "cluster"
-            ),
-        )
+    labels = nodes.join(attach, nodes["doc_id"] == attach["a"], "left").select(
+        "doc_id",
+        F.least(F.coalesce("cluster", F.col("doc_id")), F.col("doc_id")).alias(
+            "cluster"
+        ),
     )
-    und.unpersist()
+    # releases the closure's cache when no round ran (no-op on checkpoints)
+    cur.unpersist()
     return labels
 
 
@@ -506,20 +359,6 @@ def _star_edges(bands: DataFrame) -> DataFrame:
     )
 
 
-def _clusters(nodes, edges, telemetry, checkpoint_dir=None) -> DataFrame:
-    """(doc_id, cluster) connected components over the undirected closure
-    of a two-column edge frame; the closure is cached for the CC rounds
-    and released when they finish."""
-    e = edges.toDF("a", "b")
-    und = e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).cache()
-    try:
-        return connected_components_auto(
-            nodes, und, telemetry=telemetry, checkpoint_dir=checkpoint_dir
-        )
-    finally:
-        und.unpersist()
-
-
 def dedup_clusters(
     spark,
     sf_dir,
@@ -542,7 +381,12 @@ def dedup_clusters(
         .where(F.length("text") >= 3)
         .select("doc_id")
     )
-    labels = _clusters(nodes, edges, telemetry, checkpoint_dir)
+    labels = connected_components(
+        nodes,
+        edges.toDF("a", "b"),
+        telemetry=telemetry,
+        checkpoint_dir=checkpoint_dir,
+    )
     return labels.select(
         "doc_id",
         F.col("cluster").alias("cluster_id"),
@@ -908,12 +752,13 @@ def phash_candidates(spark, sf_dir) -> DataFrame:
 
 def _image_clusters(rows, edges, telemetry) -> DataFrame:
     """(image_id, cluster_id, survivor) from (nid, image_id) rows and
-    numeric edges: connected components run on the NUMERIC id — its
-    convergence checksum is a provably-monotone integer sum, and at 10¹²
-    rows numeric shuffle keys beat string keys anyway — then the cluster
-    id is relabelled to the minimum member's image_id."""
+    numeric edges: connected components run on the NUMERIC id — at 10¹²
+    rows numeric shuffle keys beat string keys — then the cluster id is
+    relabelled to the minimum member's image_id."""
     ids = rows.select(F.col("nid").alias("doc_id"), "image_id")
-    labels = _clusters(ids.select("doc_id"), edges, telemetry)
+    labels = connected_components(
+        ids.select("doc_id"), edges.toDF("a", "b"), telemetry=telemetry
+    )
     cl = ids.toDF("cluster", "cluster_id")
     return (
         labels.join(ids, "doc_id")

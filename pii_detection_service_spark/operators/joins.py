@@ -9,8 +9,9 @@ strategy the target pipeline relies on, each with an exact DuckDB oracle:
 - broadcast hash join of small dims (gazetteer-pattern: region/nation);
 - large shuffled equi-join (orders ⋈ lineitem, TPC-H Q3 shape) — the
   verification self-join of results-vs-reference-labels uses this plan;
-- left-semi / left-anti joins — the anti join IS the lineage-resume
-  primitive (plans/stage.py prunes completed buckets the same way);
+- left-semi / left-anti joins — the relational form of the lineage-resume
+  prune (plans/stage.py drops completed buckets with a collected
+  ``NOT IN`` filter instead, since its done set is at most n_buckets ids);
 - an explicitly SALTED skewed join: the dominant key ('en' ≈ 43% of
   documents) is spread over SALT reducers by replicating the small side —
   the north rule's "salted repartitioning for skewed language clusters"
@@ -99,9 +100,10 @@ def semi_join_big_spenders(spark, sf_dir) -> DataFrame:
 
 
 def anti_join_inactive(spark, sf_dir) -> DataFrame:
-    """LEFT ANTI: customers with no order in 2001 — the exact plan shape of
-    the stage's checkpoint-resume (pending = all buckets ANTI-JOIN completed
-    lineage, plans/stage.py). Broadcast of the filtered build side keeps it
+    """LEFT ANTI: customers with no order in 2001 — the relational form of
+    the stage's checkpoint-resume (pending = all buckets minus completed
+    lineage; plans/stage.py collects the tiny done set and filters with
+    ``NOT IN`` instead). Broadcast of the filtered build side keeps it
     map-only."""
     cust = table(spark, sf_dir, "customer")
     recent = table(spark, sf_dir, "orders").where(

@@ -2,7 +2,7 @@
 
 read → one fused Arrow scoring pass → phash-bucket partitioning (salted for
 the dominant-language skew) → partitioned write + per-bucket lineage +
-metrics → resume by anti-joining pending buckets against completed lineage.
+metrics → resume by filtering out the buckets completed lineage records.
 
 Scale design notes (the part that must survive 1000 executors / 100 TB):
 - The scoring pass is MAP-ONLY: no shuffle between scan and scored rows.
@@ -15,9 +15,10 @@ Scale design notes (the part that must survive 1000 executors / 100 TB):
   bucket spreads over SALT_FACTOR reducers while file layout stays
   bucket-partitioned.
 - Resume: lineage rows are written per bucket after the data commit.
-  On restart, completed buckets are anti-joined out (broadcast — lineage is
-  tiny), and the data write uses dynamic partition overwrite so a bucket that
-  died mid-write is rewritten idempotently, never duplicated.
+  On restart, the done bucket ids are collected (lineage is tiny) and
+  pruned with a plain ``NOT IN`` scan filter — no join — and the data
+  write uses dynamic partition overwrite so a bucket that died mid-write is
+  rewritten idempotently, never duplicated.
 - Sink is partitioned Parquet here; on a real cluster the same plan targets
   an Iceberg table (writeTo(...).overwritePartitions()) — semantics match
   (idempotent per-partition replace), this sandbox has no Iceberg runtime.

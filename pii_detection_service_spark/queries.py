@@ -274,8 +274,8 @@ def _phash_clusters_sql(n: int = 300) -> str:
     endswith('_v')`` expression — then banding, star edges vs the
     band-group min nid, Hamming-≤k verify, and a recursive-CTE transitive
     closure. The CTE is the DuckDB oracle for the Spark
-    min-label-propagation loop: both converge to the minimum reachable
-    nid, re-keyed back to image_id strings for the output contract."""
+    large-star/small-star rounds: both reach the minimum reachable nid,
+    re-keyed back to image_id strings for the output contract."""
     from .operators import dedup as dd
     from .sources.imagecodec import average_hash
     from .sources.synth import pixels_for
@@ -1070,7 +1070,7 @@ ORACLES: dict[str, str | None] = {
         "FROM pb GROUP BY doc_id"
     ),
     # transitive closure: DuckDB recursive CTE is the oracle for the Spark
-    # min-label-propagation loop (both converge to min reachable id).
+    # large-star/small-star rounds (both reach the min reachable id).
     "dedup_clusters": (
         "WITH RECURSIVE s AS (" + _SHINGLES_CTE + "), "
         "h AS (SELECT doc_id, shingles AS hs FROM s), "

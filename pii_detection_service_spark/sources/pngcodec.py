@@ -27,9 +27,10 @@ tRNS chunk is present). ``to_rgb`` in ``multimodal`` normalizes channel
 counts downstream.
 
 Scale note: this runs inside Arrow-batched ``mapInPandas`` tasks only
-(``operators/multimodal.py``, ``plans/stage.py``); rows never cross the
-driver. Unfiltering is vectorized per row (Sub via a per-lane cumsum, Up as
-one vector add); Average/Paeth walk pixels but vectorize across byte lanes.
+(decode in ``operators/multimodal.py``, encode in ``sources/synth.py``);
+rows never cross the driver. Unfiltering is vectorized per row (Sub via a
+per-lane cumsum, Up as one vector add); Average/Paeth walk pixels but
+vectorize across byte lanes.
 
 Honest seams: none for the decode path within the spec's static-image
 profile — APNG animation chunks (acTL/fcTL/fdAT, a later extension) are

@@ -1,4 +1,6 @@
-"""Arrow-batched UDFs — the ONLY place Python touches row data.
+"""Arrow-batched scoring UDFs — where Python touches caption data. (Other
+operators run their own Arrow-batched ``mapInPandas`` kernels: codecs,
+sketches, ANN scoring.)
 
 The reference processes one document per HTTP request and reloads its model
 per request (ml_service_app.py:59-60, predictor.py:70). Here everything is

@@ -10,14 +10,10 @@ SF = "/root/testdata/sf0.001"
 
 def test_chain_collapses_to_one_cluster(spark):
     """A–B and B–C edges (no direct A–C) must land all three in cluster A:
-    that needs ≥2 propagation rounds — exactly what the one-round band-min
-    rule misses."""
+    exactly the transitive link the one-round band-min rule misses."""
     nodes = spark.createDataFrame([(1,), (2,), (3,), (4,), (9,)], "doc_id long")
-    # chain 1-2-3, pair 4-9 via the undirected edge list
-    raw = [(2, 1), (3, 2), (9, 4)]
-    edges = spark.createDataFrame(
-        raw + [(b, a) for a, b in raw], "a long, b long"
-    )
+    # chain 1-2-3, pair 4-9
+    edges = spark.createDataFrame([(2, 1), (3, 2), (9, 4)], "a long, b long")
     got = {
         r["doc_id"]: r["cluster"]
         for r in dedup.connected_components(nodes, edges).collect()
@@ -28,11 +24,13 @@ def test_chain_collapses_to_one_cluster(spark):
 def test_singletons_keep_their_own_label(spark):
     nodes = spark.createDataFrame([(7,), (8,)], "doc_id long")
     edges = spark.createDataFrame([], "a long, b long")
+    tel = {}
     got = {
         r["doc_id"]: r["cluster"]
-        for r in dedup.connected_components(nodes, edges).collect()
+        for r in dedup.connected_components(nodes, edges, telemetry=tel).collect()
     }
     assert got == {7: 7, 8: 8}
+    assert tel == {"rounds": 0, "rounds_executed": 0}
 
 
 def test_clusters_refine_survivors(spark):
@@ -54,12 +52,30 @@ def test_clusters_refine_survivors(spark):
 
 
 def _chain(spark, n):
-    """Path graph 1-2-...-n: the min label crosses one hop per round, so
-    convergence needs ~n-1 rounds — the deep-diameter stress case."""
+    """Path graph 1-2-...-n: diameter n-1, the deep-diameter stress case
+    (min-label propagation would need ~n-1 rounds)."""
     nodes = spark.createDataFrame([(i,) for i in range(1, n + 1)], "doc_id long")
-    raw = [(i, i + 1) for i in range(1, n)]
-    edges = spark.createDataFrame(raw + [(b, a) for a, b in raw], "a long, b long")
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, n)], "a long, b long"
+    )
     return nodes, edges
+
+
+def _union_find_labels(nodes, es):
+    """Reference CC: doc_id -> minimum id of its component, pure Python."""
+    parent = {n: n for n in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in es:
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return {n: find(n) for n in nodes}
 
 
 def test_nonconvergence_raises_instead_of_splitting(spark):
@@ -67,31 +83,34 @@ def test_nonconvergence_raises_instead_of_splitting(spark):
     return split clusters (ADVICE r1)."""
     import pytest
 
-    nodes, edges = _chain(spark, 8)
+    nodes, edges = _chain(spark, 24)
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(nodes, edges, max_iters=2)
+        dedup.connected_components(nodes, edges, max_iters=1)
 
 
 def test_deep_chain_converges_with_bounded_plan(spark):
-    """A 15-node path needs ~14 propagation rounds — well past the
-    checkpoint_every=5 lineage truncation. Checks (a) the labels are still
-    exactly one cluster, (b) the returned plan is truncated (starts from the
-    checkpointed scan, not a 14-round join chain)."""
+    """A 15-node path runs several star rounds, each sub-round
+    checkpointed. Checks (a) the labels are still exactly one cluster,
+    (b) the returned plan is truncated (starts from the checkpointed scan,
+    not a plan that grew with every round)."""
     nodes, edges = _chain(spark, 15)
-    labels = dedup.connected_components(nodes, edges)
+    tel = {}
+    labels = dedup.connected_components(nodes, edges, telemetry=tel)
     got = {r["doc_id"]: r["cluster"] for r in labels.collect()}
     assert got == {i: 1 for i in range(1, 16)}
+    assert tel["rounds"] >= 3
     # lineage truncation: the logical plan must be a handful of nodes (scan
-    # of the checkpointed RDD + at most one round of join/agg), not a plan
-    # that grew linearly with all 14 rounds (~10 lines per round).
+    # of the checkpointed RDD + the final attach join/agg), not a plan that
+    # grew with all rounds (~10 lines per sub-round).
     plan = labels._jdf.queryExecution().analyzed().toString()
     assert plan.count("\n") < 40, f"plan not truncated:\n{plan[:2000]}"
 
 
 def test_star_variant_matches_min_label_on_arbitrary_graphs(spark):
-    """connected_components_star (large-star/small-star, O(log n) rounds)
-    must produce EXACTLY the labels of min-label propagation on chains,
-    random graphs, and forests of stars with singletons."""
+    """connected_components (large-star/small-star) must label every node
+    with EXACTLY its component minimum — a pure-Python union-find
+    reference — on chains, random graphs, and forests of stars with
+    singletons."""
     import random
 
     cases = []
@@ -115,91 +134,42 @@ def test_star_variant_matches_min_label_on_arbitrary_graphs(spark):
     )
     for nodes, es in cases:
         ndf = spark.createDataFrame([(n,) for n in nodes], "doc_id long")
-        edf = spark.createDataFrame(
-            es + [(b, a) for a, b in es] if es else [], "a long, b long"
-        ) if es else spark.createDataFrame([], "a long, b long")
-        want = {
+        edf = spark.createDataFrame(es, "a long, b long")
+        got = {
             r["doc_id"]: r["cluster"]
             for r in dedup.connected_components(ndf, edf).collect()
         }
-        got = {
-            r["doc_id"]: r["cluster"]
-            for r in dedup.connected_components_star(ndf, edf).collect()
-        }
-        assert got == want, (len(nodes), len(es))
+        assert got == _union_find_labels(nodes, es), (len(nodes), len(es))
 
 
 def test_star_variant_converges_fast_on_long_chain(spark):
-    """A 24-node path has diameter 23 — min-label needs ~23 rounds, the
-    star variant must close in far fewer (O(log n)); pinned by giving it
-    only 8 rounds."""
+    """A 24-node path has diameter 23 — min-label propagation needs ~23
+    rounds, star contraction must close in far fewer (O(log n)); pinned by
+    giving it only 8 rounds."""
     nodes, edges = _chain(spark, 24)
     got = {
         r["doc_id"]: r["cluster"]
-        for r in dedup.connected_components_star(nodes, edges, max_iters=8).collect()
+        for r in dedup.connected_components(nodes, edges, max_iters=8).collect()
     }
     assert got == {i: 1 for i in range(1, 25)}
-
-
-def test_auto_fallback_engages_on_high_diameter_and_matches(spark):
-    """A 60-node chain exceeds a 3-round label-propagation budget: the auto
-    variant must fall back to star contraction, record that in telemetry,
-    and still produce the exact min-label clustering."""
-    n = 60
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    raw = [(i, i + 1) for i in range(n - 1)]
-    edges = spark.createDataFrame(
-        raw + [(b, a) for a, b in raw], "a long, b long"
-    )
-    tel = {}
-    got = {
-        r["doc_id"]: r["cluster"]
-        for r in dedup.connected_components_auto(
-            nodes, edges, switch_after=3, telemetry=tel
-        ).collect()
-    }
-    assert got == {i: 0 for i in range(n)}
-    assert tel["fallback_after"] == 3 and tel["variant"] == "star"
-    assert tel["rounds"] >= 1
-
-
-def test_auto_stays_on_label_propagation_for_shallow_graphs(spark):
-    """LSH star-edge graphs converge in a few rounds — the auto variant must
-    NOT pay the star-contraction constant there, and telemetry reports the
-    round count."""
-    nodes = spark.createDataFrame([(1,), (2,), (3,), (4,)], "doc_id long")
-    raw = [(2, 1), (3, 1), (4, 3)]
-    edges = spark.createDataFrame(
-        raw + [(b, a) for a, b in raw], "a long, b long"
-    )
-    tel = {}
-    got = {
-        r["doc_id"]: r["cluster"]
-        for r in dedup.connected_components_auto(
-            nodes, edges, telemetry=tel
-        ).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1}
-    assert tel["variant"] == "label_propagation"
-    assert "fallback_after" not in tel and 1 <= tel["rounds"] <= 10
 
 
 # --- durable per-round resume (checkpoint_dir) -------------------------------
 
 
 def test_cc_durable_resume_recomputes_only_remaining_rounds(spark, tmp_path):
-    """Kill label-propagation CC between rounds (max_iters abort after the
-    round-10 state committed), restart with the same checkpoint_dir: the
-    restart resumes FROM round 10, executes only the remaining rounds, and
-    produces the same labels as an uninterrupted run."""
+    """Kill CC between rounds (max_iters abort after the round-2 state
+    committed), restart with the same checkpoint_dir: the restart resumes
+    FROM round 2, executes only the remaining rounds, and produces the same
+    labels as an uninterrupted run."""
     import pytest
 
-    nodes, edges = _chain(spark, 26)  # diameter 25 → ~25 propagation rounds
+    nodes, edges = _chain(spark, 26)
     ckpt = str(tmp_path / "cc")
     with pytest.raises(RuntimeError):
         dedup.connected_components(
-            nodes, edges, max_iters=12, checkpoint_dir=ckpt
-        )  # dies after round 12; rounds 5 and 10 are committed
+            nodes, edges, max_iters=2, checkpoint_dir=ckpt
+        )  # dies after round 2; rounds 1 and 2 are committed
     tel = {}
     got = {
         r["doc_id"]: r["cluster"]
@@ -207,8 +177,9 @@ def test_cc_durable_resume_recomputes_only_remaining_rounds(spark, tmp_path):
             nodes, edges, telemetry=tel, checkpoint_dir=ckpt
         ).collect()
     }
-    assert tel["resumed_from_round"] == 10
-    assert tel["rounds_executed"] == tel["rounds"] - 10  # only the remainder
+    assert tel["resumed_from_round"] == 2
+    assert tel["rounds"] > 2
+    assert tel["rounds_executed"] == tel["rounds"] - 2  # only the remainder
     assert got == {i: 1 for i in range(1, 27)}
     # uninterrupted fresh run agrees exactly
     want = {
@@ -221,8 +192,8 @@ def test_cc_durable_resume_recomputes_only_remaining_rounds(spark, tmp_path):
 def test_cc_durable_resume_ignores_torn_state(spark, tmp_path):
     """A crash between a round's data commit and its state commit (or a
     torn state write) must fall back to the previous committed round, not
-    resume from half-written state: deleting the round-10 state table makes
-    the restart resume from round 5 and still converge correctly."""
+    resume from half-written state: deleting the round-2 state table makes
+    the restart resume from round 1 and still converge correctly."""
     import shutil
 
     import pytest
@@ -231,9 +202,9 @@ def test_cc_durable_resume_ignores_torn_state(spark, tmp_path):
     ckpt = str(tmp_path / "cc")
     with pytest.raises(RuntimeError):
         dedup.connected_components(
-            nodes, edges, max_iters=12, checkpoint_dir=ckpt
+            nodes, edges, max_iters=2, checkpoint_dir=ckpt
         )
-    shutil.rmtree(f"{ckpt}/prop_state_10")  # simulate torn round-10 commit
+    shutil.rmtree(f"{ckpt}/star_state_2")  # simulate torn round-2 commit
     tel = {}
     got = {
         r["doc_id"]: r["cluster"]
@@ -241,26 +212,26 @@ def test_cc_durable_resume_ignores_torn_state(spark, tmp_path):
             nodes, edges, telemetry=tel, checkpoint_dir=ckpt
         ).collect()
     }
-    assert tel["resumed_from_round"] == 5
+    assert tel["resumed_from_round"] == 1
     assert got == {i: 1 for i in range(1, 27)}
 
 
 def test_cc_star_durable_resume_matches_fresh_run(spark, tmp_path):
-    """Star-contraction CC with a checkpoint_dir: abort after 1 round,
-    restart resumes from the committed round-1 edge state and the final
-    labels equal an uninterrupted star run."""
+    """CC with a checkpoint_dir: abort after 1 round, restart resumes from
+    the committed round-1 edge state and the final labels equal an
+    uninterrupted run."""
     import pytest
 
     nodes, edges = _chain(spark, 40)
     ckpt = str(tmp_path / "star")
     with pytest.raises(RuntimeError):
-        dedup.connected_components_star(
+        dedup.connected_components(
             nodes, edges, max_iters=1, checkpoint_dir=ckpt
         )
     tel = {}
     got = {
         r["doc_id"]: r["cluster"]
-        for r in dedup.connected_components_star(
+        for r in dedup.connected_components(
             nodes, edges, telemetry=tel, checkpoint_dir=ckpt
         ).collect()
     }
@@ -268,7 +239,7 @@ def test_cc_star_durable_resume_matches_fresh_run(spark, tmp_path):
     assert got == {i: 1 for i in range(1, 41)}
     want = {
         r["doc_id"]: r["cluster"]
-        for r in dedup.connected_components_star(nodes, edges).collect()
+        for r in dedup.connected_components(nodes, edges).collect()
     }
     assert got == want
 

@@ -176,9 +176,16 @@ def test_resume_processes_only_missing_buckets(spark, src, tmp_path):
     ) == set(range(4))
 
 
-def test_stage_plan_is_map_only_plus_one_shuffle(spark, src):
+def test_stage_plan_is_map_only_plus_one_shuffle(spark, src, tmp_path, monkeypatch):
     """Scale guard: scoring adds NO shuffle; the job's only exchange is the
-    explicit (bucket, salt) repartition."""
+    explicit (bucket, salt) repartition. Checked on a plan rebuilt here AND
+    on the DataFrame run_stage actually writes to <out>/data (captured by
+    wrapping DataFrameWriter.parquet), so a second shuffle added inside
+    run_stage fails this test too."""
+    import re
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
     df = stage.with_bucket(src, 8)
     scored = stage.score(df)
     salted = scored.withColumn(
@@ -186,6 +193,25 @@ def test_stage_plan_is_map_only_plus_one_shuffle(spark, src):
     ).repartition(16, "bucket", "salt")
     plan = salted._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
+
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        if path.endswith("/data"):
+            written.append(self._df)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    stage.run_stage(spark, src, str(tmp_path / "out"), n_buckets=8, salt_factor=2)
+    assert len(written) == 1
+    plan = written[0]._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert (
+        len(re.findall(r"Exchange hashpartitioning\(bucket#\d+, salt#\d+", plan))
+        == 1
+    ), plan
+    assert plan.count("ArrowEvalPython") == 1, plan
 
 
 def test_run_stage_resumes_through_file_uri(spark, src, tmp_path):

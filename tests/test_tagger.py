@@ -2,6 +2,8 @@
 fixture sentences (app/services/ml_service/constants.py:29-35) — the
 F1>=0.99 keep/drop+scrub target is anchored on exact agreement here."""
 
+import pytest
+
 from pii_detection_service_spark.functions import quality, tagger
 
 
@@ -148,19 +150,35 @@ def test_casefold_homoglyph_toxic_still_scrubbed():
     assert not tagger._is_plain(text)
 
 
-def test_email_scan_time_grows_linearly():
-    """A hostile email-like run must not stall a task: tagging 10x the
-    input costs ~10x the time (EMAIL_RE.finditer costs ~100x, since it
-    retries the local part from every start position)."""
+@pytest.mark.parametrize(
+    "unit, reps",
+    [
+        # EMAIL_RE.finditer retries the local part from every start position
+        ("a.", 5_000),
+        # span-dense captions: checking each candidate against every span
+        # already claimed (and each toxic match against every PII span)
+        # is quadratic in span count
+        ("12345678 ", 500),
+        ("@abc ", 1_000),
+        ("415-555-9876 ", 400),
+        ("http://a.co/x ", 400),
+        ("damn 12345678 ", 400),
+    ],
+    ids=["email", "id", "handle", "phone", "url", "toxic_beside_id"],
+)
+def test_tag_time_grows_linearly(unit, reps):
+    """A hostile span-dense caption must not stall a task: tagging 10x the
+    input costs ~10x the time, not ~100x. The trailing '@' ends the
+    hostile email run (and opens the '@'-gated classes for the others)."""
     import time
 
     def best(text):
         times = []
         for _ in range(3):
             t0 = time.perf_counter()
-            tagger.find_pii_spans(text)
+            tagger.tag_and_scrub(text + "@")
             times.append(time.perf_counter() - t0)
         return min(times)
 
-    small, large = best("a." * 5_000 + "@"), best("a." * 50_000 + "@")
+    small, large = best(unit * reps), best(unit * (10 * reps))
     assert large / small < 30, (small, large)

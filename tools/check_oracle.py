@@ -4,12 +4,14 @@ then compare row count, column names, and order-insensitive values.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 A query name that is not registered exits 2 before any query runs.
+Each OK line also gives the Spark build + collect seconds of its query.
 """
 
 from __future__ import annotations
 
 import math
 import sys
+import time
 
 import duckdb
 
@@ -71,15 +73,17 @@ def main():
         if only and name not in only:
             continue
         try:
+            t0 = time.perf_counter()
             sdf = builder(spark, sf_dir)
             srows = sdf.collect()
+            spark_s = time.perf_counter() - t0
             scols = sdf.columns
         except Exception as e:
             failures.append((name, f"SPARK ERROR: {e}"))
             print(f"  {name}: SPARK ERROR {str(e)[:300]}")
             continue
         if name not in oracles:
-            print(f"  {name}: rows-only ({len(srows)} rows) OK" if srows is not None else "?")
+            print(f"  {name}: rows-only ({len(srows)} rows, spark {spark_s:.2f} s) OK")
             continue
         try:
             res = con.execute(oracles[name])
@@ -104,7 +108,7 @@ def main():
             failures.append((name, f"VALUES first diff at {bad}:\n  S={sn[bad]}\n  D={on[bad]}"))
             print(f"  {name}: VALUE MISMATCH ({len(srows)} rows) first diff:\n    S={sn[bad]}\n    D={on[bad]}")
             continue
-        print(f"  {name}: OK ({len(srows)} rows)")
+        print(f"  {name}: OK ({len(srows)} rows, spark {spark_s:.2f} s)")
 
     print()
     if failures:
