@@ -203,9 +203,12 @@ def _pii_spans(
                 spans.append((s, e, cls))
                 taken[s:e] = b"\x01" * (e - s)
 
-    if _UPPER_RE.search(text) is None:
+    if text.isascii() and _UPPER_RE.search(text) is None:
+        # gazetteer names require a capitalized word; outside ASCII
+        # str.isupper() has capitals [A-Z] misses (U+212A KELVIN SIGN
+        # lowercases to 'k'), so only ASCII text may skip the name scan
         spans.sort()
-        return spans, taken  # gazetteer names require a capitalized word
+        return spans, taken
 
     # Gazetteer names: a known given name (capitalized) optionally followed
     # by further capitalized words (surnames) extends the span. An honorific

@@ -176,20 +176,22 @@ def minhash_survivors(spark, sf_dir) -> DataFrame:
 
 
 def _cc_load_latest(spark, checkpoint_dir: str):
-    """Newest committed round: (round, checksum, edge DataFrame) or None.
-    Discovery reads the state tables by glob (no directory-listing API —
-    works on any Hadoop FS)."""
+    """Newest committed round: (round, previous round's checksum or None,
+    checksum, edge DataFrame) or None. Discovery reads the state tables by
+    glob (no directory-listing API — works on any Hadoop FS)."""
     try:
         rows = spark.read.parquet(f"{checkpoint_dir}/star_state_*").collect()
     except Exception:
         return None
     if not rows:
         return None
-    best = max(rows, key=lambda r: r["round"])
-    n, s = best["checksum"]
-    checksum = (int(n), None if s == "None" else Decimal(s))
-    edges = spark.read.parquet(f"{checkpoint_dir}/star_round_{best['round']}")
-    return int(best["round"]), checksum, edges
+    by_round = {}
+    for r in rows:
+        n, s = r["checksum"]
+        by_round[int(r["round"])] = (int(n), None if s == "None" else Decimal(s))
+    rnd = max(by_round)
+    edges = spark.read.parquet(f"{checkpoint_dir}/star_round_{rnd}")
+    return rnd, by_round.get(rnd - 1), by_round[rnd], edges
 
 
 def _cc_save_state(spark, checkpoint_dir: str, rnd: int, checksum):
@@ -255,8 +257,9 @@ def connected_components(
         F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")),
     )
     st = None if checkpoint_dir is None else _cc_load_latest(spark, checkpoint_dir)
+    prev_checksum = None
     if st is not None:
-        start_round, checksum, cur = st
+        start_round, prev_checksum, checksum, cur = st
         if telemetry is not None:
             telemetry["resumed_from_round"] = start_round
     else:
@@ -271,7 +274,9 @@ def connected_components(
         )
         checksum = tuple(cur.agg(*checksum_cols).collect()[0])
     rnd = start_round
-    converged = checksum[0] == 0  # no edges: every node is its own cluster
+    # no edges: every node is its own cluster; two equal newest committed
+    # rounds: the checkpoint already holds the fixpoint
+    converged = checksum[0] == 0 or checksum == prev_checksum
     while not converged:
         if rnd >= max_iters:
             raise RuntimeError(
@@ -605,7 +610,7 @@ def jaccard_candidates(spark, sf_dir) -> DataFrame:
 
 def embedding_near_dup(spark, sf_dir, n_anchors: int = 8) -> DataFrame:
     """Embedding-cosine near-dup with sign-LSH bucket blocking: every vector
-    gets a map-only 8-hyperplane bucket (the SAME index ann_search probes —
+    gets a map-only 8-hyperplane bucket (the SAME index the ANN probe uses —
     similarity._bucket_sql, anchors inlined as literals, no join/shuffle per
     vector), then exact double-precision cosine runs only on same-bucket
     pairs. Candidate count is Σ_b n_b·(n_b−1)/2 over bucket sizes instead of

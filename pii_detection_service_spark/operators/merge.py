@@ -24,65 +24,24 @@ from pyspark.sql import DataFrame
 from ..functions import textref
 
 
-# Above this many update rows the broadcast MERGE shape stops being safe:
-# a broadcast side must fit in every executor AND the driver, and a bulk
-# relabel batch (reference A13 semantics at 10^12-row scale) can be
-# arbitrarily large. The shuffled path sort-merge-joins on the key instead.
-MERGE_BROADCAST_MAX_ROWS = 100_000
-
-
-def _merge_strategy(
-    updates: DataFrame, strategy: str
-) -> tuple[str, DataFrame]:
-    """Resolve 'auto' to 'broadcast' or 'shuffle' by the updates-side size.
-
-    Returns (strategy, updates): on 'auto' the updates plan is FIRST
-    materialized with an eager localCheckpoint, so the sizing count and
-    the merge join both read the materialized result — without this, a
-    derived updates plan (groupBy/join over a validation log) would
-    execute twice, and limit().count() cannot early-stop a wide plan
-    anyway. The materialization is bounded by the batch itself (the side
-    being sized precisely because it may be large but is still the small
-    side of the MERGE)."""
-    if strategy != "auto":
-        return strategy, updates
-    updates = updates.localCheckpoint(eager=True)
-    n = updates.limit(MERGE_BROADCAST_MAX_ROWS + 1).count()
-    return ("broadcast" if n <= MERGE_BROADCAST_MAX_ROWS else "shuffle"), updates
-
-
-def _joinable(u: DataFrame, strategy: str) -> DataFrame:
-    """Apply the join-strategy hint for the updates side: broadcast for
-    point updates, an explicit sort-merge hint otherwise (guarantees no
-    BroadcastExchange regardless of autoBroadcastJoinThreshold — the plan
-    guard in tests/test_merge_multimodal.py pins this)."""
-    if strategy == "broadcast":
-        return F.broadcast(u)
-    if strategy == "shuffle":
-        return u.hint("merge")
-    raise ValueError(f"unknown merge strategy {strategy!r}")
-
-
 def merge_update(
     base: DataFrame,
     updates: DataFrame,
     key: str,
     cols: list[str],
-    strategy: str = "auto",
 ) -> DataFrame:
     """F4 — filtered UPDATE as MERGE: rows matching ``updates`` on ``key``
     take the update's values for ``cols``; everything else passes through.
 
-    ``strategy``: 'broadcast' (point updates — dimension side ships to every
-    executor, no shuffle of ``base``), 'shuffle' (bulk batches — sort-merge
-    join keyed on ``key``; both sides shuffle but nothing must fit in one
-    JVM), or 'auto' (pick by updates-side row count)."""
-    strategy, updates = _merge_strategy(updates, strategy)
+    The join carries no hint: AQE picks the shape from the updates side's
+    runtime size — a broadcast for point updates (no shuffle of ``base``),
+    a sort-merge join keyed on ``key`` for bulk batches above
+    ``spark.sql.adaptive.autoBroadcastJoinThreshold`` (nothing must fit in
+    one JVM)."""
     u = updates.select(
         F.col(key), *[F.col(c).alias(f"__u_{c}") for c in cols]
     )
-    joined = base.join(_joinable(u, strategy), key, "left")
-    out = joined
+    out = base.join(u, key, "left")
     for c in cols:
         out = out.withColumn(c, F.coalesce(F.col(f"__u_{c}"), F.col(c)))
     return out.drop(*[f"__u_{c}" for c in cols])
@@ -93,9 +52,7 @@ def delete_where(base: DataFrame, predicate) -> DataFrame:
     return base.where(~predicate)
 
 
-def apply_label_validations(
-    docs: DataFrame, updates: DataFrame, strategy: str = "auto"
-) -> DataFrame:
+def apply_label_validations(docs: DataFrame, updates: DataFrame) -> DataFrame:
     """A10 + A13 — batch of human relabels applied BIO-correctly.
 
     ``docs``:    (doc_id, tokens array<string>, labels array<string>,
@@ -104,16 +61,15 @@ def apply_label_validations(
                  addresses the *merged display token* (backend variant A4
                  over sentinel-stripped tokens), exactly like the reference's
                  /update-labels endpoint (backend_service_app.py:360-397).
-    ``strategy``: join strategy for the updates side — 'broadcast' for the
-                 interactive point-relabel shape, 'shuffle' (sort-merge on
-                 doc_id) for bulk validation batches that exceed broadcast
-                 size, 'auto' to pick by updates-side row count.
+
+    The join shape is AQE's, as in ``merge_update``: broadcast for the
+    interactive point-relabel shape, sort-merge on doc_id for bulk
+    validation batches.
     """
-    strategy, updates = _merge_strategy(updates, strategy)
     upd = updates.groupBy("doc_id").agg(
         F.collect_list(F.struct("token_index", "new_label")).alias("upds")
     )
-    joined = docs.join(_joinable(upd, strategy), "doc_id", "left")
+    joined = docs.join(upd, "doc_id", "left")
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

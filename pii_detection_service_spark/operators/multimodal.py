@@ -4,7 +4,8 @@ Images/audio/video are opaque ``binary`` columns with typed metadata
 (input_hint: bytes/w/h/fmt). All ops are Arrow-batched ``mapInPandas`` —
 the Spark-side plumbing (schema, batch shape, partition behavior) is real
 and tested; the codec seam is ``sources/imagecodec.py`` (pure-Python PNG
-and baseline JFIF JPEG are REAL codecs — see ``sources/jpegcodec.py``;
+and baseline JFIF JPEG are REAL codecs — see ``sources/pngcodec.py`` and
+``sources/jpegcodec.py``;
 audio/video decoders raise NotImplementedError until a real library is
 plugged in).
 
@@ -22,7 +23,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..sources import imagecodec
+from ..sources import imagecodec, pngcodec
 
 DECODE_STATS_DDL = "image_id string, dec_w int, dec_h int, mean_px double, decode_ok boolean"
 FEATURES_DDL = "image_id string, features array<float>"
@@ -89,9 +90,8 @@ def resize(df: DataFrame, out_size: int) -> DataFrame:
                 yi = (np.arange(out_size) * h) // out_size
                 xi = (np.arange(out_size) * w) // out_size
                 small = px[yi][:, xi]
-                rows.append(
-                    (iid, imagecodec.encode_png(small), out_size, out_size, "png")
-                )
+                png = pngcodec.encode_png(small, filter_strategy="none")
+                rows.append((iid, png, out_size, out_size, "png"))
             yield pd.DataFrame(
                 rows, columns=["image_id", "bytes", "w", "h", "fmt"]
             )
@@ -269,19 +269,18 @@ def sample_frames(df: DataFrame, every: int = 2) -> DataFrame:
                             rows.append((iid, idx, frame))
                     continue
                 if data[:6] in (b"GIF87a", b"GIF89a"):
-                    from ..sources import gifcodec, imagecodec
+                    from ..sources import gifcodec
 
                     for idx, frame in enumerate(gifcodec.decode_gif_frames(data)):
                         if idx % every == 0:
-                            rows.append(
-                                (iid, idx, imagecodec.encode_png(frame))
-                            )
+                            png = pngcodec.encode_png(frame, filter_strategy="none")
+                            rows.append((iid, idx, png))
                     continue
                 if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
                     # animated WebP (ANIM/ANMF): frames are deltas over the
                     # canvas (blend/dispose), composited to standalone PNGs
                     # exactly like the GIF path; still WebP yields 1 frame
-                    from ..sources import imagecodec, webpcodec
+                    from ..sources import webpcodec
 
                     for idx, (frame, _dur) in enumerate(
                         webpcodec.decode_webp_frames(data)
@@ -289,9 +288,10 @@ def sample_frames(df: DataFrame, every: int = 2) -> DataFrame:
                         if idx % every == 0:
                             # composited canvas → standalone RGB PNG (the
                             # GIF-path convention)
-                            rows.append(
-                                (iid, idx, imagecodec.encode_png(frame[..., :3]))
+                            png = pngcodec.encode_png(
+                                frame[..., :3], filter_strategy="none"
                             )
+                            rows.append((iid, idx, png))
                     continue
                 raise NotImplementedError(
                     "unknown video container (not AVI/MJPEG, GIF or WebP) — "

@@ -5,8 +5,12 @@
   sort materialization).
 - LSH-bucketed ANN: random-hyperplane signs → bucket id. Anchors are
   data-derived (fixed vec_ids) so the oracle is portable. At scale, the
-  bucket id becomes the shuffle/partition key and queries probe one bucket
+  bucket id becomes the shuffle/partition key and a query probes the
+  buckets within Hamming ``radius`` of its own (radius 0 = its one bucket)
   instead of the full corpus.
+- IVF ANN: nearest-centroid cells over an integer-quantized k-means
+  codebook that starts from the same anchors (``iters=0`` keeps the raw
+  anchors as centroids); a query probes its ``n_probe`` nearest cells.
 """
 
 from __future__ import annotations
@@ -133,16 +137,6 @@ def _bucket_probe(spark, sf_dir, query_vec_id, n_anchors, probe) -> DataFrame:
     )
 
 
-def ann_search(spark, sf_dir, query_vec_id: int = 0, n_anchors: int = 8) -> DataFrame:
-    """Bucket-pruned ANN: assign every vector (and the query) a sign-LSH
-    bucket from data-derived anchors, then brute-force ONLY the query's
-    bucket — at scale the bucket is the partition key, so the scan prunes
-    to ~1/2^b of the corpus instead of shuffling all of it."""
-    return _bucket_probe(
-        spark, sf_dir, query_vec_id, n_anchors, F.col("bucket") == F.col("qbucket")
-    )
-
-
 def ann_search_multiprobe(
     spark,
     sf_dir,
@@ -159,7 +153,8 @@ def ann_search_multiprobe(
     from ~(1−θ/π)^8 to ≈ 1 − O(θ²) while scanning 9/256 of the corpus
     instead of 1/256 (at scale: 9 partitions of a bucket-partitioned table —
     still pruned, still no shuffle; the probe predicate is evaluated
-    map-side under a broadcast of the single query row)."""
+    map-side under a broadcast of the single query row). ``radius=0``
+    probes the query's own bucket only: ~1/2^b of the corpus."""
     return _bucket_probe(
         spark,
         sf_dir,
@@ -169,100 +164,15 @@ def ann_search_multiprobe(
     )
 
 
-def _cell_scores_sql(anchors: dict[int, list[float]]) -> str:
-    """array of per-centroid affinities 2·dot(v, c_j) − ‖c_j‖², highest =
-    nearest centroid (monotone in −‖v−c_j‖²; the ‖v‖² term is constant per
-    row). Anchor norms are folded from the SAME inlined literals with the
-    same sequential fold as the oracle's list_reduce — identical doubles,
-    so the argmax cell matches bit-for-bit."""
-    terms = []
-    for aid in sorted(anchors):
-        arr = "array(" + ", ".join(repr(x) for x in anchors[aid]) + ")"
-        dot = _DOT.format(u="v", v=arr)
-        nrm2 = _DOT.format(u=arr, v=arr)
-        terms.append(f"(2.0d * {dot} - {nrm2})")
-    return "array(" + ", ".join(terms) + ")"
-
-
-def ann_ivf_search(
-    spark,
-    sf_dir,
-    query_vec_id: int = 0,
-    n_centroids: int = 8,
-    n_probe: int = 2,
-) -> DataFrame:
-    """IVF-style ANN: the 8 data-derived anchors act as a coarse quantizer —
-    every vector is assigned to its nearest centroid's cell (map-only
-    argmax over inlined literals, no shuffle), and the query probes its
-    ``n_probe`` nearest cells instead of one sign-LSH bucket. At scale the
-    cell id is the partition key and a probe scans n_probe/n_centroids of
-    the corpus; unlike sign-LSH buckets, cells adapt to the data's density
-    (the classic IVF recall-per-scanned-fraction advantage). Exact cosine
-    runs only on probed candidates; deterministic top-10."""
-    anchors = _anchor_literals(spark, sf_dir, n_centroids)
-    scores = _cell_scores_sql(anchors)
-
-    # Resolve the query's probe cells DRIVER-SIDE, like a real IVF index
-    # lookup: one head() for the query vector, then plain-Python sequential
-    # folds over the same literal anchors the SQL uses — sequential double
-    # arithmetic is bit-identical to the engines' left folds, so the probe
-    # set matches the oracle's SQL-computed ranking exactly. This leaves
-    # the distributed part as ONE map-only scan with a literal IN filter
-    # (at scale: n_probe partitions of a cell-partitioned table) instead of
-    # three scans + two broadcast subplans (measured 5.4 s → ~1 s at 5k).
-    qv = [
-        float(x)
-        for x in table(spark, sf_dir, "embeddings")
-        .where(F.col("vec_id") == query_vec_id)
-        .select("embedding")
-        .head()[0]
-    ]
-
-    def _dot(u, v):
-        acc = 0.0
-        for a, b in zip(u, v):
-            acc = acc + a * b
-        return acc
-
-    qscore = {
-        aid: 2.0 * _dot(qv, c) - _dot(c, c) for aid, c in anchors.items()
-    }
-    probe = [
-        aid for aid, _ in sorted(qscore.items(), key=lambda kv: (-kv[1], kv[0]))
-    ][:n_probe]
-
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    # the scores array is a NAMED column so the 8×64-dim literal folds run
-    # once per row; argmax = first position of the max (ties → smallest
-    # cell id, matching the oracle's ORDER BY score DESC, cell ASC)
-    cells = e.withColumn("sc", F.expr(scores)).withColumn(
-        "cell", F.expr("array_position(sc, array_max(sc))")
-    )
-    qarr = "array(" + ", ".join(repr(x) for x in qv) + ")"
-    cos = F.round(
-        F.expr(_DOT.format(u="v", v=qarr))
-        / (F.expr(_NORM.format(u="v")) * F.expr(_NORM.format(u=qarr))),
-        4,
-    )
-    return (
-        cells.where(
-            F.col("cell").isin(probe) & (F.col("vec_id") != query_vec_id)
-        )
-        .select("vec_id", F.col("cell").cast("bigint").alias("cell"), cos.alias("cos"))
-        .orderBy(F.col("cos").desc(), "vec_id")
-        .limit(10)
-    )
-
-
-# --- learned IVF (integer-quantized Lloyd iterations) ------------------------
+# --- IVF (integer-quantized Lloyd iterations) --------------------------------
 #
-# ann_ivf_search uses raw data vectors as the coarse quantizer; k-means
-# centroids adapt the cells to the data's density (the classic IVF
-# recall-per-scanned-fraction win). To keep the index EXACTLY reproducible
-# across engines (the oracle re-derives the whole training relationally),
-# the index math is integer-only:
+# The coarse quantizer of an IVF index is a k-means codebook (Jégou, Douze,
+# Schmid, TPAMI 2011). Its starting point is the raw anchor vectors
+# (vec_id 1..n); each Lloyd round moves the centroids toward the data's
+# density (the classic IVF recall-per-scanned-fraction win), and
+# ``iters=0`` searches the raw-anchor cells themselves. To keep the index
+# EXACTLY reproducible across engines (the oracle re-derives the whole
+# training relationally), the index math is integer-only:
 # - vectors quantize to q_d = floor(v_d * 1e6) (floor has no tie-rounding
 #   semantics to diverge on, unlike round);
 # - assignment = argmin of Σ (q_d − c_d)² in int64 (max ~2.6e14, exact),
@@ -292,18 +202,18 @@ def ivf_learned_search(
     n_probe: int = 2,
     iters: int = 2,
 ) -> DataFrame:
-    """IVF ANN with Lloyd-learned centroids over an embeddings DataFrame
-    (vec_id, embedding). Index build = ``iters`` distributed passes, each
-    one map-only assignment + one (cell, dim) aggregate whose 8×64-row
-    result is collected driver-side to re-inline the next centroids as
-    literals (the same index-constants pattern as _anchor_literals — no
-    join or shuffle ever touches the vectors beyond the k·d-row aggregate).
-    Search = driver-side probe resolution + ONE map-only scan with a
-    literal IN filter, identical plan shape to ann_ivf_search."""
-    import math
-
-    import pyspark.sql.functions as F  # noqa: F811 (local for clarity)
-
+    """IVF ANN over an embeddings DataFrame (vec_id, embedding): every
+    vector is assigned to its nearest centroid's cell (map-only argmin over
+    inlined literals, no shuffle) and the query probes its ``n_probe``
+    nearest cells. Index build = ``iters`` Lloyd passes from the anchor
+    centroids, each one map-only assignment + one (cell, dim) aggregate
+    whose 8×64-row result is collected driver-side to re-inline the next
+    centroids as literals (the same index-constants pattern as
+    _anchor_literals — no join or shuffle ever touches the vectors beyond
+    the k·d-row aggregate). Search = driver-side probe resolution + ONE
+    map-only scan with a literal IN filter (at scale: n_probe partitions
+    of a cell-partitioned table); exact cosine runs only on probed
+    candidates; deterministic top-10."""
     e = e.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     ).withColumn(
@@ -377,8 +287,6 @@ def ivf_learned_search(
 
 
 def ann_ivf_learned(spark, sf_dir, **kw) -> DataFrame:
-    from .relational import table
-
     return ivf_learned_search(table(spark, sf_dir, "embeddings"), **kw)
 
 

@@ -9,7 +9,7 @@ semantics are the exact twin of the Iceberg calls below:
 | `CREATE TABLE ... PARTITIONED BY (bucket)`  | `partitionBy("bucket")` directory layout |
 | `writeTo(t).overwritePartitions()`          | dynamic partition-overwrite (resume path) |
 | full `writeTo(t).createOrReplace()`         | static overwrite (fresh-run path) |
-| `MERGE INTO ... ON t.image_id = s.image_id` | `operators/merge.merge_update` broadcast MERGE shape |
+| `MERGE INTO ... ON t.image_id = s.image_id` | `operators/merge.merge_update` left join (AQE: broadcast or sort-merge) |
 | snapshot metadata / time travel             | per-bucket lineage rows (`_lineage` table) |
 | `expire_snapshots` maintenance              | lineage append retention (S5 analog) |
 

@@ -25,6 +25,8 @@ and Spark 4.1):
 
 from __future__ import annotations
 
+import functools
+
 from .operators import (
     dedup,
     events,
@@ -1506,9 +1508,9 @@ SPARK_BUILDERS = {
     "dedup_jaccard_candidates": dedup.jaccard_candidates,
     "dedup_embedding_cosine": dedup.embedding_near_dup,
     "sim_topk_cosine": similarity.topk_cosine,
-    "ann_search_pruned": similarity.ann_search,
+    "ann_search_pruned": functools.partial(similarity.ann_search_multiprobe, radius=0),
     "ann_search_multiprobe": similarity.ann_search_multiprobe,
-    "ann_search_ivf": similarity.ann_ivf_search,
+    "ann_search_ivf": functools.partial(similarity.ann_ivf_learned, iters=0),
     "ann_search_ivf_learned": similarity.ann_ivf_learned,
     "a6_reconstruct": textstats.reconstruct_text,
     "g1_fbeta_arrays": textstats.fbeta_arrays,

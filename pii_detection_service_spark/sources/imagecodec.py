@@ -1,13 +1,11 @@
 """Deterministic image codecs, all pure Python (no PIL/libjpeg needed).
 
-- PNG: encode here is the byte-stable fast path (8-bit RGB, filter 0,
-  zlib IDAT — opens in any viewer; the synth corpus and every bench
-  cache are keyed on its exact bytes). Decode delegates to the full
-  spec-profile codec (``pngcodec.py``): all five filters, color types
-  0/2/3/4/6, bit depths 1-16, Adam7, tRNS, CRC validation — i.e. real
-  crawl PNGs, not just our own output. ``pngcodec.encode_png`` exposes
-  the flexible encoder (palette/16-bit/interlace/adaptive filters) for
-  fabricating those layouts in tests.
+- PNG: the spec-profile codec in ``pngcodec.py``. Decode covers all five
+  filters, color types 0/2/3/4/6, bit depths 1-16, Adam7, tRNS and CRC
+  validation — i.e. real crawl PNGs, not just our own output. The synth
+  corpus encodes with ``pngcodec.encode_png(px, filter_strategy="none")``
+  (8-bit RGB, filter 0, zlib level 6); the corpus and every bench cache
+  are keyed on those exact bytes.
 - JPEG: a real JFIF encoder/decoder (``jpegcodec.py``): DCT, Annex-K
   quantization/Huffman tables, baseline AND progressive frames, 4:4:4
   through 4:2:0 sampling, byte stuffing. The synthetic pipeline encodes
@@ -20,44 +18,14 @@ All functions take/return ``numpy uint8 arrays of shape (h, w, 3)``.
 
 from __future__ import annotations
 
-import struct
-import zlib
-
 import numpy as np
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def _chunk(tag: bytes, payload: bytes) -> bytes:
-    return (
-        struct.pack(">I", len(payload))
-        + tag
-        + payload
-        + struct.pack(">I", zlib.crc32(tag + payload) & 0xFFFFFFFF)
-    )
-
-
-def encode_png(pixels: np.ndarray) -> bytes:
-    h, w, c = pixels.shape
-    assert c == 3 and pixels.dtype == np.uint8
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)  # 8-bit truecolor
-    # filter byte 0 per scanline
-    raw = np.concatenate(
-        [np.zeros((h, 1), np.uint8), pixels.reshape(h, w * 3)], axis=1
-    ).tobytes()
-    return (
-        _PNG_SIG
-        + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(raw, 6))
-        + _chunk(b"IEND", b"")
-    )
 
 
 def decode_png(data: bytes) -> np.ndarray:
     """Full spec-profile PNG decode (``pngcodec.py``): all five row
     filters, color types 0/2/3/4/6, bit depths 1-16, Adam7, tRNS, CRC
-    validation — a real crawl's PNGs, not just this module's own filter-0
-    RGB output. Returns uint8 (h,w[,2|3|4])."""
+    validation — a real crawl's PNGs, not just the synth corpus's
+    filter-0 RGB output. Returns uint8 (h,w[,2|3|4])."""
     from . import pngcodec
 
     return pngcodec.decode_png(data)

@@ -1,12 +1,12 @@
 """Spec-conformant pure-Python/numpy PNG codec (ISO 15948 / RFC 2083).
 
-Why this exists: the pipeline's original PNG path (``imagecodec.encode_png``
-/ ``decode_png``) only read its OWN output — 8-bit RGB, filter type 0,
-non-interlaced. A real 100 TB crawl's PNGs are adaptively filtered (every
-mainstream encoder emits Sub/Up/Average/Paeth per row), frequently palette
-or grayscale, sometimes 16-bit or Adam7-interlaced. This module decodes all
-of that and encodes it too (so tests can fabricate every layout without PIL
-in the container).
+Why this exists: the synth corpus is 8-bit RGB, filter type 0,
+non-interlaced (``encode_png(px, filter_strategy="none")``, the bytes every
+bench cache is keyed on). A real 100 TB crawl's PNGs are adaptively
+filtered (every mainstream encoder emits Sub/Up/Average/Paeth per row),
+frequently palette or grayscale, sometimes 16-bit or Adam7-interlaced. This
+module decodes all of that and encodes it too (so tests can fabricate every
+layout without PIL in the container).
 
 Coverage:
 

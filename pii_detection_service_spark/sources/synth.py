@@ -21,7 +21,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from . import imagecodec
+from . import imagecodec, pngcodec
 
 SEED = 20240816
 
@@ -106,7 +106,7 @@ def make_row(i: int, size: int = 24) -> dict:
     px = pixels_for(i, size)
     fmt = "png" if i % 3 else "jpeg"
     data = (
-        imagecodec.encode_png(px)
+        pngcodec.encode_png(px, filter_strategy="none")
         if fmt == "png"
         else imagecodec.encode_jpeg(px)  # real baseline JFIF, quality 98
     )
@@ -131,7 +131,7 @@ def make_row_mixed(i: int, size: int = 24) -> dict:
     px = pixels_for(i, size)
     variant = i % 8
     if variant == 0:
-        fmt, data = "png", imagecodec.encode_png(px)
+        fmt, data = "png", pngcodec.encode_png(px, filter_strategy="none")
     elif variant == 1:
         fmt, data = "jpeg", imagecodec.encode_jpeg(px)
     elif variant == 2:

@@ -39,7 +39,7 @@ def test_ann_scores_faithful_and_bucket_prunes(spark):
     from pii_detection_service_spark.operators import similarity
     from pii_detection_service_spark.operators.relational import table
 
-    ann = similarity.ann_search(spark, SF).collect()
+    ann = similarity.ann_search_multiprobe(spark, SF, radius=0).collect()
     assert ann, "query bucket must contain candidates"
 
     vecs = {
@@ -116,15 +116,15 @@ def test_multiprobe_lifts_recall_over_single_probe(spark, tmp_path):
 
 
 def test_ivf_probes_subset_and_scores_faithful(spark):
-    """IVF coarse-quantizer search: (a) candidates come only from the
-    query's 2 probed cells (a strict subset of the corpus — pruning is
-    real), (b) every returned score is the true cosine."""
+    """IVF search over the raw-anchor cells (iters=0): (a) candidates come
+    only from the query's 2 probed cells (a strict subset of the corpus —
+    pruning is real), (b) every returned score is the true cosine."""
     import math
 
     from pii_detection_service_spark.operators import similarity
     from pii_detection_service_spark.operators.relational import table
 
-    got = similarity.ann_ivf_search(spark, SF).collect()
+    got = similarity.ann_ivf_learned(spark, SF, iters=0).collect()
     assert got
     assert len({r["cell"] for r in got}) <= 2  # ≤ n_probe cells represented
 

@@ -219,7 +219,8 @@ def test_cc_durable_resume_ignores_torn_state(spark, tmp_path):
 def test_cc_star_durable_resume_matches_fresh_run(spark, tmp_path):
     """CC with a checkpoint_dir: abort after 1 round, restart resumes from
     the committed round-1 edge state and the final labels equal an
-    uninterrupted run."""
+    uninterrupted run. An immediate re-run on the converged checkpoint
+    runs no round: its two newest state rows already show the fixpoint."""
     import pytest
 
     nodes, edges = _chain(spark, 40)
@@ -237,11 +238,27 @@ def test_cc_star_durable_resume_matches_fresh_run(spark, tmp_path):
     }
     assert tel["resumed_from_round"] == 1
     assert got == {i: 1 for i in range(1, 41)}
+    fresh = {}
     want = {
         r["doc_id"]: r["cluster"]
-        for r in dedup.connected_components(nodes, edges).collect()
+        for r in dedup.connected_components(
+            nodes, edges, telemetry=fresh
+        ).collect()
     }
     assert got == want
+    assert tel["rounds"] == fresh["rounds"]
+
+    again = {}
+    rerun = {
+        r["doc_id"]: r["cluster"]
+        for r in dedup.connected_components(
+            nodes, edges, telemetry=again, checkpoint_dir=ckpt
+        ).collect()
+    }
+    assert again["resumed_from_round"] == fresh["rounds"]
+    assert again["rounds_executed"] == 0
+    assert again["rounds"] == fresh["rounds"]
+    assert rerun == want
 
 
 def test_dedup_clusters_checkpoint_dir_output_unchanged(spark, tmp_path):

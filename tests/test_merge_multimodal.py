@@ -1,5 +1,7 @@
 """MERGE/upsert (F4/F5/A10/A13) and multimodal binary-column operators."""
 
+from contextlib import contextmanager
+
 import numpy as np
 import pyspark.sql.functions as F
 import pytest
@@ -89,51 +91,92 @@ def test_resize_roundtrip(spark, img_df):
         assert px.shape == (8, 8, 3)
 
 
-def _base_updates(spark, n=40):
+def _base_updates(spark, n=40, step=3):
     base = spark.createDataFrame(
         [(i, f"text {i}", "en") for i in range(n)],
         "doc_id long, text string, lang string",
     )
     updates = spark.createDataFrame(
-        [(i, f"edited {i}") for i in range(0, n, 3)],
+        [(i, f"edited {i}") for i in range(0, n, step)],
         "doc_id long, text string",
     )
     return base, updates
 
 
+_BROADCAST_CONFS = (
+    "spark.sql.autoBroadcastJoinThreshold",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold",
+)
+
+
+@contextmanager
+def _broadcast_threshold(spark, value):
+    """Set both broadcast-join thresholds (static and AQE) for the block,
+    restoring the session's previous values afterwards."""
+    old = {k: spark.conf.get(k, None) for k in _BROADCAST_CONFS}
+    try:
+        for k in _BROADCAST_CONFS:
+            spark.conf.set(k, value)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _collect_final_plan(df):
+    """Collect ``df``, then return (rows, the final adaptive plan's text) —
+    the join AQE actually ran, not the static plan it started from."""
+    rows = sorted(map(tuple, df.collect()))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    return rows, plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+
+
 def test_merge_shuffle_strategy_has_no_broadcast_and_matches(spark):
-    """The bulk-batch MERGE path: strategy='shuffle' must produce a plan
-    with NO BroadcastExchange (a validated-labels batch at 10^12-row scale
-    can exceed broadcast size) and byte-identical results to the broadcast
-    path."""
+    """The bulk-batch MERGE shape: with broadcasting switched off the final
+    plan must sort-merge join with NO BroadcastExchange (a validated-labels
+    batch at 10^12-row scale can exceed broadcast size), and produce the
+    same rows as the broadcast join AQE picks for the small batch."""
     base, updates = _base_updates(spark)
-    bc = merge.merge_update(base, updates, "doc_id", ["text"], strategy="broadcast")
-    sh = merge.merge_update(base, updates, "doc_id", ["text"], strategy="shuffle")
-    plan_sh = sh._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastExchange" not in plan_sh
-    plan_bc = bc._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastExchange" in plan_bc
-    assert sorted(map(tuple, sh.collect())) == sorted(map(tuple, bc.collect()))
+    bc_rows, bc_plan = _collect_final_plan(
+        merge.merge_update(base, updates, "doc_id", ["text"])
+    )
+    assert "BroadcastExchange" in bc_plan
+    with _broadcast_threshold(spark, "-1"):
+        sh_rows, sh_plan = _collect_final_plan(
+            merge.merge_update(base, updates, "doc_id", ["text"])
+        )
+    assert "BroadcastExchange" not in sh_plan
+    assert "SortMergeJoin" in sh_plan
+    assert sh_rows == bc_rows
+    assert len(bc_rows) == 40
+    assert sum(r[1].startswith("edited") for r in bc_rows) == 14
 
 
 def test_merge_auto_picks_by_updates_size(spark):
-    base, updates = _base_updates(spark)
-    auto = merge.merge_update(base, updates, "doc_id", ["text"], strategy="auto")
-    # small updates side → auto resolves to broadcast
-    assert "BroadcastExchange" in auto._jdf.queryExecution().executedPlan().toString()
-    old = merge.MERGE_BROADCAST_MAX_ROWS
-    merge.MERGE_BROADCAST_MAX_ROWS = 5  # force the bulk path
-    try:
-        auto2 = merge.merge_update(base, updates, "doc_id", ["text"], strategy="auto")
-        assert "BroadcastExchange" not in auto2._jdf.queryExecution().executedPlan().toString()
-        assert sorted(map(tuple, auto2.collect())) == sorted(map(tuple, auto.collect()))
-    finally:
-        merge.MERGE_BROADCAST_MAX_ROWS = old
+    """AQE sizes the updates side at runtime: under a 16 KiB threshold the
+    14-row batch broadcasts and the 4,000-row batch sort-merge joins."""
+    with _broadcast_threshold(spark, "16k"):
+        base, small = _base_updates(spark)
+        _, plan = _collect_final_plan(
+            merge.merge_update(base, small, "doc_id", ["text"])
+        )
+        assert "BroadcastExchange" in plan
+        base, bulk = _base_updates(spark, n=4000, step=1)
+        rows, plan = _collect_final_plan(
+            merge.merge_update(base, bulk, "doc_id", ["text"])
+        )
+        assert "BroadcastExchange" not in plan
+        assert "SortMergeJoin" in plan
+    assert rows == [(i, f"edited {i}", "en") for i in range(4000)]
 
 
 def test_label_validation_shuffle_parity(spark):
-    """apply_label_validations over the sort-merge path must match the
-    broadcast path row-for-row (same Arrow splice kernel downstream)."""
+    """apply_label_validations over the sort-merge join must match the
+    broadcast join row-for-row (same Arrow splice kernel downstream)."""
     docs = spark.createDataFrame(
         [
             (1, ["[CLS]", "▁jo", "hn", "▁works", "[SEP]"],
@@ -146,8 +189,13 @@ def test_label_validation_shuffle_parity(spark):
     updates = spark.createDataFrame(
         [(1, 1, "O")], "doc_id long, token_index int, new_label string"
     )
-    a = merge.apply_label_validations(docs, updates, strategy="broadcast").collect()
-    b = merge.apply_label_validations(docs, updates, strategy="shuffle").collect()
-    key = lambda r: r["doc_id"]
-    for ra, rb in zip(sorted(a, key=key), sorted(b, key=key)):
-        assert ra == rb
+    a, a_plan = _collect_final_plan(merge.apply_label_validations(docs, updates))
+    assert "BroadcastExchange" in a_plan
+    with _broadcast_threshold(spark, "-1"):
+        b, b_plan = _collect_final_plan(
+            merge.apply_label_validations(docs, updates)
+        )
+    assert "BroadcastExchange" not in b_plan
+    assert "SortMergeJoin" in b_plan
+    assert len(a) == 2
+    assert a == b

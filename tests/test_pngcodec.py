@@ -244,9 +244,20 @@ def test_unknown_critical_chunk_raises():
 def test_legacy_filter0_output_still_decodes():
     rng = np.random.default_rng(7)
     px = rng.integers(0, 256, (24, 24, 3), np.uint8)
-    legacy = imagecodec.encode_png(px)  # byte-stable corpus encoder
+    legacy = pngcodec.encode_png(px, filter_strategy="none")  # corpus bytes
     assert np.array_equal(imagecodec.decode_png(legacy), px)
     assert np.array_equal(pngcodec.decode_png(legacy), px)
+    # the synth corpus layout, byte for byte: 8-bit RGB IHDR, filter byte 0
+    # per scanline, one zlib level-6 IDAT, IEND
+    raw = np.concatenate(
+        [np.zeros((24, 1), np.uint8), px.reshape(24, 72)], axis=1
+    ).tobytes()
+    assert legacy == (
+        pngcodec.PNG_SIG
+        + pngcodec._chunk(b"IHDR", struct.pack(">IIBBBBB", 24, 24, 8, 2, 0, 0, 0))
+        + pngcodec._chunk(b"IDAT", zlib.compress(raw, 6))
+        + pngcodec._chunk(b"IEND", b"")
+    )
 
 
 def test_to_rgb_normalizes_all_channel_counts():

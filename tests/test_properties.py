@@ -251,8 +251,9 @@ def test_email_scan_equals_email_re(text):
 def _all_pairs_spans(text, gazetteer=tagger.FIRST_NAMES):
     """Reference span claims: every class's spec regex in precedence order
     (EMAIL_RE itself, not the linear scan), each candidate tested against
-    EVERY span claimed so far, then the gazetteer names, then the toxic
-    matches against every PII span. Returns (pii spans, toxic spans)."""
+    EVERY span claimed so far, then the gazetteer names (no gate on the
+    caption's capitals), then the toxic matches against every PII span.
+    Returns (pii spans, toxic spans)."""
     spans = []
 
     def free(s, e, claimed):
@@ -262,29 +263,28 @@ def _all_pairs_spans(text, gazetteer=tagger.FIRST_NAMES):
         for m in pat.finditer(text):
             if free(*m.span(), spans):
                 spans.append((*m.span(), cls))
-    if tagger._UPPER_RE.search(text) is not None:
-        toks = tagger.word_tokenize(text)
-        i = 0
-        while i < len(toks):
-            w, ts, te = toks[i]
-            if w[:1].isupper() and w.lower() in gazetteer and free(ts, te, spans):
-                j, end = i + 1, te
-                while j < len(toks):
-                    wj, sj, ej = toks[j]
-                    if not (
-                        wj[:1].isupper()
-                        and wj.replace("-", "").isalpha()
-                        and wj.lower() not in tagger.HONORIFICS
-                        and free(sj, ej, spans)
-                        and sj == toks[j - 1][2] + 1
-                    ):
-                        break
-                    end = ej
-                    j += 1
-                spans.append((ts, end, "NAME_STUDENT"))
-                i = j
-            else:
-                i += 1
+    toks = tagger.word_tokenize(text)
+    i = 0
+    while i < len(toks):
+        w, ts, te = toks[i]
+        if w[:1].isupper() and w.lower() in gazetteer and free(ts, te, spans):
+            j, end = i + 1, te
+            while j < len(toks):
+                wj, sj, ej = toks[j]
+                if not (
+                    wj[:1].isupper()
+                    and wj.replace("-", "").isalpha()
+                    and wj.lower() not in tagger.HONORIFICS
+                    and free(sj, ej, spans)
+                    and sj == toks[j - 1][2] + 1
+                ):
+                    break
+                end = ej
+                j += 1
+            spans.append((ts, end, "NAME_STUDENT"))
+            i = j
+        else:
+            i += 1
     toxic = [
         (m.start(), m.end(), "TOXIC")
         for m in tagger.TOXIC_RE.finditer(text)
@@ -295,13 +295,16 @@ def _all_pairs_spans(text, gazetteer=tagger.FIRST_NAMES):
 
 # Pieces every span class can fire on, joined with no separator as often
 # as with one, so candidates of different classes overlap and abut.
+# "\u212aenji" is a gazetteer name whose capital is not ASCII (U+212A
+# KELVIN SIGN lowercases to 'k'): it is a name whether or not the caption
+# also holds an ASCII capital.
 pii_dense = st.lists(
     st.sampled_from(
         [
             "12345678", "415-555-9876", "(555) 123-4567", "123-45-6789",
             "AB-123456", "12 Main St", "@abc", "u/abc", "x@y.co",
             "http://a.co/x", "www.b.org", "Alice", "Maria", "Smith", "Dr.",
-            "damn", "Stupid", " ", " ", ".", "-", "a", "A", "9",
+            "\u212aenji", "damn", "Stupid", " ", " ", ".", "-", "a", "A", "9",
         ]
     ),
     max_size=30,
@@ -312,6 +315,7 @@ pii_dense = st.lists(
 @settings(max_examples=500, deadline=None)
 @example("Alice Smith 12345678 damn")
 @example("12 Main St415-555-9876x@y.co@abc")
+@example("met \u212aenji today")
 def test_span_claims_equal_all_pairs_rule(text):
     """The claim map (one byte per character) claims exactly the spans the
     all-pairs overlap rule does, for PII and for toxic matches."""
@@ -323,3 +327,4 @@ def test_span_claims_equal_all_pairs_rule(text):
         len(pii),
         len(toxic),
     )
+

@@ -15,7 +15,9 @@ def test_fast_topk_matches_native(spark):
 
 
 def test_ann_search_prunes_to_query_bucket(spark):
-    res = similarity.ann_search(spark, SF, query_vec_id=0).collect()
+    res = similarity.ann_search_multiprobe(
+        spark, SF, query_vec_id=0, radius=0
+    ).collect()
     assert len(res) > 0
     assert len({r["bucket"] for r in res}) == 1  # single probed bucket
     # candidates are a subset of the corpus (pruning actually happened)
@@ -35,7 +37,7 @@ def test_ivf_learned_beats_anchor_quantizer_on_planted_clusters(spark, tmp_path)
     true centers (deliberately bad coarse quantizer): after 2 Lloyd
     iterations the learned cells align with the clusters, so single-probe
     search recovers the query's true neighborhood where the raw-anchor
-    quantizer splits it across cells. Deterministic (seeded)."""
+    quantizer (``iters=0``) splits it across cells. Deterministic (seeded)."""
     import numpy as np
 
     rng = np.random.default_rng(15)
@@ -78,7 +80,9 @@ def test_ivf_learned_beats_anchor_quantizer_on_planted_clusters(spark, tmp_path)
     }
     anchor = {
         r["vec_id"]
-        for r in similarity.ann_ivf_search(spark, sf, n_probe=1).collect()
+        for r in similarity.ann_ivf_learned(
+            spark, sf, n_probe=1, iters=0
+        ).collect()
     }
     r_learned = len(learned & truth) / 10
     r_anchor = len(anchor & truth) / 10

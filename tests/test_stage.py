@@ -155,7 +155,16 @@ def test_bucket_filter_prunes_partitions_on_read(spark, src, tmp_path):
     assert anti.select("bucket").distinct().count() == 5
 
 
-def test_resume_processes_only_missing_buckets(spark, src, tmp_path):
+# The crash-resume tests run against a plain path and a ``file://`` URI
+# out_dir: the file system is set up on the local path, and run_stage gets
+# the URI form.
+_OUT_SCHEMES = pytest.mark.parametrize(
+    "scheme", ["", "file://"], ids=["path", "file_uri"]
+)
+
+
+@_OUT_SCHEMES
+def test_resume_processes_only_missing_buckets(spark, src, tmp_path, scheme):
     out = str(tmp_path / "partial_out")
     # simulate a crashed run: process only buckets 0-3 by pre-marking 4-7 done
     pre = spark.createDataFrame(
@@ -165,7 +174,7 @@ def test_resume_processes_only_missing_buckets(spark, src, tmp_path):
     os.makedirs(out, exist_ok=True)
     pre.coalesce(1).write.mode("overwrite").parquet(os.path.join(out, "lineage"))
 
-    m = stage.run_stage(spark, src, out, n_buckets=8, salt_factor=2)
+    m = stage.run_stage(spark, src, scheme + out, n_buckets=8, salt_factor=2)
     expected = (
         stage.with_bucket(src, 8).where(F.col("bucket") < 4).count()
     )
@@ -244,14 +253,17 @@ def test_one_scoring_path(spark, tmp_path):
         assert "MapInPandas" not in plan, plan
 
 
-def test_resume_after_torn_file_rewrites_bucket_idempotently(spark, src, tmp_path):
+@_OUT_SCHEMES
+def test_resume_after_torn_file_rewrites_bucket_idempotently(
+    spark, src, tmp_path, scheme
+):
     """Crash DURING a bucket's data write: the bucket dir holds a torn
     (half-written, unreadable) parquet part and lineage never recorded the
     bucket. Resume must rewrite that bucket's partition atomically (dynamic
     partition overwrite replaces the whole directory, torn file included) —
     no duplicate rows, no unreadable leftovers, exact row parity."""
     out = str(tmp_path / "torn_out")
-    stage.run_stage(spark, src, out, n_buckets=8, salt_factor=2)
+    stage.run_stage(spark, src, scheme + out, n_buckets=8, salt_factor=2)
 
     victim = 3
     vdir = os.path.join(out, "data", f"bucket={victim}")
@@ -275,7 +287,7 @@ def test_resume_after_torn_file_rewrites_bucket_idempotently(spark, src, tmp_pat
         "runtime_sec double, status string",
     ).coalesce(1).write.mode("overwrite").parquet(ldir)
 
-    m = stage.run_stage(spark, src, out, n_buckets=8, salt_factor=2)
+    m = stage.run_stage(spark, src, scheme + out, n_buckets=8, salt_factor=2)
     expected_victim = (
         stage.with_bucket(src, 8).where(F.col("bucket") == victim).count()
     )

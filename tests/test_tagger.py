@@ -150,6 +150,17 @@ def test_casefold_homoglyph_toxic_still_scrubbed():
     assert not tagger._is_plain(text)
 
 
+def test_non_ascii_capital_name_tagged_without_ascii_capital():
+    """U+212A KELVIN SIGN is uppercase and lowercases to 'k', so "Kenji"
+    spelled with it is a gazetteer name whether or not the caption holds an
+    ASCII capital: an [A-Z] gate alone must not skip the name scan."""
+    for lead in ("met", "Met"):
+        text = lead + " \u212aenji today"
+        _, labels, scrubbed, n_pii, n_toxic = tagger.tag_and_scrub(text)
+        assert labels == ["O", "B-NAME_STUDENT", "O"]
+        assert (scrubbed, n_pii, n_toxic) == (lead + " [NAME_STUDENT] today", 1, 0)
+
+
 @pytest.mark.parametrize(
     "unit, reps",
     [
