@@ -256,27 +256,37 @@ def load_arpa_char_bigram(path: str) -> np.ndarray:
     return tbl.reshape(_NC * _NC)
 
 
+def _tok(c: int) -> str:
+    ch = chr(c)
+    return {"^": _S_TOK, "$": _E_TOK, " ": _SP_TOK}.get(ch, ch)
+
+
+def _write_arpa(path: str, unigrams, bigrams) -> None:
+    """Write a char-bigram ARPA file. ``unigrams``: (codepoint, log10 prob,
+    log10 backoff); ``bigrams``: (a, b, log10 prob). Values are written
+    with ``repr`` so a reload is exact."""
+    with open(path, "w", encoding="utf-8") as f:
+        f.write("\\data\\\n")
+        f.write(f"ngram 1={len(unigrams)}\nngram 2={len(bigrams)}\n\n")
+        f.write("\\1-grams:\n")
+        for c, lp, bow in unigrams:
+            f.write(f"{lp!r}\t{_tok(c)}\t{bow!r}\n")
+        f.write("\n\\2-grams:\n")
+        for a, b, lp in bigrams:
+            f.write(f"{lp!r}\t{_tok(a)} {_tok(b)}\n")
+        f.write("\n\\end\\\n")
+
+
 def export_builtin_lm_arpa(path: str) -> None:
     """Write the built-in bigram LM as an ARPA file (round-trip seam: the
     builtin's missing-bigram floor is expressed as uni(b)=_FLOOR with zero
     backoff, so load_arpa_char_bigram reproduces _LM_TBL)."""
-    floor10 = repr(_FLOOR / _LN10)
-
-    def tok(c: int) -> str:
-        ch = chr(c)
-        return {"^": _S_TOK, "$": _E_TOK, " ": _SP_TOK}.get(ch, ch)
-
     symbols = sorted({ord(bg[0]) for bg in _LM} | {ord(bg[1]) for bg in _LM})
-    with open(path, "w", encoding="utf-8") as f:
-        f.write("\\data\\\n")
-        f.write(f"ngram 1={len(symbols)}\nngram 2={len(_LM)}\n\n")
-        f.write("\\1-grams:\n")
-        for c in symbols:
-            f.write(f"{floor10}\t{tok(c)}\t0.0\n")
-        f.write("\n\\2-grams:\n")
-        for bg, lp in sorted(_LM.items()):
-            f.write(f"{lp / _LN10!r}\t{tok(ord(bg[0]))} {tok(ord(bg[1]))}\n")
-        f.write("\n\\end\\\n")
+    _write_arpa(
+        path,
+        [(c, _FLOOR / _LN10, 0.0) for c in symbols],
+        [(ord(bg[0]), ord(bg[1]), lp / _LN10) for bg, lp in sorted(_LM.items())],
+    )
 
 
 def export_synth_arpa(path: str, n_extra_symbols: int = 160) -> int:
@@ -300,10 +310,6 @@ def export_synth_arpa(path: str, n_extra_symbols: int = 160) -> int:
     ][:n_extra_symbols]
     symbols = sorted(set(base) | set(extra))
 
-    def tok(c: int) -> str:
-        ch = chr(c)
-        return {"^": _S_TOK, "$": _E_TOK, " ": _SP_TOK}.get(ch, ch)
-
     def uni_lp(a: int) -> float:  # log10 in [-4.0, -1.0), deterministic
         return -1.0 - 3.0 * ((a * 2654435761) % 1000) / 1000.0
 
@@ -313,23 +319,14 @@ def export_synth_arpa(path: str, n_extra_symbols: int = 160) -> int:
     def bi_lp(a: int, b: int) -> float:  # log10 in [-3.5, -0.5)
         return -0.5 - 3.0 * (((a * 131 + b) * 2246822519) % 1000) / 1000.0
 
-    pairs = [
-        (a, b)
+    bigrams = [
+        (a, b, bi_lp(a, b))
         for a in symbols
         for b in symbols
         if (a * 131 + b) % 5 != 0
     ]
-    with open(path, "w", encoding="utf-8") as f:
-        f.write("\\data\\\n")
-        f.write(f"ngram 1={len(symbols)}\nngram 2={len(pairs)}\n\n")
-        f.write("\\1-grams:\n")
-        for c in symbols:
-            f.write(f"{uni_lp(c)!r}\t{tok(c)}\t{bow_w(c)!r}\n")
-        f.write("\n\\2-grams:\n")
-        for a, b in pairs:
-            f.write(f"{bi_lp(a, b)!r}\t{tok(a)} {tok(b)}\n")
-        f.write("\n\\end\\\n")
-    return len(pairs)
+    _write_arpa(path, [(c, uni_lp(c), bow_w(c)) for c in symbols], bigrams)
+    return len(bigrams)
 
 
 # --- word-entropy (SQL-portable repetition metric) --------------------------

@@ -3,11 +3,12 @@
 Images/audio/video are opaque ``binary`` columns with typed metadata
 (input_hint: bytes/w/h/fmt). All ops are Arrow-batched ``mapInPandas`` —
 the Spark-side plumbing (schema, batch shape, partition behavior) is real
-and tested; the codec seam is ``sources/imagecodec.py`` (pure-Python PNG
-and baseline JFIF JPEG are REAL codecs — see ``sources/pngcodec.py`` and
-``sources/jpegcodec.py``;
-audio/video decoders raise NotImplementedError until a real library is
-plugged in).
+and tested. Every codec behind it is a real pure-Python one: images go
+through ``sources/imagecodec.decode`` (PNG, baseline/progressive JPEG,
+GIF, BMP, WebP), audio through ``sources/wavcodec.py`` (PCM, float32,
+G.711) and video frames through ``sources/avicodec.py`` (MJPEG AVI),
+animated GIF and animated WebP. Formats outside those codecs (other
+video compressions, compressed audio) raise NotImplementedError.
 
 Memory note (matters at 100 TB): binary columns ride inside Arrow record
 batches — cap `spark.sql.execution.arrow.maxRecordsPerBatch` and the parquet
@@ -120,7 +121,9 @@ def audio_stats(df: DataFrame) -> DataFrame:
     analog of decode_stats: duration, RMS level, zero-crossing rate, the
     fraction of clipped (saturated) samples and of near-silent samples.
     These four drive the audio keep/drop heuristics a training-data
-    pipeline runs (too-quiet, clipped, too-short)."""
+    pipeline runs (too-quiet, clipped, too-short). Decode errors propagate
+    and fail the query, never a silent partial row: a non-PCM format
+    raises NotImplementedError, a truncated or non-WAVE file ValueError."""
     from ..sources import wavcodec
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -250,12 +253,14 @@ def sample_frames(df: DataFrame, every: int = 2) -> DataFrame:
     """Frame-sample: explode every ``every``-th frame from the container
     into its own row (binary) — the mapInPandas row-expanding shape a
     video pipeline uses. Dispatches by magic: REAL MJPEG AVI containers
-    (sources/avicodec.py) yield their raw per-frame JPEG payloads without
-    pixel-decoding anything (sampling is a container walk, not a decode);
-    animated GIFs (sources/gifcodec.py) MUST decode+composite — a GIF
-    frame is a delta over the prior canvas (disposal/transparency), so
-    sampled frames are emitted as standalone PNG bytes; anything else
-    raises."""
+    (sources/avicodec.mjpeg_payloads) yield their raw per-frame JPEG
+    payloads without pixel-decoding anything (sampling is a container
+    walk, not a decode) after the decoder's own MJPG and truncation
+    checks, so a non-MJPEG stream or a cut-short file raises instead of
+    emitting a partial frame; animated GIFs (sources/gifcodec.py) MUST
+    decode+composite — a GIF frame is a delta over the prior canvas
+    (disposal/transparency), so sampled frames are emitted as standalone
+    PNG bytes; anything else raises."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -263,7 +268,9 @@ def sample_frames(df: DataFrame, every: int = 2) -> DataFrame:
             for iid, data in zip(pdf["image_id"], pdf["bytes"]):
                 data = bytes(data)
                 if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
-                    frames = _avi_frame_payloads(data)
+                    from ..sources import avicodec
+
+                    frames, _fps = avicodec.mjpeg_payloads(data)
                     for idx, frame in enumerate(frames):
                         if idx % every == 0:
                             rows.append((iid, idx, frame))
@@ -303,26 +310,3 @@ def sample_frames(df: DataFrame, every: int = 2) -> DataFrame:
 
     return df.select("image_id", "bytes").mapInPandas(fn, FRAMES_DDL)
 
-
-def _avi_frame_payloads(data: bytes) -> list[bytes]:
-    """Raw '00dc'/'00db' chunk payloads (JPEG bytes) from an AVI, via the
-    same chunk walk as avicodec.decode_avi_mjpeg but WITHOUT decoding
-    pixels — frame sampling only touches container structure."""
-    import struct
-
-    out: list[bytes] = []
-
-    def walk(buf: bytes):
-        pos = 0
-        while pos + 8 <= len(buf):
-            tag = buf[pos : pos + 4]
-            (ln,) = struct.unpack("<I", buf[pos + 4 : pos + 8])
-            payload = buf[pos + 8 : pos + 8 + ln]
-            if tag == b"LIST":
-                walk(payload[4:])
-            elif tag in (b"00dc", b"00db"):
-                out.append(payload)
-            pos += 8 + ln + (ln & 1)
-
-    walk(data[12:])
-    return out

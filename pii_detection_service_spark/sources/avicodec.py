@@ -1,17 +1,20 @@
 """Pure-Python AVI/MJPEG video container codec — the video leg of the
-multimodal binary-column family, completing the real-codec trio
-(PNG/JPEG images → jpegcodec, WAV audio → wavcodec, AVI video here).
+multimodal binary-column family (PNG/JPEG images → pngcodec/jpegcodec,
+WAV audio → wavcodec, AVI video here).
 
 MJPEG-in-AVI is a REAL, playable format: each frame is a baseline JFIF
 JPEG (encoded by jpegcodec) stored as a '00dc' chunk inside the RIFF
 'movi' list, with a standard 'hdrl' (avih + strh/strf) header block and
 an 'idx1' keyframe index. Any mainstream player opens the output.
 
-Decoder walks the RIFF chunk tree (never assumes fixed offsets), collects
-'00dc'/'00db' frame chunks, and hands the JPEG payloads to
-jpegcodec.decode_baseline_jpeg. Honest seams: non-MJPG video streams
-(biCompression other than 'MJPG') raise NotImplementedError — plugging in
-ffmpeg behind the same two functions is the production path.
+Chunks are packed and walked by ``riff.py``; this module recurses into
+the LIST chunks and collects the '00dc'/'00db' frame payloads
+(``mjpeg_payloads``, which frame sampling uses without decoding pixels),
+then ``decode_avi_mjpeg`` hands them to jpegcodec.decode_baseline_jpeg.
+A truncated chunk or a wrong form type raises ValueError. Honest seam:
+non-MJPG video streams (biCompression other than 'MJPG') raise
+NotImplementedError — plugging in ffmpeg behind the same functions is the
+production path.
 """
 
 from __future__ import annotations
@@ -20,14 +23,11 @@ import struct
 
 import numpy as np
 
-
-def _chunk(tag: bytes, payload: bytes) -> bytes:
-    pad = b"\x00" if len(payload) % 2 else b""  # RIFF chunks are word-aligned
-    return tag + struct.pack("<I", len(payload)) + payload + pad
+from . import riff
 
 
 def _list(tag: bytes, payload: bytes) -> bytes:
-    return _chunk(b"LIST", tag + payload)
+    return riff.chunk(b"LIST", tag + payload)
 
 
 def encode_avi_mjpeg(
@@ -60,60 +60,58 @@ def encode_avi_mjpeg(
     strf = struct.pack(
         "<IiiHH4sIiiII", 40, w, h, 1, 24, b"MJPG", w * h * 3, 0, 0, 0, 0
     )
-    hdrl = _list(
-        b"hdrl",
-        _chunk(b"avih", avih) + _list(b"strl", _chunk(b"strh", strh) + _chunk(b"strf", strf)),
-    )
+    strl = _list(b"strl", riff.chunk(b"strh", strh) + riff.chunk(b"strf", strf))
+    hdrl = _list(b"hdrl", riff.chunk(b"avih", avih) + strl)
 
     movi_payload = b""
     index = b""
     for j in jpegs:
         offset = 4 + len(movi_payload)  # from start of 'movi' list data
-        movi_payload += _chunk(b"00dc", j)
+        movi_payload += riff.chunk(b"00dc", j)
         index += b"00dc" + struct.pack("<III", 0x10, offset, len(j))
     movi = _list(b"movi", movi_payload)
-    idx1 = _chunk(b"idx1", index)
+    idx1 = riff.chunk(b"idx1", index)
 
-    body = b"AVI " + hdrl + movi + idx1
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return riff.form(b"AVI ", hdrl + movi + idx1)
 
 
-def decode_avi_mjpeg(data: bytes) -> tuple[list[np.ndarray], int]:
-    """Decode an MJPEG AVI to ([frames], fps). Walks the chunk tree."""
-    assert data[:4] == b"RIFF" and data[8:12] == b"AVI ", "not a RIFF/AVI file"
+def mjpeg_payloads(data: bytes) -> tuple[list[bytes], int]:
+    """The raw JPEG payloads of an MJPEG AVI's frame chunks, and its fps.
+    Walks the chunk tree without decoding pixels."""
     fps = 0
     compression = None
-    frames_raw: list[bytes] = []
+    frames: list[bytes] = []
 
-    def walk(buf: bytes):
+    def walk(chunks):
         nonlocal fps, compression
-        pos = 0
-        while pos + 8 <= len(buf):
-            tag = buf[pos : pos + 4]
-            (ln,) = struct.unpack("<I", buf[pos + 4 : pos + 8])
-            payload = buf[pos + 8 : pos + 8 + ln]
+        for tag, payload in chunks:
             if tag == b"LIST":
-                walk(payload[4:])  # skip list type fourcc, recurse
+                walk(riff.chunks(payload, 4))  # skip the list type fourcc
             elif tag == b"avih":
                 # dwMicroSecPerFrame == 0 in a foreign/corrupt AVI must not
                 # ZeroDivisionError past the codec's honest-seam contract
-                uspf = struct.unpack("<I", payload[:4])[0]
+                uspf = struct.unpack_from("<I", payload)[0]
                 fps = 1_000_000 // uspf if uspf else 0
             elif tag == b"strf" and len(payload) >= 20:
                 compression = payload[16:20]
             elif tag in (b"00dc", b"00db"):
-                frames_raw.append(payload)
-            pos += 8 + ln + (ln & 1)
+                frames.append(payload)
 
-    walk(data[12:])
+    walk(riff.read(data, b"AVI "))
     if compression is not None and compression not in (b"MJPG", b"mjpg"):
         raise NotImplementedError(
             f"video compression {compression!r}: only MJPEG is decoded here — "
             "other codecs need a real decoder (ffmpeg)"
         )
+    return frames, fps
+
+
+def decode_avi_mjpeg(data: bytes) -> tuple[list[np.ndarray], int]:
+    """Decode an MJPEG AVI to ([frames], fps)."""
     from . import jpegcodec
 
-    return [jpegcodec.decode_baseline_jpeg(f) for f in frames_raw], fps
+    payloads, fps = mjpeg_payloads(data)
+    return [jpegcodec.decode_baseline_jpeg(f) for f in payloads], fps
 
 
 def synth_video(i: int, n_frames: int = 6, size: int = 24) -> list[np.ndarray]:

@@ -1,19 +1,20 @@
-"""Deterministic image codecs, all pure Python (no PIL/libjpeg needed).
+"""Image decode dispatch and pixel helpers, all pure Python (no
+PIL/libjpeg needed). ``decode(data, fmt)`` routes to the format's own
+codec module, which is also where callers encode:
 
-- PNG: the spec-profile codec in ``pngcodec.py``. Decode covers all five
-  filters, color types 0/2/3/4/6, bit depths 1-16, Adam7, tRNS and CRC
-  validation — i.e. real crawl PNGs, not just our own output. The synth
-  corpus encodes with ``pngcodec.encode_png(px, filter_strategy="none")``
-  (8-bit RGB, filter 0, zlib level 6); the corpus and every bench cache
-  are keyed on those exact bytes.
-- JPEG: a real JFIF encoder/decoder (``jpegcodec.py``): DCT, Annex-K
-  quantization/Huffman tables, baseline AND progressive frames, 4:4:4
-  through 4:2:0 sampling, byte stuffing. The synthetic pipeline encodes
-  baseline 4:4:4 at quality 98 so the noise-heavy synth images hold the
-  40 dB PSNR invariant from BASELINE.json input_hint (worst measured
-  43.4 dB; natural images clear 40 dB at far lower quality).
+- PNG: ``pngcodec.py``. Decode covers all five filters, color types
+  0/2/3/4/6, bit depths 1-16, Adam7, tRNS and CRC validation — real crawl
+  PNGs, not just our own output. The synth corpus encodes with
+  ``pngcodec.encode_png(px, filter_strategy="none")``; the corpus and
+  every bench cache are keyed on those exact bytes.
+- JPEG: ``jpegcodec.py``, a real JFIF codec (baseline and progressive,
+  4:4:4 through 4:2:0, 1-component grayscale). The synth corpus calls
+  ``encode_baseline_jpeg(px, quality=98)`` (the codec default is 92) so
+  noise-heavy synth images hold the 40 dB PSNR invariant from
+  BASELINE.json input_hint (worst measured 43.4 dB).
+- GIF, BMP and WebP: ``gifcodec.py``, ``bmpcodec.py``, ``webpcodec.py``.
 
-All functions take/return ``numpy uint8 arrays of shape (h, w, 3)``.
+``to_rgb`` normalizes any decoded shape to ``(h, w, 3)`` uint8.
 """
 
 from __future__ import annotations
@@ -21,33 +22,11 @@ from __future__ import annotations
 import numpy as np
 
 
-def decode_png(data: bytes) -> np.ndarray:
-    """Full spec-profile PNG decode (``pngcodec.py``): all five row
-    filters, color types 0/2/3/4/6, bit depths 1-16, Adam7, tRNS, CRC
-    validation — a real crawl's PNGs, not just the synth corpus's
-    filter-0 RGB output. Returns uint8 (h,w[,2|3|4])."""
-    from . import pngcodec
-
-    return pngcodec.decode_png(data)
-
-
-def encode_jpeg(
-    pixels: np.ndarray, quality: int = 98, subsampling: tuple[int, int] = (1, 1)
-) -> bytes:
-    """Real baseline JFIF encode (see jpegcodec.py). Default quality 98 /
-    4:4:4 keeps noise-heavy synthetic content above the 40 dB PSNR
-    invariant; pass subsampling=(2, 2) for real-world-shaped 4:2:0 output
-    (the decoder reads sampling factors per file either way)."""
-    from . import jpegcodec
-
-    return jpegcodec.encode_baseline_jpeg(
-        pixels, quality=quality, subsampling=subsampling
-    )
-
-
 def decode(data: bytes, fmt: str) -> np.ndarray:
     if fmt == "png":
-        return decode_png(data)
+        from . import pngcodec
+
+        return pngcodec.decode_png(data)
     if fmt == "jpeg":
         if data[:2] == b"\xff\xd8":
             from . import jpegcodec
@@ -67,7 +46,7 @@ def decode(data: bytes, fmt: str) -> np.ndarray:
     if fmt == "webp":
         from . import webpcodec
 
-        # full lossless (VP8L) profile; lossy VP8 raises an honest seam
+        # lossless VP8L and lossy VP8 (vp8codec), ALPH alpha included
         return webpcodec.decode_webp(data)
     raise NotImplementedError(
         f"format {fmt!r}: real decoders (libwebp/ffmpeg) are not available "

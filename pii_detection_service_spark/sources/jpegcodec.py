@@ -27,7 +27,9 @@ with a real, spec-conformant JPEG — baseline sequential AND progressive:
 Honest seams (raise NotImplementedError, never wrong pixels): arithmetic
 coding, lossless/hierarchical frames, sampling factors above 2, restart
 intervals inside progressive scans (sequential restarts decode and
-encode), 12-bit precision, components ≠ 3.
+encode), 12-bit precision, component counts other than 1 and 3 (the
+encoder writes 1-component grayscale through the baseline per-component
+scan path; progressive output is color only).
 
 Scale note: the DCT/IDCT and color transforms are numpy-batched across
 every block of the image; only the entropy (Huffman) stage is a Python
@@ -209,25 +211,32 @@ def _prepare_components(
     pixels: np.ndarray, quality: int, subsampling: tuple[int, int]
 ):
     """Shared encoder front half: color transform, subsample, batched DCT,
-    quantize. Returns (qts, comp_zz, comp_bw, interleaved MCU sequence)."""
-    h, w, c = pixels.shape
-    assert c == 3 and pixels.dtype == np.uint8
+    quantize. Returns (qts, comp_zz, comp_bw, interleaved MCU sequence).
+    An (h, w) plane is one component (Nf=1: it IS Y, no color transform)
+    with one quantization table; (h, w, 3) RGB is Y, Cb, Cr with two."""
+    gray = pixels.ndim == 2
+    h, w = pixels.shape[:2]
+    assert pixels.dtype == np.uint8 and (gray or pixels.shape[2:] == (3,))
     sh, sv = subsampling
     if sh not in (1, 2) or sv not in (1, 2):
         raise NotImplementedError(
             "subsampling factors above 2 are not encoded (4:4:4 / 4:2:0 / "
             "4:2:2 / 4:4:0 are)"
         )
-    qts = [_scaled_qt(_QT_LUM, quality), _scaled_qt(_QT_CHROM, quality)]
+    if gray and (sh, sv) != (1, 1):
+        raise NotImplementedError("a grayscale JPEG has no chroma to subsample")
+    qts = [_scaled_qt(_QT_LUM, quality)]
+    if not gray:
+        qts.append(_scaled_qt(_QT_CHROM, quality))
 
-    ycc = _rgb_to_ycbcr(pixels)
+    ycc = pixels[..., None].astype(np.float64) if gray else _rgb_to_ycbcr(pixels)
     # pad to MCU multiple (8 for 4:4:4, 16 for 4:2:0) by edge replication
     ph, pw = -h % (8 * sv), -w % (8 * sh)
     ycc = np.pad(ycc, ((0, ph), (0, pw), (0, 0)), mode="edge")
     ph8, pw8 = ycc.shape[:2]
 
     comp_planes = [ycc[..., 0]]
-    for ci in (1, 2):  # sv×sh box-average chroma downsample (1×1 = identity)
+    for ci in range(1, ycc.shape[2]):  # sv×sh box-average chroma downsample
         comp_planes.append(
             ycc[..., ci].reshape(ph8 // sv, sv, pw8 // sh, sh).mean(axis=(1, 3))
         )
@@ -261,8 +270,8 @@ def _prepare_components(
             for by in range(sv):
                 for bx in range(sh):
                     seq.append((0, (sv * my + by) * comp_bw[0] + sh * mx + bx))
-            seq.append((1, my * comp_bw[1] + mx))
-            seq.append((2, my * comp_bw[2] + mx))
+            for ci in range(1, len(comp_planes)):
+                seq.append((ci, my * comp_bw[ci] + mx))
     return qts, comp_zz, comp_bw, seq
 
 
@@ -271,18 +280,21 @@ def _headers(
     ac_tables=None,
 ) -> bytearray:
     """SOI → JFIF → DQT → SOF(0|2) → DHT, shared by both encoders.
+    One quantization table means a 1-component (grayscale) frame with only
+    the luma Huffman tables; two mean Y, Cb, Cr.
     ``ac_tables``: [(bits, vals) lum, (bits, vals) chrom] override — the
     progressive encoder ships its EOBn-capable flat table INSTEAD of the
     Annex-K sequential AC tables (which no progressive scan uses)."""
+    nf = 1 if len(qts) == 1 else 3
     out = bytearray(b"\xff\xd8")  # SOI
     out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
     for tid, qt in enumerate(qts):
         out += b"\xff\xdb" + struct.pack(">HB", 67, tid) + bytes(
             int(x) for x in qt[ZIGZAG]
         )
-    out += sof_marker + struct.pack(">HBHHB", 17, 8, h, w, 3)
+    out += sof_marker + struct.pack(">HBHHB", 8 + 3 * nf, 8, h, w, nf)
     y_samp = (sh << 4) | sv  # 0x11 = 4:4:4, 0x22 = 4:2:0
-    for cid, samp, qid in ((1, y_samp, 0), (2, 0x11, 1), (3, 0x11, 1)):
+    for cid, samp, qid in ((1, y_samp, 0), (2, 0x11, 1), (3, 0x11, 1))[:nf]:
         out += bytes([cid, samp, qid])
     ac_lum, ac_chrom = ac_tables or (
         (_AC_LUM_BITS, _AC_LUM_VALS),
@@ -293,7 +305,7 @@ def _headers(
         (0x10, ac_lum),
         (0x01, (_DC_CHROM_BITS, _DC_CHROM_VALS)),
         (0x11, ac_chrom),
-    ):
+    )[: 2 * len(qts)]:
         out += b"\xff\xc4" + struct.pack(">HB", 19 + len(vals), tc_th)
         out += bytes(bits) + bytes(vals)
     return out
@@ -306,7 +318,9 @@ def encode_baseline_jpeg(
     restart_interval: int = 0,
     scan_layout: str = "interleaved",
 ) -> bytes:
-    """Encode an (h, w, 3) uint8 RGB array as baseline JFIF.
+    """Encode an (h, w, 3) uint8 RGB array — or an (h, w) grayscale plane,
+    as a 1-component frame (Nf=1) in one Ns=1 scan, the layout every
+    real-world grayscale JPEG uses — as baseline JFIF.
 
     ``subsampling``: (1, 1) → 4:4:4 (every chroma sample kept — holds the
     40 dB PSNR invariant on noise-heavy content); (2, 2) → 4:2:0 (chroma
@@ -318,9 +332,9 @@ def encode_baseline_jpeg(
     ``scan_layout``: 'interleaved' (one SOS, the common layout) or
     'per_component' (three Ns=1 scans walking each component's OWN block
     raster per T.81 A.2.2 — the layout that exposes non-interleaved
-    decode paths)."""
+    decode paths); a grayscale plane always takes the per-component path."""
     qts, comp_zz, comp_bw, seq = _prepare_components(pixels, quality, subsampling)
-    h, w, _ = pixels.shape
+    h, w = pixels.shape[:2]
     sh, sv = subsampling
 
     tables = [
@@ -370,13 +384,13 @@ def encode_baseline_jpeg(
     if restart_interval:
         out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
 
-    if scan_layout == "per_component":
+    if scan_layout == "per_component" or len(comp_zz) == 1:
         if restart_interval:
             raise NotImplementedError(
                 "restart intervals with per-component sequential scans are "
                 "not emitted (interleaved restarts are)"
             )
-        for ci in range(3):
+        for ci in range(len(comp_zz)):
             tsel = 0x00 if ci == 0 else 0x11
             out += b"\xff\xda" + struct.pack(">HB", 8, 1)
             out += bytes([ci + 1, tsel])
@@ -412,81 +426,6 @@ def encode_baseline_jpeg(
     for cid, tsel in ((1, 0x00), (2, 0x11), (3, 0x11)):
         out += bytes([cid, tsel])
     out += b"\x00\x3f\x00"  # spectral selection 0..63, approx 0
-    out += bw.flush()
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
-
-
-def encode_grayscale_jpeg(pixels: np.ndarray, quality: int = 92) -> bytes:
-    """Encode an (h, w) uint8 grayscale array as a 1-component baseline
-    JFIF (Nf=1; the plane IS Y, no color transform). One Ns=1 scan walking
-    the component's own block raster per T.81 A.2.2 — the layout every
-    real-world grayscale JPEG uses."""
-    assert pixels.ndim == 2 and pixels.dtype == np.uint8
-    h, w = pixels.shape
-    qt = _scaled_qt(_QT_LUM, quality)
-    plane = np.pad(
-        pixels.astype(np.float64), ((0, -h % 8), (0, -w % 8)), mode="edge"
-    )
-    blocks = _to_blocks(plane) - 128.0
-    coefs = np.einsum("ux,nxy,vy->nuv", _D, blocks, _D)
-    quant = np.round(coefs / qt.reshape(8, 8)).astype(np.int32)
-    zzs = quant.reshape(-1, 64)[:, ZIGZAG]
-    np.clip(zzs[:, 1:], -1023, 1023, out=zzs[:, 1:])  # same guard as color
-
-    dc_tbl = _canonical_codes(_DC_LUM_BITS, _DC_LUM_VALS)
-    ac_tbl = _canonical_codes(_AC_LUM_BITS, _AC_LUM_VALS)
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += (
-        b"\xff\xe0"
-        + struct.pack(">H", 16)
-        + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-    )
-    out += b"\xff\xdb" + struct.pack(">HB", 67, 0) + bytes(
-        int(x) for x in qt[ZIGZAG]
-    )
-    out += b"\xff\xc0" + struct.pack(">HBHHB", 11, 8, h, w, 1)
-    out += bytes([1, 0x11, 0])
-    for tc_th, (bits, vals) in (
-        (0x00, (_DC_LUM_BITS, _DC_LUM_VALS)),
-        (0x10, (_AC_LUM_BITS, _AC_LUM_VALS)),
-    ):
-        out += b"\xff\xc4" + struct.pack(">HB", 19 + len(vals), tc_th)
-        out += bytes(bits) + bytes(vals)
-
-    out += b"\xff\xda" + struct.pack(">HB", 8, 1) + bytes([1, 0x00])
-    out += b"\x00\x3f\x00"  # spectral selection 0..63, approx 0
-    bw = _BitWriter()
-    prev_dc = 0
-    for zz in zzs:
-        diff = min(max(int(zz[0]) - prev_dc, -2047), 2047)
-        s, bits = _magnitude(diff)
-        prev_dc += diff
-        code, length = dc_tbl[s]
-        bw.write(code, length)
-        if s:
-            bw.write(bits, s)
-        run = 0
-        nz = np.nonzero(zz[1:])[0]
-        last = nz[-1] + 1 if len(nz) else 0
-        for k in range(1, last + 1):
-            v = int(zz[k])
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                code, length = ac_tbl[0xF0]  # ZRL
-                bw.write(code, length)
-                run -= 16
-            s, bits = _magnitude(v)
-            code, length = ac_tbl[(run << 4) | s]
-            bw.write(code, length)
-            bw.write(bits, s)
-            run = 0
-        if last < 63:
-            code, length = ac_tbl[0x00]  # EOB
-            bw.write(code, length)
     out += bw.flush()
     out += b"\xff\xd9"  # EOI
     return bytes(out)
@@ -549,6 +488,8 @@ def encode_progressive_jpeg(
     so decode(progressive) must produce byte-identical pixels to
     decode(baseline) at the same quality — the round-trip equivalence the
     tests pin."""
+    if pixels.ndim != 3:
+        raise NotImplementedError("progressive grayscale is not encoded")
     qts, comp_zz, comp_bw, seq = _prepare_components(pixels, quality, subsampling)
     h, w, _ = pixels.shape
     sh, sv = subsampling

@@ -21,7 +21,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from . import imagecodec, pngcodec
+from . import imagecodec, jpegcodec, pngcodec
 
 SEED = 20240816
 
@@ -108,7 +108,7 @@ def make_row(i: int, size: int = 24) -> dict:
     data = (
         pngcodec.encode_png(px, filter_strategy="none")
         if fmt == "png"
-        else imagecodec.encode_jpeg(px)  # real baseline JFIF, quality 98
+        else jpegcodec.encode_baseline_jpeg(px, quality=98)
     )
     return {
         "image_id": f"img_{i:08d}",
@@ -133,18 +133,18 @@ def make_row_mixed(i: int, size: int = 24) -> dict:
     if variant == 0:
         fmt, data = "png", pngcodec.encode_png(px, filter_strategy="none")
     elif variant == 1:
-        fmt, data = "jpeg", imagecodec.encode_jpeg(px)
+        fmt, data = "jpeg", jpegcodec.encode_baseline_jpeg(px, quality=98)
     elif variant == 2:
-        from . import jpegcodec
-
         # luma plane per the encoder's own color transform (BT.601)
         luma = np.clip(
             np.round(px.astype(np.float64) @ np.array([0.299, 0.587, 0.114])),
             0, 255,
         ).astype(np.uint8)
-        fmt, data = "jpeg", jpegcodec.encode_grayscale_jpeg(luma, 98)
+        fmt, data = "jpeg", jpegcodec.encode_baseline_jpeg(luma, quality=98)
     elif variant == 3:
-        fmt, data = "jpeg", imagecodec.encode_jpeg(px, subsampling=(2, 2))
+        fmt, data = "jpeg", jpegcodec.encode_baseline_jpeg(
+            px, quality=98, subsampling=(2, 2)
+        )
     elif variant == 4:
         from . import gifcodec
 

@@ -52,6 +52,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from . import riff
+
 # ---------------------------------------------------------------------------
 # RFC 6386 constant tables
 # ---------------------------------------------------------------------------
@@ -1196,15 +1198,6 @@ class BoolEncoder:
         for i in range(n - 1, -1, -1):
             self.put((v >> i) & 1, 128)
 
-    def flag_signed(self, v: int, n: int):
-        """write_flag + magnitude/sign used by header deltas."""
-        if v == 0:
-            self.put(0, 128)
-        else:
-            self.put(1, 128)
-            self.literal(abs(v), n)
-            self.put(1 if v < 0 else 0, 128)
-
     def tree(self, tree_, probs, value, start: int = 0):
         """Encode `value` (a leaf, i.e. -token) along the tree path."""
         # find path by walking: depth-first search
@@ -1701,12 +1694,7 @@ def encode_webp_vp8(
         y, u, v, qi=qi, allow_bpred=allow_bpred,
         log2_parts=log2_parts, use_skip=use_skip,
     )
-    vp8 = enc.encode()
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return tag + len(body).to_bytes(4, "little") + body + (
-            b"\x00" if len(body) % 2 else b""
-        )
+    body = riff.chunk(b"VP8 ", enc.encode())
 
     ih, iw = pixels.shape[:2]
     has_alpha = pixels.shape[2] == 4 and bool((pixels[..., 3] != 255).any())
@@ -1717,12 +1705,5 @@ def encode_webp_vp8(
             + (iw - 1).to_bytes(3, "little")
             + (ih - 1).to_bytes(3, "little")
         )
-        body = (
-            b"WEBP"
-            + chunk(b"VP8X", vp8x)
-            + chunk(b"ALPH", alph)
-            + chunk(b"VP8 ", vp8)
-        )
-    else:
-        body = b"WEBP" + chunk(b"VP8 ", vp8)
-    return b"RIFF" + len(body).to_bytes(4, "little") + body
+        body = riff.chunk(b"VP8X", vp8x) + riff.chunk(b"ALPH", alph) + body
+    return riff.form(b"WEBP", body)

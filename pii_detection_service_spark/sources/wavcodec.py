@@ -1,7 +1,10 @@
 """Pure-Python WAV (RIFF) codec — the audio leg of the multimodal
 binary-column family. Like jpegcodec.py this is a REAL container format:
 output plays in any audio tool, and the decoder parses the chunk layout
-from the file rather than assuming it.
+from the file rather than assuming it. Chunks are packed and walked by
+``riff.py``: an odd-length ``data`` chunk gets its pad byte, and a wrong
+form type, a chunk cut short, or a missing fmt/data chunk raises
+ValueError instead of returning part of the clip.
 
 Supported encodings (both directions):
 - PCM 16-bit (audioFormat 1, bits 16) — the canonical in-memory form;
@@ -22,6 +25,8 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+
+from . import riff
 
 # --- G.711 companders -------------------------------------------------------
 # Vectorized transliterations of the CCITT reference implementation (the
@@ -108,31 +113,21 @@ def encode_wav(
     fmt = struct.pack(
         "<HHIIHH", tag, n_channels, sample_rate, byte_rate, block_align, bits
     )
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return riff.form(b"WAVE", riff.chunk(b"fmt ", fmt) + riff.chunk(b"data", data))
 
 
 def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
     """Decode a WAV file to (int16 samples [(n,) or (n, 2)], sample_rate).
     Walks the chunk chain (extra chunks like LIST/INFO are skipped)."""
-    assert data[:4] == b"RIFF" and data[8:12] == b"WAVE", "not a RIFF/WAVE file"
-    pos = 12
     fmt = None
     raw = None
-    while pos + 8 <= len(data):
-        tag = data[pos : pos + 4]
-        (ln,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        payload = data[pos + 8 : pos + 8 + ln]
+    for tag, payload in riff.read(data, b"WAVE"):
         if tag == b"fmt ":
             fmt = struct.unpack("<HHIIHH", payload[:16])
         elif tag == b"data":
             raw = payload
-        pos += 8 + ln + (ln & 1)  # chunks are word-aligned
-    assert fmt is not None and raw is not None, "missing fmt/data chunk"
+    if fmt is None or raw is None:
+        raise ValueError("missing fmt/data chunk")
     audio_format, n_channels, sample_rate, _, _, bits = fmt
     if audio_format == _FMT_PCM and bits == 16:
         samples = np.frombuffer(raw, dtype="<i2").copy()

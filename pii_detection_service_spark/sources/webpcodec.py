@@ -5,7 +5,9 @@ WebP is the highest-volume crawl container this repo did not read yet
 (JPEG/PNG/GIF/BMP are covered by their own codecs). This module decodes
 the complete VP8L feature set a lossless crawl file can use:
 
-- RIFF container: bare ``VP8L`` and extended ``VP8X`` layouts.
+- RIFF container: bare ``VP8L`` and extended ``VP8X`` layouts. Chunks
+  are packed and walked by ``riff.py``; a wrong form type or a chunk cut
+  short raises ValueError.
 - LSB-first bitstream; canonical prefix codes read MSB-first (DEFLATE
   convention), both "simple" (1-2 symbol) and normal (code-length-coded)
   Huffman headers, the 19-symbol code-length code with order
@@ -46,9 +48,9 @@ invariant over crawl-shaped inputs.
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
+
+from . import riff
 
 # ---------------------------------------------------------------------------
 # Spec tables
@@ -788,20 +790,12 @@ def decode_webp_frames(data: bytes) -> list[tuple[np.ndarray, int]]:
     VP8L way — an encoder fabricates ANMF layouts (lossless frame
     payloads → exact pixels by construction) and tests assert the spec's
     blend/disposal semantics on planted frame stacks."""
-    if data[:4] != b"RIFF" or data[8:12] != b"WEBP":
-        raise ValueError("not a WebP (RIFF) file")
-    pos = 12
     canvas_w = canvas_h = None
     bg = np.zeros(4, np.uint8)
     frames: list[tuple[np.ndarray, int]] = []
     canvas = None
     saw_anim = False
-    while pos + 8 <= len(data):
-        tag = data[pos : pos + 4]
-        size = struct.unpack_from("<I", data, pos + 4)[0]
-        payload = data[pos + 8 : pos + 8 + size]
-        if len(payload) < size:
-            raise ValueError("truncated WebP chunk")
+    for tag, payload in riff.read(data, b"WEBP"):
         if tag == b"VP8X":
             canvas_w = int.from_bytes(payload[4:7], "little") + 1
             canvas_h = int.from_bytes(payload[7:10], "little") + 1
@@ -828,15 +822,13 @@ def decode_webp_frames(data: bytes) -> list[tuple[np.ndarray, int]]:
             no_blend = bool(flags & 2)
             if fx + fw > canvas_w or fy + fh > canvas_h:
                 raise ValueError("ANMF frame exceeds canvas")
-            px = decode_webp(b"RIFF" + (4 + len(payload[16:])).to_bytes(4, "little")
-                             + b"WEBP" + payload[16:])
+            px = _decode_image_chunks(riff.chunks(payload, 16))
             if px.shape[:2] != (fh, fw):
                 raise ValueError("ANMF frame dims disagree with its payload")
             _blend_rect(canvas, px, fx, fy, blend=not no_blend)
             frames.append((canvas.copy(), dur))
             if dispose_bg:
                 canvas[fy : fy + fh, fx : fx + fw] = bg
-        pos += 8 + size + (size & 1)
     if saw_anim:
         if not frames:
             raise ValueError("animated WebP with no ANMF frames")
@@ -855,11 +847,6 @@ def encode_webp_anim(
     duration_ms, blend, dispose_bg); frame payloads use the LOSSLESS
     encoder so composited pixels are exact by construction."""
 
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return tag + len(body).to_bytes(4, "little") + body + (
-            b"\x00" if len(body) % 2 else b""
-        )
-
     vp8x = (
         bytes([0x12, 0, 0, 0])  # flags: animation + alpha
         + (canvas_w - 1).to_bytes(3, "little")
@@ -867,7 +854,7 @@ def encode_webp_anim(
     )
     r, g, b, a = bg_rgba
     anim = bytes([b, g, r, a]) + loop_count.to_bytes(2, "little")
-    out = chunk(b"VP8X", vp8x) + chunk(b"ANIM", anim)
+    out = riff.chunk(b"VP8X", vp8x) + riff.chunk(b"ANIM", anim)
     for rgba, x, y, dur, blend, dispose_bg in frames:
         if x % 2 or y % 2:
             raise ValueError("ANMF offsets are stored halved: use even x/y")
@@ -882,23 +869,20 @@ def encode_webp_anim(
             + bytes([(0 if blend else 2) | (1 if dispose_bg else 0)])
             + sub[12:]  # the image chunks, container header stripped
         )
-        out += chunk(b"ANMF", payload)
-    body = b"WEBP" + out
-    return b"RIFF" + len(body).to_bytes(4, "little") + body
+        out += riff.chunk(b"ANMF", payload)
+    return riff.form(b"WEBP", out)
 
 
 def decode_webp(data: bytes) -> np.ndarray:
-    """WebP container → uint8 (h, w, 4) RGBA (lossless files only)."""
-    if data[:4] != b"RIFF" or data[8:12] != b"WEBP":
-        raise ValueError("not a WebP (RIFF) file")
-    pos = 12
+    """WebP container → uint8 (h, w, 4) RGBA (lossless VP8L or lossy VP8)."""
+    return _decode_image_chunks(riff.read(data, b"WEBP"))
+
+
+def _decode_image_chunks(chunks) -> np.ndarray:
+    """The image of one (tag, payload) chunk sequence — a file's top level
+    or the chunks inside an ANMF frame."""
     alpha_payload = None
-    while pos + 8 <= len(data):
-        tag = data[pos : pos + 4]
-        size = struct.unpack_from("<I", data, pos + 4)[0]
-        payload = data[pos + 8 : pos + 8 + size]
-        if len(payload) < size:
-            raise ValueError("truncated WebP chunk")
+    for tag, payload in chunks:
         if tag == b"ALPH":
             # lossy-with-alpha (VP8X layout): alpha plane rides its own
             # chunk ahead of the VP8 image chunk
@@ -916,7 +900,6 @@ def decode_webp(data: bytes) -> np.ndarray:
                 px[:, :, 3] = decode_alpha(alpha_payload, w, h)
             return px
         # VP8X and metadata chunks: keep scanning for the image chunk
-        pos += 8 + size + (size & 1)
     raise ValueError("no image chunk in WebP container")
 
 
@@ -1329,7 +1312,4 @@ def encode_webp_lossless(
     )
 
     payload = b"\x2f" + bw.bytes()
-    chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
-    if len(payload) & 1:
-        chunk += b"\x00"
-    return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
+    return riff.form(b"WEBP", riff.chunk(b"VP8L", payload))

@@ -30,6 +30,29 @@ def test_container_is_real_riff_and_extra_chunks_skipped():
     spliced = data[:fmt_end] + extra + data[fmt_end:]
     out, _ = wavcodec.decode_wav(spliced)
     assert np.array_equal(out, wavcodec.synth_clip(1))
+    # odd-length data chunks (8-bit / companded, odd sample count) carry
+    # their pad byte, and the RIFF size covers it
+    s = wavcodec.synth_clip(1)[:101]
+    for enc in ("pcm8", "ulaw", "alaw"):
+        odd = wavcodec.encode_wav(s, encoding=enc)
+        assert len(odd) == 12 + (8 + 16) + (8 + 101 + 1)
+        (riff_len,) = struct.unpack("<I", odd[4:8])
+        assert riff_len == len(odd) - 8 and odd[-1] == 0
+        assert len(wavcodec.decode_wav(odd)[0]) == 101
+        # and an odd chunk ahead of data is skipped word-aligned
+        junk = b"JUNK" + struct.pack("<I", 3) + b"abc\x00"
+        out, _ = wavcodec.decode_wav(odd[:fmt_end] + junk + odd[fmt_end:])
+        assert len(out) == 101
+
+
+def test_truncated_or_foreign_wav_raises():
+    data = wavcodec.encode_wav(wavcodec.synth_clip(1)[:1000])
+    with pytest.raises(ValueError, match="truncated"):
+        wavcodec.decode_wav(data[:-300])  # cut inside the data chunk
+    with pytest.raises(ValueError, match="not a RIFF/WAVE"):
+        wavcodec.decode_wav(data[:8] + b"AVI " + data[12:])
+    with pytest.raises(ValueError, match="missing fmt/data"):
+        wavcodec.decode_wav(data[:36])  # fmt only
 
 
 def test_non_pcm_raises_honestly():
@@ -58,6 +81,19 @@ def test_audio_stats_match_numpy_reference(spark):
     assert got["aud_00000007"]["silence_frac"] > 0.3  # silent tail
     assert got["aud_00000011"]["clip_frac"] > 0.05  # saturated clip
     assert got["aud_00000001"]["clip_frac"] == 0.0
+
+
+def test_audio_stats_propagates_decode_errors(spark):
+    """A clip that cannot be decoded fails the query — a truncated WAV is
+    not reported as a shorter clip, as a non-PCM one is not skipped."""
+    from pii_detection_service_spark.operators import multimodal
+
+    data = wavcodec.encode_wav(wavcodec.synth_clip(4))
+    df = spark.createDataFrame(
+        [("aud_ok", data), ("aud_cut", data[:-300])], "audio_id string, bytes binary"
+    )
+    with pytest.raises(Exception, match="truncated"):
+        multimodal.audio_stats(df).collect()
 
 
 def test_audio_features_band_energies(spark):

@@ -15,7 +15,7 @@ import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from pii_detection_service_spark.sources import gifcodec, imagecodec
+from pii_detection_service_spark.sources import gifcodec, imagecodec, pngcodec
 
 
 def _solid(h, w, rgb):
@@ -312,5 +312,5 @@ def test_spark_sample_frames_gif(spark):
     # sampled frames are standalone PNGs matching the composited frame
     ref = gifcodec.decode_gif_frames(gif)
     for r in out:
-        got = imagecodec.decode_png(bytes(r.frame_bytes))
+        got = pngcodec.decode_png(bytes(r.frame_bytes))
         assert np.array_equal(got, ref[r.frame_idx])

@@ -8,7 +8,7 @@ from pii_detection_service_spark.sources import imagecodec, pngcodec, synth
 def test_png_roundtrip_lossless():
     rng = np.random.default_rng(7)
     px = rng.integers(0, 256, (17, 23, 3), dtype=np.uint8)
-    out = imagecodec.decode_png(pngcodec.encode_png(px, filter_strategy="none"))
+    out = pngcodec.decode_png(pngcodec.encode_png(px, filter_strategy="none"))
     assert np.array_equal(px, out)
     assert imagecodec.psnr(px, out) == float("inf")
 

@@ -100,7 +100,7 @@ def test_progressive_container_structure():
 
 def test_imagecodec_dispatch_real_jpeg():
     px = synth.pixels_for(4)
-    real = imagecodec.encode_jpeg(px)
+    real = jpegcodec.encode_baseline_jpeg(px, 98)
     assert real[:2] == b"\xff\xd8"
     assert imagecodec.psnr(px, imagecodec.decode(real, "jpeg")) >= 40.0
     with pytest.raises(ValueError, match="SOI"):
@@ -235,7 +235,7 @@ def test_grayscale_roundtrip_holds_psnr_invariant():
     for i, size in ((0, 32), (1, 37), (2, 29), (3, 64)):
         rng = np.random.default_rng(1000 + i)
         px = rng.integers(0, 256, (size, size), dtype=np.uint8)
-        data = jpegcodec.encode_grayscale_jpeg(px, 98)
+        data = jpegcodec.encode_baseline_jpeg(px, 98)
         out = jpegcodec.decode_baseline_jpeg(data)
         assert out.shape == (size, size) and out.dtype == np.uint8
         mse = float(np.mean((px.astype(np.float64) - out) ** 2))
@@ -247,7 +247,7 @@ def test_grayscale_container_structure():
     """The grayscale stream must be a real 1-component JFIF: Nf=1 in SOF0,
     exactly one DQT and two DHTs (DC+AC lum), one Ns=1 SOS."""
     px = np.random.default_rng(9).integers(0, 256, (24, 24), dtype=np.uint8)
-    data = jpegcodec.encode_grayscale_jpeg(px, 92)
+    data = jpegcodec.encode_baseline_jpeg(px, 92)
     assert data[:2] == b"\xff\xd8" and data[-2:] == b"\xff\xd9"
     i = data.index(b"\xff\xc0")
     ln, prec, h, w, nc = struct.unpack(">HBHHB", data[i + 2 : i + 10])
@@ -258,8 +258,8 @@ def test_grayscale_container_structure():
 
 def test_grayscale_quality_monotone():
     px = np.random.default_rng(11).integers(0, 256, (40, 40), dtype=np.uint8)
-    lo = jpegcodec.encode_grayscale_jpeg(px, 50)
-    hi = jpegcodec.encode_grayscale_jpeg(px, 98)
+    lo = jpegcodec.encode_baseline_jpeg(px, 50)
+    hi = jpegcodec.encode_baseline_jpeg(px, 98)
     assert len(lo) < len(hi)
     err = lambda d: float(
         np.mean((px.astype(np.float64) - jpegcodec.decode_baseline_jpeg(d)) ** 2)
@@ -273,7 +273,7 @@ def test_grayscale_matches_color_luma_path():
     paths run the same DCT/quant/Huffman pipeline over the same samples."""
     rng = np.random.default_rng(21)
     y = rng.integers(0, 256, (32, 32), dtype=np.uint8)
-    gray_dec = jpegcodec.decode_jpeg_luma(jpegcodec.encode_grayscale_jpeg(y, 95))
+    gray_dec = jpegcodec.decode_jpeg_luma(jpegcodec.encode_baseline_jpeg(y, 95))
     # color image whose YCbCr transform yields exactly (y, 128, 128): R=G=B=y
     px = np.repeat(y[..., None], 3, axis=-1)
     color_dec = jpegcodec.decode_jpeg_luma(

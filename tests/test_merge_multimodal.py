@@ -8,7 +8,7 @@ import pytest
 
 from pii_detection_service_spark.functions import textref
 from pii_detection_service_spark.operators import merge, multimodal
-from pii_detection_service_spark.sources import imagecodec, synth
+from pii_detection_service_spark.sources import pngcodec, synth
 
 
 def test_merge_update_point_semantics(spark):
@@ -87,7 +87,7 @@ def test_extract_features_deterministic(spark, img_df):
 def test_resize_roundtrip(spark, img_df):
     out = multimodal.resize(img_df, 8).collect()
     for r in out[:5]:
-        px = imagecodec.decode_png(bytes(r["bytes"]))
+        px = pngcodec.decode_png(bytes(r["bytes"]))
         assert px.shape == (8, 8, 3)
 
 

@@ -245,7 +245,7 @@ def test_legacy_filter0_output_still_decodes():
     rng = np.random.default_rng(7)
     px = rng.integers(0, 256, (24, 24, 3), np.uint8)
     legacy = pngcodec.encode_png(px, filter_strategy="none")  # corpus bytes
-    assert np.array_equal(imagecodec.decode_png(legacy), px)
+    assert np.array_equal(imagecodec.decode(legacy, "png"), px)
     assert np.array_equal(pngcodec.decode_png(legacy), px)
     # the synth corpus layout, byte for byte: 8-bit RGB IHDR, filter byte 0
     # per scanline, one zlib level-6 IDAT, IEND

@@ -217,7 +217,7 @@ def test_grayscale_jpeg_roundtrip_any_shape(h, w, seed):
 
     rng = np.random.default_rng(seed)
     px = rng.integers(0, 256, (h, w), dtype=np.uint8)
-    out = jpegcodec.decode_baseline_jpeg(jpegcodec.encode_grayscale_jpeg(px, 98))
+    out = jpegcodec.decode_baseline_jpeg(jpegcodec.encode_baseline_jpeg(px, 98))
     assert out.shape == (h, w) and out.dtype == np.uint8
     mse = float(np.mean((px.astype(np.float64) - out) ** 2))
     psnr = 10.0 * np.log10(255.0**2 / mse) if mse else float("inf")

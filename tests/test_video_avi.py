@@ -32,6 +32,15 @@ def test_avi_container_structure():
     jpeg = avi[i + 8 : i + 8 + ln]
     assert jpeg[:2] == b"\xff\xd8"
     assert jpegcodec.decode_baseline_jpeg(jpeg).shape == (24, 24, 3)
+    # this clip's first frame is odd-length: one zero pad byte, then the
+    # next frame chunk starts word-aligned
+    assert ln % 2 == 1 and len(avi) % 2 == 0
+    assert avi[i + 8 + ln] == 0 and avi[i + 9 + ln : i + 13 + ln] == b"00dc"
+    # an odd-length chunk the encoder never writes is skipped by the reader
+    junk = b"JUNK" + struct.pack("<I", 3) + b"abc\x00"
+    spliced = avi[:12] + junk + avi[12:]
+    spliced = spliced[:4] + struct.pack("<I", len(spliced) - 8) + spliced[8:]
+    assert avicodec.mjpeg_payloads(spliced) == avicodec.mjpeg_payloads(avi)
 
 
 def test_non_mjpeg_compression_raises():
@@ -41,6 +50,34 @@ def test_non_mjpeg_compression_raises():
     avi[i + 8 + 16 : i + 8 + 20] = b"H264"
     with pytest.raises(NotImplementedError, match="MJPEG"):
         avicodec.decode_avi_mjpeg(bytes(avi))
+
+
+def test_truncated_or_foreign_avi_raises():
+    avi = avicodec.encode_avi_mjpeg(avicodec.synth_video(2, n_frames=6))
+    with pytest.raises(ValueError, match="truncated"):
+        avicodec.decode_avi_mjpeg(avi[:-400])
+    with pytest.raises(ValueError, match="not a RIFF/AVI"):
+        avicodec.decode_avi_mjpeg(b"RIFF" + avi[4:8] + b"WAVE" + avi[12:])
+
+
+def _xvid(avi: bytes) -> bytes:
+    out = bytearray(avi)
+    i = avi.index(b"strf")
+    out[i + 8 + 16 : i + 8 + 20] = b"XVID"  # biCompression
+    return bytes(out)
+
+
+def test_sample_frames_refuses_what_the_decoder_refuses(spark):
+    """Frame sampling walks the same container code as the decoder: a
+    non-MJPEG stream and a cut-short file both raise instead of emitting
+    frames (a truncated last frame would be a short, corrupt JPEG)."""
+    from pii_detection_service_spark.operators import multimodal
+
+    avi = avicodec.encode_avi_mjpeg(avicodec.synth_video(3, n_frames=6))
+    for bad, match in ((_xvid(avi), "MJPEG"), (avi[:-400], "truncated")):
+        df = spark.createDataFrame([("v", bad)], "image_id string, bytes binary")
+        with pytest.raises(Exception, match=match):
+            multimodal.sample_frames(df, every=1).collect()
 
 
 def test_spark_sample_frames_over_real_avi(spark):

@@ -294,7 +294,7 @@ def test_lossy_vp8_dispatches_and_interframe_stays_an_honest_seam():
 
 
 def test_not_riff_raises():
-    with pytest.raises(ValueError, match="not a WebP"):
+    with pytest.raises(ValueError, match="not a RIFF/WEBP"):
         wc.decode_webp(b"\x89PNG" + bytes(20))
 
 
@@ -458,7 +458,7 @@ def test_animated_webp_torn_contracts():
 
 def test_sample_frames_over_animated_webp(spark):
     from pii_detection_service_spark.operators import multimodal
-    from pii_detection_service_spark.sources import imagecodec
+    from pii_detection_service_spark.sources import pngcodec
 
     cw, ch, f1, f2, _ = _anim_frames()
     data = wc.encode_webp_anim(
@@ -470,5 +470,5 @@ def test_sample_frames_over_animated_webp(spark):
                                "image_id string, bytes binary")
     got = multimodal.sample_frames(df, every=2).collect()
     assert [r["frame_idx"] for r in got] == [0, 2]
-    px = imagecodec.decode_png(bytes(got[0]["frame_bytes"]))
+    px = pngcodec.decode_png(bytes(got[0]["frame_bytes"]))
     assert np.array_equal(px[..., :3], f1[..., :3])
