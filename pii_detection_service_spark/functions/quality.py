@@ -356,11 +356,16 @@ MAX_PERPLEXITY = 1000.0  # tiny seed LM → high absolute ppl; mash scores ~5000
 ALLOWED_LANGS = frozenset({"en", "es", "de", "fr"})
 
 _NON_WORD_RE = re.compile(r"[^\w\s]")
+# The ASCII characters _NON_WORD_RE matches, as a str.translate table that
+# deletes them: on ASCII text the count is the length the deletion removes.
+_ASCII_SYMBOLS = dict.fromkeys(c for c in range(128) if _NON_WORD_RE.match(chr(c)))
 
 
 def symbol_ratio(text: str) -> float:
     if not text:
         return 1.0
+    if text.isascii():
+        return (len(text) - len(text.translate(_ASCII_SYMBOLS))) / len(text)
     return len(_NON_WORD_RE.findall(text)) / len(text)
 
 

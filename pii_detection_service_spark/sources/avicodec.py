@@ -88,6 +88,8 @@ def mjpeg_payloads(data: bytes) -> tuple[list[bytes], int]:
             if tag == b"LIST":
                 walk(riff.chunks(payload, 4))  # skip the list type fourcc
             elif tag == b"avih":
+                if len(payload) < 4:
+                    raise ValueError(f"avih chunk of {len(payload)} bytes, need 4")
                 # dwMicroSecPerFrame == 0 in a foreign/corrupt AVI must not
                 # ZeroDivisionError past the codec's honest-seam contract
                 uspf = struct.unpack_from("<I", payload)[0]

@@ -333,6 +333,8 @@ def encode_baseline_jpeg(
     'per_component' (three Ns=1 scans walking each component's OWN block
     raster per T.81 A.2.2 — the layout that exposes non-interleaved
     decode paths); a grayscale plane always takes the per-component path."""
+    if scan_layout not in ("interleaved", "per_component"):
+        raise ValueError(f"scan_layout {scan_layout!r}: 'interleaved' or 'per_component'")
     qts, comp_zz, comp_bw, seq = _prepare_components(pixels, quality, subsampling)
     h, w = pixels.shape[:2]
     sh, sv = subsampling

@@ -123,6 +123,8 @@ def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
     raw = None
     for tag, payload in riff.read(data, b"WAVE"):
         if tag == b"fmt ":
+            if len(payload) < 16:
+                raise ValueError(f"fmt chunk of {len(payload)} bytes, need 16")
             fmt = struct.unpack("<HHIIHH", payload[:16])
         elif tag == b"data":
             raw = payload

@@ -7,7 +7,7 @@ import struct
 import numpy as np
 import pytest
 
-from pii_detection_service_spark.sources import wavcodec
+from pii_detection_service_spark.sources import riff, wavcodec
 
 
 def test_pcm_roundtrip_lossless_mono_and_stereo():
@@ -53,6 +53,12 @@ def test_truncated_or_foreign_wav_raises():
         wavcodec.decode_wav(data[:8] + b"AVI " + data[12:])
     with pytest.raises(ValueError, match="missing fmt/data"):
         wavcodec.decode_wav(data[:36])  # fmt only
+    # a whole chunk too short for its fields: fmt needs 16 bytes
+    short_fmt = riff.form(
+        b"WAVE", riff.chunk(b"fmt ", b"\x01\x00\x01\x00") + riff.chunk(b"data", b"\x00\x00")
+    )
+    with pytest.raises(ValueError, match="fmt chunk of 4 bytes"):
+        wavcodec.decode_wav(short_fmt)
 
 
 def test_non_pcm_raises_honestly():

@@ -227,6 +227,13 @@ def test_per_component_sequential_scans_decode_identically():
             assert np.array_equal(ref, got), (i, sub)
 
 
+def test_unknown_scan_layout_raises():
+    px = np.zeros((8, 8, 3), np.uint8)
+    for layout in ("bogus", "Interleaved", ""):
+        with pytest.raises(ValueError, match="scan_layout"):
+            jpegcodec.encode_baseline_jpeg(px, scan_layout=layout)
+
+
 def test_grayscale_roundtrip_holds_psnr_invariant():
     """1-component streams (the most common real-corpus variant after
     4:2:0 color) must round-trip uniform noise at the 40 dB invariant,

@@ -2,8 +2,10 @@
 semantics — the invariants that must hold for ANY input, beyond the golden
 fixtures."""
 
+import re
 import string
 
+import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
@@ -248,6 +250,88 @@ def test_email_scan_equals_email_re(text):
     assert got == want
 
 
+# Adversarial pieces for the charset-led scan forms: digits (ASCII and
+# non-ASCII '\u0661\u0662\u0663', which \d matches), phone prefixes and
+# separators, ID lead-ins, handle edges ('x@', '.@', 'wu/' — a word
+# character or '.' before the handle), capitals and street words for
+# addresses, and case-fold homoglyphs ('\u017f', U+212A).
+scan_pieces = st.lists(
+    st.sampled_from(
+        [
+            "1", "9", "0", "123", "1234", "5678", "\u0661\u0662\u0663", "+1 ",
+            "+", "(", "(555) ", ")", "-", ".", " ", "_", "1-", "AB-", "Ab-",
+            "A", "Z", "x@", ".@", "@", "@ab", "u/", "wu/", "u", "/", "abc",
+            "x", "\u00e9", "\u017f", "\u212a", "12 ", "Main ", "Elm ", "St",
+            "Street", "Ave.", "\n",
+        ]
+    ),
+    max_size=25,
+).map("".join)
+
+SCAN_FORMS = [
+    ("ID_NUM", tagger.ID_RE, tagger._ID_SCAN),
+    ("PHONE_NUM", tagger.PHONE_RE, tagger._PHONE_SCAN),
+    ("STREET_ADDRESS", tagger.ADDRESS_RE, tagger._ADDRESS_SCAN),
+    ("USERNAME", tagger.USERNAME_RE, tagger._USERNAME_SCAN),
+]
+
+
+@pytest.mark.parametrize("spec, scan", [f[1:] for f in SCAN_FORMS], ids=[f[0] for f in SCAN_FORMS])
+@given(text=scan_pieces)
+@settings(max_examples=400, deadline=None)
+@example(text="+1 (555) 123-4567 AB-1234567 12 Main Street x@abc wu/abc u/abc")
+@example(text="\u0661\u0662\u0663-45-6789 1-800-555-1234 .@abc 1234567890")
+def test_scan_form_equals_spec_regex(spec, scan, text):
+    """Each charset-led scan form finds exactly the spec regex's finditer
+    spans, and matches where the spec matches at every position."""
+    assert [m.span() for m in scan.finditer(text)] == [m.span() for m in spec.finditer(text)]
+    for pos in range(len(text)):
+        want, got = spec.match(text, pos), scan.match(text, pos)
+        assert (got and got.span()) == (want and want.span())
+
+
+def _peel_loop_tokens(text):
+    """Reference tokenizer: each whitespace word, with trailing punctuation
+    peeled one character at a time unless the word is an abbreviation."""
+    out = []
+    for m in re.finditer(r"\S+", text):
+        s, me = m.span()
+        e = me
+        while e - s > 1 and text[e - 1] in tagger.TRAILING_PUNCT:
+            if text[s:e] in tagger.ABBREVIATIONS:
+                break
+            e -= 1
+        out.append((text[s:e], s, e))
+        out.extend((text[i], i, i + 1) for i in range(e, me))
+    return out
+
+
+token_pieces = st.lists(
+    st.sampled_from(
+        ["Dr.", "Mrs.", "St.,", "etc..", "vs.x", "XDr.", ".Dr", "...", "!?", ".",
+         ",", ";", "a", "A", "x.y", "a.b.", "\u00e9", " ", " ", "  ", "\t", "\n",
+         "\x1c", "\u00a0"]
+    ),
+    max_size=20,
+).map("".join)
+
+
+@given(st.one_of(token_pieces, st.text(max_size=60)))
+@settings(max_examples=500, deadline=None)
+@example("Dr. Robert Smith, Mrs.. etc..! ... now.")
+def test_word_tokenize_equals_peel_loop(text):
+    assert tagger.word_tokenize(text) == _peel_loop_tokens(text)
+
+
+@given(st.one_of(st.text(alphabet=st.characters(max_codepoint=127)), st.text()))
+@settings(max_examples=500, deadline=None)
+@example("\x1c\x7f_$ a.b")
+def test_symbol_ratio_equals_non_word_count(text):
+    """The ASCII translate count and the regex count agree on every text."""
+    want = len(quality._NON_WORD_RE.findall(text)) / len(text) if text else 1.0
+    assert quality.symbol_ratio(text) == want
+
+
 def _all_pairs_spans(text, gazetteer=tagger.FIRST_NAMES):
     """Reference span claims: every class's spec regex in precedence order
     (EMAIL_RE itself, not the linear scan), each candidate tested against
@@ -263,7 +347,7 @@ def _all_pairs_spans(text, gazetteer=tagger.FIRST_NAMES):
         for m in pat.finditer(text):
             if free(*m.span(), spans):
                 spans.append((*m.span(), cls))
-    toks = tagger.word_tokenize(text)
+    toks = _peel_loop_tokens(text)
     i = 0
     while i < len(toks):
         w, ts, te = toks[i]
@@ -291,6 +375,25 @@ def _all_pairs_spans(text, gazetteer=tagger.FIRST_NAMES):
         if free(m.start(), m.end(), spans)
     ]
     return sorted(spans), toxic
+
+
+def _walk_labels(toks, spans):
+    """Reference BIO labels: walk every token, label it with the first span
+    it overlaps; I- when the previous labeled token had the same span."""
+    labels = ["O"] * len(toks)
+    si, prev_span = 0, -1
+    for ti, (_, tstart, tend) in enumerate(toks):
+        while si < len(spans) and spans[si][1] <= tstart:
+            si += 1
+        if si < len(spans):
+            s, e, cls = spans[si]
+            if tstart < e and tend > s:
+                if si != prev_span or cls in tagger._NO_I:
+                    labels[ti] = "B-" + cls
+                else:
+                    labels[ti] = "I-" + cls
+                prev_span = si
+    return labels
 
 
 # Pieces every span class can fire on, joined with no separator as often
@@ -321,10 +424,11 @@ def test_span_claims_equal_all_pairs_rule(text):
     all-pairs overlap rule does, for PII and for toxic matches."""
     pii, toxic = _all_pairs_spans(text)
     assert tagger.find_pii_spans(text) == pii
-    _, _, scrubbed, n_pii, n_toxic = tagger.tag_and_scrub(text)
+    _, labels, scrubbed, n_pii, n_toxic = tagger.tag_and_scrub(text)
     assert (scrubbed, n_pii, n_toxic) == (
         tagger._splice(text, sorted(pii + toxic)),
         len(pii),
         len(toxic),
     )
+    assert labels == _walk_labels(_peel_loop_tokens(text), pii)
 

@@ -174,8 +174,10 @@ def test_non_ascii_capital_name_tagged_without_ascii_capital():
         ("415-555-9876 ", 400),
         ("http://a.co/x ", 400),
         ("damn 12345678 ", 400),
+        ("12 Main St ", 400),
+        ("u/abc ", 1_000),
     ],
-    ids=["email", "id", "handle", "phone", "url", "toxic_beside_id"],
+    ids=["email", "id", "handle", "phone", "url", "toxic_beside_id", "address", "reddit_handle"],
 )
 def test_tag_time_grows_linearly(unit, reps):
     """A hostile span-dense caption must not stall a task: tagging 10x the

@@ -6,7 +6,7 @@ import struct
 import numpy as np
 import pytest
 
-from pii_detection_service_spark.sources import avicodec, imagecodec, jpegcodec
+from pii_detection_service_spark.sources import avicodec, imagecodec, jpegcodec, riff
 
 
 def test_avi_roundtrip_frames_and_fps():
@@ -58,6 +58,10 @@ def test_truncated_or_foreign_avi_raises():
         avicodec.decode_avi_mjpeg(avi[:-400])
     with pytest.raises(ValueError, match="not a RIFF/AVI"):
         avicodec.decode_avi_mjpeg(b"RIFF" + avi[4:8] + b"WAVE" + avi[12:])
+    # a whole chunk too short for its fields: avih needs 4 bytes
+    short_avih = riff.form(b"AVI ", riff.chunk(b"LIST", b"hdrl" + riff.chunk(b"avih", b"\x00\x00")))
+    with pytest.raises(ValueError, match="avih chunk of 2 bytes"):
+        avicodec.mjpeg_payloads(short_avih)
 
 
 def _xvid(avi: bytes) -> bytes:
