@@ -277,9 +277,15 @@ def ivf_learned_search(
         / (F.expr(_NORM.format(u="v")) * F.expr(_NORM.format(u=qarr))),
         4,
     )
+    # The probe filter reads ``cell`` from a generator's output, which
+    # Catalyst cannot push a filter below; filtered on the projected
+    # ``cell``, it would inline the 8 distance folds into the filter and
+    # the projection would compute them again for every probed row.
+    probed = with_cell(e).select(
+        "vec_id", "v", F.explode(F.array("cell")).alias("cell")
+    )
     return (
-        with_cell(e)
-        .where(F.col("cell").isin(probe) & (F.col("vec_id") != query_vec_id))
+        probed.where(F.col("cell").isin(probe) & (F.col("vec_id") != query_vec_id))
         .select("vec_id", F.col("cell").cast("bigint").alias("cell"), cos.alias("cos"))
         .orderBy(F.col("cos").desc(), "vec_id")
         .limit(10)

@@ -6,13 +6,15 @@ metrics → resume by filtering out the buckets completed lineage records.
 
 Scale design notes (the part that must survive 1000 executors / 100 TB):
 - The scoring pass is MAP-ONLY: no shuffle between scan and scored rows.
-  The only shuffle in the whole job is the single explicit repartition that
+  The only shuffle in the whole job is the single explicit rebalance that
   lays rows out by (bucket, salt) before the write — and that one exists *on
-  purpose* (the north rule's explicit phash-bucket layout).
+  purpose* (the north rule's explicit phash-bucket layout). AQE sizes it:
+  it coalesces small (bucket, salt) partitions into few reducers and splits
+  a partition that is still too large, so no reducer count is fixed here.
 - Salting: phash buckets can be skewed (near-duplicate clusters share a
   phash; the dominant-language cluster concentrates rows). The shuffle key is
   (bucket, salt) with salt = pmod(xxhash64(image_id), SALT_FACTOR), so one hot
-  bucket spreads over SALT_FACTOR reducers while file layout stays
+  bucket hashes to SALT_FACTOR keys while file layout stays
   bucket-partitioned.
 - Resume: lineage rows are written per bucket after the data commit.
   On restart, the done bucket ids are collected (lineage is tiny) and
@@ -22,11 +24,13 @@ Scale design notes (the part that must survive 1000 executors / 100 TB):
 - Sink is partitioned Parquet here; on a real cluster the same plan targets
   an Iceberg table (writeTo(...).overwritePartitions()) — semantics match
   (idempotent per-partition replace), this sandbox has no Iceberg runtime.
-- Lineage and run metrics come from ONE cached aggregate over a
+- Lineage and run metrics come from ONE collected aggregate over a
   column-pruned scan (bucket/lang/keep/drop_reason/n_pii) of the
-  just-written output: per-bucket lineage and per-(lang, keep, drop_reason)
-  metrics both roll up from it, so the output is scanned once and the
-  scoring UDF never runs twice.
+  just-written output, so they equal what was written even when tasks
+  retry, and the scoring UDF never runs twice. The driver folds it into
+  per-bucket lineage rows and per-(lang, keep, drop_reason) metrics rows and
+  writes each as one small Parquet file through the out_dir's Hadoop
+  FileSystem (temporary hidden name, then rename): no Spark write job.
 
 The reference analog: its whole /save-essay HTTP pipeline
 (backend_service_app.py:139-196 → ml_service_app.py:40-104) is this one lazy
@@ -38,11 +42,18 @@ from __future__ import annotations
 
 import os
 import time
+import uuid
+from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import udfs
+from ..schema import LINEAGE_SCHEMA, METRICS_SCHEMA
 
 DEFAULT_BUCKETS = 64
 SALT_FACTOR = 8
@@ -138,11 +149,13 @@ def run_stage(
 
     # THE one shuffle: explicit (bucket, salt) layout. Salt spreads hot
     # buckets (duplicate phash clusters / dominant language) over
-    # salt_factor reducers; files stay partitioned by bucket only.
+    # salt_factor hash keys; files stay partitioned by bucket only. The
+    # rebalance lets AQE pick the reducer count from the shuffle's size and
+    # split a partition that is still skewed.
     salted = scored.withColumn(
         "salt", F.pmod(F.xxhash64("image_id"), F.lit(salt_factor)).cast("int")
     )
-    out = salted.repartition(n_buckets * salt_factor, "bucket", "salt").drop("salt")
+    out = salted.hint("rebalance", "bucket", "salt").drop("salt")
 
     # Overwrite mode: dynamic (per-partition replace) ONLY when resuming —
     # a fresh run writes every bucket, so a static full overwrite is
@@ -156,24 +169,18 @@ def run_stage(
     # The data sink is dominated by the bytes column, which is already
     # entropy-coded (PNG/JPEG): recompressing with snappy costs ~2x the
     # whole stage wall time for ~0% size win (measured 94s→45s at 1M rows).
-    # Uncompressed applies to THIS write only; tiny lineage/metrics files
-    # keep the session default codec.
     out.write.option(
         "partitionOverwriteMode", "dynamic" if done_ids else "static"
     ).option("compression", "uncompressed").mode("overwrite").partitionBy(
         "bucket"
     ).parquet(data_dir)
 
-    # Lineage and metrics from ONE aggregate over the written output: a
-    # column-pruned scan (partition column from the directory layout, so
-    # the bucket filter prunes at file level), scoped to buckets processed
-    # THIS run so resumed runs never duplicate lineage. The read schema is
-    # the written one, so no footer-reading job infers it. The aggregate is
-    # tiny (buckets x langs x drop reasons), cached in ONE partition, so
-    # the lineage collect, the lineage write and the metrics write each
-    # roll it up without rescanning the output or shuffling. Both are
-    # written from JVM-side plans: createDataFrame(collected_rows) would
-    # re-enter the Python-parallelize path, which costs seconds per action.
+    # Lineage and metrics from ONE collected aggregate over the written
+    # output: a column-pruned scan (partition column from the directory
+    # layout, so the bucket filter prunes at file level), scoped to buckets
+    # processed THIS run so resumed runs never duplicate lineage. The read
+    # schema is the written one, so no footer-reading job infers it. The
+    # result is tiny (buckets x langs x drop reasons); the driver folds it.
     keys = ["bucket", "lang", "keep", "drop_reason"]
     written = spark.read.schema(out.schema).parquet(data_dir)
     if done_ids:
@@ -183,39 +190,36 @@ def run_stage(
         written.groupBy(*keys)
         .agg(
             F.count(F.lit(1)).alias("count"),
-            F.sum((F.col("n_pii") > 0).cast("long")).alias("n_pii_rows"),
+            F.count_if(F.col("n_pii") > 0).alias("n_pii_rows"),
         )
-        .coalesce(1)
-        .cache()
+        .collect()
     )
-    # A sum is nullable where count() is not; coalescing it with 0 (a no-op,
-    # every group counts ≥ 1 row) keeps the written parquet schema the one
-    # count() gives, so files appended by earlier runs share it.
-    row_total = F.coalesce(F.sum("count"), F.lit(0))
-    try:
-        lineage_df = (
-            groups.groupBy("bucket")
-            .agg(
-                row_total.alias("n_rows"),
-                F.sum(F.col("keep").cast("long") * F.col("count")).alias("n_kept"),
-                F.sum("n_pii_rows").alias("n_pii_rows"),
-            )
-            .withColumns(
-                {"runtime_sec": F.lit(float(runtime)), "status": F.lit("done")}
-            )
+    per_bucket: dict[int, list[int]] = {}
+    per_reason: dict[tuple, int] = {}
+    for g in groups:
+        b = per_bucket.setdefault(g["bucket"], [0, 0, 0])
+        b[0] += g["count"]
+        b[1] += g["count"] if g["keep"] else 0
+        b[2] += g["n_pii_rows"]
+        k = (g["lang"], g["keep"], g["drop_reason"])
+        per_reason[k] = per_reason.get(k, 0) + g["count"]
+    lineage_rows = [
+        {"bucket": b, "n_rows": n, "n_kept": kept, "n_pii_rows": pii,
+         "runtime_sec": float(runtime), "status": "done"}
+        for b, (n, kept, pii) in sorted(per_bucket.items())
+    ]
+    # no pending bucket (a no-op resume) → nothing to commit
+    if lineage_rows:
+        _put_parquet(spark, lineage_rows, LINEAGE_SCHEMA, lineage_dir)
+        run_ts = datetime.now(timezone.utc)
+        _put_parquet(
+            spark,
+            [{"lang": lang, "keep": keep, "drop_reason": reason, "count": n,
+              "run_ts": run_ts}
+             for (lang, keep, reason), n in per_reason.items()],
+            METRICS_SCHEMA,
+            metrics_dir,
         )
-        lineage_rows = lineage_df.collect()  # ≤ n_buckets rows
-        # no pending bucket (a no-op resume) → nothing to commit
-        if lineage_rows:
-            lineage_df.coalesce(1).write.mode("append").parquet(lineage_dir)
-            metrics = (
-                groups.groupBy("lang", "keep", "drop_reason")
-                .agg(row_total.alias("count"))
-                .withColumn("run_ts", F.current_timestamp())
-            )
-            metrics.coalesce(1).write.mode("append").parquet(metrics_dir)
-    finally:
-        groups.unpersist()
 
     return {
         "rows": sum(r["n_rows"] for r in lineage_rows),
@@ -225,3 +229,27 @@ def run_stage(
         "resumed_noop": not lineage_rows,
     }
 
+
+def _put_parquet(
+    spark: SparkSession, rows: list[dict], schema: T.StructType, dir_uri: str
+) -> None:
+    """Append ``rows`` under ``dir_uri`` as one Parquet file, without a
+    Spark job: pyarrow encodes it on the driver and the bytes go through
+    the directory's Hadoop FileSystem, so any URI Spark writes to works.
+    The file is written under a hidden ``.<name>.tmp`` name and renamed to
+    ``part-<uuid>.parquet`` once closed. Spark and pyarrow readers skip
+    hidden files and the resume probe globs ``*.parquet``, so a crash
+    before the rename leaves nothing a reader sees."""
+    buf = pa.BufferOutputStream()
+    pq.write_table(pa.Table.from_pylist(rows, schema=to_arrow_schema(schema)), buf)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    name = f"part-{uuid.uuid4()}.parquet"
+    tmp = Path(dir_uri, f".{name}.tmp")
+    fs = tmp.getFileSystem(spark._jsc.hadoopConfiguration())
+    stream = fs.create(tmp, False)
+    try:
+        stream.write(buf.getvalue().to_pybytes())
+    finally:
+        stream.close()
+    if not fs.rename(tmp, Path(dir_uri, name)):
+        raise OSError(f"could not rename {tmp} to {name} under {dir_uri}")

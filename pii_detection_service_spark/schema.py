@@ -30,3 +30,16 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("status", T.StringType(), True),
     ]
 )
+
+# Per-run metrics rows: one per (lang, keep, drop_reason) of the buckets a
+# run processed, stamped with the driver's commit time (a UTC instant, read
+# back as ``timestamp``).
+METRICS_SCHEMA = T.StructType(
+    [
+        T.StructField("lang", T.StringType(), True),
+        T.StructField("keep", T.BooleanType(), True),
+        T.StructField("drop_reason", T.StringType(), True),
+        T.StructField("count", T.LongType(), False),
+        T.StructField("run_ts", T.TimestampType(), False),
+    ]
+)

@@ -98,3 +98,15 @@ def test_ivf_learned_equal_probe_matches_exact_topk(spark):
     assert 0 < len(got) <= 10
     exact = {r["vec_id"] for r in similarity.topk_cosine(spark, SF).collect()}
     assert len({r["vec_id"] for r in got} & exact) >= 5
+
+
+def test_ivf_search_computes_centroid_distances_once(spark):
+    """The probe filter must not inline the cell assignment: each of the
+    8 centroid-distance folds appears once in the search plan, over the
+    quantized column, and the quantizing transform is not repeated inside
+    them."""
+    for iters in (0, 2):
+        df = similarity.ann_ivf_learned(spark, SF, iters=iters)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("aggregate(zip_with(q#") == 8, plan
+        assert "zip_with(transform(" not in plan, plan

@@ -187,10 +187,11 @@ def test_resume_processes_only_missing_buckets(spark, src, tmp_path, scheme):
 
 def test_stage_plan_is_map_only_plus_one_shuffle(spark, src, tmp_path, monkeypatch):
     """Scale guard: scoring adds NO shuffle; the job's only exchange is the
-    explicit (bucket, salt) repartition. Checked on a plan rebuilt here AND
-    on the DataFrame run_stage actually writes to <out>/data (captured by
-    wrapping DataFrameWriter.parquet), so a second shuffle added inside
-    run_stage fails this test too."""
+    explicit (bucket, salt) rebalance, whose reducer count AQE picks.
+    Checked on a plan rebuilt here AND on the DataFrame run_stage actually
+    writes to <out>/data (captured by wrapping DataFrameWriter.parquet), so
+    a second shuffle or a fixed-count repartition added inside run_stage
+    fails this test too."""
     import re
 
     from pyspark.sql.readwriter import DataFrameWriter
@@ -199,7 +200,7 @@ def test_stage_plan_is_map_only_plus_one_shuffle(spark, src, tmp_path, monkeypat
     scored = stage.score(df)
     salted = scored.withColumn(
         "salt", F.pmod(F.xxhash64("image_id"), F.lit(2)).cast("int")
-    ).repartition(16, "bucket", "salt")
+    ).hint("rebalance", "bucket", "salt")
     plan = salted._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
 
@@ -216,10 +217,11 @@ def test_stage_plan_is_map_only_plus_one_shuffle(spark, src, tmp_path, monkeypat
     assert len(written) == 1
     plan = written[0]._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
-    assert (
-        len(re.findall(r"Exchange hashpartitioning\(bucket#\d+, salt#\d+", plan))
-        == 1
-    ), plan
+    exchange = (
+        r"Exchange hashpartitioning\(bucket#\d+, salt#\d+, \d+\), "
+        r"REBALANCE_PARTITIONS_BY_COL"
+    )
+    assert len(re.findall(exchange, plan)) == 1, plan
     assert plan.count("ArrowEvalPython") == 1, plan
 
 
@@ -316,11 +318,92 @@ def test_fresh_resume_probe_launches_no_job(spark, tmp_path):
     assert done.schema.simpleString() == "struct<bucket:int>"
 
 
+def test_fresh_run_launches_four_jobs_and_no_commit_write_job(
+    spark, src, tmp_path, monkeypatch
+):
+    """Per-call floor: a fresh run_stage launches at most 4 Spark jobs (the
+    data write's map and reduce stages, and the two of the collected
+    read-back aggregate). Lineage and metrics are committed from the
+    driver: the only DataFrame write is the data write, and no Spark write
+    job's ``_SUCCESS`` marker appears under lineage/ or metrics/."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        written.append(path)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    src.count()  # materialize the fixture's own cache outside the group
+    out = tmp_path / "floor_out"
+    sc = spark.sparkContext
+    group = "fresh-run-stage"
+    sc.setJobGroup(group, "one fresh run_stage call")
+    try:
+        stage.run_stage(spark, src, str(out), n_buckets=8, salt_factor=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+    assert written == [str(out / "data")]
+    for d in ("lineage", "metrics"):
+        names = os.listdir(out / d)
+        assert "_SUCCESS" not in names
+        assert [n for n in names if n.endswith(".parquet")]
+
+
+@_OUT_SCHEMES
+def test_resume_after_crash_before_commit_rename(spark, src, tmp_path, scheme):
+    """Crash between creating and renaming the commit files: the run wrote
+    a bucket's data, and its lineage and metrics files exist only as
+    hidden, cut-short ``.part-*.parquet.tmp`` files. The resume probe and
+    Spark readers skip them, and the next resume redoes that bucket with
+    exact row parity (no duplicate rows, lineage or metrics counts)."""
+    out = str(tmp_path / "crash_out")
+    victim = 3
+    bucketed = stage.with_bucket(src, 8)
+    first = bucketed.where(F.col("bucket") != victim).drop("bucket")
+    stage.run_stage(spark, first, scheme + out, n_buckets=8, salt_factor=2)
+
+    dirs = [os.path.join(out, d) for d in ("lineage", "metrics")]
+    before = {d: set(os.listdir(d)) for d in dirs}
+    m = stage.run_stage(spark, src, scheme + out, n_buckets=8, salt_factor=2)
+    n_victim = bucketed.where(F.col("bucket") == victim).count()
+    assert m["rows"] == n_victim
+    for d in dirs:
+        [name] = [f for f in set(os.listdir(d)) - before[d] if f.endswith(".parquet")]
+        blob = open(os.path.join(d, name), "rb").read()
+        with open(os.path.join(d, f".{name}.tmp"), "wb") as f:
+            f.write(blob[: len(blob) // 2])
+        os.remove(os.path.join(d, name))
+        os.remove(os.path.join(d, f".{name}.crc"))
+
+    ldir, mdir = (scheme + d for d in dirs)
+    done = {r["bucket"] for r in stage.completed_buckets(spark, ldir).collect()}
+    assert done == set(range(8)) - {victim}
+    assert spark.read.parquet(ldir).count() == 7
+    metric_rows = lambda: spark.read.parquet(mdir).agg(F.sum("count")).head()[0]  # noqa: E731
+    assert metric_rows() == N - n_victim
+
+    m = stage.run_stage(spark, src, scheme + out, n_buckets=8, salt_factor=2)
+    assert m["rows"] == n_victim
+    data = spark.read.parquet(os.path.join(out, "data"))
+    assert data.count() == N
+    assert data.select("image_id").distinct().count() == N
+    lineage = spark.read.parquet(ldir)
+    assert lineage.count() == 8
+    assert lineage.select("bucket").distinct().count() == 8
+    assert metric_rows() == N
+
+
 def _commit_matches_written(spark, out, run_buckets, m):
     """This run's lineage rows and metrics equal direct aggregates over the
-    buckets it wrote; every lineage file has LINEAGE_SCHEMA's names and
-    types; the returned counts are the lineage sums."""
-    from pii_detection_service_spark.schema import LINEAGE_SCHEMA
+    buckets it wrote; every lineage and metrics file has the names and
+    types of LINEAGE_SCHEMA / METRICS_SCHEMA (so ``run_ts`` reads back as
+    ``timestamp``); the returned counts are the lineage sums."""
+    from pii_detection_service_spark.schema import LINEAGE_SCHEMA, METRICS_SCHEMA
 
     data = spark.read.parquet(os.path.join(out, "data")).where(
         F.col("bucket").isin(run_buckets)
@@ -352,12 +435,13 @@ def _commit_matches_written(spark, out, run_buckets, m):
         map(tuple, direct.select(*key).collect())
     )
 
-    spec = [(f.name, f.dataType) for f in LINEAGE_SCHEMA.fields]
-    files = [f for f in os.listdir(ldir) if f.endswith(".parquet")]
-    assert files
-    for f in files:
-        schema = spark.read.parquet(os.path.join(ldir, f)).schema
-        assert [(g.name, g.dataType) for g in schema.fields] == spec, f
+    for d, declared in (("lineage", LINEAGE_SCHEMA), ("metrics", METRICS_SCHEMA)):
+        spec = [(f.name, f.dataType) for f in declared.fields]
+        files = [f for f in os.listdir(os.path.join(out, d)) if f.endswith(".parquet")]
+        assert files
+        for f in files:
+            schema = spark.read.parquet(os.path.join(out, d, f)).schema
+            assert [(g.name, g.dataType) for g in schema.fields] == spec, f
 
 
 def test_commit_parity_fresh_and_resumed(spark, src, tmp_path):

@@ -30,7 +30,7 @@ SF = "/root/testdata/sf0.001"
 HEADER = "# PLANS — formatted physical plans for load-bearing queries"
 FLAGSHIP = "flagship_stage"
 TITLES = {FLAGSHIP: "flagship_stage (run_stage's written DataFrame: score → "
-          "salted bucket repartition)"}
+          "salted bucket rebalance)"}
 
 PICKS = [
     "f1_filter_sort_limit",
