@@ -48,28 +48,70 @@ _BIGRAM_IDS = (
 )
 
 
-def bigram_count_table(d: DataFrame, text_col: str = "text") -> DataFrame:
-    """(bigram_id, cnt, lp) — corpus-wide clipped-bigram counts plus their
-    add-one-smoothed natural-log probability (quantized to 6 decimals for
-    engine portability; the unquantized value is recomputed driver-side by
-    train_char_bigram_lm). One explode + one groupBy on a ≤ 66k-id key."""
+def _count_table(d: DataFrame) -> DataFrame:
+    """(lang, bigram_id, cnt, lp) over a (lang, text) frame — per-class
+    clipped-bigram counts plus their add-one-smoothed natural-log
+    probability under the builtin profile semantics (quality.
+    _bigram_logprobs lifted to a corpus: per-class total and V = distinct
+    bigrams + 1). lp is quantized to 6 decimals for engine portability;
+    _fold recomputes the unquantized value driver-side. One explode + one
+    groupBy on a ≤ n_classes × 66k-id key; the per-class totals (≤
+    n_classes rows) join back by broadcast."""
     ids = (
-        d.select(F.col(text_col).alias("text"))
-        .select(F.expr(_WRAPPED).alias("t"))
-        .select(F.expr(_CLIPPED_CS).alias("cs"), "t")
-        .select(F.explode(F.expr(_BIGRAM_IDS)).alias("bigram_id"))
+        d.select("lang", F.expr(_WRAPPED).alias("t"))
+        .select("lang", F.expr(_CLIPPED_CS).alias("cs"), "t")
+        .select("lang", F.explode(F.expr(_BIGRAM_IDS)).alias("bigram_id"))
     )
-    counts = ids.groupBy("bigram_id").agg(F.count(F.lit(1)).alias("cnt"))
-    tot = counts.agg(
+    counts = ids.groupBy("lang", "bigram_id").agg(
+        F.count(F.lit(1)).alias("cnt")
+    )
+    tot = counts.groupBy("lang").agg(
         F.sum("cnt").alias("total"), F.count(F.lit(1)).alias("v")
     )
-    return counts.crossJoin(F.broadcast(tot)).select(
+    return counts.join(F.broadcast(tot), "lang").select(
+        "lang",
         "bigram_id",
         "cnt",
         F.round(
             F.log((F.col("cnt") + 1) / (F.col("total") + F.col("v") + 1)), 6
         ).alias("lp"),
     )
+
+
+def _fold(counts: DataFrame, langs: list[str] | None = None):
+    """The driver fold: collect (lang, bigram_id, cnt) and build the
+    (_NC², n_classes) natural-log table, ``lp = ln((c+1) / (total + V))``
+    per class. ``langs`` defaults to the classes seen. The collect is
+    bounded by n_classes × 66,049 ids, not the corpus."""
+    rows = counts.select("lang", "bigram_id", "cnt").collect()
+    langs = langs or sorted({r["lang"] for r in rows})
+    totals = {l: 0 for l in langs}
+    vs = {l: 0 for l in langs}
+    for r in rows:
+        totals[r["lang"]] += r["cnt"]
+        vs[r["lang"]] += 1
+    tbl = np.full((_NC * _NC, len(langs)), _FLOOR, dtype=np.float64)
+    for r in rows:
+        l = r["lang"]
+        tbl[r["bigram_id"], langs.index(l)] = math.log(
+            (r["cnt"] + 1) / (totals[l] + vs[l] + 1)
+        )
+    return langs, tbl
+
+
+def _one_class(d: DataFrame, text_col: str) -> DataFrame:
+    """The perplexity LM's counts: the langid count table with one class."""
+    return _count_table(
+        d.select(F.lit("").alias("lang"), F.col(text_col).alias("text"))
+    )
+
+
+def bigram_count_table(d: DataFrame, text_col: str = "text") -> DataFrame:
+    """(bigram_id, cnt, lp) — corpus-wide clipped-bigram counts plus their
+    add-one-smoothed natural-log probability (quantized to 6 decimals for
+    engine portability; the unquantized value is recomputed driver-side by
+    train_char_bigram_lm). One explode + one groupBy on a ≤ 66k-id key."""
+    return _one_class(d, text_col).drop("lang")
 
 
 def lm_train_bigram_counts(spark, sf_dir) -> DataFrame:
@@ -85,17 +127,7 @@ def train_char_bigram_lm(d: DataFrame, text_col: str = "text") -> np.ndarray:
     quality.perplexity(text, tbl) and as ``udfs.Models(lm=...)`` (stage.score,
     pipeline.score_documents, udfs.score_batch). The collect is bounded by
     the 66,049-id vocabulary, not the corpus."""
-    rows = (
-        bigram_count_table(d, text_col)
-        .select("bigram_id", "cnt")
-        .collect()
-    )
-    total = sum(r["cnt"] for r in rows)
-    v = len(rows) + 1
-    tbl = np.full(_NC * _NC, _FLOOR, dtype=np.float64)
-    for r in rows:
-        tbl[r["bigram_id"]] = math.log((r["cnt"] + 1) / (total + v))
-    return tbl
+    return _fold(_one_class(d, text_col), [""])[1][:, 0]
 
 
 def train_char_bigram_lm_ref(texts) -> np.ndarray:
@@ -136,32 +168,11 @@ def langid_bigram_count_table(
     d: DataFrame, text_col: str = "text", lang_col: str = "lang"
 ) -> DataFrame:
     """(lang, bigram_id, cnt, lp) — per-language clipped-bigram counts from
-    the labeled slice, plus their add-one-smoothed natural-log probability
-    under the builtin profile semantics (quality._bigram_logprobs lifted to
-    a corpus: per-language total and V = distinct bigrams + 1). lp is
-    quantized to 6 decimals for engine portability; train_langid_tables
-    recomputes the unquantized value driver-side."""
-    ids = (
+    the labeled slice (rows whose lang is in LANGID_TRAIN_LANGS), plus
+    their add-one-smoothed natural-log probability (see _count_table)."""
+    return _count_table(
         d.select(F.col(lang_col).alias("lang"), F.col(text_col).alias("text"))
         .where(F.expr(f"lang in ({_LANG_IN})"))
-        .select("lang", F.expr(_WRAPPED).alias("t"))
-        .select("lang", F.expr(_CLIPPED_CS).alias("cs"), "t")
-        .select("lang", F.explode(F.expr(_BIGRAM_IDS)).alias("bigram_id"))
-    )
-    counts = ids.groupBy("lang", "bigram_id").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    tot = counts.groupBy("lang").agg(
-        F.sum("cnt").alias("total"), F.count(F.lit(1)).alias("v")
-    )
-    # per-language totals: ≤ n_langs rows → broadcast join back
-    return counts.join(F.broadcast(tot), "lang").select(
-        "lang",
-        "bigram_id",
-        "cnt",
-        F.round(
-            F.log((F.col("cnt") + 1) / (F.col("total") + F.col("v") + 1)), 6
-        ).alias("lp"),
     )
 
 
@@ -181,24 +192,7 @@ def train_langid_tables(
     consumable by quality.lang_and_ppl's langid_model parameter and as
     ``udfs.Models(langid=...)``. The collect is bounded by n_langs × 66,049
     ids."""
-    rows = (
-        langid_bigram_count_table(d, text_col, lang_col)
-        .select("lang", "bigram_id", "cnt")
-        .collect()
-    )
-    langs = sorted({r["lang"] for r in rows})
-    totals = {l: 0 for l in langs}
-    vs = {l: 0 for l in langs}
-    for r in rows:
-        totals[r["lang"]] += r["cnt"]
-        vs[r["lang"]] += 1
-    tbl = np.full((_NC * _NC, len(langs)), _FLOOR, dtype=np.float64)
-    for r in rows:
-        l = r["lang"]
-        tbl[r["bigram_id"], langs.index(l)] = math.log(
-            (r["cnt"] + 1) / (totals[l] + vs[l] + 1)
-        )
-    return langs, tbl
+    return _fold(langid_bigram_count_table(d, text_col, lang_col))
 
 
 def train_langid_tables_ref(pairs) -> tuple[list[str], np.ndarray]:

@@ -16,7 +16,7 @@ with a real, spec-conformant JPEG — baseline sequential AND progressive:
   interleaved DC + single-component AC, EOB runs — T.81 G.2, control flow
   per the public stb_image/libjpeg structure), dequantize, inverse
   zigzag, batched IDCT, YCbCr→RGB. Tables are read from the file, not
-  assumed.
+  assumed. Malformed input raises ValueError.
 - progressive encoder (encode_progressive_jpeg): 2 DC scans (first at
   Al=1 + refinement) and per-component AC first/refinement scan pairs,
   with an EOBn-capable flat AC Huffman table shipped in the stream. It
@@ -24,12 +24,21 @@ with a real, spec-conformant JPEG — baseline sequential AND progressive:
   so progressive and baseline decodes are byte-identical — the pinned
   cross-check that validates both codec directions against each other.
 
+One scan coder per direction. Every scan of both encoders and of the
+decoder walks its data units through ``_block_walk`` (T.81 A.2.2/A.2.3:
+an interleaved scan's MCUs, or a one-component scan's own block raster,
+yielded lazily with each restart point marked). A baseline scan is the progressive first
+scan over band 0..63 at Al=0: one first-scan block coder
+(``_ScanWriter.first``) and one scan decoder (``_decode_scan``) code the
+DC difference and the AC run lengths for both; only the refinement scans
+are progressive-only.
+
 Honest seams (raise NotImplementedError, never wrong pixels): arithmetic
 coding, lossless/hierarchical frames, sampling factors above 2, restart
 intervals inside progressive scans (sequential restarts decode and
-encode), 12-bit precision, component counts other than 1 and 3 (the
-encoder writes 1-component grayscale through the baseline per-component
-scan path; progressive output is color only).
+encode, interleaved or per component), 12-bit precision, component
+counts other than 1 and 3 (the encoder writes 1-component grayscale as
+one Ns=1 baseline scan; progressive output is color only).
 
 Scale note: the DCT/IDCT and color transforms are numpy-batched across
 every block of the image; only the entropy (Huffman) stage is a Python
@@ -211,7 +220,8 @@ def _prepare_components(
     pixels: np.ndarray, quality: int, subsampling: tuple[int, int]
 ):
     """Shared encoder front half: color transform, subsample, batched DCT,
-    quantize. Returns (qts, comp_zz, comp_bw, interleaved MCU sequence).
+    quantize. Returns (qts, comp_zz, samp): each component's zigzagged
+    blocks in its MCU-padded grid, and its (h, v) sampling factors.
     An (h, w) plane is one component (Nf=1: it IS Y, no color transform)
     with one quantization table; (h, w, 3) RGB is Y, Cb, Cr with two."""
     gray = pixels.ndim == 2
@@ -243,7 +253,6 @@ def _prepare_components(
 
     # batched DCT + quantization per component
     comp_zz = []
-    comp_bw = []  # blocks per row, for MCU index arithmetic
     for ci, plane in enumerate(comp_planes):
         blocks = _to_blocks(plane) - 128.0
         coefs = np.einsum("ux,nxy,vy->nuv", _D, blocks, _D)
@@ -258,33 +267,63 @@ def _prepare_components(
         # none on typical content.
         np.clip(zz[:, 1:], -1023, 1023, out=zz[:, 1:])
         comp_zz.append(zz)
-        comp_bw.append(plane.shape[1] // 8)
+    return qts, comp_zz, [(sh, sv)] + [(1, 1)] * (len(comp_zz) - 1)
 
-    # interleaved MCU sequence: sv×sh Y blocks in raster order, then one
-    # Cb and one Cr block per MCU (4:4:4 degenerates to Y, Cb, Cr per
-    # block position)
-    seq: list[tuple[int, int]] = []
-    mcus_y, mcus_x = ph8 // (8 * sv), pw8 // (8 * sh)
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            for by in range(sv):
-                for bx in range(sh):
-                    seq.append((0, (sv * my + by) * comp_bw[0] + sh * mx + bx))
-            for ci in range(1, len(comp_planes)):
-                seq.append((ci, my * comp_bw[ci] + mx))
-    return qts, comp_zz, comp_bw, seq
+
+def _block_walk(scan, samp, h: int, w: int, ri: int = 0):
+    """The data units of one scan in T.81 order, as lazily yielded
+    (rst, component, block) triples: ``block`` indexes the component's
+    MCU-padded block grid (``mcus_x * h_i`` blocks per row), and ``rst``
+    is n >= 0 when RSTn comes before the unit, else -1. Both directions
+    walk every scan through this one function; nothing is built ahead of
+    the units, so a truncated stream fails at its first missing unit.
+
+    ``scan`` lists component indices into ``samp``, the frame's (h_i, v_i)
+    sampling factors. An interleaved scan (A.2.3) walks MCUs, each carrying
+    h_i × v_i blocks of every scan component in raster order. A
+    one-component scan (A.2.2) walks the component's OWN block raster,
+    ceil(comp_dim / 8) per axis, which differs from the padded grid in
+    order and count for a subsampled component. A restart interval of
+    ``ri`` counts MCUs, or data units in a one-component scan; ``ri=0``
+    never restarts."""
+    hmax = max(c for c, _ in samp)
+    vmax = max(v for _, v in samp)
+    mcus_x = -(-w // (8 * hmax))
+    mcus_y = -(-h // (8 * vmax))
+    if len(scan) == 1:
+        (ci,) = scan
+        ch, cv = samp[ci]
+        nb_x = (-(-w * ch // hmax) + 7) // 8
+        nb_y = (-(-h * cv // vmax) + 7) // 8
+        units = (
+            (ci, by * mcus_x * ch + bx) for by in range(nb_y) for bx in range(nb_x)
+        )
+        per_unit = 1
+    else:
+        units = (
+            (ci, (my * cv + by) * mcus_x * ch + mx * ch + bx)
+            for my in range(mcus_y)
+            for mx in range(mcus_x)
+            for ci in scan
+            for ch, cv in (samp[ci],)
+            for by in range(cv)
+            for bx in range(ch)
+        )
+        per_unit = sum(samp[ci][0] * samp[ci][1] for ci in scan)
+    step = ri * per_unit
+    for i, (ci, bi) in enumerate(units):
+        yield (i // step - 1 if step and i and not i % step else -1), ci, bi
 
 
 def _headers(
-    h: int, w: int, qts, sh: int, sv: int, sof_marker: bytes,
-    ac_tables=None,
+    h: int, w: int, qts, sh: int, sv: int, sof_marker: bytes, ac_tables,
 ) -> bytearray:
     """SOI → JFIF → DQT → SOF(0|2) → DHT, shared by both encoders.
     One quantization table means a 1-component (grayscale) frame with only
     the luma Huffman tables; two mean Y, Cb, Cr.
-    ``ac_tables``: [(bits, vals) lum, (bits, vals) chrom] override — the
-    progressive encoder ships its EOBn-capable flat table INSTEAD of the
-    Annex-K sequential AC tables (which no progressive scan uses)."""
+    ``ac_tables``: [(bits, vals) lum, (bits, vals) chrom] — the Annex-K
+    sequential AC tables, or the progressive encoder's EOBn-capable flat
+    table (no progressive scan uses the Annex-K ones)."""
     nf = 1 if len(qts) == 1 else 3
     out = bytearray(b"\xff\xd8")  # SOI
     out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
@@ -296,10 +335,7 @@ def _headers(
     y_samp = (sh << 4) | sv  # 0x11 = 4:4:4, 0x22 = 4:2:0
     for cid, samp, qid in ((1, y_samp, 0), (2, 0x11, 1), (3, 0x11, 1))[:nf]:
         out += bytes([cid, samp, qid])
-    ac_lum, ac_chrom = ac_tables or (
-        (_AC_LUM_BITS, _AC_LUM_VALS),
-        (_AC_CHROM_BITS, _AC_CHROM_VALS),
-    )
+    ac_lum, ac_chrom = ac_tables
     for tc_th, (bits, vals) in (
         (0x00, (_DC_LUM_BITS, _DC_LUM_VALS)),
         (0x10, ac_lum),
@@ -309,6 +345,182 @@ def _headers(
         out += b"\xff\xc4" + struct.pack(">HB", 19 + len(vals), tc_th)
         out += bytes(bits) + bytes(vals)
     return out
+
+
+class _ScanWriter:
+    """Entropy state of one scan being written: the bit writer, the DC
+    predictors, and the EOB run with the correction bits that ride behind
+    its EOBn symbol. A run is capped at the longest the AC table codes:
+    0x7FFF with EOB14 in the table, 1 with the Annex-K sequential tables,
+    whose only end-of-band symbol is EOB0 — so a baseline block ends its
+    own run with EOB0 = 0x00."""
+
+    def __init__(self, ac: dict[int, tuple[int, int]]):
+        self.bw = _BitWriter()
+        self.prev_dc = [0, 0, 0]
+        self.eobrun = 0
+        self.pending: list[int] = []
+        self.eob_max = (2 << max(r for r in range(15) if r << 4 in ac)) - 1
+
+    def flush_eobrun(self, ac) -> None:
+        if self.eobrun > 0:
+            n = self.eobrun.bit_length() - 1
+            self.bw.write(*ac[n << 4])
+            if n:
+                self.bw.write(self.eobrun - (1 << n), n)
+            self.eobrun = 0
+        for b in self.pending:
+            self.bw.write(b, 1)
+        self.pending = []
+
+    def end_band(self, ac) -> None:
+        """The block's band ends in zeros: one more block in the EOB run."""
+        self.eobrun += 1
+        if self.eobrun == self.eob_max:
+            self.flush_eobrun(ac)
+
+    def first(self, zz, ci: int, ss: int, se: int, dc, ac) -> None:
+        """First-scan coding of one point-transformed block: at Ss=0 the DC
+        difference, then the AC band max(Ss, 1)..Se as (run, size) symbols
+        with ZRL for 16-zero runs. A baseline block is the band 0..63."""
+        bw = self.bw
+        if ss == 0:
+            # DC diffs are provably ≤ 2040 for 8-bit input (|DC| ≤ 1024 at
+            # qt=1), but clamp to the baseline category-11 bound anyway;
+            # prev_dc tracks the value the DECODER reconstructs so a
+            # clamped diff can never desynchronize the prediction chain.
+            diff = min(max(int(zz[0]) - self.prev_dc[ci], -2047), 2047)
+            self.prev_dc[ci] += diff
+            s, bits = _magnitude(diff)
+            bw.write(*dc[s])
+            if s:
+                bw.write(bits, s)
+            ss = 1
+        if se < ss:
+            return
+        band = zz[ss : se + 1]
+        nz = band.nonzero()[0].tolist()
+        if nz:
+            self.flush_eobrun(ac)
+            vals = band.tolist()
+            prev = -1
+            for k in nz:
+                run = k - prev - 1
+                while run > 15:
+                    bw.write(*ac[0xF0])  # ZRL
+                    run -= 16
+                s, bits = _magnitude(vals[k])
+                bw.write(*ac[(run << 4) | s])
+                bw.write(bits, s)
+                prev = k
+            if prev == se - ss:
+                return
+        self.end_band(ac)
+
+    def refine_ac(self, zz, ss: int, se: int, al: int, ac) -> None:
+        """AC refinement of one block (progressive only; libjpeg
+        encode_mcu_AC_refine structure): correction bits for already-
+        significant coefs ride behind the next emitted symbol / EOBn."""
+        bw = self.bw
+        absv = [abs(v) >> al for v in zz[ss : se + 1].tolist()]
+        eob = 0  # index AFTER the last newly-significant coefficient
+        for k, a in enumerate(absv):
+            if a == 1:
+                eob = k + 1
+        run = 0
+        cur: list[int] = []  # correction bits since the last symbol
+        for k, a in enumerate(absv):
+            if a == 0:
+                run += 1
+                continue
+            # the ZRL drain runs at EVERY nonzero coefficient (incl.
+            # correction-only ones) so no correction bit is ever buffered
+            # at run > 15 — the decoder's ZRL advance only consumes
+            # corrections up to its 16th zero-history slot
+            while run > 15 and k < eob:
+                self.flush_eobrun(ac)
+                bw.write(*ac[0xF0])
+                run -= 16
+                for b in cur:
+                    bw.write(b, 1)
+                cur = []
+            if a > 1:  # already significant: correction bit only
+                cur.append(a & 1)
+                continue
+            # newly significant (|coef| == 1 at this precision)
+            self.flush_eobrun(ac)
+            bw.write(*ac[(run << 4) | 1])
+            bw.write(1 if zz[ss + k] > 0 else 0, 1)
+            for b in cur:
+                bw.write(b, 1)
+            cur = []
+            run = 0
+        if run > 0 or cur:
+            # trailing zeros/corrections fold into the EOB run; their bits
+            # ride behind the next EOBn symbol
+            self.pending.extend(cur)
+            self.end_band(ac)
+
+
+def _point_transform(zz: np.ndarray, al: int) -> np.ndarray:
+    """Blocks divided by 2^Al: DC by arithmetic shift, AC truncating toward
+    zero (an arithmetic shift would round negatives the wrong way)."""
+    out = np.sign(zz) * (np.abs(zz) >> al)
+    out[:, 0] = zz[:, 0] >> al
+    return out
+
+
+def _encode_scan(
+    comp_zz, samp, h: int, w: int, tables, scan, ss: int, se: int,
+    ah: int, al: int, ri: int = 0,
+) -> bytes:
+    """One scan over the block walk: its SOS header and entropy-coded
+    segment. ``tables[t]`` = (DC codes, AC codes), t = 0 luma, 1 chroma.
+    Ah=0 is a first scan; Ah>0 refines bit Al (progressive only). Every
+    ``ri`` units the segment byte-aligns, carries RSTn and resets the DC
+    predictors."""
+    sw = _ScanWriter(tables[0][1])
+    if ah == 0 and al:  # T.81 G.1.2.1 point transform of a first scan
+        comp_zz = [_point_transform(zz, al) for zz in comp_zz]
+    for rst, ci, bi in _block_walk(scan, samp, h, w, ri):
+        if rst >= 0:
+            sw.bw.restart(rst)
+            sw.prev_dc = [0, 0, 0]
+        dc, ac = tables[ci > 0]
+        zz = comp_zz[ci][bi]
+        if ah == 0:
+            sw.first(zz, ci, ss, se, dc, ac)
+        elif ss == 0:  # DC refinement: one bit per block
+            sw.bw.write((int(zz[0]) >> al) & 1, 1)
+        else:
+            sw.refine_ac(zz, ss, se, al, ac)
+    sw.flush_eobrun(tables[scan[-1] > 0][1])
+    hdr = bytearray(b"\xff\xda" + struct.pack(">HB", 6 + 2 * len(scan), len(scan)))
+    for ci in scan:
+        # each selector names the table the scan codes with, 0 for none
+        t = int(ci > 0)
+        hdr += bytes([ci + 1, (t << 4 if ss == 0 and ah == 0 else 0) | (t if se else 0)])
+    return bytes(hdr + bytes([ss, se, (ah << 4) | al])) + sw.bw.flush()
+
+
+def _encode(
+    pixels: np.ndarray, quality: int, subsampling: tuple[int, int],
+    sof_marker: bytes, ac_tables, script, ri: int = 0,
+) -> bytes:
+    """Headers, then each (scan, Ss, Se, Ah, Al) of ``script`` in order."""
+    qts, comp_zz, samp = _prepare_components(pixels, quality, subsampling)
+    h, w = pixels.shape[:2]
+    out = _headers(h, w, qts, *subsampling, sof_marker, ac_tables)
+    if ri:
+        out += b"\xff\xdd" + struct.pack(">HH", 4, ri)
+    tables = [
+        (_canonical_codes(_DC_LUM_BITS, _DC_LUM_VALS), _canonical_codes(*ac_tables[0])),
+        (_canonical_codes(_DC_CHROM_BITS, _DC_CHROM_VALS), _canonical_codes(*ac_tables[1])),
+    ]
+    for scan in script:
+        out += _encode_scan(comp_zz, samp, h, w, tables, *scan, ri)
+    out += b"\xff\xd9"  # EOI
+    return bytes(out)
 
 
 def encode_baseline_jpeg(
@@ -327,133 +539,27 @@ def encode_baseline_jpeg(
     averaged 2×2 and coded at quarter resolution — what virtually every
     real-world JPEG uses; ~25-35% smaller files, chroma detail halved).
     ``restart_interval``: if > 0, emit a DRI segment and an RSTn marker
-    every that many MCUs (byte-aligned, DC predictors reset) — the error-
-    resilience layout camera encoders produce.
+    every that many MCUs — data units in a one-component scan —
+    (byte-aligned, DC predictors reset): the error-resilience layout
+    camera encoders produce.
     ``scan_layout``: 'interleaved' (one SOS, the common layout) or
     'per_component' (three Ns=1 scans walking each component's OWN block
     raster per T.81 A.2.2 — the layout that exposes non-interleaved
-    decode paths); a grayscale plane always takes the per-component path."""
+    decode paths); a grayscale plane always takes the one Ns=1 scan.
+
+    Each scan is the progressive first scan over band 0..63 at Al=0."""
     if scan_layout not in ("interleaved", "per_component"):
         raise ValueError(f"scan_layout {scan_layout!r}: 'interleaved' or 'per_component'")
-    qts, comp_zz, comp_bw, seq = _prepare_components(pixels, quality, subsampling)
-    h, w = pixels.shape[:2]
-    sh, sv = subsampling
-
-    tables = [
-        (_canonical_codes(_DC_LUM_BITS, _DC_LUM_VALS),
-         _canonical_codes(_AC_LUM_BITS, _AC_LUM_VALS)),
-        (_canonical_codes(_DC_CHROM_BITS, _DC_CHROM_VALS),
-         _canonical_codes(_AC_CHROM_BITS, _AC_CHROM_VALS)),
-    ]
-    prev_dc = [0, 0, 0]
-
-    def emit_block(bw: _BitWriter, ci: int, bi: int) -> None:
-        dc_tbl, ac_tbl = tables[0 if ci == 0 else 1]
-        zz = comp_zz[ci][bi]
-        # DC diffs are provably ≤ 2040 for 8-bit input (|DC| ≤ 1024 at
-        # qt=1), but clamp to the baseline category-11 bound anyway;
-        # prev_dc tracks the value the DECODER reconstructs so a clamped
-        # diff can never desynchronize the prediction chain.
-        diff = min(max(int(zz[0]) - prev_dc[ci], -2047), 2047)
-        s, bits = _magnitude(diff)
-        prev_dc[ci] += diff
-        code, length = dc_tbl[s]
-        bw.write(code, length)
-        if s:
-            bw.write(bits, s)
-        run = 0
-        nz = np.nonzero(zz[1:])[0]
-        last = nz[-1] + 1 if len(nz) else 0
-        for k in range(1, last + 1):
-            v = int(zz[k])
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                code, length = ac_tbl[0xF0]  # ZRL
-                bw.write(code, length)
-                run -= 16
-            s, bits = _magnitude(v)
-            code, length = ac_tbl[(run << 4) | s]
-            bw.write(code, length)
-            bw.write(bits, s)
-            run = 0
-        if last < 63:
-            code, length = ac_tbl[0x00]  # EOB
-            bw.write(code, length)
-
-    out = _headers(h, w, qts, sh, sv, b"\xff\xc0")
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-
-    if scan_layout == "per_component" or len(comp_zz) == 1:
-        if restart_interval:
-            raise NotImplementedError(
-                "restart intervals with per-component sequential scans are "
-                "not emitted (interleaved restarts are)"
-            )
-        for ci in range(len(comp_zz)):
-            tsel = 0x00 if ci == 0 else 0x11
-            out += b"\xff\xda" + struct.pack(">HB", 8, 1)
-            out += bytes([ci + 1, tsel])
-            out += b"\x00\x3f\x00"
-            bw = _BitWriter()
-            prev_dc[ci] = 0
-            ch_, cv_ = (sh, sv) if ci == 0 else (1, 1)
-            nb_x = (-(-w * ch_ // sh) + 7) // 8
-            nb_y = (-(-h * cv_ // sv) + 7) // 8
-            gx = comp_bw[ci]
-            for byy in range(nb_y):
-                for bxx in range(nb_x):
-                    emit_block(bw, ci, byy * gx + bxx)
-            out += bw.flush()
-        out += b"\xff\xd9"  # EOI
-        return bytes(out)
-
-    bw = _BitWriter()
-    blocks_per_mcu = sv * sh + 2
-    rst = 0
-    for i, (ci, bi) in enumerate(seq):
-        if (
-            restart_interval
-            and i
-            and i % (blocks_per_mcu * restart_interval) == 0
-        ):
-            bw.restart(rst)
-            rst = (rst + 1) & 7
-            prev_dc = [0, 0, 0]
-        emit_block(bw, ci, bi)
-
-    out += b"\xff\xda" + struct.pack(">HB", 12, 3)
-    for cid, tsel in ((1, 0x00), (2, 0x11), (3, 0x11)):
-        out += bytes([cid, tsel])
-    out += b"\x00\x3f\x00"  # spectral selection 0..63, approx 0
-    out += bw.flush()
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
-
-
-class _ProgEnc:
-    """Shared state for one progressive AC scan: EOB-run accumulation plus
-    the pending correction bits that must flush WITH the EOBn symbol."""
-
-    def __init__(self, bw: _BitWriter, ac_tbl):
-        self.bw = bw
-        self.ac = ac_tbl
-        self.eobrun = 0
-        self.pending: list[int] = []
-
-    def flush_eobrun(self):
-        if self.eobrun > 0:
-            n = self.eobrun.bit_length() - 1
-            code, length = self.ac[n << 4]
-            self.bw.write(code, length)
-            if n:
-                self.bw.write(self.eobrun - (1 << n), n)
-            self.eobrun = 0
-        for b in self.pending:
-            self.bw.write(b, 1)
-        self.pending = []
+    nc = 1 if pixels.ndim == 2 else 3
+    if scan_layout == "interleaved" and nc > 1:
+        scans = [tuple(range(nc))]
+    else:
+        scans = [(ci,) for ci in range(nc)]
+    return _encode(
+        pixels, quality, subsampling, b"\xff\xc0",
+        ((_AC_LUM_BITS, _AC_LUM_VALS), (_AC_CHROM_BITS, _AC_CHROM_VALS)),
+        [(scan, 0, 63, 0, 0) for scan in scans], restart_interval,
+    )
 
 
 # Progressive AC scans need EOBn (n>0) symbols, which the Annex-K
@@ -466,12 +572,6 @@ class _ProgEnc:
 # optimizing for.
 _FLAT_AC_BITS = [0] * 8 + [176] + [0] * 7
 _FLAT_AC_VALS = sorted((r << 4) | s for r in range(16) for s in range(11))
-
-
-def _pt_ac(v: int, al: int) -> int:
-    """AC point transform: divide by 2^Al truncating toward ZERO (T.81) —
-    arithmetic shift would round negatives the wrong way."""
-    return v >> al if v >= 0 else -((-v) >> al)
 
 
 def encode_progressive_jpeg(
@@ -492,163 +592,11 @@ def encode_progressive_jpeg(
     tests pin."""
     if pixels.ndim != 3:
         raise NotImplementedError("progressive grayscale is not encoded")
-    qts, comp_zz, comp_bw, seq = _prepare_components(pixels, quality, subsampling)
-    h, w, _ = pixels.shape
-    sh, sv = subsampling
-
-    dc_tbls = [
-        _canonical_codes(_DC_LUM_BITS, _DC_LUM_VALS),
-        _canonical_codes(_DC_CHROM_BITS, _DC_CHROM_VALS),
-    ]
-    flat_ac = _canonical_codes(_FLAT_AC_BITS, _FLAT_AC_VALS)
-    ac_tbls = [flat_ac, flat_ac]
-
     flat = (_FLAT_AC_BITS, _FLAT_AC_VALS)
-    out = _headers(h, w, qts, sh, sv, b"\xff\xc2", ac_tables=(flat, flat))
-
-    def sos(comp_ids: list[int], tsels: list[int], ss: int, se: int,
-            ah: int, al: int) -> bytes:
-        hdr = bytearray(
-            b"\xff\xda" + struct.pack(">HB", 6 + 2 * len(comp_ids), len(comp_ids))
-        )
-        for cid, tsel in zip(comp_ids, tsels):
-            hdr += bytes([cid, tsel])
-        hdr += bytes([ss, se, (ah << 4) | al])
-        return bytes(hdr)
-
-    # --- scan 1: interleaved DC first, Al=1 ---
-    out += sos([1, 2, 3], [0x00, 0x10, 0x10], 0, 0, 0, 1)
-    bw = _BitWriter()
-    prev_dc = [0, 0, 0]
-    for ci, bi in seq:
-        tbl = dc_tbls[0 if ci == 0 else 1]
-        v = int(comp_zz[ci][bi][0]) >> 1  # DC point transform = arith shift
-        diff = v - prev_dc[ci]
-        prev_dc[ci] = v
-        s, bits = _magnitude(diff)
-        code, length = tbl[s]
-        bw.write(code, length)
-        if s:
-            bw.write(bits, s)
-    out += bw.flush()
-
-    # --- scan 2: interleaved DC refinement, Ah=1 Al=0 ---
-    out += sos([1, 2, 3], [0x00, 0x00, 0x00], 0, 0, 1, 0)
-    bw = _BitWriter()
-    for ci, bi in seq:
-        bw.write(int(comp_zz[ci][bi][0]) & 1, 1)
-    out += bw.flush()
-
-    # --- per-component AC scans (single-component, as the spec requires).
-    # Non-interleaved scans code exactly the blocks covering the
-    # component's OWN sample area (ceil(comp_dim/8) per axis), NOT the
-    # MCU-padded grid — writing a padded grid column desyncs the decoder
-    # mid-row (T.81 A.2.2 vs A.2.3 data-unit counts).
-    for ci in range(3):
-        tsel = 0x00 if ci == 0 else 0x01
-        ac = ac_tbls[0 if ci == 0 else 1]
-        zzs = comp_zz[ci]
-        ch_, cv_ = (sh, sv) if ci == 0 else (1, 1)
-        comp_w = -(-w * ch_ // sh)
-        comp_h = -(-h * cv_ // sv)
-        nb_x, nb_y = (comp_w + 7) // 8, (comp_h + 7) // 8
-        gx = comp_bw[ci]
-        block_order = [
-            byy * gx + bxx for byy in range(nb_y) for bxx in range(nb_x)
-        ]
-
-        # AC first scan: band 1..63, Al=1
-        out += sos([ci + 1], [tsel], 1, 63, 0, 1)
-        bw = _BitWriter()
-        st = _ProgEnc(bw, ac)
-        for bi in block_order:
-            zz = zzs[bi]
-            t = [_pt_ac(int(zz[k]), 1) for k in range(1, 64)]
-            nz = [k for k, v in enumerate(t) if v != 0]
-            if not nz:
-                st.eobrun += 1
-                if st.eobrun == 0x7FFF:
-                    st.flush_eobrun()
-                continue
-            st.flush_eobrun()
-            run = 0
-            for k in range(nz[-1] + 1):
-                v = t[k]
-                if v == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    code, length = ac[0xF0]
-                    bw.write(code, length)
-                    run -= 16
-                s, bits = _magnitude(v)
-                code, length = ac[(run << 4) | s]
-                bw.write(code, length)
-                bw.write(bits, s)
-                run = 0
-            if nz[-1] + 1 < 63:
-                st.eobrun += 1
-                if st.eobrun == 0x7FFF:
-                    st.flush_eobrun()
-        st.flush_eobrun()
-        out += bw.flush()
-
-        # AC refinement scan: band 1..63, Ah=1 → Al=0 (libjpeg
-        # encode_mcu_AC_refine structure: correction bits for already-
-        # significant coefs ride behind the next emitted symbol / EOBn)
-        out += sos([ci + 1], [tsel], 1, 63, 1, 0)
-        bw = _BitWriter()
-        st = _ProgEnc(bw, ac)
-        for bi in block_order:
-            zz = zzs[bi]
-            absv = [abs(int(zz[k])) for k in range(1, 64)]
-            eob = 0  # index AFTER the last newly-significant coefficient
-            for k, a in enumerate(absv):
-                if a == 1:
-                    eob = k + 1
-            run = 0
-            cur: list[int] = []  # correction bits since the last symbol
-            for k in range(63):
-                a = absv[k]
-                if a == 0:
-                    run += 1
-                    continue
-                # the ZRL drain runs at EVERY nonzero coefficient (incl.
-                # correction-only ones) so no correction bit is ever
-                # buffered at run > 15 — the decoder's ZRL advance only
-                # consumes corrections up to its 16th zero-history slot
-                while run > 15 and k < eob:
-                    st.flush_eobrun()
-                    code, length = ac[0xF0]
-                    bw.write(code, length)
-                    run -= 16
-                    for b in cur:
-                        bw.write(b, 1)
-                    cur = []
-                if a > 1:  # already significant: correction bit only
-                    cur.append(a & 1)
-                    continue
-                # newly significant (|coef| == 1 at this precision)
-                st.flush_eobrun()
-                code, length = ac[(run << 4) | 1]
-                bw.write(code, length)
-                bw.write(1 if int(zz[k + 1]) > 0 else 0, 1)
-                for b in cur:
-                    bw.write(b, 1)
-                cur = []
-                run = 0
-            if run > 0 or cur:
-                # trailing zeros/corrections fold into the EOB run; their
-                # bits ride behind the next EOBn symbol
-                st.eobrun += 1
-                st.pending.extend(cur)
-                if st.eobrun == 0x7FFF:
-                    st.flush_eobrun()
-        st.flush_eobrun()
-        out += bw.flush()
-
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
+    script = [((0, 1, 2), 0, 0, 0, 1), ((0, 1, 2), 0, 0, 1, 0)] + [
+        ((ci,), 1, 63, ah, al) for ci in range(3) for ah, al in ((0, 1), (1, 0))
+    ]
+    return _encode(pixels, quality, subsampling, b"\xff\xc2", (flat, flat), script)
 
 
 # --- decoder ----------------------------------------------------------------
@@ -754,191 +702,107 @@ def _refine_nonzero(br: _BitReader, zz, k: int, bit: int) -> None:
         zz[k] += bit if zz[k] > 0 else -bit
 
 
-def _decode_sequential_scan(
-    br, scan, comps, grid, coefs, huff, mcus_y, mcus_x,
-    h: int, w: int, hmax: int, vmax: int, ri: int = 0,
-) -> None:
-    """Baseline sequential scan: DC diff + full AC band per block.
-
-    Interleaved (Ns > 1) scans walk MCUs; a single-component scan is
-    NON-interleaved per T.81 A.2.2 — it walks the component's OWN block
-    raster (ceil(comp_dim/8) per axis), which differs from the MCU-padded
-    grid both in order and in count for subsampled components. With a
-    restart interval ``ri``, every ri MCUs/data-units the stream
-    byte-aligns, carries an RSTn marker (cyclic n), and the DC predictor
-    resets."""
-    prev_dc = [0] * len(comps)
-    rst_state = [0, 0]  # (units since restart, next marker index)
-
-    def maybe_restart():
-        if ri and rst_state[0] and rst_state[0] % ri == 0:
-            br.consume_restart(rst_state[1])
-            rst_state[1] = (rst_state[1] + 1) & 7
-            for i in range(len(prev_dc)):
-                prev_dc[i] = 0
-        rst_state[0] += 1
-
-    def seq_block(zz, ci, tdc, tac):
-        dc_tree = huff[0x00 | tdc]
-        ac_tree = huff[0x10 | tac]
-        s = _read_symbol(br, dc_tree)
-        diff = _extend(br.read_bits(s), s) if s else 0
-        prev_dc[ci] += diff
-        zz[0] = prev_dc[ci]
-        k = 1
-        while k <= 63:
-            rs = _read_symbol(br, ac_tree)
-            if rs == 0x00:  # EOB
-                break
-            if rs == 0xF0:  # ZRL
-                k += 16
-                continue
-            k += rs >> 4
-            s = rs & 0xF
-            zz[k] = _extend(br.read_bits(s), s)
-            k += 1
-
-    if len(scan) == 1:  # non-interleaved: the component's own raster
-        ci, tdc, tac = scan[0]
-        _, _, ch_, cv_ = comps[ci]
-        gx = grid[ci][1]
-        nb_x = (-(-w * ch_ // hmax) + 7) // 8
-        nb_y = (-(-h * cv_ // vmax) + 7) // 8
-        for byy in range(nb_y):
-            for bxx in range(nb_x):
-                maybe_restart()
-                seq_block(coefs[ci][byy * gx + bxx], ci, tdc, tac)
-        return
-
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            maybe_restart()
-            for ci, tdc, tac in scan:
-                _, _, ch_, cv_ = comps[ci]
-                gx = grid[ci][1]
-                for by in range(cv_):
-                    for bx in range(ch_):
-                        seq_block(
-                            coefs[ci][(my * cv_ + by) * gx + mx * ch_ + bx],
-                            ci, tdc, tac,
-                        )
-
-
-def _decode_progressive_scan(
-    br, scan, ss, se, ah, al, comps, grid, coefs, huff,
-    mcus_y, mcus_x, h, w, hmax, vmax,
-) -> None:
-    """One progressive scan (T.81 G.2; control flow follows the public
-    stb_image/libjpeg structure): DC scans may be interleaved, AC scans
-    are single-component; Ah=0 is a 'first' scan at point transform Al,
-    Ah>0 refines one magnitude bit. EOB runs span blocks within the scan."""
-    if ss == 0:  # --- DC scan ---
-        if se != 0:
-            raise ValueError("progressive DC scan must have Se=0")
-        prev_dc = [0] * len(comps)
-
-        def dc_block(zz, ci, tdc):
-            if ah == 0:
-                s = _read_symbol(br, huff[0x00 | tdc])
-                diff = _extend(br.read_bits(s), s) if s else 0
-                prev_dc[ci] += diff
-                zz[0] = prev_dc[ci] << al
-            else:  # refinement: one bit per block
-                zz[0] |= br.read_bit() << al
-
-        if len(scan) > 1:  # interleaved MCU walk
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    for ci, tdc, _ in scan:
-                        _, _, ch_, cv_ = comps[ci]
-                        gx = grid[ci][1]
-                        for by in range(cv_):
-                            for bx in range(ch_):
-                                dc_block(
-                                    coefs[ci][
-                                        (my * cv_ + by) * gx + mx * ch_ + bx
-                                    ],
-                                    ci, tdc,
-                                )
-        else:  # non-interleaved: the component's own block raster
-            ci, tdc, _ = scan[0]
-            _, _, ch_, cv_ = comps[ci]
-            gx = grid[ci][1]
-            nb_x = (-(-w * ch_ // hmax) + 7) // 8
-            nb_y = (-(-h * cv_ // vmax) + 7) // 8
-            for byy in range(nb_y):
-                for bxx in range(nb_x):
-                    dc_block(coefs[ci][byy * gx + bxx], ci, tdc)
-        return
-
-    # --- AC scan: single component, non-interleaved ---
-    if len(scan) != 1:
-        raise ValueError("progressive AC scan must be single-component")
-    ci, _, tac = scan[0]
-    ac_tree = huff[0x10 | tac]
-    _, _, ch_, cv_ = comps[ci]
-    gx = grid[ci][1]
-    nb_x = (-(-w * ch_ // hmax) + 7) // 8
-    nb_y = (-(-h * cv_ // vmax) + 7) // 8
-    eobrun = 0
+def _refine_ac(br: _BitReader, zz, ss: int, se: int, al: int, ac_tree, eobrun: int) -> int:
+    """AC refinement of one block (progressive only; T.81 G.1.2.3): the
+    band's already-significant coefficients take a correction bit, newly
+    significant ones arrive as ±2^Al. Returns the EOB run left over."""
     bit = 1 << al
-    for byy in range(nb_y):
-        for bxx in range(nb_x):
-            zz = coefs[ci][byy * gx + bxx]
-            if ah == 0:  # ----- AC first scan -----
-                if eobrun > 0:
-                    eobrun -= 1
-                    continue
-                k = ss
-                while k <= se:
-                    rs = _read_symbol(br, ac_tree)
-                    r, s = rs >> 4, rs & 0xF
-                    if s == 0:
-                        if r < 15:  # EOBn
-                            eobrun = (1 << r) - 1
-                            if r:
-                                eobrun += br.read_bits(r)
-                            break
-                        k += 16  # ZRL
-                    else:
-                        k += r
-                        zz[k] = _extend(br.read_bits(s), s) << al
-                        k += 1
-            else:  # ----- AC refinement scan -----
-                if eobrun > 0:
-                    eobrun -= 1
-                    for k in range(ss, se + 1):
-                        if zz[k] != 0:
-                            _refine_nonzero(br, zz, k, bit)
-                    continue
-                k = ss
-                while k <= se:
-                    rs = _read_symbol(br, ac_tree)
-                    r, s = rs >> 4, rs & 0xF
-                    val = 0
-                    if s == 0:
-                        if r < 15:  # EOBn: correct the rest of the band
-                            eobrun = (1 << r) - 1
-                            if r:
-                                eobrun += br.read_bits(r)
-                            r = 64  # force the advance to band end
-                        # r == 15 (ZRL): skip 16 zero-history coefficients
-                    else:
-                        if s != 1:
-                            raise ValueError("bad coefficient in AC refine")
-                        val = bit if br.read_bit() else -bit
-                    while k <= se:
-                        if zz[k] != 0:
-                            _refine_nonzero(br, zz, k, bit)
-                            k += 1
-                        else:
-                            if r == 0:
-                                if val:
-                                    zz[k] = val
-                                k += 1
-                                break
-                            r -= 1
-                            k += 1
+    if eobrun > 0:
+        for k in range(ss, se + 1):
+            if zz[k] != 0:
+                _refine_nonzero(br, zz, k, bit)
+        return eobrun - 1
+    k = ss
+    while k <= se:
+        rs = _read_symbol(br, ac_tree)
+        r, s = rs >> 4, rs & 0xF
+        val = 0
+        if s == 0:
+            if r < 15:  # EOBn: correct the rest of the band
+                eobrun = (1 << r) - 1 + br.read_bits(r)
+                r = 64  # force the advance to band end
+            # r == 15 (ZRL): skip 16 zero-history coefficients
+        else:
+            if s != 1:
+                raise ValueError("bad coefficient in AC refine")
+            val = bit if br.read_bit() else -bit
+        while k <= se:
+            if zz[k] != 0:
+                _refine_nonzero(br, zz, k, bit)
+                k += 1
+            else:
+                if r == 0:
+                    if val:
+                        zz[k] = val
+                    k += 1
+                    break
+                r -= 1
+                k += 1
+    return eobrun
+
+
+def _decode_scan(
+    br: _BitReader, scan, ss: int, se: int, ah: int, al: int, samp,
+    h: int, w: int, coefs, huff, ri: int, progressive: bool,
+) -> None:
+    """One scan over the block walk (progressive control flow per T.81 G.2
+    and the public stb_image/libjpeg structure). ``scan`` holds
+    (component, DC table, AC table) triples.
+
+    Ah=0 is a first scan: at Ss=0 the DC difference, then the AC band
+    max(Ss, 1)..Se at point transform Al, with EOB runs that span blocks.
+    A sequential scan is the first scan over 0..63 at Al=0 whose only
+    end-of-band symbol is EOB0, so an EOBn there raises ValueError.
+    Ah>0 refines one magnitude bit (progressive only). Every ``ri`` units
+    the stream byte-aligns, carries RSTn (cyclic n), and the DC
+    predictors reset."""
+    try:
+        dc = {ci: huff[td] for ci, td, _ in scan} if ss == 0 and ah == 0 else {}
+        ac = {ci: huff[0x10 | ta] for ci, _, ta in scan} if se else {}
+    except KeyError as e:
+        raise ValueError(f"scan uses undefined Huffman table {e}") from None
+    prev_dc = [0] * len(samp)
+    eobrun = 0
+    for rst, ci, bi in _block_walk([ci for ci, _, _ in scan], samp, h, w, ri):
+        if rst >= 0:
+            br.consume_restart(rst)
+            prev_dc = [0] * len(samp)
+        zz = coefs[ci][bi]
+        if ah:
+            if ss == 0:  # DC refinement: one bit per block
+                zz[0] |= br.read_bit() << al
+            else:
+                eobrun = _refine_ac(br, zz, ss, se, al, ac[ci], eobrun)
+            continue
+        if ss == 0:
+            s = _read_symbol(br, dc[ci])
+            if s > 11:  # 8-bit DC differences stop at category 11
+                raise ValueError(f"DC difference category {s}")
+            if s:
+                prev_dc[ci] += _extend(br.read_bits(s), s)
+                if not -2048 < prev_dc[ci] < 2048:  # past any 8-bit DC
+                    raise ValueError(f"DC coefficient {prev_dc[ci]}")
+            zz[0] = prev_dc[ci] << al
+        if eobrun > 0:
+            eobrun -= 1
+            continue
+        k = max(ss, 1)
+        while k <= se:
+            rs = _read_symbol(br, ac[ci])
+            r, s = rs >> 4, rs & 0xF
+            if s:
+                k += r
+                if k > se:
+                    raise ValueError("AC run passes the end of the band")
+                zz[k] = _extend(br.read_bits(s), s) << al
+                k += 1
+            elif r == 15:  # ZRL
+                k += 16
+            else:  # EOBn
+                if r and not progressive:
+                    raise ValueError("EOBn symbol in a sequential scan")
+                eobrun = (1 << r) - 1 + br.read_bits(r)
+                break
 
 
 def _decode_jpeg_planes(data: bytes) -> list[np.ndarray]:
@@ -947,12 +811,19 @@ def _decode_jpeg_planes(data: bytes) -> list[np.ndarray]:
     [~0, ~255] but NOT yet clipped or color-converted — baseline
     sequential (SOF0) AND progressive (SOF2, spectral selection +
     successive approximation, interleaved DC and single-component AC
-    scans, EOB runs) plus sequential restart intervals (DRI/RSTn with
-    DC-predictor resets). Raises NotImplementedError for sampling factors
-    above 2, restarts inside progressive scans, arithmetic coding,
-    hierarchical/lossless frames, 12-bit precision, and 2-/4-component
-    (e.g. CMYK) streams."""
-    assert data[:2] == b"\xff\xd8", "not a JPEG (missing SOI)"
+    scans, EOB runs). Every scan goes through the one scan decoder
+    (``_decode_scan``); a sequential scan is its first scan over band
+    0..63 at Al=0. Restart intervals (DRI/RSTn with DC-predictor resets)
+    are read in sequential scans, interleaved or one-component.
+
+    Malformed input (a cut or inconsistent segment, a missing marker,
+    table or frame, an entropy stream that codes past its band) raises
+    ValueError. NotImplementedError marks the honest seams: sampling
+    factors above 2, restarts inside progressive scans, arithmetic coding,
+    hierarchical/lossless frames, 12-bit precision, 16-bit quantization
+    tables, and 2-/4-component (e.g. CMYK) streams."""
+    if data[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG (missing SOI)")
     pos = 2
     qts: dict[int, np.ndarray] = {}
     huff: dict[int, dict[tuple[int, int], int]] = {}
@@ -962,10 +833,11 @@ def _decode_jpeg_planes(data: bytes) -> list[np.ndarray]:
     comps: list[tuple[int, int, int, int]] = []  # (cid, qid, ch, cv)
     grid: list[tuple[int, int]] = []
     coefs: list[np.ndarray] = []
-    mcus_x = mcus_y = hmax = vmax = 0
+    hmax = vmax = 0
     saw_scan = False
     while pos + 1 < len(data):
-        assert data[pos] == 0xFF, f"marker expected at {pos}"
+        if data[pos] != 0xFF:
+            raise ValueError(f"marker expected at byte {pos}")
         marker = data[pos + 1]
         pos += 2
         if marker == 0xD9:  # EOI
@@ -973,27 +845,35 @@ def _decode_jpeg_planes(data: bytes) -> list[np.ndarray]:
         if marker == 0xFF:  # fill byte
             pos -= 1
             continue
+        if pos + 2 > len(data):
+            raise ValueError(f"truncated segment header at byte {pos}")
         (seglen,) = struct.unpack(">H", data[pos : pos + 2])
+        if seglen < 2 or pos + seglen > len(data):
+            raise ValueError(f"segment 0xFF{marker:02X} at byte {pos} overruns the data")
         seg = data[pos + 2 : pos + seglen]
         if marker == 0xDB:  # DQT (possibly multiple tables)
-            sp = 0
-            while sp < len(seg):
+            for sp in range(0, len(seg), 65):
                 pq, tq = seg[sp] >> 4, seg[sp] & 0xF
                 if pq != 0:
                     raise NotImplementedError("16-bit quant tables")
+                if sp + 65 > len(seg):
+                    raise ValueError("truncated DQT table")
                 zz = np.frombuffer(seg[sp + 1 : sp + 65], np.uint8).astype(np.int32)
                 qts[tq] = zz[_UNZIGZAG].reshape(8, 8)
-                sp += 65
         elif marker == 0xC4:  # DHT (possibly multiple tables)
             sp = 0
             while sp < len(seg):
-                tc_th = seg[sp]
                 bits = list(seg[sp + 1 : sp + 17])
                 nv = sum(bits)
-                vals = list(seg[sp + 17 : sp + 17 + nv])
-                huff[tc_th] = _decode_tree(bits, vals)
+                if sp + 17 + nv > len(seg):
+                    raise ValueError("truncated DHT table")
+                huff[seg[sp]] = _decode_tree(bits, list(seg[sp + 17 : sp + 17 + nv]))
                 sp += 17 + nv
         elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 sequential, SOF2 prog
+            if comps:
+                raise ValueError("second SOF in one image")
+            if len(seg) < 6:
+                raise ValueError("truncated SOF")
             progressive = marker == 0xC2
             prec, h, w, nc = seg[0], *struct.unpack(">HH", seg[1:5]), seg[5]
             if prec != 8:
@@ -1003,6 +883,8 @@ def _decode_jpeg_planes(data: bytes) -> list[np.ndarray]:
                     "only 1-component (grayscale) and 3-component (YCbCr) "
                     "streams"
                 )
+            if len(seg) < 6 + 3 * nc:
+                raise ValueError("truncated SOF")
             for i in range(nc):
                 cid, samp, qid = seg[6 + 3 * i : 9 + 3 * i]
                 ch_, cv_ = samp >> 4, samp & 0xF
@@ -1024,40 +906,54 @@ def _decode_jpeg_planes(data: bytes) -> list[np.ndarray]:
                 "only sequential (SOF0/1) and progressive (SOF2) frames"
             )
         elif marker == 0xDD:  # DRI
+            if len(seg) < 2:
+                raise ValueError("truncated DRI")
             (ri,) = struct.unpack(">H", seg[:2])
         elif marker == 0xDA:  # SOS — one of possibly many scans
-            assert comps, "SOS before SOF"
-            ns = seg[0]
+            if not comps:
+                raise ValueError("SOS before SOF")
+            ns = seg[0] if seg else 0
+            if not 1 <= ns <= 4 or len(seg) < 4 + 2 * ns:
+                raise ValueError("malformed SOS header")
+            ids = [c[0] for c in comps]
             scan = []
             for i in range(ns):
                 cid, tsel = seg[1 + 2 * i : 3 + 2 * i]
-                idx = next(i for i, cmp in enumerate(comps) if cmp[0] == cid)
-                scan.append((idx, tsel >> 4, tsel & 0xF))
+                if cid not in ids:
+                    raise ValueError(f"SOS names undeclared component {cid}")
+                scan.append((ids.index(cid), tsel >> 4, tsel & 0xF))
             ss, se, a = seg[1 + 2 * ns : 4 + 2 * ns]
-            ah, al = a >> 4, a & 0xF
-            br = _BitReader(data[pos + seglen :])
             if progressive:
+                ah, al = a >> 4, a & 0xF
                 if ri:
                     raise NotImplementedError(
                         "restart intervals in progressive scans are not "
                         "supported (sequential restarts are)"
                     )
-                _decode_progressive_scan(
-                    br, scan, ss, se, ah, al, comps, grid, coefs, huff,
-                    mcus_y, mcus_x, h, w, hmax, vmax,
-                )
+                if ss == 0 and se != 0:
+                    raise ValueError("progressive DC scan must have Se=0")
+                if ss > se or se > 63:
+                    raise ValueError(f"spectral band {ss}..{se} outside 0..63")
+                if ss and ns != 1:
+                    raise ValueError("progressive AC scan must be single-component")
+            elif (ss, se) != (0, 63):
+                raise ValueError("partial band in sequential scan")
             else:
-                assert ss == 0 and se == 63, "partial band in sequential scan"
-                _decode_sequential_scan(
-                    br, scan, comps, grid, coefs, huff, mcus_y, mcus_x,
-                    h, w, hmax, vmax, ri,
-                )
+                ah = al = 0  # a sequential scan ignores Ah/Al, as libjpeg does
+            br = _BitReader(data[pos + seglen :])
+            _decode_scan(
+                br, scan, ss, se, ah, al, [c[2:] for c in comps], h, w,
+                coefs, huff, ri, progressive,
+            )
             saw_scan = True
             pos = _next_marker(data, pos + seglen + br.pos)
             continue
         pos += seglen
 
-    assert comps and saw_scan and h and w, "truncated JPEG (no SOS/SOF)"
+    if not (comps and saw_scan and h and w):
+        raise ValueError("truncated JPEG (no SOS/SOF)")
+    if any(qid not in qts for _, qid, _, _ in comps):
+        raise ValueError("frame uses an undefined quantization table")
 
     # dequantize + inverse zigzag + batched IDCT per component, then
     # nearest-neighbor upsample subsampled chroma back to full resolution

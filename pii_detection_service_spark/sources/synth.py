@@ -26,6 +26,10 @@ from . import imagecodec, jpegcodec, pngcodec
 SEED = 20240816
 
 INPUT_COLUMNS = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]
+_INPUT_DDL = (
+    "image_id string, bytes binary, w int, h int, fmt string, "
+    "caption string, phash long"
+)
 
 _NOUNS = "person dog cat table room tree car house bird flower street city beach mountain book".split()
 _ADJS = "small large red quiet bright old modern wooden happy busy".split()
@@ -181,20 +185,7 @@ def make_row_mixed(i: int, size: int = 24) -> dict:
 
 def synth_spark_mixed(spark, n: int, size: int = 24):
     """Distributed mixed-format table (see make_row_mixed)."""
-    schema = (
-        "image_id string, bytes binary, w int, h int, fmt string, "
-        "caption string, phash long"
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            out = pd.DataFrame([make_row_mixed(int(i), size) for i in pdf["id"]])
-            out["w"] = out["w"].astype("int32")
-            out["h"] = out["h"].astype("int32")
-            yield out[INPUT_COLUMNS]
-
-    rng_df = spark.range(0, n, 1, spark.sparkContext.defaultParallelism)
-    return rng_df.mapInPandas(gen, schema=schema)
+    return _synth_spark(spark, n, make_row_mixed, size)
 
 
 def synth_pandas(n: int, size: int = 24, start: int = 0) -> pd.DataFrame:
@@ -208,20 +199,22 @@ def synth_pandas(n: int, size: int = 24, start: int = 0) -> pd.DataFrame:
 def synth_spark(spark, n: int, size: int = 24, num_partitions: int | None = None):
     """Distributed generation: spark.range → mapInPandas; each task generates
     only its own row span (no driver-side materialization → scales to any n)."""
-    schema = (
-        "image_id string, bytes binary, w int, h int, fmt string, "
-        "caption string, phash long"
-    )
+    return _synth_spark(spark, n, make_row, size, num_partitions)
+
+
+def _synth_spark(spark, n: int, row_fn, size: int, num_partitions: int | None = None):
+    """spark.range(n) → mapInPandas of ``row_fn(i, size)`` over each task's
+    own id span, in the INPUT_COLUMNS schema."""
 
     def gen(batches):
         for pdf in batches:
-            out = pd.DataFrame([make_row(int(i), size) for i in pdf["id"]])
+            out = pd.DataFrame([row_fn(int(i), size) for i in pdf["id"]])
             out["w"] = out["w"].astype("int32")
             out["h"] = out["h"].astype("int32")
             yield out[INPUT_COLUMNS]
 
     rng_df = spark.range(0, n, 1, num_partitions or spark.sparkContext.defaultParallelism)
-    return rng_df.mapInPandas(gen, schema=schema)
+    return rng_df.mapInPandas(gen, schema=_INPUT_DDL)
 
 
 _NAME_ONSETS = "b br c ch d f g gr h j k l m n p r s sh t th v w".split()

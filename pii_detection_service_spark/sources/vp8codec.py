@@ -1291,16 +1291,17 @@ def rgb_to_yuv(img: np.ndarray):
 
 
 class VP8Encoder:
+    # B_PRED replaces the best 16x16 mode when that mode's SSE exceeds
+    # BPRED_SSE_THRESH per pixel; SKIP_PROB is the header's prob_skip_false.
+    BPRED_SSE_THRESH = 16
+    SKIP_PROB = 200
+
     def __init__(self, y, u, v, qi=4, allow_bpred=True, force_bpred=False,
-                 bpred_sse_thresh=16.0, lmbda=0.0, log2_parts=0, use_skip=False,
-                 skip_prob=200):
+                 log2_parts=0, use_skip=False):
         self.log2_parts = log2_parts
         self.use_skip = use_skip
-        self.skip_prob = skip_prob
         self.allow_bpred = allow_bpred
         self.force_bpred = force_bpred
-        self.bpred_sse_thresh = bpred_sse_thresh
-        self.lmbda = lmbda
         self.y, self.u, self.v = y, u, v
         self.h, self.w = y.shape
         self.qi = qi
@@ -1359,7 +1360,7 @@ class VP8Encoder:
                         hdr.put(0, int(upd[i, j, k, l]))
         if self.use_skip:
             hdr.put(1, 128)
-            hdr.literal(self.skip_prob, 8)
+            hdr.literal(self.SKIP_PROB, 8)
         else:
             hdr.put(0, 128)  # mb_no_coeff_skip off
 
@@ -1388,7 +1389,7 @@ class VP8Encoder:
                     if best is None or sse < best:
                         best, bm, bpred = sse, m, pred
                 use_bpred = self.force_bpred or (
-                    self.allow_bpred and best > 16 * 16 * self.bpred_sse_thresh
+                    self.allow_bpred and best > 16 * 16 * self.BPRED_SSE_THRESH
                 )
                 mode_bits = []  # deferred (tree, probs, value) header writes
                 coefs = np.zeros((25, 16), dtype=np.int32)
@@ -1413,9 +1414,8 @@ class VP8Encoder:
                                 p4 + VP8Decoder._idct(q * dq), 0, 255
                             )
                             sse = int(((ssrc - rec) ** 2).sum())
-                            cost = sse + self.lmbda * int(np.abs(q).sum())
-                            if bb is None or cost < bb:
-                                bb, bm4, bq, brec = cost, m4, q, rec
+                            if bb is None or sse < bb:
+                                bb, bm4, bq, brec = sse, m4, q, rec
                         a = above_b[mx, sx] if sy == 0 else bmode_grid[my, mx, sy - 1, sx]
                         l = left_b4[sy] if sx == 0 else bmode_grid[my, mx, sy, sx - 1]
                         mode_bits.append((
@@ -1506,7 +1506,7 @@ class VP8Encoder:
                 has_y2 = modes[my, mx] != B_PRED
                 skippable = not np.any(coefs) if self.use_skip else False
                 if self.use_skip:
-                    hdr.put(1 if skippable else 0, self.skip_prob)
+                    hdr.put(1 if skippable else 0, self.SKIP_PROB)
                 for tr, pb, val in mode_bits:
                     hdr.tree(tr, pb, val)
                 # token encoding
@@ -1672,13 +1672,7 @@ def decode_vp8_rgba(data: bytes) -> np.ndarray:
     return np.concatenate([rgb, a], axis=-1)
 
 
-def encode_webp_vp8(
-    pixels: np.ndarray,
-    qi: int = 4,
-    allow_bpred: bool = True,
-    log2_parts: int = 0,
-    use_skip: bool = True,
-) -> bytes:
+def encode_webp_vp8(pixels: np.ndarray, qi: int = 4) -> bytes:
     """RGB(A) pixels -> complete lossy WebP file (RIFF + ``VP8 `` chunk).
 
     qi is the VP8 quantizer index (0..127; 4 is near-lossless, the PSNR
@@ -1690,10 +1684,7 @@ def encode_webp_vp8(
     if pixels.ndim != 3 or pixels.shape[2] not in (3, 4):
         raise ValueError("expected (h, w, 3|4) uint8 pixels")
     y, u, v = rgb_to_yuv(pixels[..., :3])
-    enc = VP8Encoder(
-        y, u, v, qi=qi, allow_bpred=allow_bpred,
-        log2_parts=log2_parts, use_skip=use_skip,
-    )
+    enc = VP8Encoder(y, u, v, qi=qi, use_skip=True)
     body = riff.chunk(b"VP8 ", enc.encode())
 
     ih, iw = pixels.shape[:2]

@@ -1,6 +1,7 @@
 """Real baseline-JPEG codec: round-trip quality, container validity,
 honest seams, and the multimodal plumbing over real JPEG bytes."""
 
+import hashlib
 import struct
 
 import numpy as np
@@ -339,3 +340,182 @@ def test_decode_stats_over_mixed_formats_incl_grayscale(spark):
     assert all(len(r["features"]) == 48 for r in feats)
     small = multimodal.resize(synth_spark_mixed(spark, 8), 8).collect()
     assert all(r["w"] == 8 and r["h"] == 8 and r["fmt"] == "png" for r in small)
+
+
+# sha256 of the encoder's output for synth.pixels_for(5, size=29) (its
+# green channel for "gray"), keyed (sampling, scan layout, restart
+# interval, quality); 422 = (2, 1), 440 = (1, 2) subsampling.
+_PINNED_SHA256 = {
+    ('gray', 'interleaved', 0, 50): "c64a440a199da3ebbaa32a95f8d310581c08ab85774a69387ad362d81d0346ec",
+    ('444', 'interleaved', 0, 50): "48bce37c9d1f43069a6ce494060ad3535cfbad64382a5c42bcecf7c7b86f5434",
+    ('444', 'interleaved', 2, 50): "d7bf54bda2b5f9cb3f76143dc207618c61e2f1412d329415594385729dadf147",
+    ('420', 'interleaved', 0, 50): "97f21d1f44cb070946ab7f5d3ccb708733d3305a996fd394bbb52eb02bc79811",
+    ('420', 'interleaved', 2, 50): "809bc1081269702d1d17fa8cec2909400fb35ae140122c6af83e2fa69bf2040c",
+    ('422', 'interleaved', 0, 50): "a47922328d2a9269e9e275d5502fa8520b8cca7bfd11553d511739e5ab81fbdb",
+    ('422', 'interleaved', 2, 50): "cbfc4c917d6f5b414df3a7f2a6f6787430c065384bdbfc0e7aedfb614659c29c",
+    ('440', 'interleaved', 0, 50): "e0dc4aca07415cdc4535c884225d741bd942fe064da8d1f8d41c53ad22b28ff8",
+    ('440', 'interleaved', 2, 50): "ec199c911575af3eb13069a3977b7da927b8fb952f3a5ed5b2520ca10d9be263",
+    ('gray', 'per_component', 0, 50): "c64a440a199da3ebbaa32a95f8d310581c08ab85774a69387ad362d81d0346ec",
+    ('444', 'per_component', 0, 50): "0b8c35b74e8f5819c1a8467290b76ee4de455aa48c2e12d9473e6bcc881f1eb5",
+    ('420', 'per_component', 0, 50): "97164d50840d835f0e1c4f978923376ac0c84f8697e82285e95f1ed76a3bb34f",
+    ('422', 'per_component', 0, 50): "bb493a77957b65e43b01743abd4de12bd938648e05ec7c637982308df00e8840",
+    ('440', 'per_component', 0, 50): "33514689edd7ef3b27b6905b3cefaf1016eea7668845098b60c56d2befd672cd",
+    ('444', 'progressive', 0, 50): "d91d355820a57e3ee89a2231e73828d098919f5dab72fd1f52846a01b05779a0",
+    ('420', 'progressive', 0, 50): "284918458aeb779d54b35eb28a55c980a6beefb047804d5db0bbdfc475de756a",
+    ('gray', 'interleaved', 0, 92): "bb9f0ea7f5a66ad1c0faa5dcfd548fce4dd48c23450e513fcf8d3026c2757c13",
+    ('444', 'interleaved', 0, 92): "d8d993ba5a01f71f97c0c0c4e53bf1d93a6330e8f66507fcca8b43fb298083ce",
+    ('444', 'interleaved', 2, 92): "89cf106426177f933c56cae274cd47e4a097bf6c19820b90fe2dd3eaa72adcd0",
+    ('420', 'interleaved', 0, 92): "b60ad4e90f506faa46ed4dc8fef7816bd1f80300125fe3a604546c588a25c6ad",
+    ('420', 'interleaved', 2, 92): "3fa4946aeb872e2d9e8d25172b5ebb4e370fb332f21cdb9c069678ba2ec7c644",
+    ('422', 'interleaved', 0, 92): "b97911030197c45f1e1929fd1691c3b2d03d8e3edf090e75734088719bf05f16",
+    ('422', 'interleaved', 2, 92): "097a21add02f9775841e0bfb1c7669549c95f6315978440e77282d21087fc2e4",
+    ('440', 'interleaved', 0, 92): "d659034de992fa787c124cf8952de1699d154249a34e263996191fa57b87eb40",
+    ('440', 'interleaved', 2, 92): "747e252e9258d70d4d15e1a494259331b64ad1788f15e707481efeacb4e2e69f",
+    ('gray', 'per_component', 0, 92): "bb9f0ea7f5a66ad1c0faa5dcfd548fce4dd48c23450e513fcf8d3026c2757c13",
+    ('444', 'per_component', 0, 92): "4677da67e55485455bf100f02a65414f6928bf4e9def7a074066540a725eee3a",
+    ('420', 'per_component', 0, 92): "21fc82b3fb3e5b6039f5ce5166485b2c4878b679cd1000326344a7b8c24fddf4",
+    ('422', 'per_component', 0, 92): "bf4dff25d140c79d31225278c4c941ef99956edfc943b1dc102cca803268fe15",
+    ('440', 'per_component', 0, 92): "59e6b500a10f7f5fb2f0cb32a15e306e497b4bae327373ae88f29cac6fa3a3b3",
+    ('444', 'progressive', 0, 92): "62d84814a06170fc7016587a608081a73d6c5161a052916a300c3b25680c5074",
+    ('420', 'progressive', 0, 92): "37cec56b1f05af433c5a58fe3ba04ef1333d82ea114bdf4d5e3ed71bace580eb",
+}
+_SUBSAMPLING = {"444": (1, 1), "420": (2, 2), "422": (2, 1), "440": (1, 2)}
+
+
+def test_encoder_bytes_pinned():
+    """Both encoders emit exactly the bytes pinned above: every sampling
+    mode, both scan layouts, restart intervals and two qualities, plus
+    the progressive script at 4:4:4 and 4:2:0."""
+    px = synth.pixels_for(5, size=29)
+    for (name, layout, ri, q), want in _PINNED_SHA256.items():
+        if layout == "progressive":
+            data = jpegcodec.encode_progressive_jpeg(
+                px, q, subsampling=_SUBSAMPLING[name]
+            )
+        elif name == "gray":
+            data = jpegcodec.encode_baseline_jpeg(
+                px[..., 1].copy(), q, restart_interval=ri, scan_layout=layout
+            )
+        else:
+            data = jpegcodec.encode_baseline_jpeg(
+                px, q, subsampling=_SUBSAMPLING[name], restart_interval=ri,
+                scan_layout=layout,
+            )
+        assert hashlib.sha256(data).hexdigest() == want, (name, layout, ri, q)
+
+
+def test_every_prefix_decodes_or_raises_value_error():
+    """A cut-short file (every strict prefix of a baseline, a restart-
+    interval, a progressive and a grayscale stream) either decodes or
+    raises ValueError: no AssertionError, struct.error or IndexError."""
+    px = synth.pixels_for(0)
+    files = [
+        jpegcodec.encode_baseline_jpeg(px, 50),
+        jpegcodec.encode_baseline_jpeg(px, 50, subsampling=(2, 2), restart_interval=2),
+        jpegcodec.encode_progressive_jpeg(px, 50, subsampling=(2, 2)),
+        jpegcodec.encode_baseline_jpeg(px[..., 1].copy(), 50),
+    ]
+    for data in files:
+        for n in range(len(data)):
+            try:
+                jpegcodec._decode_jpeg_planes(data[:n])
+            except ValueError:
+                pass
+            except Exception as e:  # noqa: BLE001 - the type is the check
+                pytest.fail(f"prefix {n}/{len(data)}: {type(e).__name__}: {e}")
+
+
+_HUGE_FRAME_CHILD = """
+import resource, sys, time
+from pii_detection_service_spark.sources import jpegcodec
+data = sys.stdin.buffer.read()
+rss0 = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
+t = time.perf_counter()
+try:
+    jpegcodec._decode_jpeg_planes(data)
+    outcome = "decoded"
+except ValueError:
+    outcome = "ValueError"
+dt = time.perf_counter() - t
+rss_mb = (resource.getrusage(resource.RUSAGE_SELF).ru_maxrss - rss0) / 1024
+print(outcome, dt, rss_mb)
+"""
+
+
+def test_huge_frame_with_cut_scan_fails_fast():
+    """A few hundred bytes can declare a 32768x32768 frame. With its scan
+    data cut, the decoder must raise ValueError at the first missing data
+    unit, in milliseconds and without growing the process by more than a
+    few MB: nothing is built per declared block ahead of the stream. Run
+    in a child process so its peak RSS is its own."""
+    import os
+    import subprocess
+    import sys
+
+    data = bytearray(jpegcodec.encode_baseline_jpeg(synth.pixels_for(0)[..., 1].copy(), 50))
+    i = data.index(b"\xff\xc0")
+    data[i + 5 : i + 9] = struct.pack(">HH", 32768, 32768)
+    j = data.index(b"\xff\xda")
+    data = bytes(data[: j + 10 + 20])  # SOS header and 20 bytes of scan data
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _HUGE_FRAME_CHILD], input=data, cwd=repo,
+        capture_output=True, check=True, timeout=120,
+    ).stdout.split()
+    assert out[0] == b"ValueError"
+    assert float(out[1]) < 1.0, f"decode took {float(out[1]):.2f} s"
+    assert float(out[2]) < 64, f"peak RSS grew {float(out[2]):.0f} MB"
+
+
+def test_corrupted_bytes_decode_or_raise_value_error():
+    """1-3 random byte overwrites anywhere in a stream (seeded): the
+    decoder returns planes, raises ValueError, or raises
+    NotImplementedError when the damage names an unsupported feature.
+    A damaged Huffman table can code a DC category past 11, a difference
+    too large for any coefficient array; that is a ValueError too."""
+    import random
+
+    px = synth.pixels_for(0)
+    files = [
+        jpegcodec.encode_baseline_jpeg(px, 50),
+        jpegcodec.encode_progressive_jpeg(px, 50, subsampling=(2, 2)),
+        jpegcodec.encode_baseline_jpeg(px, 50, subsampling=(2, 2), restart_interval=2),
+    ]
+    rng = random.Random(7)
+    for t in range(600):
+        data = bytearray(files[t % 3])
+        for _ in range(rng.randint(1, 3)):
+            data[rng.randrange(len(data))] = rng.randrange(256)
+        try:
+            jpegcodec._decode_jpeg_planes(bytes(data))
+        except (ValueError, NotImplementedError):
+            pass
+        except Exception as e:  # noqa: BLE001 - the type is the check
+            pytest.fail(f"trial {t}: {type(e).__name__}: {e}")
+
+
+def test_sequential_scan_rejects_eobn():
+    """A sequential scan's only end-of-band symbol is EOB0: relabel it as
+    EOB1 (0x10) in the luma AC table and the decoder must raise, not run
+    an EOB run across blocks."""
+    data = bytearray(jpegcodec.encode_baseline_jpeg(synth.pixels_for(2), 92))
+    i = bytes(data).index(b"\xff\xc4\x00\xb5\x10")  # DHT: AC luma, 162 symbols
+    vals = i + 5 + 16
+    k = data[vals : vals + 162].index(0x00)
+    data[vals + k] = 0x10
+    with pytest.raises(ValueError, match="EOBn"):
+        jpegcodec._decode_jpeg_planes(bytes(data))
+
+
+def test_dc_sum_past_8bit_range_raises():
+    """Two luma blocks that each code the largest DC difference (+2047,
+    category 11, Annex-K code 111111110) sum to 4094, which no 8-bit
+    frame can hold: the decoder raises instead of storing it."""
+    data = jpegcodec.encode_baseline_jpeg(np.zeros((8, 16), np.uint8), 50)
+    j = data.index(b"\xff\xda")
+    sos_end = j + 2 + struct.unpack(">H", data[j + 2 : j + 4])[0]
+    bits = ("111111110" + "1" * 11 + "1010") * 2  # DC +2047, then EOB
+    bits += "1" * (-len(bits) % 8)
+    scan = int(bits, 2).to_bytes(len(bits) // 8, "big").replace(b"\xff", b"\xff\x00")
+    with pytest.raises(ValueError, match="DC coefficient 4094"):
+        jpegcodec._decode_jpeg_planes(data[:sos_end] + scan + b"\xff\xd9")

@@ -179,29 +179,33 @@ def test_jpeg_subsampled_roundtrip_preserves_luma(h, w, seed, sub):
     assert np.array_equal(y_out, y_444), sub
 
 
-@settings(max_examples=20, deadline=None)
+@settings(max_examples=30, deadline=None)
 @given(
     st.integers(4, 40),
     st.integers(4, 40),
     st.integers(0, 2**32 - 1),
     st.integers(1, 9),
-    st.sampled_from([(1, 1), (2, 2)]),
+    st.sampled_from([(1, 1), (2, 2), (2, 1), (1, 2), None]),
+    st.sampled_from(["interleaved", "per_component"]),
 )
-def test_jpeg_restart_interval_roundtrip(h, w, seed, ri, sub):
+def test_jpeg_restart_interval_roundtrip(h, w, seed, ri, sub, layout):
     """Restart markers at any interval must leave decoded pixels identical
-    to the restart-free encoding of the same content."""
+    to the restart-free encoding of the same content, in interleaved and
+    per-component scans alike (a one-component scan restarts every ``ri``
+    data units, T.81 A.2.2). ``sub=None`` is the grayscale frame."""
     import numpy as np
 
     from pii_detection_service_spark.sources import jpegcodec
 
     rng = np.random.default_rng(seed)
-    px = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+    px = rng.integers(0, 256, (h, w) if sub is None else (h, w, 3), dtype=np.uint8)
+    sub = sub or (1, 1)
     ref = jpegcodec.decode_baseline_jpeg(
-        jpegcodec.encode_baseline_jpeg(px, 95, subsampling=sub)
+        jpegcodec.encode_baseline_jpeg(px, 95, subsampling=sub, scan_layout=layout)
     )
     got = jpegcodec.decode_baseline_jpeg(
         jpegcodec.encode_baseline_jpeg(
-            px, 95, subsampling=sub, restart_interval=ri
+            px, 95, subsampling=sub, restart_interval=ri, scan_layout=layout
         )
     )
     assert np.array_equal(ref, got)
