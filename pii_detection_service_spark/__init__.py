@@ -18,7 +18,12 @@ service) as a distributed Spark pipeline over image+caption tables:
   resumable by a ``NOT IN`` filter on the buckets lineage marks done.
 
 Design: DataFrame/Catalyst first; Python only inside Arrow-batched
-``mapInPandas``/``pandas_udf`` (zero per-row Python at the Spark level).
+``mapInPandas``/``arrow_udf`` (zero per-row Python at the Spark level).
 """
 
+from . import zipcache as _zipcache
+
 __version__ = "0.1.0"
+
+# inside a Spark Python worker: stop the per-task re-read of pyspark.zip
+_zipcache.install_in_task()

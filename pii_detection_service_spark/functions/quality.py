@@ -106,16 +106,21 @@ def _bigram_ids(t: str) -> np.ndarray:
     return c[:-1] * _NC + c[1:]
 
 
-def langid_char_ngram(text: str) -> str:
+def langid_char_ngram(
+    text: str, langid_model: tuple[list[str], np.ndarray] | None = None
+) -> str:
     """Argmax language by char-bigram log-likelihood; '' / no-letter → 'und'.
-    Ties break to the lexicographically smallest language code."""
+    Ties break to the lexicographically smallest language code.
+    ``langid_model`` is a (langs, table) pair as in lang_and_ppl_batch;
+    None is the builtin profile set."""
+    langs, lang_tbl = (_LANGS, _LANG_TBL) if langid_model is None else langid_model
     t = text.lower()
     if not any(c.isalpha() for c in t):
         return "und"
     if len(t) < 2:
         return "und"
-    sums = _LANG_TBL[_bigram_ids(t)].sum(axis=0)
-    return _LANGS[int(np.argmax(sums))]  # argmax → first max → smallest code
+    sums = lang_tbl[_bigram_ids(t)].sum(axis=0)
+    return langs[int(np.argmax(sums))]  # argmax → first max → smallest code
 
 
 def perplexity(text: str, tbl: np.ndarray = _LM_TBL) -> float:
@@ -135,35 +140,126 @@ def lang_and_ppl(
     lm_tbl: np.ndarray | None = None,
     langid_model: tuple[list[str], np.ndarray] | None = None,
 ) -> tuple[str, float]:
-    """Fused langid + perplexity sharing ONE text lowering and ONE bigram
-    encode (the two kernels account for most of the non-tagger scoring
-    cost). With the default table, bit-identical to
-    (langid_char_ngram(text), perplexity(text)): the sentinel-wrapped id
-    array's interior slice IS the plain-text id array, since bigram ids
-    only depend on adjacent codepoint pairs. Equality is property-tested
-    in tests/test_properties.py.
+    """(langid_char_ngram(text), perplexity(text)) in one call: the one-row
+    call of lang_and_ppl_batch, whose docstring gives the model seams."""
+    langs, ppls = lang_and_ppl_batch([text], lm_tbl, langid_model)
+    return langs[0], ppls[0]
 
-    ``lm_tbl`` swaps the perplexity model for a loaded ARPA table
-    (load_arpa_char_bigram → udfs.Models.lm) without touching the langid
-    profiles — the production path where the LM is a real KenLM artifact
-    while langid stays the built-in profile set. ``langid_model`` is the
-    symmetric seam for langid: a (langs, (_NC², n_langs) table) pair from
-    lmtrain.train_langid_tables (udfs.Models.langid) swaps the
-    per-language profile tables; the 'und' rules (empty / <2 chars /
-    no-alpha) and the argmax tie-break (first max → lexicographically
-    smallest code, langs being sorted) are model-independent and stay
-    identical."""
+
+# Transient arrays of a batch are bounded by scoring it in chunks of rows
+# holding at most this many codepoints (~7 MB of codepoints, ids, LM values).
+_CHUNK_BIGRAMS = 1 << 18
+# (steps × rows) slots of one zero-padded langid gather in _segment_sums.
+_PAD_SLOTS = 1 << 16
+# str.isalpha of codepoints 0..255; index 256 (the clipped id) is a
+# placeholder that _lang_and_ppl_chunk overwrites per codepoint.
+_ALPHA_LATIN1 = np.array([chr(c).isalpha() for c in range(256)] + [False])
+
+
+def lang_and_ppl_batch(
+    texts: list[str],
+    lm_tbl: np.ndarray | None = None,
+    langid_model: tuple[list[str], np.ndarray] | None = None,
+) -> tuple[list[str], list[float]]:
+    """Langid + perplexity over a whole batch: one lower per row, then per
+    chunk one join, one ``utf-32-le`` encode and one bigram-id pass over
+    all rows. Row for row bit-identical to (langid_char_ngram(text),
+    perplexity(text, lm_tbl)): every row's sums are taken over the same
+    values in the same order as those references take them (property-
+    tested in tests/test_properties.py).
+
+    ``lm_tbl`` swaps the perplexity model for a loaded ARPA or trained table
+    (load_arpa_char_bigram, lmtrain → udfs.Models.lm) without touching the
+    langid profiles. ``langid_model`` is the symmetric seam for langid: a
+    (langs, (_NC², n_langs) table) pair from lmtrain.train_langid_tables
+    (udfs.Models.langid). The 'und' rules (empty / <2 chars / no letter)
+    and the argmax tie-break (first max → lexicographically smallest code,
+    langs being sorted) are model-independent."""
     tbl = _LM_TBL if lm_tbl is None else lm_tbl
     langs, lang_tbl = (_LANGS, _LANG_TBL) if langid_model is None else langid_model
-    t = text.lower()
-    if not t:
-        return "und", 1e9
-    ids_full = _bigram_ids("^" + t + "$")
-    ppl = float(math.exp(-tbl[ids_full].sum() / len(ids_full)))
-    if len(t) < 2 or not any(c.isalpha() for c in t):
-        return "und", ppl
-    sums = lang_tbl[ids_full[1:-1]].sum(axis=0)
-    return langs[int(np.argmax(sums))], ppl
+    lowered = [t.lower() for t in texts]
+    lens = np.fromiter(map(len, lowered), np.int64, len(lowered))
+    # each row is "^" + text + "$" in the chunk's string: len + 2 codepoints
+    ends = (lens + 2).cumsum()
+    out_langs: list[str] = []
+    out_ppls: list[float] = []
+    lo = 0
+    while lo < len(lowered):
+        base = ends[lo - 1] if lo else 0
+        hi = max(int(ends.searchsorted(base + _CHUNK_BIGRAMS, "right")), lo + 1)
+        chunk_langs, chunk_ppls = _lang_and_ppl_chunk(
+            lowered[lo:hi], lens[lo:hi], tbl, langs, lang_tbl
+        )
+        out_langs += chunk_langs
+        out_ppls += chunk_ppls
+        lo = hi
+    return out_langs, out_ppls
+
+
+def _lang_and_ppl_chunk(lowered, lens, tbl, langs, lang_tbl):
+    """lang_and_ppl_batch over lowercased rows joined as "^t0$^t1$...":
+    row i's "^" sits at ``starts[i]``, its len+1 sentinel-wrapped bigrams
+    (perplexity's) start there and its len-1 plain-text bigrams
+    (langid's) one later; the "$^" bigram between rows is never read."""
+    cps = np.frombuffer(("^" + "$^".join(lowered) + "$").encode("utf-32-le"), np.uint32)
+    clipped = np.minimum(cps, 256).astype(np.int64)
+    ids = clipped[:-1] * _NC + clipped[1:]
+    starts = np.zeros(len(lens), np.int64)
+    (lens[:-1] + 2).cumsum(out=starts[1:])
+
+    # perplexity: one contiguous-slice sum per row, the reduction
+    # perplexity() runs on its own gathered array, and math.exp as there
+    lm = tbl.take(ids)
+    add = np.add.reduce  # ndarray.sum of a 1-D array, less its Python wrapper
+    ppls = [
+        math.exp(-add(lm[s : s + n]) / n) if n > 1 else 1e9
+        for s, n in zip(starts.tolist(), (lens + 1).tolist())
+    ]
+
+    # langid: 'und' unless the row has 2+ chars and a letter
+    alpha = _ALPHA_LATIN1[clipped]
+    wide = (cps > 255).nonzero()[0]
+    if wide.size:
+        cp, inv = np.unique(cps[wide], return_inverse=True)
+        alpha[wide] = np.array([chr(c).isalpha() for c in cp.tolist()])[inv]
+    rows = (np.logical_or.reduceat(alpha, starts) & (lens >= 2)).nonzero()[0]
+    out = ["und"] * len(lens)
+    if rows.size:
+        sums = _segment_sums(lang_tbl, ids, starts[rows] + 1, lens[rows] - 1)
+        for i, k in zip(rows.tolist(), sums.argmax(axis=1).tolist()):
+            out[i] = langs[k]
+    return out, ppls
+
+
+def _segment_sums(tbl2: np.ndarray, ids: np.ndarray, starts, counts) -> np.ndarray:
+    """Row r: ``tbl2[ids[starts[r] : starts[r] + counts[r]]].sum(axis=0)``
+    (counts >= 1) with its table rows added in index order, the order
+    ndarray.sum takes along the outer axis of a C-contiguous array with
+    2+ inner elements. So each sum is langid_char_ngram's bit for bit
+    (with one language the argmax is 0 whatever the order).
+
+    Segments are taken longest first in groups of similar length: a group
+    of R segments, the longest K rows long, is gathered as one zero-padded
+    (K, R, langs) array and summed over its outer axis, so every segment
+    is added in order and the padding adds exact zeros. A group holds
+    segments longer than half its longest and at most _PAD_SLOTS (K, R)
+    slots, which bounds both the padding and the array."""
+    order = (-counts).argsort(kind="stable")
+    neg = -counts[order]  # ascending
+    sums = np.empty((len(counts), tbl2.shape[1]), dtype=tbl2.dtype)
+    i = 0
+    while i < len(order):
+        k = -int(neg[i])
+        half = int(neg.searchsorted(-(k // 2), "left"))  # first count <= k/2
+        rows = order[i : min(half, i + max(_PAD_SLOTS // k, 1))]
+        steps = np.arange(k)[:, None]
+        inside = steps < counts[rows]
+        pos = np.where(inside, starts[rows] + steps, 0)
+        vals = tbl2.take(ids[pos], axis=0)
+        vals[~inside] = 0.0
+        sums[rows] = vals.sum(axis=0)
+        i += len(rows)
+    return sums
 
 
 # --- ARPA model loading (the KenLM interchange format) ----------------------

@@ -392,12 +392,14 @@ def _is_plain(text: str) -> bool:
 
 
 def tag_and_scrub(
-    text: str, gazetteer: frozenset = FIRST_NAMES
+    text: str, gazetteer: frozenset = FIRST_NAMES, mask_toxic: bool = True
 ) -> tuple[list[str], list[str], str, int, int]:
     """Fused tag + scrub: tokenization and span search run ONCE (the Arrow
     UDF hot path). Returns (tokens, labels, scrubbed, n_pii, n_toxic);
     tokens/labels/PII-scrub identical to calling tag() and scrub(), with
-    toxicity masking applied on top of the PII splice."""
+    toxicity masking applied on top of the PII splice unless
+    ``mask_toxic`` is False (then scrubbed, n_pii == scrub(text) and
+    n_toxic is 0)."""
     if _is_plain(text):
         # str.split() == \S+ finditer when nothing needs peeling; no rule
         # can produce a span, so labels are all O and text is untouched
@@ -405,7 +407,7 @@ def tag_and_scrub(
         return toks_fast, ["O"] * len(toks_fast), text, 0, 0
     words, starts, ends = cols = _tokenize(text)
     spans, taken = _pii_spans(text, cols, gazetteer)
-    toxic = find_toxic_spans(text, taken)
+    toxic = find_toxic_spans(text, taken) if mask_toxic else []
     return (
         words,
         _label_tokens(starts, ends, spans),

@@ -62,7 +62,7 @@ SALT_FACTOR = 8
 def score(df: DataFrame, models: udfs.Models | None = None) -> DataFrame:
     """Map-only fused scoring pass (langid/ppl/keep/tag/scrub).
 
-    Scalar pandas_udf, NOT mapInPandas: only the caption column is
+    Scalar arrow_udf, NOT mapInPandas: only the caption column is
     Arrow-serialized to the Python worker; image bytes and the other
     passthrough columns never leave the JVM. At 10^12 rows the bytes
     column is ~10-20x the caption volume, so this is the difference

@@ -94,6 +94,95 @@ def test_quality_functions_total(text):
     assert fppl == ppl
 
 
+_ODD_ROWS = [
+    "", "a", "7", "0123 456 789", "\u212a", "met \u212aenji today",
+    "Σίσυφος ΑΣ", "日本語のテキスト", "İstanbul", "^$", "  ",
+]
+_BATCH_ROW = st.one_of(
+    st.text(max_size=80),
+    st.sampled_from(_ODD_ROWS),
+    # >2,048-char rows (MAX_CHARS): short units repeated
+    st.builds(lambda u, k: u * k, st.text(min_size=1, max_size=6), st.integers(350, 900)),
+)
+
+
+@pytest.fixture(scope="module")
+def kernel_models(tmp_path_factory):
+    """(lm table, langid model) pairs the batch kernel is checked under:
+    the builtins, a large export_synth_arpa-loaded LM, a trained langid
+    table."""
+    from pii_detection_service_spark.operators import lmtrain
+
+    arpa = str(tmp_path_factory.mktemp("arpa") / "synth.arpa")
+    quality.export_synth_arpa(arpa)
+    trained = lmtrain.train_langid_tables_ref(
+        [
+            ("en", "the quick brown fox jumps over the lazy dog"),
+            ("en", "a photo of a person with a thing on the table"),
+            ("de", "der schnelle braune fuchs springt über den hund"),
+            ("fr", "le renard brun saute par dessus le chien paresseux"),
+        ]
+    )
+    return {
+        "builtin": (None, None),
+        "arpa_lm": (quality.load_arpa_char_bigram(arpa), None),
+        "trained_langid": (None, trained),
+    }
+
+
+@pytest.mark.parametrize("model", ["builtin", "arpa_lm", "trained_langid"])
+@given(
+    st.lists(_BATCH_ROW, max_size=40),
+    st.sampled_from([16, 300, quality._CHUNK_BIGRAMS]),
+    st.sampled_from([4, 200, quality._PAD_SLOTS]),
+)
+@settings(max_examples=60, deadline=None)
+def test_lang_and_ppl_batch_equals_scalar(kernel_models, model, texts, chunk, pad_slots):
+    """The whole-batch langid + perplexity kernel equals the independent
+    per-row references exactly, row for row, under every model seam and
+    any chunking: small chunk and padding budgets put rows across chunk
+    boundaries and split the length groups of the langid sums."""
+    lm_tbl, langid_model = kernel_models[model]
+    saved = quality._CHUNK_BIGRAMS, quality._PAD_SLOTS
+    quality._CHUNK_BIGRAMS, quality._PAD_SLOTS = chunk, pad_slots
+    try:
+        langs, ppls = quality.lang_and_ppl_batch(texts, lm_tbl, langid_model)
+    finally:
+        quality._CHUNK_BIGRAMS, quality._PAD_SLOTS = saved
+    assert len(langs) == len(ppls) == len(texts)
+    for text, lang, ppl in zip(texts, langs, ppls):
+        assert lang == quality.langid_char_ngram(text, langid_model)
+        assert ppl == quality.perplexity(text, quality._LM_TBL if lm_tbl is None else lm_tbl)
+        assert (lang, ppl) == quality.lang_and_ppl(text, lm_tbl, langid_model)
+
+
+@given(
+    st.lists(st.integers(1, 300), min_size=1, max_size=30),
+    st.integers(2, 6),
+    st.sampled_from([4, 200, quality._PAD_SLOTS]),
+    st.integers(0, 2**32 - 1),
+)
+@settings(max_examples=100, deadline=None)
+def test_segment_sums_add_in_index_order(counts, n_cols, pad_slots, seed):
+    """Langid's per-row sums are bit-equal to ndarray.sum(axis=0) over each
+    row's gathered table rows (not merely argmax-equal), for any segment
+    lengths and padding budget, on tables of arbitrary floats."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    tbl = rng.standard_normal((50, n_cols)) * np.exp(rng.standard_normal((50, n_cols)) * 4)
+    ids = rng.integers(0, 50, sum(counts) + 3)
+    starts = np.cumsum([0] + counts[:-1]) + 1
+    saved = quality._PAD_SLOTS
+    quality._PAD_SLOTS = pad_slots
+    try:
+        got = quality._segment_sums(tbl, ids, starts, np.array(counts))
+    finally:
+        quality._PAD_SLOTS = saved
+    for row, s, n in zip(got, starts, counts):
+        assert np.array_equal(row, tbl[ids[s : s + n]].sum(axis=0))
+
+
 @given(st.lists(label, min_size=1, max_size=50), st.lists(label, min_size=1, max_size=50))
 @settings(max_examples=200, deadline=None)
 def test_fbeta_bounds(a, b):

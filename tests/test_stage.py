@@ -3,6 +3,7 @@ distributed pipeline and the pure-Python reference semantics, plus the
 north-rule invariants (resume, pixel/caption preservation, bucketing)."""
 
 import os
+import sys
 
 import numpy as np
 import pyspark.sql.functions as F
@@ -473,3 +474,46 @@ def test_commit_parity_fresh_and_resumed(spark, src, tmp_path):
         "resumed_noop"
     ]
     assert set(sc._jsc.getPersistentRDDs().keys()) == persisted
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 12), reason="zip invalidation is lazy on 3.12+")
+def test_score_workers_skip_unchanged_zip_rereads(spark):
+    """Python workers import pyspark from pyspark.zip, and every task starts
+    with importlib.invalidate_caches(). Once stage.score has run in the
+    workers, a follow-up UDF there sees that call re-read no archive
+    (zipcache's stat check), where the stdlib re-reads it once per cached
+    zip importer."""
+    import pyarrow as pa
+
+    df = spark.createDataFrame(
+        [(f"img_{i}", f"a photo of caption {i}") for i in range(40)],
+        "image_id string, caption string",
+    ).repartition(4)
+    scored = stage.score(df)
+
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        import pii_detection_service_spark  # noqa: F401 — installs in a task
+
+        rows = sum(b.num_rows for b in batches)
+        importers = sum(
+            isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
+        )
+        reads = []
+        real = zipimport._read_directory
+        zipimport._read_directory = lambda path: reads.append(path) or real(path)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        yield pa.RecordBatch.from_pydict(
+            {"rows": [rows], "zip_importers": [importers], "reads": [len(reads)]}
+        )
+
+    got = scored.mapInArrow(probe, "rows long, zip_importers long, reads long").collect()
+    assert len(got) == 4 and sum(r["rows"] for r in got) == 40
+    assert all(r["zip_importers"] > 0 for r in got), got
+    assert all(r["reads"] == 0 for r in got), got

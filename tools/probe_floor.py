@@ -9,7 +9,14 @@ fresh calls into new out_dirs at the benchmark's bucket and salt counts, in
 one ``local[4]`` session set up as the benchmark sets it up. A call's jobs are the ones its job group
 launched. A small input's wall time is mostly the floor (planning, job
 launches, the commit), not the scoring; the ratio of the two medians shows
-how much of a full call that floor is. Run from the repository root.
+how much of a full call that floor is.
+
+A last line gives the score-only floor: ``stage.score`` over the first 40
+rows in 4 partitions, written to the noop sink, median of ``--calls`` after
+one warm-up. That is one Python UDF task per core and almost no scoring,
+so it measures the per-task Python floor (worker task setup, the Arrow
+hop) apart from the shuffle, the write and the commit. Run from the
+repository root.
 """
 
 from __future__ import annotations
@@ -25,6 +32,8 @@ sys.path.insert(0, ".")
 
 from perfbench import inputs  # noqa: E402
 from pii_detection_service_spark.plans import stage  # noqa: E402
+
+SCORE_ONLY_ROWS = 40
 
 
 def main(argv=None) -> int:
@@ -74,6 +83,20 @@ def main(argv=None) -> int:
                 f"{len(walls)} calls (min {min(walls):.3f}, max {max(walls):.3f}); "
                 f"Spark jobs per call {sorted(jobs)}"
             )
+        src = spark.read.parquet(inp.path).limit(SCORE_ONLY_ROWS).repartition(4).cache()
+        src.count()
+        walls = []
+        for i in range(args.calls + 1):
+            t = time.perf_counter()
+            stage.score(src).write.format("noop").mode("overwrite").save()
+            if i:
+                walls.append(time.perf_counter() - t)
+        src.unpersist()
+        print(
+            f"score-only {SCORE_ONLY_ROWS} rows / 4 partitions: median "
+            f"{statistics.median(walls):.3f} s over {len(walls)} calls "
+            f"(min {min(walls):.3f}, max {max(walls):.3f})"
+        )
     spark.stop()
     return 0
 
