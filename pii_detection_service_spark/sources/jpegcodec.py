@@ -817,8 +817,8 @@ def _decode_jpeg_planes(data: bytes) -> list[np.ndarray]:
     are read in sequential scans, interleaved or one-component.
 
     Malformed input (a cut or inconsistent segment, a missing marker,
-    table or frame, an entropy stream that codes past its band) raises
-    ValueError. NotImplementedError marks the honest seams: sampling
+    table or frame, an entropy stream that codes past its band, data that
+    ends before EOI) raises ValueError. NotImplementedError marks the honest seams: sampling
     factors above 2, restarts inside progressive scans, arithmetic coding,
     hierarchical/lossless frames, 12-bit precision, 16-bit quantization
     tables, and 2-/4-component (e.g. CMYK) streams."""
@@ -834,13 +834,14 @@ def _decode_jpeg_planes(data: bytes) -> list[np.ndarray]:
     grid: list[tuple[int, int]] = []
     coefs: list[np.ndarray] = []
     hmax = vmax = 0
-    saw_scan = False
+    saw_scan = saw_eoi = False
     while pos + 1 < len(data):
         if data[pos] != 0xFF:
             raise ValueError(f"marker expected at byte {pos}")
         marker = data[pos + 1]
         pos += 2
         if marker == 0xD9:  # EOI
+            saw_eoi = True
             break
         if marker == 0xFF:  # fill byte
             pos -= 1
@@ -950,6 +951,8 @@ def _decode_jpeg_planes(data: bytes) -> list[np.ndarray]:
             continue
         pos += seglen
 
+    if not saw_eoi:
+        raise ValueError("truncated JPEG (the data ends before EOI)")
     if not (comps and saw_scan and h and w):
         raise ValueError("truncated JPEG (no SOS/SOF)")
     if any(qid not in qts for _, qid, _, _ in comps):

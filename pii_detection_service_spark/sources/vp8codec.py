@@ -24,7 +24,26 @@ Scope (RFC 6386): KEY FRAMES ONLY — the full intra toolchain:
   rightmost MB column) (§12),
 - both loop filters (normal MB/sub-block filters with interior limit,
   hev thresholds, and sharpness; the simple filter) applied in MB raster
-  order over reconstructed planes (§15).
+  order over reconstructed planes (§15); a horizontal edge is the
+  vertical-edge filter on the transposed plane.
+
+One macroblock walk. The decoder and the encoder take every macroblock
+through the same module functions: ``_planes`` (the 127/129 prediction
+border), ``_dequant_factors`` (§14.1, per segment in the decoder, at zero
+deltas in the encoder), ``_sub_modes`` (the B-mode above/left contexts and
+the modes a 16x16 luma mode implies), ``_mb_tokens`` (skip -> Y2 -> 16 Y
+-> 8 UV with the nonzero contexts; ``BoolDecoder.block`` reads a block's
+tokens and ``BoolEncoder.block`` writes them), ``_dequantize`` and
+``_reconstruct_mb`` (one predictor per block size, then dequantize ->
+IDCT -> add -> clip). The encoder adds only its mode search and forward
+transforms, so its reconstruction is the decoder's by construction.
+
+End of data, as in libwebp. A partition's reader may read one zero byte
+past its end (encoders omit the coder's trailing zero bytes); needing
+another sets ``eof``, and the decoder raises ValueError when a
+macroblock's modes or tokens end with ``eof`` set, or when the last token
+partition is empty. So a cut-short stream raises, or, where libwebp also
+decodes it, gives the full stream's planes.
 
 Inter frames raise NotImplementedError (this repo decodes still images; a
 WebP container never carries inter frames without a key frame first) —
@@ -49,6 +68,8 @@ invariant (PSNR >= 40 dB for lossy formats) over crawl-shaped inputs.
 """
 
 from __future__ import annotations
+
+import bisect
 
 import numpy as np
 
@@ -333,7 +354,16 @@ ZIGZAG = (0, 1, 4, 8, 5, 2, 3, 6, 9, 12, 13, 10, 7, 11, 14, 15)
 
 
 class BoolDecoder:
-    __slots__ = ("d", "pos", "end", "value", "range", "bits")
+    """§7 boolean decoder under libwebp's end-of-data rule.
+
+    The value window holds one byte more than libwebp's reader, and, as
+    there, a byte is loaded only when a read needs it. The first byte past
+    the partition reads as zero (encoders omit the coder's trailing zero
+    bytes); needing the next one is libwebp's end of data and sets ``eof``,
+    after which zeros are read. ``VP8Decoder`` raises at libwebp's checks:
+    after each macroblock's modes and after its tokens."""
+
+    __slots__ = ("d", "pos", "end", "value", "range", "bits", "eof")
 
     def __init__(self, data: bytes, start: int, end: int):
         self.d = data
@@ -342,25 +372,23 @@ class BoolDecoder:
         self.value = 0
         self.range = 255
         self.bits = -16
+        self.eof = False
         self._load()
 
     def _load(self):
         while self.bits < 0:
-            # encoders omit trailing zero bytes of the arithmetic coder's
-            # final state: reading a FEW virtual zeros past the partition
-            # end is part of the format. The allowance is the coder's
-            # lookahead depth (value window + flush), NOT unlimited — a
-            # torn partition must raise, never decode to silently-empty
-            # blocks (verified by the torn-file contract test and by the
-            # bit-exact libwebp conformance matrix staying green).
-            b = self.d[self.pos] if self.pos < self.end else 0
-            if self.pos >= self.end + 8:
-                raise ValueError("truncated VP8 partition")
-            self.value = ((self.value << 8) | b) & 0xFFFFFFFF
+            if self.pos < self.end:
+                b = self.d[self.pos]
+            else:
+                b = 0
+                self.eof |= self.pos > self.end
+            self.value = (self.value << 8) | b
             self.pos += 1
             self.bits += 8
 
     def bool(self, prob: int) -> int:
+        if self.bits < 0:
+            self._load()
         split = 1 + (((self.range - 1) * prob) >> 8)
         big = split << (8 + self.bits)
         if self.value >= big:
@@ -373,8 +401,6 @@ class BoolDecoder:
         while self.range < 128:
             self.range <<= 1
             self.bits -= 1
-            if self.bits < 0:
-                self._load()
         return ret
 
     def literal(self, n: int) -> int:
@@ -394,9 +420,408 @@ class BoolDecoder:
             if i <= 0:
                 return -i
 
+    def block(self, probs, ctx: int, first: int, out) -> int:
+        """Read one 4x4 block's tokens (§13.2) into ``out`` (natural order)
+        under its plane type's [band][ctx] probabilities; returns 1 when a
+        coefficient is nonzero."""
+        n, start, nz = first, 0, 0
+        while n < 16:
+            tok = self.tree(COEF_TREE, probs[COEF_BANDS[n]][ctx], start)
+            if tok == DCT_EOB:
+                break
+            if tok == 0:
+                ctx, start = 0, 2  # no EOB right after a zero
+            else:
+                if tok <= 4:
+                    val = tok
+                else:
+                    cat = tok - 5
+                    extra = 0
+                    for cp in CAT_PROBS[cat]:
+                        extra = (extra << 1) | self.bool(cp)
+                    val = CAT_BASE[cat] + extra
+                ctx, start = (2 if val > 1 else 1), 0
+                out[ZIGZAG[n]] = -val if self.bool(128) else val
+                nz = 1
+            n += 1
+        return nz
+
+
+class BoolEncoder:
+    """RFC 6386 §8 reference formulation with explicit carry."""
+
+    def __init__(self):
+        self.low = 0
+        self.range = 255
+        self.bit_count = 24
+        self.out = bytearray()
+
+    def _shift(self):
+        """Shift one bit of ``low`` toward the output: a carry out of bit 31
+        propagates into the bytes already written, and every 8th shift
+        writes a byte."""
+        if self.low & 0x80000000:
+            i = len(self.out) - 1
+            while i >= 0 and self.out[i] == 0xFF:
+                self.out[i] = 0
+                i -= 1
+            if i >= 0:
+                self.out[i] += 1
+            self.low &= 0x7FFFFFFF
+        self.low <<= 1
+        self.bit_count -= 1
+        if self.bit_count == 0:
+            self.out.append((self.low >> 24) & 0xFF)
+            self.low &= 0xFFFFFF
+            self.bit_count = 8
+
+    def put(self, bit: int, prob: int):
+        split = 1 + (((self.range - 1) * prob) >> 8)
+        if bit:
+            self.low += split
+            self.range -= split
+        else:
+            self.range = split
+        while self.range < 128:
+            self.range <<= 1
+            self._shift()
+
+    def literal(self, v: int, n: int):
+        for i in range(n - 1, -1, -1):
+            self.put((v >> i) & 1, 128)
+
+    def tree(self, tree_, probs, value, start: int = 0):
+        """Encode `value` (a leaf, i.e. -token) along the tree path."""
+        # find path by walking: depth-first search
+        path = self._find(tree_, start, -value)
+        assert path is not None, (value, start)
+        for node, bit in path:
+            self.put(bit, probs[node >> 1])
+
+    @staticmethod
+    def _find(tree_, i, target, path=()):
+        for bit in (0, 1):
+            nxt = tree_[i + bit]
+            p = path + ((i, bit),)
+            if nxt == target and nxt <= 0:
+                return p
+            if nxt > 0:
+                r = BoolEncoder._find(tree_, nxt, target, p)
+                if r is not None:
+                    return r
+        return None
+
+    def block(self, probs, ctx: int, first: int, levels) -> int:
+        """Write one 4x4 block's tokens (§13.2) from ``levels`` (natural
+        order), the inverse of ``BoolDecoder.block``; returns 1 when a
+        level is nonzero."""
+        zz = [int(levels[ZIGZAG[n]]) for n in range(16)]
+        last = max((n for n in range(first, 16) if zz[n]), default=first - 1)
+        start = 0
+        for n in range(first, last + 1):
+            v = zz[n]
+            a = abs(v)
+            pr = probs[COEF_BANDS[n]][ctx]
+            if a == 0:
+                self.tree(COEF_TREE, pr, 0, start=start)
+                ctx, start = 0, 2
+                continue
+            if a <= 4:
+                self.tree(COEF_TREE, pr, a, start=start)
+            else:
+                cat = bisect.bisect_right(CAT_BASE, a) - 1
+                self.tree(COEF_TREE, pr, 5 + cat, start=start)
+                extra = a - CAT_BASE[cat]
+                cp = CAT_PROBS[cat]
+                for i, pp in enumerate(cp):
+                    self.put((extra >> (len(cp) - 1 - i)) & 1, pp)
+            self.put(1 if v < 0 else 0, 128)
+            ctx, start = (2 if a > 1 else 1), 0
+        if last < 15:
+            self.tree(COEF_TREE, probs[COEF_BANDS[last + 1]][ctx], DCT_EOB)
+        return int(last >= first)
+
+    def finish(self) -> bytes:
+        # flush: push out 32 more bits of low
+        for _ in range(32):
+            self._shift()
+        return bytes(self.out)
+
 
 def _clamp_q(q: int) -> int:
     return 0 if q < 0 else (127 if q > 127 else q)
+
+
+def _coeff_probs(flat) -> list:
+    """Flat [type 4][band 8][ctx 3][11] probabilities as nested lists."""
+    return np.array(flat, dtype=np.int64).reshape(4, 8, 3, 11).tolist()
+
+
+# ---------------------------------------------------------------------------
+# The macroblock walk: one set of functions for both directions
+# ---------------------------------------------------------------------------
+
+def _planes(mb_w: int, mb_h: int):
+    """Y, U, V reconstruction planes with the §12.2 prediction border: one
+    row above the frame reading 127 and one column left of it reading 129
+    (the corner 127). Plane (1, 1) is pixel (0, 0)."""
+    planes = []
+    for n in (16, 8, 8):
+        P = np.zeros((mb_h * n + 1, mb_w * n + 1), dtype=np.int32)
+        P[:, 0] = 129
+        P[0, :] = 127
+        planes.append(P)
+    return planes
+
+
+def _dequant_factors(q: int, y_dc=0, y2_dc=0, y2_ac=0, uv_dc=0, uv_ac=0):
+    """§14.1 dequantization factors at base index q and the frame header's
+    deltas, as a (25, 16) matrix over a macroblock's blocks (0-15 Y, 16-19
+    U, 20-23 V, 24 Y2), DC first."""
+
+    def look(table, delta):
+        return table[_clamp_q(q + delta)]
+
+    rows = [(look(DC_QLOOKUP, y_dc), look(AC_QLOOKUP, 0))] * 16
+    rows += [(min(132, look(DC_QLOOKUP, uv_dc)), look(AC_QLOOKUP, uv_ac))] * 8
+    rows.append(
+        (look(DC_QLOOKUP, y2_dc) * 2, max(8, look(AC_QLOOKUP, y2_ac) * 155 // 100))
+    )
+    return np.array([[dc] + [ac] * 15 for dc, ac in rows], dtype=np.int64)
+
+
+def _token_order(has_y2: bool):
+    """(block, plane type, first coefficient, left context, above context)
+    of a macroblock's blocks in token order (§13): the Y2 block when the
+    luma mode has one, 16 Y, 4 U, 4 V. The contexts index 25-entry nonzero
+    rows: 0-3 Y, 4-5 U, 6-7 V, 24 Y2 (the libvpx layout)."""
+    y_type, first = (0, 1) if has_y2 else (3, 0)
+    order = [(24, 1, 0, 24, 24)] if has_y2 else []
+    order += [(b, y_type, first, b >> 2, b & 3) for b in range(16)]
+    order += [
+        (16 + 4 * p + b, 2, 0, 4 + 2 * p + (b >> 1), 4 + 2 * p + (b & 1))
+        for p in (0, 1)
+        for b in range(4)
+    ]
+    return tuple(order)
+
+
+_TOKEN_ORDER = {has_y2: _token_order(has_y2) for has_y2 in (False, True)}
+
+
+def _mb_tokens(coder, probs, levels, left_nz, above_nz, has_y2, skip):
+    """Code one macroblock's blocks in token order: ``coder.block`` reads
+    (BoolDecoder) or writes (BoolEncoder) a block's levels, and each block's
+    nonzero flag becomes the context of its right and lower neighbours. A
+    skipped macroblock codes nothing and clears its contexts."""
+    for b, type_, first, li, ai in _TOKEN_ORDER[has_y2]:
+        nz = 0 if skip else coder.block(
+            probs[type_], left_nz[li] + above_nz[ai], first, levels[b]
+        )
+        left_nz[li] = above_nz[ai] = nz
+
+
+_IMPLIED_BMODE = {DC_PRED: B_DC, V_PRED: B_VE, H_PRED: B_HE, TM_PRED: B_TM}
+
+
+def _sub_modes(ym, above, left, pick):
+    """The 4x4 sub-block modes of one macroblock (§11.3). Under B_PRED,
+    ``pick(sy, sx, probs)`` chooses each in raster order with the key-frame
+    probabilities its above and left neighbours' modes select; a 16x16
+    mode implies one mode for all 16 (returns None). ``above`` (this
+    column's) and ``left`` (this row's) 4-entry contexts are updated."""
+    if ym != B_PRED:
+        above[:] = left[:] = [_IMPLIED_BMODE[ym]] * 4
+        return None
+    modes = [[0] * 4 for _ in range(4)]
+    for sy in range(4):
+        for sx in range(4):
+            a = modes[sy - 1][sx] if sy else above[sx]
+            l = modes[sy][sx - 1] if sx else left[sy]
+            k = (a * 10 + l) * 9
+            modes[sy][sx] = pick(sy, sx, KF_BMODE_PROBS[k : k + 9])
+    above[:] = modes[3]
+    left[:] = [row[3] for row in modes]
+    return modes
+
+
+def _dequantize(levels, factors, has_y2):
+    """One macroblock's quantized levels -> IDCT inputs. With a Y2 block,
+    the Y blocks' DCs are the inverse WHT of the dequantized Y2 (§14.3)."""
+    coeffs = levels * factors
+    if has_y2:
+        coeffs[:16, 0] = np.ravel(_iwht(coeffs[24]))
+    return coeffs
+
+
+def _reconstruct_mb(Y, U, V, my, mx, last_col, ym, bmodes, uvm, coeffs):
+    """Predict one macroblock from its reconstructed neighbours and add its
+    residual: the reconstruction the decoder outputs and the encoder
+    predicts from."""
+    y0, x0 = 16 * my + 1, 16 * mx + 1
+    if bmodes is None:
+        _predict(Y, y0, x0, 16, ym, my, mx)
+        _add_residual(Y, y0, x0, 16, coeffs[:16])
+    else:
+        for b in range(16):
+            r, c = y0 + 4 * (b >> 2), x0 + 4 * (b & 3)
+            _predict_b(Y, r, c, bmodes[b >> 2][b & 3], y0, x0, last_col)
+            _add_residual(Y, r, c, 4, coeffs[b])
+    cy0, cx0 = 8 * my + 1, 8 * mx + 1
+    for P, base in ((U, 16), (V, 20)):
+        _predict(P, cy0, cx0, 8, uvm, my, mx)
+        _add_residual(P, cy0, cx0, 8, coeffs[base : base + 4])
+
+
+# --- transforms (§14.3/§14.4) ------------------------------------------------
+
+def _idct_1d(r0, r1, r2, r3):
+    c1, c2 = 20091, 35468
+    a, b = r0 + r2, r0 - r2
+    c = ((r1 * c2) >> 16) - (r3 + ((r3 * c1) >> 16))
+    d = (r1 + ((r1 * c1) >> 16)) + ((r3 * c2) >> 16)
+    return a + d, b + c, b - c, a - d
+
+
+def _iwht_1d(r0, r1, r2, r3):
+    a, b = r0 + r3, r1 + r2
+    c, d = r1 - r2, r0 - r3
+    return a + b, c + d, a - b, d - c
+
+
+def _inverse_2d(pass_1d, coeffs, rounding):
+    """A separable integer inverse transform of one 4x4 block (16 values,
+    natural order) -> rows: columns first, then rows, then (v + rounding)
+    >> 3."""
+    x = np.asarray(coeffs).tolist()
+    cols = [pass_1d(x[i], x[4 + i], x[8 + i], x[12 + i]) for i in range(4)]
+    return [
+        [(v + rounding) >> 3 for v in pass_1d(*(col[k] for col in cols))]
+        for k in range(4)
+    ]
+
+
+def _idct(coeffs):
+    """Inverse DCT of one block -> its 4x4 residual."""
+    return _inverse_2d(_idct_1d, coeffs, 4)
+
+
+def _iwht(coeffs):
+    """Inverse WHT of the dequantized Y2 block -> the 16 Y DCs (4x4)."""
+    return _inverse_2d(_iwht_1d, coeffs, 3)
+
+
+def _add_residual(P, r, c, n, coeffs):
+    """Add the inverse DCT of an n x n square's 4x4 blocks (raster order,
+    16 coefficients each) to the prediction at plane (r, c), clipped to
+    0..255."""
+    for b, blk in enumerate(coeffs.reshape(-1, 16)):
+        if blk.any():
+            i, j = r + 4 * (b // (n // 4)), c + 4 * (b % (n // 4))
+            t = P[i : i + 4, j : j + 4]
+            t[:] = np.clip(t + _idct(blk), 0, 255)
+
+
+# --- intra prediction (§12) --------------------------------------------------
+
+def _predict(P, y0, x0, n, mode, my, mx):
+    """16x16 luma or 8x8 chroma prediction written in place at plane (y0,
+    x0). DC averages the edges inside the frame (none: 128)."""
+    above = P[y0 - 1, x0 : x0 + n]
+    left = P[y0 : y0 + n, x0 - 1]
+    t = P[y0 : y0 + n, x0 : x0 + n]
+    if mode == DC_PRED:
+        edges = ([above] if my > 0 else []) + ([left] if mx > 0 else [])
+        count = n * len(edges)
+        t[:] = (sum(int(e.sum()) for e in edges) + count // 2) // count if edges else 128
+    elif mode == V_PRED:
+        t[:] = above[None, :]
+    elif mode == H_PRED:
+        t[:] = left[:, None]
+    else:  # TM
+        t[:] = np.clip(left[:, None] + above[None, :] - P[y0 - 1, x0 - 1], 0, 255)
+
+
+def _avg3(a, b, c):
+    return (a + 2 * b + c + 2) >> 2
+
+
+def _avg2(a, b):
+    return (a + b + 1) >> 1
+
+
+def _predict_b(Y, r, c, mode, y0, x0, last_col):
+    """4x4 sub-block prediction written in place at plane (r, c) of the
+    macroblock at (y0, x0). A sub-block in the macroblock's right column
+    takes its above-right pixels from the row above the macroblock, never
+    from this macroblock; on the frame's last macroblock column that row's
+    last pixel is replicated (the libwebp/libvpx rule)."""
+    A = Y[r - 1, c : c + 4].tolist()
+    L = Y[r : r + 4, c - 1].tolist()
+    P = int(Y[r - 1, c - 1])
+    if c + 4 < x0 + 16:
+        AR = Y[r - 1, c + 4 : c + 8].tolist()
+    elif last_col:
+        AR = [int(Y[y0 - 1, c + 3])] * 4
+    else:
+        AR = Y[y0 - 1, c + 4 : c + 8].tolist()
+    E = A + AR  # above row 8 px
+    t = [[0] * 4 for _ in range(4)]
+    if mode == B_DC:
+        t = [[(sum(A) + sum(L) + 4) >> 3] * 4 for _ in range(4)]
+    elif mode == B_TM:
+        t = [[min(255, max(0, l + a - P)) for a in A] for l in L]
+    elif mode == B_VE:
+        row = [_avg3(x, y, z) for x, y, z in zip([P] + A, A, A[1:] + AR[:1])]
+        t = [row] * 4
+    elif mode == B_HE:
+        col = [_avg3(x, y, z) for x, y, z in zip([P] + L, L, L[1:] + L[3:])]
+        t = [[v] * 4 for v in col]
+    elif mode == B_LD:
+        E = E + E[7:]
+        t = [[_avg3(E[x + y], E[x + y + 1], E[x + y + 2]) for x in range(4)] for y in range(4)]
+    elif mode == B_RD:
+        full = [L[3], L[2], L[1], L[0], P, A[0], A[1], A[2], A[3]]
+        t = [[_avg3(*full[x - y + 3 : x - y + 6]) for x in range(4)] for y in range(4)]
+    elif mode == B_VR:
+        # per RFC 6386 12.3 vr table
+        t[0][0] = _avg2(P, A[0]); t[0][1] = _avg2(A[0], A[1])
+        t[0][2] = _avg2(A[1], A[2]); t[0][3] = _avg2(A[2], A[3])
+        t[1][0] = _avg3(L[0], P, A[0]); t[1][1] = _avg3(P, A[0], A[1])
+        t[1][2] = _avg3(A[0], A[1], A[2]); t[1][3] = _avg3(A[1], A[2], A[3])
+        t[2][0] = _avg3(L[1], L[0], P); t[2][1] = t[0][0]
+        t[2][2] = t[0][1]; t[2][3] = t[0][2]
+        t[3][0] = _avg3(L[2], L[1], L[0]); t[3][1] = t[1][0]
+        t[3][2] = t[1][1]; t[3][3] = t[1][2]
+    elif mode == B_VL:
+        t[0][0] = _avg2(E[0], E[1]); t[0][1] = _avg2(E[1], E[2])
+        t[0][2] = _avg2(E[2], E[3]); t[0][3] = _avg2(E[3], E[4])
+        t[1][0] = _avg3(E[0], E[1], E[2]); t[1][1] = _avg3(E[1], E[2], E[3])
+        t[1][2] = _avg3(E[2], E[3], E[4]); t[1][3] = _avg3(E[3], E[4], E[5])
+        t[2][0] = t[0][1]; t[2][1] = t[0][2]
+        t[2][2] = t[0][3]; t[2][3] = _avg3(E[4], E[5], E[6])
+        t[3][0] = t[1][1]; t[3][1] = t[1][2]
+        t[3][2] = t[1][3]; t[3][3] = _avg3(E[5], E[6], E[7])
+    elif mode == B_HD:
+        t[0][0] = _avg2(L[0], P); t[0][1] = _avg3(L[0], P, A[0])
+        t[0][2] = _avg3(P, A[0], A[1]); t[0][3] = _avg3(A[0], A[1], A[2])
+        t[1][0] = _avg2(L[1], L[0]); t[1][1] = _avg3(L[1], L[0], P)
+        t[1][2] = t[0][0]; t[1][3] = t[0][1]
+        t[2][0] = _avg2(L[2], L[1]); t[2][1] = _avg3(L[2], L[1], L[0])
+        t[2][2] = t[1][0]; t[2][3] = t[1][1]
+        t[3][0] = _avg2(L[3], L[2]); t[3][1] = _avg3(L[3], L[2], L[1])
+        t[3][2] = t[2][0]; t[3][3] = t[2][1]
+    elif mode == B_HU:
+        t[0][0] = _avg2(L[0], L[1]); t[0][1] = _avg3(L[0], L[1], L[2])
+        t[0][2] = _avg2(L[1], L[2]); t[0][3] = _avg3(L[1], L[2], L[3])
+        t[1][0] = t[0][2]; t[1][1] = t[0][3]
+        t[1][2] = _avg2(L[2], L[3]); t[1][3] = _avg3(L[2], L[3], L[3])
+        t[2][0] = t[1][2]; t[2][1] = t[1][3]
+        t[2][2] = L[3]; t[2][3] = L[3]
+        t[3] = [L[3]] * 4
+    else:
+        raise ValueError(f"bad b mode {mode}")
+    Y[r : r + 4, c : c + 4] = t
 
 
 class VP8Decoder:
@@ -477,496 +902,93 @@ class VP8Decoder:
                     if bd.bool(128):
                         self.mode_lf_deltas[i] = bd.signed(6)
 
-        # token partitions
+        # token partitions, sized as libwebp sizes them: a size past the
+        # data is cut to the data, and the last partition must hold data
+        d = self.data
         n_parts = 1 << bd.literal(2)
-        part_start = 10 + self.part1_size
-        sizes = []
-        if n_parts > 1:
-            tbl = self.data[part_start : part_start + 3 * (n_parts - 1)]
-            if len(tbl) < 3 * (n_parts - 1):
-                raise ValueError("truncated VP8 partition size table")
-            part_start += 3 * (n_parts - 1)
-            for i in range(n_parts - 1):
-                sizes.append(tbl[3 * i] | (tbl[3 * i + 1] << 8) | (tbl[3 * i + 2] << 16))
-        offs = []
-        pos = part_start
-        for s in sizes:
-            offs.append((pos, pos + s))
-            pos += s
-            if pos > len(self.data):
-                raise ValueError("truncated VP8 token partition")
-        offs.append((pos, len(self.data)))
-        self.partitions = [BoolDecoder(self.data, a, b) for a, b in offs]
+        sizes = 10 + self.part1_size
+        pos = sizes + 3 * (n_parts - 1)
+        if pos > len(d):
+            raise ValueError("truncated VP8 partition size table")
+        self.partitions = []
+        for i in range(n_parts - 1):
+            k = sizes + 3 * i
+            end = min(pos + int.from_bytes(d[k : k + 3], "little"), len(d))
+            self.partitions.append(BoolDecoder(d, pos, end))
+            pos = end
+        if pos >= len(d):
+            raise ValueError("truncated VP8 token partition")
+        self.partitions.append(BoolDecoder(d, pos, len(d)))
 
-        # quantizers
-        self.y_ac_qi = bd.literal(7)
-        self.y_dc_delta = bd.signed(4) if bd.bool(128) else 0
-        self.y2_dc_delta = bd.signed(4) if bd.bool(128) else 0
-        self.y2_ac_delta = bd.signed(4) if bd.bool(128) else 0
-        self.uv_dc_delta = bd.signed(4) if bd.bool(128) else 0
-        self.uv_ac_delta = bd.signed(4) if bd.bool(128) else 0
+        # quantizers: per-segment dequantization factors
+        y_ac_qi = bd.literal(7)
+        deltas = [bd.signed(4) if bd.bool(128) else 0 for _ in range(5)]
+        self.factors = []
+        for seg in range(4):
+            base = y_ac_qi
+            if self.segmentation:
+                base = self.seg_q[seg] + (0 if self.seg_abs else y_ac_qi)
+            self.factors.append(_dequant_factors(_clamp_q(base), *deltas))
 
         self.refresh_entropy = bd.bool(128)
 
         # coefficient probability updates
-        probs = np.array(DEFAULT_COEFF_PROBS, dtype=np.uint8).reshape(4, 8, 3, 11)
-        upd = np.array(COEFF_UPDATE_PROBS, dtype=np.uint8).reshape(4, 8, 3, 11)
-        probs = probs.copy()
-        for i in range(4):
-            for j in range(8):
-                for k in range(3):
-                    for l in range(11):
-                        if bd.bool(int(upd[i, j, k, l])):
-                            probs[i, j, k, l] = bd.literal(8)
-        self.coef_probs = probs
+        probs = list(DEFAULT_COEFF_PROBS)
+        for i, p in enumerate(COEFF_UPDATE_PROBS):
+            if bd.bool(p):
+                probs[i] = bd.literal(8)
+        self.coef_probs = _coeff_probs(probs)
 
         self.use_skip = bd.bool(128)
         self.skip_prob = bd.literal(8) if self.use_skip else 0
 
-    # --- quantizer tables per segment ---
-    def _quantizers(self):
-        out = []
-        for seg in range(4):
-            if self.segmentation:
-                base = self.seg_q[seg] if self.seg_abs else self.y_ac_qi + self.seg_q[seg]
-            else:
-                base = self.y_ac_qi
-            q = _clamp_q(base)
-            y_dc = DC_QLOOKUP[_clamp_q(q + self.y_dc_delta)]
-            y_ac = AC_QLOOKUP[q]
-            y2_dc = DC_QLOOKUP[_clamp_q(q + self.y2_dc_delta)] * 2
-            y2_ac = AC_QLOOKUP[_clamp_q(q + self.y2_ac_delta)] * 155 // 100
-            if y2_ac < 8:
-                y2_ac = 8
-            uv_dc = DC_QLOOKUP[_clamp_q(q + self.uv_dc_delta)]
-            if uv_dc > 132:
-                uv_dc = 132
-            uv_ac = AC_QLOOKUP[_clamp_q(q + self.uv_ac_delta)]
-            out.append((y_dc, y_ac, y2_dc, y2_ac, uv_dc, uv_ac))
-        return out
-
-    # --- mode parsing (first partition, whole frame) ---
-    def _parse_modes(self):
+    def _mb_modes(self, above_b, left_b):
+        """One macroblock's header from the first partition (§19.3):
+        segment, skip flag, luma mode and sub-block modes, chroma mode."""
         bd = self.bd
-        mw, mh = self.mb_w, self.mb_h
-        self.seg_ids = np.zeros((mh, mw), dtype=np.int32)
-        self.skips = np.zeros((mh, mw), dtype=np.int32)
-        self.ymodes = np.zeros((mh, mw), dtype=np.int32)
-        self.uvmodes = np.zeros((mh, mw), dtype=np.int32)
-        self.bmodes = np.zeros((mh, mw, 4, 4), dtype=np.int32)
-        above_b = np.full((mw, 4), B_DC, dtype=np.int32)
-        for my in range(mh):
-            left_b = np.full(4, B_DC, dtype=np.int32)
-            for mx in range(mw):
-                if self.update_map:
-                    self.seg_ids[my, mx] = bd.tree(
-                        MB_SEGMENT_TREE, self.seg_tree_probs
-                    )
-                if self.use_skip:
-                    self.skips[my, mx] = bd.bool(self.skip_prob)
-                ym = bd.tree(KF_YMODE_TREE, KF_YMODE_PROBS)
-                self.ymodes[my, mx] = ym
-                if ym == B_PRED:
-                    for sy in range(4):
-                        for sx in range(4):
-                            a = above_b[mx, sx] if sy == 0 else self.bmodes[my, mx, sy - 1, sx]
-                            l = left_b[sy] if sx == 0 else self.bmodes[my, mx, sy, sx - 1]
-                            p = KF_BMODE_PROBS[(a * 10 + l) * 9 : (a * 10 + l) * 9 + 9]
-                            m = bd.tree(BMODE_TREE, p)
-                            self.bmodes[my, mx, sy, sx] = m
-                    above_b[mx] = self.bmodes[my, mx, 3]
-                    left_b[:] = self.bmodes[my, mx, :, 3]
-                else:
-                    # implied uniform b modes for the 16x16 modes
-                    implied = {DC_PRED: B_DC, V_PRED: B_VE, H_PRED: B_HE, TM_PRED: B_TM}[ym]
-                    self.bmodes[my, mx, :, :] = implied
-                    above_b[mx] = implied
-                    left_b[:] = implied
-                self.uvmodes[my, mx] = bd.tree(UV_MODE_TREE, KF_UV_PROBS)
-
-    # --- coefficient decode ---
-    def _decode_coeffs(self, bd, type_, ctx, first, probs):
-        """Decode one 4x4 block's coefficients. Returns (coeffs int32[16],
-        nonzero)."""
-        out = np.zeros(16, dtype=np.int32)
-        p = probs[type_]
-        n = first
-        prev_zero = False
-        nz = 0
-        while n < 16:
-            pr = p[COEF_BANDS[n]][ctx]
-            tok = bd.tree(COEF_TREE, pr, start=2 if prev_zero else 0)
-            if tok == DCT_EOB:
-                break
-            if tok == 0:
-                val = 0
-                ctx = 0
-                prev_zero = True
-            else:
-                prev_zero = False
-                if tok <= 4:
-                    val = tok
-                else:
-                    cat = tok - 5
-                    extra = 0
-                    for cp in CAT_PROBS[cat]:
-                        extra = (extra << 1) | bd.bool(cp)
-                    val = CAT_BASE[cat] + extra
-                ctx = 2 if val > 1 else 1
-                if bd.bool(128):
-                    val = -val
-                out[ZIGZAG[n]] = val
-                nz = 1
-            n += 1
-        return out, nz
-
-    # --- transforms ---
-    @staticmethod
-    def _iwht(inp):
-        out = np.zeros(16, dtype=np.int64)
-        ip = inp.astype(np.int64).reshape(4, 4)
-        tmp = np.zeros((4, 4), dtype=np.int64)
-        for i in range(4):
-            a1 = ip[0, i] + ip[3, i]
-            b1 = ip[1, i] + ip[2, i]
-            c1 = ip[1, i] - ip[2, i]
-            d1 = ip[0, i] - ip[3, i]
-            tmp[0, i] = a1 + b1
-            tmp[1, i] = c1 + d1
-            tmp[2, i] = a1 - b1
-            tmp[3, i] = d1 - c1
-        o = np.zeros((4, 4), dtype=np.int64)
-        for i in range(4):
-            a1 = tmp[i, 0] + tmp[i, 3]
-            b1 = tmp[i, 1] + tmp[i, 2]
-            c1 = tmp[i, 1] - tmp[i, 2]
-            d1 = tmp[i, 0] - tmp[i, 3]
-            o[i, 0] = (a1 + b1 + 3) >> 3
-            o[i, 1] = (c1 + d1 + 3) >> 3
-            o[i, 2] = (a1 - b1 + 3) >> 3
-            o[i, 3] = (d1 - c1 + 3) >> 3
-        out[:] = o.reshape(16)
-        return out
-
-    @staticmethod
-    def _idct(block):
-        c1, c2 = 20091, 35468
-        ip = block.astype(np.int64).reshape(4, 4)
-        tmp = np.zeros((4, 4), dtype=np.int64)
-        for i in range(4):
-            a1 = ip[0, i] + ip[2, i]
-            b1 = ip[0, i] - ip[2, i]
-            t1 = (ip[1, i] * c2) >> 16
-            t2 = ip[3, i] + ((ip[3, i] * c1) >> 16)
-            c_ = t1 - t2
-            t1 = ip[1, i] + ((ip[1, i] * c1) >> 16)
-            t2 = (ip[3, i] * c2) >> 16
-            d_ = t1 + t2
-            tmp[0, i] = a1 + d_
-            tmp[3, i] = a1 - d_
-            tmp[1, i] = b1 + c_
-            tmp[2, i] = b1 - c_
-        out = np.zeros((4, 4), dtype=np.int64)
-        for i in range(4):
-            a1 = tmp[i, 0] + tmp[i, 2]
-            b1 = tmp[i, 0] - tmp[i, 2]
-            t1 = (tmp[i, 1] * c2) >> 16
-            t2 = tmp[i, 3] + ((tmp[i, 3] * c1) >> 16)
-            c_ = t1 - t2
-            t1 = tmp[i, 1] + ((tmp[i, 1] * c1) >> 16)
-            t2 = (tmp[i, 3] * c2) >> 16
-            d_ = t1 + t2
-            out[i, 0] = (a1 + d_ + 4) >> 3
-            out[i, 3] = (a1 - d_ + 4) >> 3
-            out[i, 1] = (b1 + c_ + 4) >> 3
-            out[i, 2] = (b1 - c_ + 4) >> 3
-        return out
+        seg = bd.tree(MB_SEGMENT_TREE, self.seg_tree_probs) if self.update_map else 0
+        skip = bd.bool(self.skip_prob) if self.use_skip else 0
+        ym = bd.tree(KF_YMODE_TREE, KF_YMODE_PROBS)
+        bmodes = _sub_modes(
+            ym, above_b, left_b, lambda sy, sx, probs: bd.tree(BMODE_TREE, probs)
+        )
+        return seg, skip, ym, bmodes, bd.tree(UV_MODE_TREE, KF_UV_PROBS)
 
     # --- main decode ---
     def decode(self):
-        self._parse_modes()
-        quants = self._quantizers()
         mw, mh = self.mb_w, self.mb_h
-        W, H = mw * 16, mh * 16
-        CW, CH = mw * 8, mh * 8
-        # padded planes with 1-px top/left border for prediction edges
-        Y = np.zeros((H + 1, W + 1 + 4), dtype=np.int32)
-        U = np.zeros((CH + 1, CW + 1), dtype=np.int32)
-        V = np.zeros((CH + 1, CW + 1), dtype=np.int32)
-        # edge conventions: row -1 = 127, col -1 = 129, corner 127
-        Y[0, :] = 127
-        Y[:, 0] = 129
-        Y[0, 0] = 127
-        U[0, :] = 127
-        U[:, 0] = 129
-        U[0, 0] = 127
-        V[0, :] = 127
-        V[:, 0] = 129
-        V[0, 0] = 127
-
-        # nonzero contexts: per-MB-column above contexts, per-MB left
-        # entropy contexts: 0-3 Y rows/cols, 4-7 UV, 24 Y2 (libvpx layout)
-        above_nz = np.zeros((mw, 25), dtype=np.int32)
-        self.mb_coeffs = np.zeros((mh, mw, 25, 16), dtype=np.int32)
+        Y, U, V = _planes(mw, mh)
+        self.seg_ids = np.zeros((mh, mw), dtype=np.int32)
+        self.skips = np.zeros((mh, mw), dtype=np.int32)
+        self.ymodes = np.zeros((mh, mw), dtype=np.int32)
         self.mb_has_coeffs = np.zeros((mh, mw), dtype=bool)
-
+        above_nz = [[0] * 25 for _ in range(mw)]
+        above_b = [[B_DC] * 4 for _ in range(mw)]
         for my in range(mh):
-            left_nz = np.zeros(25, dtype=np.int32)
+            left_nz = [0] * 25
+            left_b = [B_DC] * 4
             bd = self.partitions[my % len(self.partitions)]
             for mx in range(mw):
-                seg = self.seg_ids[my, mx]
-                y_dc, y_ac, y2_dc, y2_ac, uv_dc, uv_ac = quants[seg]
-                ym = self.ymodes[my, mx]
+                seg, skip, ym, bmodes, uvm = self._mb_modes(above_b[mx], left_b)
+                if self.bd.eof:
+                    raise ValueError("VP8 first partition ends inside the modes")
+                levels = np.zeros((25, 16), dtype=np.int32)
                 has_y2 = ym != B_PRED
-                coeffs = self.mb_coeffs[my, mx]
-                if self.skips[my, mx]:
-                    left_nz[:24] = 0
-                    above_nz[mx, :24] = 0
-                    if has_y2:
-                        left_nz[24] = 0
-                        above_nz[mx, 24] = 0
-                    self.mb_has_coeffs[my, mx] = False
-                else:
-                    any_nz = 0
-                    if has_y2:
-                        ctx = left_nz[24] + above_nz[mx, 24]
-                        c, nz = self._decode_coeffs(bd, 1, ctx, 0, self.coef_probs)
-                        c[0] *= y2_dc
-                        c[1:] *= y2_ac
-                        coeffs[24] = c
-                        left_nz[24] = above_nz[mx, 24] = nz
-                        any_nz |= nz
-                        y2 = self._iwht(coeffs[24])
-                    ytype = 0 if has_y2 else 3
-                    first = 1 if has_y2 else 0
-                    for b in range(16):
-                        sy, sx = b // 4, b % 4
-                        # y contexts: left_nz[0..3] per row, above_nz[0..3] per col
-                        ctx = left_nz[sy] + above_nz[mx, sx]
-                        c, nz = self._decode_coeffs(bd, ytype, ctx, first, self.coef_probs)
-                        c[0] *= y_dc
-                        c[1:] *= y_ac
-                        if first == 1:
-                            c[0] = 0  # dc comes from y2
-                        coeffs[b] = c
-                        left_nz[sy] = above_nz[mx, sx] = nz
-                        any_nz |= nz
-                    # chroma: u blocks 16..19, v 20..23; ctx indices 4+...
-                    for pl, base in ((0, 16), (1, 20)):
-                        for b in range(4):
-                            sy, sx = b // 2, b % 2
-                            li = 4 + pl * 2 + sy
-                            ai = 4 + pl * 2 + sx
-                            ctx = left_nz[li] + above_nz[mx, ai]
-                            c, nz = self._decode_coeffs(bd, 2, ctx, 0, self.coef_probs)
-                            c[0] *= uv_dc
-                            c[1:] *= uv_ac
-                            coeffs[base + b] = c
-                            left_nz[li] = above_nz[mx, ai] = nz
-                            any_nz |= nz
-                    if has_y2:
-                        for b in range(16):
-                            coeffs[b][0] = y2[b]
-                        any_nz |= int(np.any(y2 != 0))
-                    self.mb_has_coeffs[my, mx] = bool(any_nz)
-                self._reconstruct_mb(Y, U, V, my, mx)
+                _mb_tokens(bd, self.coef_probs, levels, left_nz, above_nz[mx], has_y2, skip)
+                if bd.eof:
+                    raise ValueError(f"VP8 token partition ends inside macroblock {my},{mx}")
+                self.seg_ids[my, mx], self.skips[my, mx], self.ymodes[my, mx] = seg, skip, ym
+                self.mb_has_coeffs[my, mx] = levels.any()
+                coeffs = _dequantize(levels, self.factors[seg], has_y2)
+                _reconstruct_mb(Y, U, V, my, mx, mx == mw - 1, ym, bmodes, uvm, coeffs)
         if self.filter_level > 0 and self.version < 2:
             _apply_loop_filter(self, Y, U, V)
-        self.Y_full, self.U_full, self.V_full = Y, U, V
-        y = Y[1 : 1 + self.height, 1 : 1 + self.width]
-        u = U[1 : 1 + (self.height + 1) // 2, 1 : 1 + (self.width + 1) // 2]
-        v = V[1 : 1 + (self.height + 1) // 2, 1 : 1 + (self.width + 1) // 2]
+        ch, cw = (self.height + 1) // 2, (self.width + 1) // 2
         return (
-            y.astype(np.uint8),
-            u.astype(np.uint8),
-            v.astype(np.uint8),
+            Y[1 : 1 + self.height, 1 : 1 + self.width].astype(np.uint8),
+            U[1 : 1 + ch, 1 : 1 + cw].astype(np.uint8),
+            V[1 : 1 + ch, 1 : 1 + cw].astype(np.uint8),
         )
-
-    # --- prediction + reconstruction ---
-    def _reconstruct_mb(self, Y, U, V, my, mx):
-        ym = self.ymodes[my, mx]
-        x0, y0 = mx * 16 + 1, my * 16 + 1  # plane coords incl. border
-        coeffs = self.mb_coeffs[my, mx]
-        if ym == B_PRED:
-            for b in range(16):
-                sy, sx = b // 4, b % 4
-                self._predict_b(Y, y0 + sy * 4, x0 + sx * 4, self.bmodes[my, mx, sy, sx], my, mx, sy, sx)
-                blk = coeffs[b]
-                if np.any(blk != 0):
-                    res = self._idct(blk)
-                    t = Y[y0 + sy * 4 : y0 + sy * 4 + 4, x0 + sx * 4 : x0 + sx * 4 + 4]
-                    t[:, :] = np.clip(t + res, 0, 255)
-        else:
-            self._predict_16(Y, y0, x0, ym, my, mx)
-            for b in range(16):
-                sy, sx = b // 4, b % 4
-                blk = coeffs[b]
-                if np.any(blk != 0):
-                    res = self._idct(blk)
-                    t = Y[y0 + sy * 4 : y0 + sy * 4 + 4, x0 + sx * 4 : x0 + sx * 4 + 4]
-                    t[:, :] = np.clip(t + res, 0, 255)
-        # chroma
-        cx0, cy0 = mx * 8 + 1, my * 8 + 1
-        uvm = self.uvmodes[my, mx]
-        for plane, P, base in ((0, U, 16), (1, V, 20)):
-            self._predict_8(P, cy0, cx0, uvm, my, mx)
-            for b in range(4):
-                sy, sx = b // 2, b % 2
-                blk = coeffs[base + b]
-                if np.any(blk != 0):
-                    res = self._idct(blk)
-                    t = P[cy0 + sy * 4 : cy0 + sy * 4 + 4, cx0 + sx * 4 : cx0 + sx * 4 + 4]
-                    t[:, :] = np.clip(t + res, 0, 255)
-
-    def _predict_16(self, Y, y0, x0, mode, my, mx):
-        above = Y[y0 - 1, x0 : x0 + 16]
-        left = Y[y0 : y0 + 16, x0 - 1]
-        tl = Y[y0 - 1, x0 - 1]
-        t = Y[y0 : y0 + 16, x0 : x0 + 16]
-        if mode == DC_PRED:
-            have_a, have_l = my > 0, mx > 0
-            if have_a and have_l:
-                dc = (int(above.sum()) + int(left.sum()) + 16) >> 5
-            elif have_a:
-                dc = (int(above.sum()) + 8) >> 4
-            elif have_l:
-                dc = (int(left.sum()) + 8) >> 4
-            else:
-                dc = 128
-            t[:, :] = dc
-        elif mode == V_PRED:
-            t[:, :] = above[None, :]
-        elif mode == H_PRED:
-            t[:, :] = left[:, None]
-        else:  # TM
-            t[:, :] = np.clip(left[:, None] + above[None, :] - tl, 0, 255)
-
-    def _predict_8(self, P, y0, x0, mode, my, mx):
-        above = P[y0 - 1, x0 : x0 + 8]
-        left = P[y0 : y0 + 8, x0 - 1]
-        tl = P[y0 - 1, x0 - 1]
-        t = P[y0 : y0 + 8, x0 : x0 + 8]
-        if mode == DC_PRED:
-            have_a, have_l = my > 0, mx > 0
-            if have_a and have_l:
-                dc = (int(above.sum()) + int(left.sum()) + 8) >> 4
-            elif have_a:
-                dc = (int(above.sum()) + 4) >> 3
-            elif have_l:
-                dc = (int(left.sum()) + 4) >> 3
-            else:
-                dc = 128
-            t[:, :] = dc
-        elif mode == V_PRED:
-            t[:, :] = above[None, :]
-        elif mode == H_PRED:
-            t[:, :] = left[:, None]
-        else:
-            t[:, :] = np.clip(left[:, None] + above[None, :] - tl, 0, 255)
-
-    def _predict_b(self, Y, r, c, mode, my, mx, sy, sx):
-        """4x4 intra prediction at plane coords (r, c) incl. border."""
-        A = Y[r - 1, c : c + 4].astype(np.int64)
-        L = Y[r : r + 4, c - 1].astype(np.int64)
-        P = int(Y[r - 1, c - 1])
-        # above-right 4 pixels: from row r-1. For sub-blocks not on the MB top
-        # row, VP8 uses the ABOVE MB's bottom row (our plane keeps only
-        # reconstructed rows, so emulate: for sy>0 use the saved top row at
-        # the MB's top, i.e. row my*16). For the frame's right edge, the
-        # extended border columns replicate 127 from init.
-        if sx == 3:
-            # above-right comes from the saved above-MB row (plane row
-            # my*16), never from in-MB reconstruction; the rightmost MB
-            # replicates the last real above pixel (libwebp/libvpx rule)
-            ar_row = my * 16
-            if mx == self.mb_w - 1:
-                AR = np.full(4, int(Y[ar_row, c + 3]), dtype=np.int64)
-            else:
-                AR = Y[ar_row, c + 4 : c + 8].astype(np.int64)
-        else:
-            AR = Y[r - 1, c + 4 : c + 8].astype(np.int64)
-        t = Y[r : r + 4, c : c + 4]
-        E = np.concatenate([A, AR])  # above row 8 px
-
-        def avg3(a, b, c_):
-            return (a + 2 * b + c_ + 2) >> 2
-
-        def avg2(a, b):
-            return (a + b + 1) >> 1
-
-        if mode == B_DC:
-            dc = (int(A.sum()) + int(L.sum()) + 4) >> 3
-            t[:, :] = dc
-        elif mode == B_TM:
-            t[:, :] = np.clip(L[:, None] + A[None, :] - P, 0, 255)
-        elif mode == B_VE:
-            row = np.empty(4, dtype=np.int64)
-            row[0] = avg3(P, A[0], A[1])
-            row[1] = avg3(A[0], A[1], A[2])
-            row[2] = avg3(A[1], A[2], A[3])
-            row[3] = avg3(A[2], A[3], AR[0])
-            t[:, :] = row[None, :]
-        elif mode == B_HE:
-            col = np.empty(4, dtype=np.int64)
-            col[0] = avg3(P, L[0], L[1])
-            col[1] = avg3(L[0], L[1], L[2])
-            col[2] = avg3(L[1], L[2], L[3])
-            col[3] = avg3(L[2], L[3], L[3])
-            t[:, :] = col[:, None]
-        elif mode == B_LD:
-            for y in range(4):
-                for x in range(4):
-                    i = x + y
-                    if i < 6:
-                        t[y, x] = avg3(E[i], E[i + 1], E[i + 2])
-                    else:
-                        t[y, x] = avg3(E[6], E[7], E[7])
-        elif mode == B_RD:
-            full = [L[3], L[2], L[1], L[0], P, A[0], A[1], A[2], A[3]]
-            for y in range(4):
-                for x in range(4):
-                    i = x - y + 4
-                    t[y, x] = avg3(full[i - 1], full[i], full[i + 1])
-        elif mode == B_VR:
-            full = [L[3], L[2], L[1], L[0], P, A[0], A[1], A[2], A[3]]
-            # per RFC 6386 12.3 vr table
-            t[0, 0] = avg2(P, A[0]); t[0, 1] = avg2(A[0], A[1])
-            t[0, 2] = avg2(A[1], A[2]); t[0, 3] = avg2(A[2], A[3])
-            t[1, 0] = avg3(L[0], P, A[0]); t[1, 1] = avg3(P, A[0], A[1])
-            t[1, 2] = avg3(A[0], A[1], A[2]); t[1, 3] = avg3(A[1], A[2], A[3])
-            t[2, 0] = avg3(L[1], L[0], P); t[2, 1] = t[0, 0]
-            t[2, 2] = t[0, 1]; t[2, 3] = t[0, 2]
-            t[3, 0] = avg3(L[2], L[1], L[0]); t[3, 1] = t[1, 0]
-            t[3, 2] = t[1, 1]; t[3, 3] = t[1, 2]
-        elif mode == B_VL:
-            t[0, 0] = avg2(E[0], E[1]); t[0, 1] = avg2(E[1], E[2])
-            t[0, 2] = avg2(E[2], E[3]); t[0, 3] = avg2(E[3], E[4])
-            t[1, 0] = avg3(E[0], E[1], E[2]); t[1, 1] = avg3(E[1], E[2], E[3])
-            t[1, 2] = avg3(E[2], E[3], E[4]); t[1, 3] = avg3(E[3], E[4], E[5])
-            t[2, 0] = t[0, 1]; t[2, 1] = t[0, 2]
-            t[2, 2] = t[0, 3]; t[2, 3] = avg3(E[4], E[5], E[6])
-            t[3, 0] = t[1, 1]; t[3, 1] = t[1, 2]
-            t[3, 2] = t[1, 3]; t[3, 3] = avg3(E[5], E[6], E[7])
-        elif mode == B_HD:
-            full = [L[3], L[2], L[1], L[0], P, A[0], A[1], A[2]]
-            t[0, 0] = avg2(L[0], P); t[0, 1] = avg3(L[0], P, A[0])
-            t[0, 2] = avg3(P, A[0], A[1]); t[0, 3] = avg3(A[0], A[1], A[2])
-            t[1, 0] = avg2(L[1], L[0]); t[1, 1] = avg3(L[1], L[0], P)
-            t[1, 2] = t[0, 0]; t[1, 3] = t[0, 1]
-            t[2, 0] = avg2(L[2], L[1]); t[2, 1] = avg3(L[2], L[1], L[0])
-            t[2, 2] = t[1, 0]; t[2, 3] = t[1, 1]
-            t[3, 0] = avg2(L[3], L[2]); t[3, 1] = avg3(L[3], L[2], L[1])
-            t[3, 2] = t[2, 0]; t[3, 3] = t[2, 1]
-        elif mode == B_HU:
-            t[0, 0] = avg2(L[0], L[1]); t[0, 1] = avg3(L[0], L[1], L[2])
-            t[0, 2] = avg2(L[1], L[2]); t[0, 3] = avg3(L[1], L[2], L[3])
-            t[1, 0] = t[0, 2]; t[1, 1] = t[0, 3]
-            t[1, 2] = avg2(L[2], L[3]); t[1, 3] = avg3(L[2], L[3], L[3])
-            t[2, 0] = t[1, 2]; t[2, 1] = t[1, 3]
-            t[2, 2] = L[3]; t[2, 3] = L[3]
-            t[3, :] = L[3]
-        else:
-            raise ValueError(f"bad b mode {mode}")
 
 
 # --- loop filter (RFC 6386 §15) ----------------------------------------------
@@ -976,26 +998,18 @@ def _sc(x):
     return np.clip(x, -128, 127)
 
 
-def _filter_common(p1, p0, q0, q1, mask, hev, use_hev):
-    """Normal sub-block filter (filter4). Operates on signed (-128..127)
-    arrays in place; returns updated (p1, p0, q0, q1)."""
-    fv = _sc(p1 - q1)
-    if use_hev:
-        fv = fv * hev  # keep p1-q1 term only on high-edge-variance rows
+def _filter_common(p1, p0, q0, q1, mask, hev):
+    """Normal sub-block filter (filter4) on signed (-128..127) arrays;
+    returns updated (p1, p0, q0, q1)."""
+    fv = _sc(p1 - q1) * hev  # keep p1-q1 term only on high-edge-variance rows
     fv = _sc(fv + 3 * (q0 - p0))
     fv = fv * mask
     f1 = _sc(fv + 4) >> 3
     f2 = _sc(fv + 3) >> 3
     q0n = _sc(q0 - f1)
     p0n = _sc(p0 + f2)
-    if use_hev:
-        u = (f1 + 1) >> 1
-        u = u * (1 - hev)
-        q1n = _sc(q1 - u)
-        p1n = _sc(p1 + u)
-    else:
-        q1n, p1n = q1, p1
-    return p1n, p0n, q0n, q1n
+    u = ((f1 + 1) >> 1) * (1 - hev)
+    return _sc(p1 + u), p0n, q0n, _sc(q1 - u)
 
 
 def _mb_filter(p2, p1, p0, q0, q1, q2, mask, hev):
@@ -1034,8 +1048,9 @@ def _hev_mask(t, p1, p0, q0, q1):
     return ((np.abs(p1 - p0) > t) | (np.abs(q1 - q0) > t)).astype(np.int64)
 
 
-def _filter_v_edge(P, r0, n, c, I, E, t, mb_edge):
-    """Filter the vertical edge at column c (pixels rows r0..r0+n)."""
+def _normal_edge(P, r0, n, c, I, E, t, mb_edge):
+    """Normal filter across the vertical edge left of column c, rows
+    r0..r0+n. A horizontal edge is this edge on the transposed plane."""
     seg = P[r0 : r0 + n, c - 4 : c + 4].astype(np.int64)
     cols = [seg[:, i] for i in range(8)]
     p3, p2, p1, p0, q0, q1, q2, q3 = cols
@@ -1046,33 +1061,16 @@ def _filter_v_edge(P, r0, n, c, I, E, t, mb_edge):
         o = _mb_filter(*s, mask, hev)
         out = np.stack([p3 - 128, *o, q3 - 128], axis=1) + 128
     else:
-        p1n, p0n, q0n, q1n = _filter_common(s[1], s[2], s[3], s[4], mask, hev, True)
+        p1n, p0n, q0n, q1n = _filter_common(s[1], s[2], s[3], s[4], mask, hev)
         out = np.stack(
             [p3 - 128, s[0], p1n, p0n, q0n, q1n, s[5], q3 - 128], axis=1
         ) + 128
     P[r0 : r0 + n, c - 4 : c + 4] = out
 
 
-def _filter_h_edge(P, c0, n, r, I, E, t, mb_edge):
-    """Filter the horizontal edge at row r (pixel cols c0..c0+n)."""
-    seg = P[r - 4 : r + 4, c0 : c0 + n].astype(np.int64)
-    rows = [seg[i, :] for i in range(8)]
-    p3, p2, p1, p0, q0, q1, q2, q3 = rows
-    mask = _normal_mask(I, E, *rows)
-    hev = _hev_mask(t, p1, p0, q0, q1)
-    s = [x - 128 for x in (p2, p1, p0, q0, q1, q2)]
-    if mb_edge:
-        o = _mb_filter(*s, mask, hev)
-        out = np.stack([p3 - 128, *o, q3 - 128], axis=0) + 128
-    else:
-        p1n, p0n, q0n, q1n = _filter_common(s[1], s[2], s[3], s[4], mask, hev, True)
-        out = np.stack(
-            [p3 - 128, s[0], p1n, p0n, q0n, q1n, s[5], q3 - 128], axis=0
-        ) + 128
-    P[r - 4 : r + 4, c0 : c0 + n] = out
-
-
-def _simple_v(P, r0, n, c, E):
+def _simple_edge(P, r0, n, c, E):
+    """Simple filter across the vertical edge left of column c, rows
+    r0..r0+n. A horizontal edge is this edge on the transposed plane."""
     seg = P[r0 : r0 + n, c - 2 : c + 2].astype(np.int64)
     p1, p0, q0, q1 = (seg[:, i] for i in range(4))
     mask = (np.abs(p0 - q0) * 2 + np.abs(p1 - q1) // 2 <= E).astype(np.int64)
@@ -1084,21 +1082,11 @@ def _simple_v(P, r0, n, c, E):
     P[r0 : r0 + n, c] = _sc(t0 - f1) + 128
 
 
-def _simple_h(P, c0, n, r, E):
-    seg = P[r - 2 : r + 2, c0 : c0 + n].astype(np.int64)
-    p1, p0, q0, q1 = (seg[i, :] for i in range(4))
-    mask = (np.abs(p0 - q0) * 2 + np.abs(p1 - q1) // 2 <= E).astype(np.int64)
-    s1, s0, t0, t1 = p1 - 128, p0 - 128, q0 - 128, q1 - 128
-    fv = _sc(_sc(s1 - t1) + 3 * (t0 - s0)) * mask
-    f1 = _sc(fv + 4) >> 3
-    f2 = _sc(fv + 3) >> 3
-    P[r - 1, c0 : c0 + n] = _sc(s0 + f2) + 128
-    P[r, c0 : c0 + n] = _sc(t0 - f1) + 128
-
-
 def _apply_loop_filter(dec, Y, U, V):
     """In-place loop filter over the mb-padded planes (1-px border offset),
-    MB raster order — MB edges use already-filtered neighbors, per spec."""
+    MB raster order — MB edges use already-filtered neighbors, per spec.
+    Per plane: the left MB edge, the inner vertical edges, the top MB edge,
+    the inner horizontal edges; the simple filter covers luma only."""
     simple = bool(dec.filter_type) or dec.version == 1
     for my in range(dec.mb_h):
         for mx in range(dec.mb_w):
@@ -1124,129 +1112,36 @@ def _apply_loop_filter(dec, Y, U, V):
             E_sb = (level * 2) + I
             t = 2 if level >= 40 else (1 if level >= 15 else 0)
             inner = bool(dec.mb_has_coeffs[my, mx]) or dec.ymodes[my, mx] == B_PRED
-            x0, y0 = mx * 16 + 1, my * 16 + 1
-            cx0, cy0 = mx * 8 + 1, my * 8 + 1
-            if simple:
-                if mx > 0:
-                    _simple_v(Y, y0, 16, x0, E_mb)
-                if inner:
-                    for dx in (4, 8, 12):
-                        _simple_v(Y, y0, 16, x0 + dx, E_sb)
-                if my > 0:
-                    _simple_h(Y, x0, 16, y0, E_mb)
-                if inner:
-                    for dy in (4, 8, 12):
-                        _simple_h(Y, x0, 16, y0 + dy, E_sb)
-            else:
-                if mx > 0:
-                    _filter_v_edge(Y, y0, 16, x0, I, E_mb, t, True)
-                    _filter_v_edge(U, cy0, 8, cx0, I, E_mb, t, True)
-                    _filter_v_edge(V, cy0, 8, cx0, I, E_mb, t, True)
-                if inner:
-                    for dx in (4, 8, 12):
-                        _filter_v_edge(Y, y0, 16, x0 + dx, I, E_sb, t, False)
-                    _filter_v_edge(U, cy0, 8, cx0 + 4, I, E_sb, t, False)
-                    _filter_v_edge(V, cy0, 8, cx0 + 4, I, E_sb, t, False)
-                if my > 0:
-                    _filter_h_edge(Y, x0, 16, y0, I, E_mb, t, True)
-                    _filter_h_edge(U, cx0, 8, cy0, I, E_mb, t, True)
-                    _filter_h_edge(V, cx0, 8, cy0, I, E_mb, t, True)
-                if inner:
-                    for dy in (4, 8, 12):
-                        _filter_h_edge(Y, x0, 16, y0 + dy, I, E_sb, t, False)
-                    _filter_h_edge(U, cx0, 8, cy0 + 4, I, E_sb, t, False)
-                    _filter_h_edge(V, cx0, 8, cy0 + 4, I, E_sb, t, False)
-
-
-class BoolEncoder:
-    """RFC 6386 §8 reference formulation with explicit carry."""
-
-    def __init__(self):
-        self.low = 0
-        self.range = 255
-        self.bit_count = 24
-        self.out = bytearray()
-
-    def _add_one_to_output(self):
-        i = len(self.out) - 1
-        while i >= 0 and self.out[i] == 0xFF:
-            self.out[i] = 0
-            i -= 1
-        if i >= 0:
-            self.out[i] += 1
-
-    def put(self, bit: int, prob: int):
-        split = 1 + (((self.range - 1) * prob) >> 8)
-        if bit:
-            self.low += split
-            self.range -= split
-        else:
-            self.range = split
-        while self.range < 128:
-            self.range <<= 1
-            if self.low & 0x80000000:
-                self._add_one_to_output()
-                self.low &= 0x7FFFFFFF
-            self.low <<= 1
-            self.bit_count -= 1
-            if self.bit_count == 0:
-                self.out.append((self.low >> 24) & 0xFF)
-                self.low &= 0xFFFFFF
-                self.bit_count = 8
-
-    def literal(self, v: int, n: int):
-        for i in range(n - 1, -1, -1):
-            self.put((v >> i) & 1, 128)
-
-    def tree(self, tree_, probs, value, start: int = 0):
-        """Encode `value` (a leaf, i.e. -token) along the tree path."""
-        # find path by walking: depth-first search
-        path = self._find(tree_, start, -value)
-        assert path is not None, (value, start)
-        for node, bit in path:
-            self.put(bit, probs[node >> 1])
-
-    @staticmethod
-    def _find(tree_, i, target, path=()):
-        for bit in (0, 1):
-            nxt = tree_[i + bit]
-            p = path + ((i, bit),)
-            if nxt == target and nxt <= 0:
-                return p
-            if nxt > 0:
-                r = BoolEncoder._find(tree_, nxt, target, p)
-                if r is not None:
-                    return r
-        return None
-
-    def finish(self) -> bytes:
-        # flush: push out 32 more bits of low
-        for _ in range(32):
-            if self.low & 0x80000000:
-                self._add_one_to_output()
-                self.low &= 0x7FFFFFFF
-            self.low <<= 1
-            self.bit_count -= 1
-            if self.bit_count == 0:
-                self.out.append((self.low >> 24) & 0xFF)
-                self.low &= 0xFFFFFF
-                self.bit_count = 8
-        return bytes(self.out)
+            planes = [(Y, 16, my * 16 + 1, mx * 16 + 1)]
+            if not simple:
+                planes += [(P, 8, my * 8 + 1, mx * 8 + 1) for P in (U, V)]
+            for P, n, y0, x0 in planes:
+                for Q, r0, c0, outer in ((P, y0, x0, mx > 0), (P.T, x0, y0, my > 0)):
+                    edges = [(c0, E_mb, True)] if outer else []
+                    if inner:
+                        edges += [(c0 + d, E_sb, False) for d in range(4, n, 4)]
+                    for c, E, mb_edge in edges:
+                        if simple:
+                            _simple_edge(Q, r0, n, c, E)
+                        else:
+                            _normal_edge(Q, r0, n, c, I, E, t, mb_edge)
 
 
 # --- exact inverse of the decoder IDCT (least squares over the int basis) ---
 
-def _idct_matrix():
+def _inverse_basis(inverse):
+    """The 16x16 matrix of an integer inverse transform, probed with unit
+    inputs scaled by 64 to reduce its rounding."""
     M = np.zeros((16, 16))
     for i in range(16):
         e = np.zeros(16, dtype=np.int64)
-        e[i] = 64  # scale up to reduce integer rounding in basis probing
-        M[:, i] = VP8Decoder._idct(e).reshape(16) / 64.0
+        e[i] = 64
+        M[:, i] = np.ravel(inverse(e)) / 64.0
     return M
 
 
-_M = _idct_matrix()
-_MINV = np.linalg.inv(_M)
+_MINV = np.linalg.inv(_inverse_basis(_idct))
+_WINV = np.linalg.inv(_inverse_basis(_iwht))
 
 
 def _fdct(res: np.ndarray) -> np.ndarray:
@@ -1254,17 +1149,10 @@ def _fdct(res: np.ndarray) -> np.ndarray:
     return (_MINV @ res.reshape(16).astype(float))
 
 
-def _wht_matrix():
-    M = np.zeros((16, 16))
-    for i in range(16):
-        e = np.zeros(16, dtype=np.int64)
-        e[i] = 64
-        M[:, i] = VP8Decoder._iwht(e).astype(float) / 64.0
-    return M
-
-
-_W = _wht_matrix()
-_WINV = np.linalg.inv(_W)
+def _fdct_blocks(res: np.ndarray) -> list:
+    """``_fdct`` of a residual square's 4x4 blocks in raster order."""
+    n = res.shape[0]
+    return [_fdct(res[i : i + 4, j : j + 4]) for i in range(0, n, 4) for j in range(0, n, 4)]
 
 
 def rgb_to_yuv(img: np.ndarray):
@@ -1298,6 +1186,8 @@ class VP8Encoder:
 
     def __init__(self, y, u, v, qi=4, allow_bpred=True, force_bpred=False,
                  log2_parts=0, use_skip=False):
+        if not 0 <= qi <= 127:
+            raise ValueError(f"VP8 quantizer index {qi} outside 0..127")
         self.log2_parts = log2_parts
         self.use_skip = use_skip
         self.allow_bpred = allow_bpred
@@ -1308,35 +1198,17 @@ class VP8Encoder:
         self.mb_w = (self.w + 15) // 16
         self.mb_h = (self.h + 15) // 16
 
-    def _quants(self):
-        q = self.qi
-        y_dc = DC_QLOOKUP[q]
-        y_ac = AC_QLOOKUP[q]
-        y2_dc = DC_QLOOKUP[q] * 2
-        y2_ac = max(8, AC_QLOOKUP[q] * 155 // 100)
-        uv_dc = min(132, DC_QLOOKUP[q])
-        uv_ac = AC_QLOOKUP[q]
-        return y_dc, y_ac, y2_dc, y2_ac, uv_dc, uv_ac
-
     def encode(self) -> bytes:
         mw, mh = self.mb_w, self.mb_h
-        W, H = mw * 16, mh * 16
-        # padded reconstruction planes (same border conventions as decoder)
-        Y = np.zeros((H + 1, W + 1 + 4), dtype=np.int32)
-        U = np.zeros((mh * 8 + 1, mw * 8 + 1), dtype=np.int32)
-        V = np.zeros_like(U)
-        for P in (Y, U, V):
-            P[0, :] = 127
-            P[:, 0] = 129
-            P[0, 0] = 127
-        # extend source to padded size
-        ys = np.pad(self.y, ((0, H - self.h), (0, W - self.w)), mode="edge")
-        ch, cw = (self.h + 1) // 2, (self.w + 1) // 2
-        us = np.pad(self.u, ((0, mh * 8 - ch), (0, mw * 8 - cw)), mode="edge")
-        vs = np.pad(self.v, ((0, mh * 8 - ch), (0, mw * 8 - cw)), mode="edge")
-
-        y_dc, y_ac, y2_dc, y2_ac, uv_dc, uv_ac = self._quants()
-        probs = np.array(DEFAULT_COEFF_PROBS, dtype=np.uint8).reshape(4, 8, 3, 11)
+        Y, U, V = _planes(mw, mh)
+        # sources padded to whole macroblocks
+        ys, us, vs = (
+            np.pad(p, ((0, n * mh - p.shape[0]), (0, n * mw - p.shape[1])), mode="edge")
+            .astype(np.int32)
+            for p, n in ((self.y, 16), (self.u, 8), (self.v, 8))
+        )
+        factors = _dequant_factors(self.qi)
+        probs = _coeff_probs(DEFAULT_COEFF_PROBS)
 
         hdr = BoolEncoder()
         # color space + clamping
@@ -1352,194 +1224,40 @@ class VP8Encoder:
         for _ in range(5):
             hdr.put(0, 128)  # no quant deltas
         hdr.put(0, 128)  # refresh entropy (kf: ignored, write 0)
-        upd = np.array(COEFF_UPDATE_PROBS, dtype=np.uint8).reshape(4, 8, 3, 11)
-        for i in range(4):
-            for j in range(8):
-                for k in range(3):
-                    for l in range(11):
-                        hdr.put(0, int(upd[i, j, k, l]))
+        for p in COEFF_UPDATE_PROBS:
+            hdr.put(0, p)  # no probability updates
         if self.use_skip:
             hdr.put(1, 128)
             hdr.literal(self.SKIP_PROB, 8)
         else:
             hdr.put(0, 128)  # mb_no_coeff_skip off
 
-        n_parts = 1 << self.log2_parts
-        toks = [BoolEncoder() for _ in range(n_parts)]
-
-        # entropy contexts
-        above_nz = np.zeros((mw, 25), dtype=np.int32)
-        above_b = np.full((mw, 4), B_DC, dtype=np.int32)
-        bmode_grid = np.zeros((mh, mw, 4, 4), dtype=np.int32)
-        modes = np.zeros((mh, mw), dtype=np.int32)
-        uvmodes = np.zeros((mh, mw), dtype=np.int32)
-        all_coeffs = {}
-
+        toks = [BoolEncoder() for _ in range(1 << self.log2_parts)]
+        above_nz = [[0] * 25 for _ in range(mw)]
+        above_b = [[B_DC] * 4 for _ in range(mw)]
         for my in range(mh):
-            left_nz = np.zeros(25, dtype=np.int32)
-            left_b4 = np.full(4, B_DC, dtype=np.int32)
+            left_nz = [0] * 25
+            left_b = [B_DC] * 4
             for mx in range(mw):
-                x0, y0 = mx * 16 + 1, my * 16 + 1
-                src = ys[my * 16 : my * 16 + 16, mx * 16 : mx * 16 + 16].astype(np.int32)
-                # choose 16x16 mode by SSE on prediction
-                best, bm = None, DC_PRED
-                for m in (DC_PRED, V_PRED, H_PRED, TM_PRED):
-                    pred = self._pred16(Y, y0, x0, m, my, mx)
-                    sse = int(((src - pred) ** 2).sum())
-                    if best is None or sse < best:
-                        best, bm, bpred = sse, m, pred
-                use_bpred = self.force_bpred or (
-                    self.allow_bpred and best > 16 * 16 * self.BPRED_SSE_THRESH
+                levels = np.zeros((25, 16), dtype=np.int32)
+                src = ys[16 * my : 16 * my + 16, 16 * mx : 16 * mx + 16]
+                ym, bmodes, bmode_bits = self._luma(
+                    Y, src, my, mx, levels, factors, above_b[mx], left_b
                 )
-                mode_bits = []  # deferred (tree, probs, value) header writes
-                coefs = np.zeros((25, 16), dtype=np.int32)
-                if use_bpred:
-                    bm = B_PRED
-                    modes[my, mx] = bm
-                    mode_bits.append((KF_YMODE_TREE, KF_YMODE_PROBS, bm))
-                    d = VP8Decoder.__new__(VP8Decoder)
-                    d.mb_w = mw
-                    dq = np.array([y_dc] + [y_ac] * 15, dtype=np.int64)
-                    for b in range(16):
-                        sy, sx = b // 4, b % 4
-                        r0, c0 = y0 + sy * 4, x0 + sx * 4
-                        ssrc = src[sy * 4 : sy * 4 + 4, sx * 4 : sx * 4 + 4]
-                        bb, bq, brec = None, None, None
-                        for m4 in range(10):
-                            VP8Decoder._predict_b(d, Y, r0, c0, m4, my, mx, sy, sx)
-                            p4 = Y[r0 : r0 + 4, c0 : c0 + 4].copy()
-                            f = _fdct(ssrc - p4)
-                            q = np.round(f / dq).astype(np.int32)
-                            rec = np.clip(
-                                p4 + VP8Decoder._idct(q * dq), 0, 255
-                            )
-                            sse = int(((ssrc - rec) ** 2).sum())
-                            if bb is None or sse < bb:
-                                bb, bm4, bq, brec = sse, m4, q, rec
-                        a = above_b[mx, sx] if sy == 0 else bmode_grid[my, mx, sy - 1, sx]
-                        l = left_b4[sy] if sx == 0 else bmode_grid[my, mx, sy, sx - 1]
-                        mode_bits.append((
-                            BMODE_TREE,
-                            KF_BMODE_PROBS[(a * 10 + l) * 9 : (a * 10 + l) * 9 + 9],
-                            bm4,
-                        ))
-                        bmode_grid[my, mx, sy, sx] = bm4
-                        coefs[b] = bq
-                        # reconstruct in place so later subblocks predict
-                        # from decoded neighbors exactly like the decoder
-                        Y[r0 : r0 + 4, c0 : c0 + 4] = brec
-                    above_b[mx] = bmode_grid[my, mx, 3]
-                    left_b4[:] = bmode_grid[my, mx, :, 3]
-                else:
-                    modes[my, mx] = bm
-                    mode_bits.append((KF_YMODE_TREE, KF_YMODE_PROBS, bm))
-                    implied = {DC_PRED: B_DC, V_PRED: B_VE, H_PRED: B_HE, TM_PRED: B_TM}[bm]
-                    bmode_grid[my, mx, :, :] = implied
-                    above_b[mx] = implied
-                    left_b4[:] = implied
-                    res = src - bpred
-                    # per 4x4: fdct, collect DCs into y2
-                    dcs = np.zeros(16)
-                    recon = np.zeros((16, 16), dtype=np.int32)
-                    fc = np.zeros((16, 16))
-                    for b in range(16):
-                        sy, sx = b // 4, b % 4
-                        f = _fdct(res[sy * 4 : sy * 4 + 4, sx * 4 : sx * 4 + 4])
-                        fc[b] = f
-                        dcs[b] = f[0]
-                    # y2: transform DCs with inverse of iwht
-                    y2f = _WINV @ dcs
-                    qy2 = np.round(
-                        y2f / np.array([y2_dc] + [y2_ac] * 15)
-                    ).astype(np.int32)
-                    coefs[24] = qy2
-                    deq = qy2 * np.array([y2_dc] + [y2_ac] * 15, dtype=np.int64)
-                    dcs_rec = VP8Decoder._iwht(deq)
-                    for b in range(16):
-                        sy, sx = b // 4, b % 4
-                        f = fc[b].copy()
-                        q = np.round(f / np.array([y_dc] + [y_ac] * 15)).astype(np.int32)
-                        q[0] = 0
-                        coefs[b] = q
-                        deqb = q * np.array([y_dc] + [y_ac] * 15, dtype=np.int64)
-                        deqb[0] = dcs_rec[b]
-                        r = VP8Decoder._idct(deqb)
-                        blk = bpred[sy * 4 : sy * 4 + 4, sx * 4 : sx * 4 + 4] + r
-                        recon[sy * 4 : sy * 4 + 4, sx * 4 : sx * 4 + 4] = np.clip(blk, 0, 255)
-                    Y[y0 : y0 + 16, x0 : x0 + 16] = recon
-                if mx == mw - 1:
-                    Y[my * 16, W + 1 : W + 5] = Y[my * 16, W]
-
-                # chroma
-                cx0, cy0 = mx * 8 + 1, my * 8 + 1
-                usrc = us[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8].astype(np.int32)
-                vsrc = vs[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8].astype(np.int32)
-                bestc, cm = None, DC_PRED
-                for m in (DC_PRED, V_PRED, H_PRED, TM_PRED):
-                    pu = self._pred8(U, cy0, cx0, m, my, mx)
-                    pv = self._pred8(V, cy0, cx0, m, my, mx)
-                    sse = int(((usrc - pu) ** 2).sum() + ((vsrc - pv) ** 2).sum())
-                    if bestc is None or sse < bestc:
-                        bestc, cm, bpu, bpv = sse, m, pu, pv
-                uvmodes[my, mx] = cm
-                mode_bits.append((UV_MODE_TREE, KF_UV_PROBS, cm))
-                for pi, (P, psrc, ppred, base) in enumerate(
-                    ((U, usrc, bpu, 16), (V, vsrc, bpv, 20))
-                ):
-                    prc = np.zeros((8, 8), dtype=np.int32)
-                    for b in range(4):
-                        sy, sx = b // 2, b % 2
-                        f = _fdct(
-                            (psrc - ppred)[sy * 4 : sy * 4 + 4, sx * 4 : sx * 4 + 4]
-                        )
-                        q = np.round(
-                            f / np.array([uv_dc] + [uv_ac] * 15)
-                        ).astype(np.int32)
-                        coefs[base + b] = q
-                        deqb = q * np.array([uv_dc] + [uv_ac] * 15, dtype=np.int64)
-                        r = VP8Decoder._idct(deqb)
-                        blk = ppred[sy * 4 : sy * 4 + 4, sx * 4 : sx * 4 + 4] + r
-                        prc[sy * 4 : sy * 4 + 4, sx * 4 : sx * 4 + 4] = np.clip(blk, 0, 255)
-                    P[cy0 : cy0 + 8, cx0 : cx0 + 8] = prc
+                uvm = self._chroma(U, V, us, vs, my, mx, levels, factors)
+                has_y2 = ym != B_PRED
+                coeffs = _dequantize(levels, factors, has_y2)
+                _reconstruct_mb(Y, U, V, my, mx, mx == mw - 1, ym, bmodes, uvm, coeffs)
 
                 # header bits: skip flag precedes the mode trees
-                has_y2 = modes[my, mx] != B_PRED
-                skippable = not np.any(coefs) if self.use_skip else False
+                skip = self.use_skip and not levels.any()
                 if self.use_skip:
-                    hdr.put(1 if skippable else 0, self.SKIP_PROB)
-                for tr, pb, val in mode_bits:
-                    hdr.tree(tr, pb, val)
-                # token encoding
-                tok = toks[my % n_parts]
-                if skippable:
-                    left_nz[:24] = 0
-                    above_nz[mx, :24] = 0
-                    if has_y2:
-                        left_nz[24] = 0
-                        above_nz[mx, 24] = 0
-                else:
-                    if has_y2:
-                        nzf = self._put_block(
-                            tok, 1, int(left_nz[24] + above_nz[mx, 24]), 0,
-                            coefs[24], probs,
-                        )
-                        left_nz[24] = above_nz[mx, 24] = nzf
-                    ytype = 0 if has_y2 else 3
-                    yfirst = 1 if has_y2 else 0
-                    for b in range(16):
-                        sy, sx = b // 4, b % 4
-                        ctx = int(left_nz[sy] + above_nz[mx, sx])
-                        nz = self._put_block(tok, ytype, ctx, yfirst, coefs[b], probs)
-                        left_nz[sy] = above_nz[mx, sx] = nz
-                    for pl, base in ((0, 16), (1, 20)):
-                        for b in range(4):
-                            sy, sx = b // 2, b % 2
-                            li = 4 + pl * 2 + sy
-                            ai = 4 + pl * 2 + sx
-                            ctx = int(left_nz[li] + above_nz[mx, ai])
-                            nz = self._put_block(tok, 2, ctx, 0, coefs[base + b], probs)
-                            left_nz[li] = above_nz[mx, ai] = nz
-                all_coeffs[(my, mx)] = coefs
+                    hdr.put(skip, self.SKIP_PROB)
+                hdr.tree(KF_YMODE_TREE, KF_YMODE_PROBS, ym)
+                for bprobs, m in bmode_bits:
+                    hdr.tree(BMODE_TREE, bprobs, m)
+                hdr.tree(UV_MODE_TREE, KF_UV_PROBS, uvm)
+                _mb_tokens(toks[my % len(toks)], probs, levels, left_nz, above_nz[mx], has_y2, skip)
 
         part1 = hdr.finish()
         parts = [t.finish() for t in toks]
@@ -1554,72 +1272,75 @@ class VP8Encoder:
             out += bytes([len(p) & 0xFF, (len(p) >> 8) & 0xFF, (len(p) >> 16) & 0xFF])
         for p in parts:
             out += p
-        self.modes = modes
-        self.all_coeffs = all_coeffs
         self.recon = (Y, U, V)
         return bytes(out)
 
-    def _put_block(self, tok, type_, ctx, first, coefs, probs) -> int:
-        # tokens in zigzag order
-        vals = [int(coefs[ZIGZAG[n]]) for n in range(16)]
-        last = -1
-        for n in range(first, 16):
-            if vals[n]:
-                last = n
-        p = probs[type_]
-        prev_zero = False
-        n = first
-        if last < first:
-            pr = p[COEF_BANDS[n]][ctx]
-            tok.tree(COEF_TREE, pr, DCT_EOB)
-            return 0
-        while n <= last:
-            v = vals[n]
-            pr = p[COEF_BANDS[n]][ctx]
-            start = 2 if prev_zero else 0
-            a = abs(v)
-            if a == 0:
-                tok.tree(COEF_TREE, pr, 0, start=start)
-                ctx = 0
-                prev_zero = True
-            else:
-                prev_zero = False
-                if a <= 4:
-                    tok.tree(COEF_TREE, pr, a, start=start)
-                else:
-                    for cat in range(6):
-                        lo = CAT_BASE[cat]
-                        hi = CAT_BASE[cat] + (1 << len(CAT_PROBS[cat])) - 1
-                        if lo <= a <= hi:
-                            break
-                    tok.tree(COEF_TREE, pr, 5 + cat, start=start)
-                    extra = a - CAT_BASE[cat]
-                    cp = CAT_PROBS[cat]
-                    for i, pp in enumerate(cp):
-                        tok.put((extra >> (len(cp) - 1 - i)) & 1, pp)
-                tok.put(1 if v < 0 else 0, 128)
-                ctx = 2 if a > 1 else 1
-            n += 1
-        if n < 16:
-            pr = p[COEF_BANDS[n]][ctx]
-            start = 2 if prev_zero else 0
-            tok.tree(COEF_TREE, pr, DCT_EOB, start=start)
-        return 1
+    def _luma(self, Y, src, my, mx, levels, factors, above_b, left_b):
+        """Choose one macroblock's luma mode by prediction SSE, fill its Y
+        (and Y2) levels, and return (mode, sub-block modes, the sub-block
+        mode writes as (probs, mode))."""
+        y0, x0 = 16 * my + 1, 16 * mx + 1
+        sse, ym, (pred,) = _best_mode([Y], [src], y0, x0, 16, my, mx)
+        bmode_bits = []
+        if self.force_bpred or (
+            self.allow_bpred and sse > 16 * 16 * self.BPRED_SSE_THRESH
+        ):
 
-    # prediction helpers: run the DECODER's own predictors (a stub
-    # instance carries the one attribute they read), so encoder
-    # reconstruction is the decoder's by construction
-    def _pred16(self, Y, y0, x0, mode, my, mx):
-        d = VP8Decoder.__new__(VP8Decoder)
-        d.mb_w = self.mb_w
-        VP8Decoder._predict_16(d, Y, y0, x0, mode, my, mx)
-        return Y[y0 : y0 + 16, x0 : x0 + 16].copy()
+            def pick(sy, sx, bprobs):
+                # try all ten sub-block modes, reconstructing in place so
+                # later sub-blocks predict from decoded neighbours
+                b, r, c = 4 * sy + sx, y0 + 4 * sy, x0 + 4 * sx
+                src4 = src[4 * sy : 4 * sy + 4, 4 * sx : 4 * sx + 4]
+                best4 = None
+                for m4 in range(10):
+                    _predict_b(Y, r, c, m4, y0, x0, mx == self.mb_w - 1)
+                    f = _fdct(src4 - Y[r : r + 4, c : c + 4])
+                    q = np.round(f / factors[b]).astype(np.int32)
+                    _add_residual(Y, r, c, 4, q * factors[b])
+                    rec = Y[r : r + 4, c : c + 4].copy()
+                    sse = int(((src4 - rec) ** 2).sum())
+                    if best4 is None or sse < best4[0]:
+                        best4 = (sse, m4, q, rec)
+                _, m4, levels[b], Y[r : r + 4, c : c + 4] = best4
+                bmode_bits.append((bprobs, m4))
+                return m4
 
-    def _pred8(self, P, y0, x0, mode, my, mx):
-        d = VP8Decoder.__new__(VP8Decoder)
-        d.mb_w = self.mb_w
-        VP8Decoder._predict_8(d, P, y0, x0, mode, my, mx)
-        return P[y0 : y0 + 8, x0 : x0 + 8].copy()
+            return B_PRED, _sub_modes(B_PRED, above_b, left_b, pick), bmode_bits
+        _sub_modes(ym, above_b, left_b, None)
+        # the 16 DCs go to Y2 through the inverse of the WHT
+        fc = _fdct_blocks(src - pred)
+        y2f = _WINV @ np.array([f[0] for f in fc])
+        levels[24] = np.round(y2f / factors[24]).astype(np.int32)
+        for b, f in enumerate(fc):
+            levels[b] = np.round(f / factors[b]).astype(np.int32)
+            levels[b, 0] = 0  # the DC goes through Y2
+        return ym, None, bmode_bits
+
+    def _chroma(self, U, V, us, vs, my, mx, levels, factors):
+        """Choose one macroblock's chroma mode by the U+V prediction SSE and
+        fill its U and V levels."""
+        srcs = [p[8 * my : 8 * my + 8, 8 * mx : 8 * mx + 8] for p in (us, vs)]
+        _, uvm, preds = _best_mode([U, V], srcs, 8 * my + 1, 8 * mx + 1, 8, my, mx)
+        for base, src, pred in zip((16, 20), srcs, preds):
+            for b, f in enumerate(_fdct_blocks(src - pred)):
+                levels[base + b] = np.round(f / factors[base + b]).astype(np.int32)
+        return uvm
+
+
+def _best_mode(planes, srcs, y0, x0, n, my, mx):
+    """(SSE, mode, predictions) of the 16x16 / 8x8 mode whose predictions
+    at (y0, x0) of ``planes`` are nearest ``srcs`` (SSE summed over the
+    planes; the first mode wins a tie)."""
+    best = None
+    for m in (DC_PRED, V_PRED, H_PRED, TM_PRED):
+        preds = []
+        for P in planes:
+            _predict(P, y0, x0, n, m, my, mx)
+            preds.append(P[y0 : y0 + n, x0 : x0 + n].copy())
+        sse = sum(int(((s - p) ** 2).sum()) for s, p in zip(srcs, preds))
+        if best is None or sse < best[0]:
+            best = (sse, m, preds)
+    return best
 
 
 # ---------------------------------------------------------------------------

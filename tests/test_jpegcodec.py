@@ -406,23 +406,30 @@ def test_encoder_bytes_pinned():
 
 def test_every_prefix_decodes_or_raises_value_error():
     """A cut-short file (every strict prefix of a baseline, a restart-
-    interval, a progressive and a grayscale stream) either decodes or
-    raises ValueError: no AssertionError, struct.error or IndexError."""
+    interval, a progressive, a grayscale and a per-component stream)
+    either decodes to the full file's planes or raises ValueError: no
+    AssertionError, struct.error or IndexError, and no planes from a file
+    cut before its last scan."""
     px = synth.pixels_for(0)
+    px24 = synth.pixels_for(0, size=24)
     files = [
         jpegcodec.encode_baseline_jpeg(px, 50),
         jpegcodec.encode_baseline_jpeg(px, 50, subsampling=(2, 2), restart_interval=2),
         jpegcodec.encode_progressive_jpeg(px, 50, subsampling=(2, 2)),
         jpegcodec.encode_baseline_jpeg(px[..., 1].copy(), 50),
+        jpegcodec.encode_baseline_jpeg(px24, 92, scan_layout="per_component"),
+        jpegcodec.encode_progressive_jpeg(px24, 92),
     ]
     for data in files:
+        full = jpegcodec._decode_jpeg_planes(data)
         for n in range(len(data)):
             try:
-                jpegcodec._decode_jpeg_planes(data[:n])
+                got = jpegcodec._decode_jpeg_planes(data[:n])
             except ValueError:
-                pass
+                continue
             except Exception as e:  # noqa: BLE001 - the type is the check
                 pytest.fail(f"prefix {n}/{len(data)}: {type(e).__name__}: {e}")
+            assert all(map(np.array_equal, got, full)), f"prefix {n}/{len(data)}"
 
 
 _HUGE_FRAME_CHILD = """

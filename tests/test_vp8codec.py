@@ -233,6 +233,15 @@ def test_skip_flags_actually_engage_on_flat_content():
     assert dec.skips.sum() > 0  # flat MBs really skipped
 
 
+def test_encoder_rejects_quantizer_outside_header_range():
+    """The header carries qi in 7 bits, so an index outside 0..127 would
+    write one quantizer and encode with another."""
+    y, u, v = rgb_to_yuv(_img(7, 16, 16))
+    for qi in (-1, 128):
+        with pytest.raises(ValueError):
+            VP8Encoder(y, u, v, qi=qi)
+
+
 # --- torn-file contracts (runs everywhere) -------------------------------------
 
 
@@ -262,6 +271,293 @@ def test_torn_file_contracts_raise_never_wrong_pixels():
     dec.partitions[0].d = payload[: dec.partitions[0].pos]
     with pytest.raises(ValueError):
         dec.decode()
+
+
+def _vp8_chunk(webp: bytes) -> bytes:
+    """The ``VP8 `` chunk's payload without the RIFF pad byte."""
+    assert webp[12:16] == b"VP8 "
+    return webp[20 : 20 + int.from_bytes(webp[16:20], "little")]
+
+
+def _lw_decodes(data: bytes) -> bool:
+    lib = _LIB
+    lib.WebPDecodeRGBA.restype = ctypes.POINTER(ctypes.c_ubyte)
+    W = ctypes.c_int()
+    H = ctypes.c_int()
+    p = lib.WebPDecodeRGBA(
+        data, ctypes.c_size_t(len(data)), ctypes.byref(W), ctypes.byref(H)
+    )
+    if p:
+        lib.WebPFree(p)
+    return bool(p)
+
+
+def test_every_prefix_decodes_or_raises_value_error():
+    """Every strict prefix of an encoder stream (default, forced B_PRED,
+    skips over 8 partitions) and of libwebp-encoded streams (the embedded
+    fixtures, plus a fresh encode when the library is present) raises
+    ValueError or decodes to the full stream's planes. The decoder keeps
+    libwebp's end-of-data rule: with libwebp present, a prefix decodes
+    here exactly when it decodes in libwebp."""
+    y, u, v = rgb_to_yuv(_img(40, 24, 40))
+    streams = [
+        VP8Encoder(y, u, v, qi=18, **kw).encode()
+        for kw in (dict(), dict(force_bpred=True), dict(use_skip=True, log2_parts=3))
+    ]
+    streams += [_vp8_chunk(bytes.fromhex(hx)) for hx in (F1_HEX, F2_HEX)]
+    if _LIB is not None:
+        streams.append(_vp8_chunk(_lw_encode(_img(41, 40, 56), 75)))
+    for data in streams:
+        full = decode_vp8(data)
+        for n in range(len(data)):
+            try:
+                got = decode_vp8(data[:n])
+            except ValueError:
+                got = None
+            else:
+                assert all(map(np.array_equal, got, full)), (len(data), n)
+            assert _LIB is None or _lw_decodes(data[:n]) == (got is not None), (len(data), n)
+
+
+# --- outputs pinned across refactors -------------------------------------------
+
+_PIN_CONFIGS = {
+    "default": {},
+    "force_bpred": {"force_bpred": True},
+    "skip": {"use_skip": True},
+    "skip_parts8": {"use_skip": True, "log2_parts": 3},
+    "no_bpred_skip": {"allow_bpred": False, "use_skip": True},
+}
+
+
+def _pin_img(w: int, h: int) -> np.ndarray:
+    """Noisy ramps beside a flat column (a skipped DC macroblock), a luma
+    ramp and a chroma ramp, so the pinned streams mix B_PRED and 16x16
+    luma modes, several chroma modes and a skipped macroblock."""
+    img = _img(50, w, h, noise=6)
+    img[:, :16] = 140
+    img[:16, 16:32] = np.linspace(40, 200, 16).astype(np.uint8)[None, :, None]
+    img[:16, 32:, 0] = np.linspace(30, 230, 16).astype(np.uint8)[:, None]
+    return img
+
+
+def _pin_alpha_img() -> np.ndarray:
+    rng = np.random.default_rng(30)
+    return np.clip(rng.normal(128, 30, (24, 32, 4)), 0, 255).astype(np.uint8)
+
+
+# (config, width, height, qi): sha256 of the encoder bytes and of the decoded
+# Y/U/V planes
+_PINNED_VP8 = {
+    ("default", 48, 32, 0): (
+        "9923bab08710a35ac79515a2481fc0f462d8ec0f42b5813e0f65f4284a48985d",
+        "7b9041023bbd826478e913685a7bf11a9140d32bf4f73b8119848793cf400bfe",
+    ),
+    ("default", 48, 32, 18): (
+        "88a166cb9b669f83b258d0596b12c7877d1b1dd3dc7f94fe8982f7d700808979",
+        "31fc4ffe0e0f430a3d1253d08f47eaa90bcfb0c3def1ae207454d4c2ed8b4a16",
+    ),
+    ("default", 48, 32, 60): (
+        "eb4dd98b2f7b0c28ac524474eab6d415dbf9e45dad42ce70c50c95e786983aef",
+        "8ccaec7246847837228766bfc91070ccd1c63dc37faefec7eb35f57e20f17b32",
+    ),
+    ("default", 35, 21, 0): (
+        "74fdf7fc61f83f02474292a917a15e5a9ee25d9d707685fafe420f93bff94563",
+        "956ac33c7f562b976ebf90468b03f084b762fbc84704ad8ac65428746baae000",
+    ),
+    ("default", 35, 21, 18): (
+        "e03896040aa284efca05a5bc3e98896b784e0c92a7cf0b44d46166fad9736beb",
+        "33306ce2392a318dd30731758907d163cb64be09a47c6a880cb9c5010eb2a53a",
+    ),
+    ("default", 35, 21, 60): (
+        "cf07953f07f9ff98c616f9107870a12a2b9ab5c983586b7a6fc4e774ce63c750",
+        "6d14db5184c2b81a0fe9fc4968066b5a7b98dc67aa4fb5ab96ce54d514c97475",
+    ),
+    ("force_bpred", 48, 32, 0): (
+        "463120ff0e0f2ab59351e9cdd4ec22d7c2c9c4835c945e01d3b8ee6b247b3015",
+        "7b9041023bbd826478e913685a7bf11a9140d32bf4f73b8119848793cf400bfe",
+    ),
+    ("force_bpred", 48, 32, 18): (
+        "adc7ece25bb7b61a012eddcaabbaa3ad6fd3789054f11b010e6d0f3835eac652",
+        "31fc4ffe0e0f430a3d1253d08f47eaa90bcfb0c3def1ae207454d4c2ed8b4a16",
+    ),
+    ("force_bpred", 48, 32, 60): (
+        "96cc8eb4502cdd3bfb611e19cfab66c38b7de1f887f281a8f0254aa33d77a86b",
+        "8ccaec7246847837228766bfc91070ccd1c63dc37faefec7eb35f57e20f17b32",
+    ),
+    ("force_bpred", 35, 21, 0): (
+        "03b4042a701251de76b5a2d28aeaa5a9ac6b63d0b3dc35287aab223ffac9de93",
+        "956ac33c7f562b976ebf90468b03f084b762fbc84704ad8ac65428746baae000",
+    ),
+    ("force_bpred", 35, 21, 18): (
+        "2ab591e23d75bc936189b29b5e4d8894f0abc00100c77e8d45edea3da6a3615f",
+        "33306ce2392a318dd30731758907d163cb64be09a47c6a880cb9c5010eb2a53a",
+    ),
+    ("force_bpred", 35, 21, 60): (
+        "93a8b82914e046fe1d5f7f5c6ae94cba510d9c366bff23243271693f300d7682",
+        "6d14db5184c2b81a0fe9fc4968066b5a7b98dc67aa4fb5ab96ce54d514c97475",
+    ),
+    ("skip", 48, 32, 0): (
+        "0763994c180d8d49647612ae371231f33794c983c60e78060bc06caec444549c",
+        "7b9041023bbd826478e913685a7bf11a9140d32bf4f73b8119848793cf400bfe",
+    ),
+    ("skip", 48, 32, 18): (
+        "27a603e27da24c33288b971c671e5536acab4f9b86b0c76526ad0e8a0d941517",
+        "31fc4ffe0e0f430a3d1253d08f47eaa90bcfb0c3def1ae207454d4c2ed8b4a16",
+    ),
+    ("skip", 48, 32, 60): (
+        "acfbe111c19559d7ea784cad4243079180dd796a6e8abd54753ccc0066102b24",
+        "8ccaec7246847837228766bfc91070ccd1c63dc37faefec7eb35f57e20f17b32",
+    ),
+    ("skip", 35, 21, 0): (
+        "64a29ca3781573ac890154be132a1b7d5ad05c9c253b4cad8ec15f3347ef65c5",
+        "956ac33c7f562b976ebf90468b03f084b762fbc84704ad8ac65428746baae000",
+    ),
+    ("skip", 35, 21, 18): (
+        "8df39e8d5a66d0bb05b821c62882a99ec8875210d9bd16e9c638a2f6fd5c0b31",
+        "33306ce2392a318dd30731758907d163cb64be09a47c6a880cb9c5010eb2a53a",
+    ),
+    ("skip", 35, 21, 60): (
+        "b9eec73c851424dc2c46d1b3563eb94260ec2e360c75a727df77fab0f2cd9a19",
+        "6d14db5184c2b81a0fe9fc4968066b5a7b98dc67aa4fb5ab96ce54d514c97475",
+    ),
+    ("skip_parts8", 48, 32, 0): (
+        "aebf775108d115be6a0b13cec8e5df352210cf16d2a768d8c881d13f967fed15",
+        "7b9041023bbd826478e913685a7bf11a9140d32bf4f73b8119848793cf400bfe",
+    ),
+    ("skip_parts8", 48, 32, 18): (
+        "6fb062e3d8271fe2d498c72f0a5ccd6fcceab1f57cf3366ff074aba56ae0a42e",
+        "31fc4ffe0e0f430a3d1253d08f47eaa90bcfb0c3def1ae207454d4c2ed8b4a16",
+    ),
+    ("skip_parts8", 48, 32, 60): (
+        "e1a21044d6773d26f0d37834585893b8c4b4a7f99002c79ef7fbb95a5aa93c0d",
+        "8ccaec7246847837228766bfc91070ccd1c63dc37faefec7eb35f57e20f17b32",
+    ),
+    ("skip_parts8", 35, 21, 0): (
+        "2061fd8ef61aeb67e85cecbb5fd5b753e731efe3545bb8f77ae0be962c0e751a",
+        "956ac33c7f562b976ebf90468b03f084b762fbc84704ad8ac65428746baae000",
+    ),
+    ("skip_parts8", 35, 21, 18): (
+        "f84db89f8eceabf9ebd102ed1b2ad88b4e5fb609837cec170cc5ab68c6224538",
+        "33306ce2392a318dd30731758907d163cb64be09a47c6a880cb9c5010eb2a53a",
+    ),
+    ("skip_parts8", 35, 21, 60): (
+        "0f92573b9fabd4418d88eb74b264d1686a3841603e91572320d44fc5cbdba955",
+        "6d14db5184c2b81a0fe9fc4968066b5a7b98dc67aa4fb5ab96ce54d514c97475",
+    ),
+    ("no_bpred_skip", 48, 32, 0): (
+        "c61e81fafc18959e9cc6d83e13378275f6f3fabaf9b1c58e52b7e68518866bcb",
+        "63d75285a56181f7d6692b96fc1e9c5c28be77b576324aa8cf1659dd728e37dc",
+    ),
+    ("no_bpred_skip", 48, 32, 18): (
+        "6b367fefbfca937e0c8819836291ff9a45dcc1929f8776dcc330000542f56a48",
+        "c23f48babc621e71d365e27559febb2bdfda5a99a918d458e566c611fe342656",
+    ),
+    ("no_bpred_skip", 48, 32, 60): (
+        "083b6f17cdee93801161166464b5d3897ec3fc7d7a1f77e95fd02921e759a26c",
+        "faefcb90ed5c4fd93d1c4eaa903f35646ce7361a0b98564b057a1bca26e839b1",
+    ),
+    ("no_bpred_skip", 35, 21, 0): (
+        "e8ff1228fc558473331cb0d0c0078629dc6f54a81ce05c9ed8f8e3b162e45487",
+        "cbf7ddd0998773bb53e4ad70bcc31adc15abeb8fa4b92fa4b8931da54a5ae3a9",
+    ),
+    ("no_bpred_skip", 35, 21, 18): (
+        "3259a326416190c1510b65f1d9b196a5fb0d9202e9592cad5584a7c186bc37b5",
+        "564a8556c3a26cfa33b99c886b46e7b0ca8216dc14a492320a03e716062c64d8",
+    ),
+    ("no_bpred_skip", 35, 21, 60): (
+        "41ffaf8d2a474bf6687b7686cb6b5c5db9e8be614c7f09e7ad0a46850f049854",
+        "895ab967ce19475ffc59af55223b8dfb99483d2e83ad68e2760e980bcf9ccc11",
+    ),
+}
+# encode_webp_vp8 of _pin_alpha_img() at qi 4: sha256 of the file and of the
+# RGBA pixels webpcodec decodes from it
+_PINNED_ALPHA = (
+    "dc269a5a97054db7931b9bdd56392d21566c0cc39137478b8e966bc67d47c688",
+    "3f63702eed218d68a3342e702b789890ec02ee3928148f15c10ae78352139631",
+)
+
+
+def test_encoder_bytes_pinned():
+    """Every VP8Encoder configuration the tests use, at three quantizers and
+    at an even and an odd size, emits the pinned bytes, and they decode to
+    the pinned planes; so does a lossy file with an ALPH chunk."""
+    for (name, w, h, qi), (want_bytes, want_planes) in _PINNED_VP8.items():
+        y, u, v = rgb_to_yuv(_pin_img(w, h))
+        data = VP8Encoder(y, u, v, qi=qi, **_PIN_CONFIGS[name]).encode()
+        assert hashlib.sha256(data).hexdigest() == want_bytes, (name, w, h, qi)
+        assert _yuv_hash(*decode_vp8(data)) == want_planes, (name, w, h, qi)
+    data = encode_webp_vp8(_pin_alpha_img(), qi=4)
+    assert hashlib.sha256(data).hexdigest() == _PINNED_ALPHA[0]
+    rgba = webpcodec.decode_webp(data)
+    assert hashlib.sha256(rgba.tobytes()).hexdigest() == _PINNED_ALPHA[1]
+
+
+# --- loop filters against a per-pixel RFC 6386 §15 reference ------------------
+
+
+def _c8(v: int) -> int:
+    return -128 if v < -128 else (127 if v > 127 else v)
+
+
+def _ref_filter(seg, kind: str, I: int, E: int, hev_t: int) -> list[int]:
+    """The 8 pixels p3..q3 across one edge, filtered as RFC 6386 §15.2
+    (kind "simple") and §15.3 ("sub": a sub-block edge, "mb": a macroblock
+    edge) write it, one pixel at a time."""
+    px = [int(x) - 128 for x in seg]
+    p3, p2, p1, p0, q0, q1, q2, q3 = px
+    if abs(p0 - q0) * 2 + abs(p1 - q1) // 2 > E:
+        return list(seg)
+    interior = (p3 - p2, p2 - p1, p1 - p0, q1 - q0, q2 - q1, q3 - q2)
+    if kind != "simple" and max(map(abs, interior)) > I:
+        return list(seg)
+    hev = kind != "simple" and (abs(p1 - p0) > hev_t or abs(q1 - q0) > hev_t)
+    if kind == "mb" and not hev:
+        w = _c8(_c8(p1 - q1) + 3 * (q0 - p0))
+        for weight, p, q in ((27, 3, 4), (18, 2, 5), (9, 1, 6)):
+            a = _c8((weight * w + 63) >> 7)
+            px[q] = _c8(px[q] - a)
+            px[p] = _c8(px[p] + a)
+    else:
+        outer = kind != "sub" or hev
+        a = _c8((_c8(p1 - q1) if outer else 0) + 3 * (q0 - p0))
+        f1 = _c8(a + 4) >> 3
+        px[4] = _c8(q0 - f1)
+        px[3] = _c8(p0 + (_c8(a + 3) >> 3))
+        if kind == "sub" and not hev:
+            a = (f1 + 1) >> 1
+            px[5] = _c8(q1 - a)
+            px[2] = _c8(p1 + a)
+    return [x + 128 for x in px]
+
+
+def test_loop_filters_match_scalar_reference():
+    """The vectorized simple and normal loop filters, at macroblock and
+    sub-block edges in both orientations (a horizontal edge is the vertical
+    filter on the transposed plane), equal the per-pixel reference on
+    random planes and random limits. Encoder streams carry filter level 0
+    and libwebp's simple API writes the normal filter, so no stream test
+    reaches the simple filter."""
+    rng = np.random.default_rng(61)
+    for trial in range(120):
+        kind = ("simple", "sub", "mb")[trial % 3]
+        I, E, hev_t = int(rng.integers(1, 64)), int(rng.integers(1, 128)), int(rng.integers(0, 4))
+        P = rng.normal(128, rng.uniform(0, 12), (20, 24))
+        P[:, 12:] += rng.normal(0, 10)  # the step across the vertical edge
+        P[10:, :] += rng.normal(0, 10)  # the step across the horizontal edge
+        P = np.clip(np.round(P), 0, 255).astype(np.int32)
+        r0, n = int(rng.integers(0, 5)), int(rng.choice((8, 16)))
+        for transpose, c in ((False, 12), (True, 10)):
+            got = P.copy()
+            Q = got.T if transpose else got  # a view: the filter writes through
+            want = Q.copy()
+            for r in range(r0, r0 + n):
+                want[r, c - 4 : c + 4] = _ref_filter(want[r, c - 4 : c + 4], kind, I, E, hev_t)
+            if kind == "simple":
+                vp8codec._simple_edge(Q, r0, n, c, E)
+            else:
+                vp8codec._normal_edge(Q, r0, n, c, I, E, hev_t, kind == "mb")
+            assert np.array_equal(Q, want), (trial, kind, transpose, I, E, hev_t)
 
 
 # --- libwebp conformance (both directions; skipped without the library) -------
